@@ -1,17 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Local smoke runner: exercises SparkEntry.entry exactly as the driver's
-  * rows>0 check does. Run: sbt "runMain graft.Smoke". */
+  * rows>0 check does, on the harness session recipe. Run:
+  * sbt "runMain graft.Smoke". */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.newSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     val df = SparkEntry.entry(spark)
     val n = df.count()
     println(s"ENTRY_ROWS=$n")

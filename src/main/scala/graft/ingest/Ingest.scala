@@ -1,6 +1,8 @@
 package graft.ingest
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, from_json}
+import org.apache.spark.sql.types.StructType
 
 import graft.model.Schemas
 
@@ -9,18 +11,25 @@ import graft.model.Schemas
   * The reference fetches with `requests.get` inside an Airflow task
   * (`airflow/dags/etl_dag.py:27-49` weather, `:168-188` vélib) and spools
   * the body to S3. Here the imperative edge is confined to a single
-  * `Transport` function — the HTTP GET — and everything after it is the
-  * schema'd JSON path shared with the file sources: the body becomes a
-  * one-element `Dataset[String]` parsed with the explicit raw schema
-  * (FAILFAST), so a malformed payload fails the run exactly like the
-  * reference's crash-and-retry (`etl_dag.py:331-332`).
+  * `Transport` function — the HTTP GET — and the body is parsed ONCE, on
+  * the driver, against the explicit raw schema with `from_json` in
+  * FAILFAST mode, so a malformed payload fails the run exactly like the
+  * reference's crash-and-retry (`etl_dag.py:331-332`). The parsed
+  * snapshot comes back as a one-row local relation: the raw-zone landing
+  * and the curated write both read it without parsing the body again.
+  *
+  * A body that is not one JSON object fails loudly instead of landing
+  * an empty payload, as the reference's `.json()` would: an empty or
+  * whitespace-only body and a literal `null` parse to no snapshot and
+  * throw, and FAILFAST rejects a top-level JSON array (neither feed
+  * returns one).
   *
   * The transport is injectable, which keeps ingestion unit-testable in
   * this offline harness (tests feed canned bodies) and cleanly swaps for
-  * a real client in deployment. Driver-side fetch of a ~344 KB snapshot
-  * (`research.ipynb` cell 3) is the right shape at any scale: the
-  * payload is one API response, not a distributed dataset — parallelism
-  * begins after parse+explode.
+  * a real client in deployment. Driver-side fetch and parse of a ~344 KB
+  * snapshot (`research.ipynb` cell 3) is the right shape at any scale:
+  * the payload is one API response, not a distributed dataset —
+  * parallelism begins after explode.
   */
 object Ingest {
 
@@ -94,34 +103,46 @@ object Ingest {
   val VelibStatusUrl =
     "https://velib-metropole-opendata.smovengo.cloud/opendata/Velib_Metropole/station_status.json"
 
+  /** Parse `body` against `schema` and return the snapshot as a one-row
+    * `LocalRelation`. `from_json` over a one-row local relation is folded
+    * by the optimizer (`ConvertToLocalRelation`), so the `collect()`
+    * starts no Spark job. FAILFAST only catches malformed JSON — a
+    * well-formed body missing `required` (producer schema rename) parses
+    * it NULL and would land a silently empty payload; the check on the
+    * driver row replays the reference's pandas KeyError crash.
+    */
   private def parse(
-      spark: SparkSession, body: String,
-      schema: org.apache.spark.sql.types.StructType): DataFrame = {
+      spark: SparkSession, body: String, schema: StructType,
+      required: String): DataFrame = {
     import spark.implicits._
-    val ds: Dataset[String] = spark.createDataset(Seq(body))
-    spark.read.schema(schema).option("mode", "FAILFAST").json(ds)
+    val snapshot = Seq(body).toDF("value")
+      .select(from_json(col("value"), schema, Map("mode" -> "FAILFAST")))
+      .collect().head.getStruct(0)
+    if (snapshot == null) throw new IllegalStateException(
+      "snapshot body is not a JSON object (empty or null); " +
+        "refusing to load an empty payload")
+    if (snapshot.isNullAt(schema.fieldIndex(required)))
+      throw new IllegalStateException(
+        s"required field '$required' is NULL in 1 row(s) — the feed's " +
+          "schema changed (renamed/removed field); refusing to load " +
+          "silently empty payloads")
+    spark.createDataFrame(java.util.List.of(snapshot), schema)
   }
 
-  /** S2: fetch one vélib snapshot -> raw DataFrame (velibRaw schema).
-    * The top-level `data` field is REQUIRED after parse: FAILFAST only
-    * catches malformed JSON — a well-formed body missing the field
-    * (producer schema rename) parses NULL and would land a silently
-    * empty payload; the check replays the reference's pandas
-    * KeyError crash on the one-row snapshot.
+  /** S2: fetch one vélib snapshot -> raw DataFrame (velibRaw schema);
+    * the top-level `data` field is required.
     */
   def fetchVelibSnapshot(
       spark: SparkSession, transport: Transport,
       url: String = VelibStatusUrl): DataFrame =
-    graft.sources.Sources.requireTopField(
-      parse(spark, transport(url), Schemas.velibRaw), "data")
+    parse(spark, transport(url), Schemas.velibRaw, "data")
 
   /** S1: fetch one weather snapshot -> raw DataFrame (weatherRaw
-    * schema). `current` required after parse, like the vélib branch.
+    * schema); `current` is required, like `data` in the vélib branch.
     */
   def fetchWeatherSnapshot(
       spark: SparkSession, transport: Transport, url: String): DataFrame =
-    graft.sources.Sources.requireTopField(
-      parse(spark, transport(url), Schemas.weatherRaw), "current")
+    parse(spark, transport(url), Schemas.weatherRaw, "current")
 
   /** K1 raw-zone landing: non-replacing timestamped JSON write, the
     * replayable raw zone (`etl_dag.py:46-55` — upload without `replace`).

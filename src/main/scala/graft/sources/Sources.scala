@@ -16,8 +16,8 @@ import graft.model.Schemas
   * a producer renaming `data.stations` would load rows whose payload
   * is silently empty. The crash-on-missing-field half of the
   * reference's behavior (pandas KeyError) therefore lives in
-  * [[requireTopField]], which the ingest path applies to the one-row
-  * API snapshot after parse.
+  * [[graft.ingest.Ingest]], which checks the required top-level field
+  * of the one-row API snapshot after parse.
   *
   * S3 note: the reference downloads objects to /tmp first
   * (`etl_dag.py:74-78`); Spark reads `s3a://` paths natively through the
@@ -32,24 +32,6 @@ object Sources {
   def readVelibRaw(spark: SparkSession, path: String): DataFrame =
     spark.read.schema(Schemas.velibRaw)
       .option("mode", "FAILFAST").json(path)
-
-  /** Crash-on-missing-field check for a REQUIRED top-level field:
-    * counts rows where `field` parsed NULL and throws naming the
-    * field — the pandas-KeyError half of the reference's contract
-    * FAILFAST cannot express (absent fields parse NULL in every
-    * mode). Eager by design; callers apply it where the frame is
-    * small by construction (the one-row API snapshot in
-    * [[graft.ingest.Ingest]]) or where a validation pass is the
-    * point.
-    */
-  def requireTopField(df: DataFrame, field: String): DataFrame = {
-    val nNull = df.filter(col(field).isNull).count()
-    if (nNull > 0) throw new IllegalStateException(
-      s"required field '$field' is NULL in $nNull row(s) — the feed's " +
-        "schema changed (renamed/removed field); refusing to load " +
-        "silently empty payloads")
-    df
-  }
 
   /** Raw OpenWeatherMap snapshots. Mirrors `etl_dag.py:80-81`. */
   def readWeatherRaw(spark: SparkSession, path: String): DataFrame =

@@ -1,8 +1,12 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.ingest.Ingest
+import graft.model.Schemas
+import graft.model.Schemas.RunContext
 import graft.transform.{Velib, Weather}
 
 /** S1/S2 ingestion through an injected transport: canned API bodies run
@@ -113,5 +117,91 @@ class IngestSpec extends SparkTestBase {
     intercept[Exception] { Ingest.landRaw(raw, dir, "20240201-010000") }
     assert(spark.read.schema(graft.model.Schemas.velibRaw)
       .json(s"$dir/ingest_ts=20240201-010000").count() === 1)
+  }
+
+  private def fixtureLines(name: String): Seq[String] =
+    new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(s"$FixtureDir/$name"))).linesIterator.toSeq
+
+  /** Reference parse: the body as a one-element dataset read by the
+    * JSON source with the raw schema, FAILFAST.
+    */
+  private def readerParse(body: String, schema: StructType): DataFrame = {
+    import spark.implicits._
+    spark.read.schema(schema).option("mode", "FAILFAST").json(Seq(body).toDS())
+  }
+
+  /** The bytes `landRaw` writes for `raw`, part files in name order. */
+  private def landedBytes(raw: DataFrame): Seq[Byte] = {
+    val dir = java.nio.file.Files.createTempDirectory("parity").toString
+    Ingest.landRaw(raw, dir, "20240201-010000")
+    new java.io.File(s"$dir/ingest_ts=20240201-010000").listFiles()
+      .filter(_.getName.startsWith("part-")).sortBy(_.getName)
+      .flatMap(f => java.nio.file.Files.readAllBytes(f.toPath)).toSeq
+  }
+
+  private def assertSameRows(a: DataFrame, b: DataFrame): Unit = {
+    assert(a.count() === b.count())
+    assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
+  }
+
+  private val parityCtx = RunContext("2024-02-01 01:00:00", "velib_spark", "load")
+
+  test("driver-side parse lands the fixture bodies byte-identical to the JSON reader path") {
+    val velib = fixtureLines("station_status.json") ++
+      fixtureLines("station_status_mixed.json").take(2)
+    for (body <- velib) {
+      val fetched = Ingest.fetchVelibSnapshot(spark, _ => body)
+      val reference = readerParse(body, Schemas.velibRaw)
+      assert(landedBytes(fetched) === landedBytes(reference), body.take(80))
+      def curated(raw: DataFrame) = Velib.withRunMetadata(
+        Velib.dedupSnapshots(Velib.curateStations(Velib.flattenStations(raw))), parityCtx)
+      assertSameRows(curated(fetched), curated(reference))
+    }
+    for (body <- fixtureLines("weather.json")) {
+      val fetched = Ingest.fetchWeatherSnapshot(spark, _ => body, "weather://x")
+      val reference = readerParse(body, Schemas.weatherRaw)
+      assert(landedBytes(fetched) === landedBytes(reference), body.take(80))
+      assertSameRows(Weather.projectWeather(fetched), Weather.projectWeather(reference))
+    }
+  }
+
+  test("malformed, null and wrong-typed bodies still fail at fetch") {
+    val bad = fixtureLines("station_status_mixed.json").drop(2) ++ Seq(
+      """{"data": """, "null", """{"data": 5}""", """{"data": {"stations": 7}}""")
+    for (body <- bad)
+      withClue(body) { intercept[Exception] { Ingest.fetchVelibSnapshot(spark, _ => body) } }
+    intercept[Exception] {
+      Ingest.fetchWeatherSnapshot(spark, _ => """{"current": "sunny"}""", "weather://x")
+    }
+  }
+
+  test("a missing required field fails with the required-field message") {
+    val msg = (f: String) => s"required field '$f' is NULL in 1 row(s) — the feed's " +
+      "schema changed (renamed/removed field); refusing to load silently empty payloads"
+    val v = intercept[IllegalStateException] {
+      Ingest.fetchVelibSnapshot(spark, _ => """{"ttl": 3600, "stations": []}""")
+    }
+    assert(v.getMessage === msg("data"))
+    val w = intercept[IllegalStateException] {
+      Ingest.fetchWeatherSnapshot(spark, _ => """{"lat": 48.85, "now": {}}""", "weather://x")
+    }
+    assert(w.getMessage === msg("current"))
+  }
+
+  test("an empty or blank body fails instead of landing an empty payload") {
+    for (body <- Seq("", "  \n\t "))
+      withClue(s"[$body]") {
+        val e = intercept[IllegalStateException] { Ingest.fetchVelibSnapshot(spark, _ => body) }
+        assert(e.getMessage.contains("not a JSON object"))
+      }
+    intercept[IllegalStateException] {
+      Ingest.fetchWeatherSnapshot(spark, _ => "", "weather://x")
+    }
+  }
+
+  test("a top-level JSON array fails instead of expanding to one snapshot per element") {
+    for (body <- Seq("[]", fixtureLines("station_status.json").mkString("[", ",", "]")))
+      withClue(body.take(80)) { intercept[Exception] { Ingest.fetchVelibSnapshot(spark, _ => body) } }
   }
 }
