@@ -21,7 +21,7 @@ object SparkTestSession {
 abstract class SparkTestBase extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.spark
 
-  val FixtureDir = "/root/repo/fixtures"
+  val FixtureDir: String = graft.queries.QueryUtil.fixtureRoot
 
   def rows(df: DataFrame): Seq[Row] = df.collect().toSeq
 

@@ -304,6 +304,129 @@ class StreamsSpec extends SparkTestBase {
     assert(spark.read.parquet(outP).count() === 2)
   }
 
+  /** One GBFS station-status line: (station_id, bikes, last_reported s). */
+  private def snapshot(reports: (Long, Int, Long)*): String =
+    reports.map { case (id, bikes, at) =>
+      s"""{"station_id": $id, "num_bikes_available": $bikes, "num_docks_available": 10, "is_installed": 1, "is_returning": 1, "is_renting": 1, "last_reported": $at}"""
+    }.mkString("""{"lastUpdatedOther": 1706745600, "ttl": 3600, "data": {"stations": [""", ", ", "]}}")
+
+  private def commitCount(ckpt: String): Int =
+    Option(new java.io.File(ckpt, "commits").listFiles()).getOrElse(Array.empty)
+      .count(_.getName.forall(_.isDigit))
+
+  /** Runs `dedupedStationUpdates` over `drop` to completion through
+    * `writer` and returns the finished query.
+    */
+  private def runDedup(drop: String)(
+      writer: DataFrame => org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row])
+      : org.apache.spark.sql.streaming.StreamingQuery = {
+    val q = writer(Streams.dedupedStationUpdates(Streams.velibStream(spark, drop))).start()
+    q.awaitTermination(60000)
+    assert(!q.isActive)
+    q
+  }
+
+  private def availableNowParquet(out: String, ckpt: String)(df: DataFrame) =
+    df.writeStream.format("parquet")
+      .option("path", out).option("checkpointLocation", ckpt)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+
+  private def lateDrops(q: org.apache.spark.sql.streaming.StreamingQuery): Long =
+    q.recentProgress.flatMap(_.stateOperators).map(_.numRowsDroppedByWatermark).sum
+
+  /** A fresh drop dir plus output and checkpoint dirs for the one-batch
+    * writer and for an AvailableNow writer over the same drops.
+    */
+  private def onceVsAvailableNowDirs(prefix: String): (String, Seq[String]) = {
+    val base = java.nio.file.Files.createTempDirectory(prefix)
+    (java.nio.file.Files.createDirectory(base.resolve("drop")).toString,
+      Seq("once_out", "once_ckpt", "an_out", "an_ckpt").map(base.resolve(_).toString))
+  }
+
+  private def outKeys(path: String): Seq[(Long, Long)] =
+    spark.read.parquet(path).select("station_id", "last_reported").collect()
+      .map(r => (r.getLong(0), r.getTimestamp(1).getTime / 1000)).sorted.toSeq
+
+  test("availableNowParquetWriter: one micro-batch per run, same rows as AvailableNow") {
+    import java.nio.file.{Files, Paths}
+    val (drop, Seq(onceOut, onceCkpt, anOut, anCkpt)) = onceVsAvailableNowDirs("onebatch")
+    val t0 = 1706745000L
+    val drops = Seq(
+      snapshot((1L, 5, t0), (2L, 3, t0 + 60)),
+      // station 1 re-reported within the watermark: dedup state drops it;
+      // station 2 moves the watermark to t0 + 3 h, past station 1's expiry
+      snapshot((1L, 5, t0), (2L, 1, t0 + 5 * 3600)),
+      // station 1's report again, now older than the watermark;
+      // station 2 re-reported within the watermark; station 3 is new
+      snapshot((1L, 5, t0), (2L, 1, t0 + 5 * 3600), (3L, 7, t0 + 5 * 3600 + 60)))
+    def runOnce() = runDedup(drop)(Streams.availableNowParquetWriter(_, onceOut, onceCkpt))
+    def outRows(path: String) =
+      spark.read.parquet(path).collect().map(_.toSeq.mkString("|")).sorted.toSeq
+
+    val runs = drops.zipWithIndex.map { case (body, i) =>
+      Files.writeString(Paths.get(drop, s"s$i.json"), body)
+      val once = runOnce()
+      assert(commitCount(onceCkpt) === i + 1, s"run ${i + 1} must commit exactly one batch")
+      (once, runDedup(drop)(availableNowParquet(anOut, anCkpt)))
+    }
+    // the chain moved the watermark, so AvailableNow ran trailing batches
+    assert(commitCount(anCkpt) > drops.size)
+    // The stale repeat is late for AvailableNow's last data batch. Spark
+    // filters late rows by the PREVIOUS batch's watermark, one run older
+    // here, so with one batch per run the dedup state, whose eviction was
+    // deferred to this batch, drops it instead.
+    assert(lateDrops(runs.last._2) === 1)
+    assert(lateDrops(runs.last._1) === 0)
+    val once = outRows(onceOut)
+    assert(once === outRows(anOut))
+    assert(outKeys(onceOut) ===
+      Seq((1L, t0), (2L, t0 + 60), (2L, t0 + 5 * 3600), (3L, t0 + 5 * 3600 + 60)))
+
+    // a run with no new file commits nothing and adds no row
+    runOnce()
+    assert(commitCount(onceCkpt) === drops.size)
+    assert(outRows(onceOut) === once)
+  }
+
+  test("availableNowParquetWriter: a never-seen report older than the watermark passes the one-run-older late filter") {
+    import java.nio.file.{Files, Paths}
+    val (drop, Seq(onceOut, onceCkpt, anOut, anCkpt)) = onceVsAvailableNowDirs("onebatch_late")
+    val t0 = 1706745000L
+    // run 2 moves the watermark from t0 - 2 h to t0 + 3 h; run 3 brings
+    // station 4's first report, stamped t0 + 2 h
+    Seq(snapshot((1L, 5, t0)), snapshot((1L, 4, t0 + 5 * 3600)),
+        snapshot((4L, 9, t0 + 2 * 3600))).zipWithIndex.foreach { case (body, i) =>
+      Files.writeString(Paths.get(drop, s"s$i.json"), body)
+      runDedup(drop)(Streams.availableNowParquetWriter(_, onceOut, onceCkpt))
+      runDedup(drop)(availableNowParquet(anOut, anCkpt))
+    }
+    // AvailableNow's late filter already sits at t0 + 3 h and drops it;
+    // one batch per run filters at run 2's batch watermark, t0 - 2 h, and
+    // admits it. Spark's watermark contract allows either for a row
+    // beyond the 2 h delay.
+    assert(outKeys(anOut) === Seq((1L, t0), (1L, t0 + 5 * 3600)))
+    assert(outKeys(onceOut) === Seq((1L, t0), (1L, t0 + 5 * 3600), (4L, t0 + 2 * 3600)))
+  }
+
+  test("availableNowParquetWriter rejects plans that need the trailing batch") {
+    import java.nio.file.Files
+    val raw = Streams.velibStream(spark, Files.createTempDirectory("reject").toString)
+    val curated = graft.transform.Velib.curateStations(graft.transform.Velib.flattenStations(raw))
+    val out = Files.createTempDirectory("reject_out").toString
+    val ckpt = Files.createTempDirectory("reject_ckpt").toString
+    val windowed = Streams.hourlyAvailabilityStream(raw)
+    val keyedOnStation = curated.withWatermark("last_reported", "2 hours")
+      .dropDuplicatesWithinWatermark("station_id")
+    for (df <- Seq(windowed, keyedOnStation)) {
+      val e = intercept[IllegalArgumentException](
+        Streams.availableNowParquetWriter(df, out, ckpt))
+      assert(e.getMessage.contains("one micro-batch per run"))
+      assert(e.getMessage.contains("Run this plan with Trigger.AvailableNow() instead"))
+    }
+    // no stateful operator: nothing for a trailing batch to do
+    Streams.availableNowParquetWriter(curated, out, ckpt)
+  }
+
   test("stream-static enrichment: left join keeps facts missing from the dim") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[String]
