@@ -1,5 +1,7 @@
 package graft
 
+import graft.queries.Scratch
+
 /** Benchmark main: runs every registered query on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line {"metric":"total","value":N,"unit":"sec",
   * "queries":{...},"sf":...}.
@@ -117,33 +119,55 @@ object Bench {
     }
   }
 
+  /** Time one query to the noop sink: (wall seconds, error), plus the
+    * [[Scratch]] kinds it built. Every shared derivation is built
+    * eagerly inside the query, so diffing [[Scratch.held]] around it
+    * (outside the timed region) observes the builder.
+    */
+  private[graft] def timeQuery(spark: org.apache.spark.sql.SparkSession,
+      name: String, label: String, sfDir: String): ((Double, Option[String]), Set[String]) = {
+    val held = Scratch.held
+    System.err.println(s"[bench] $label start $name")
+    val t0 = System.nanoTime()
+    val err: Option[String] =
+      try { SparkEntry.queries(name)(spark, sfDir)
+        .write.format("noop").mode("overwrite").save(); None }
+      catch { case e: Throwable =>
+        Some(Option(e.getMessage).getOrElse(e.getClass.getName).take(200)) }
+    val dt = (System.nanoTime() - t0) / 1e9
+    System.err.println(
+      f"[bench] $label done  $name $dt%.2f s${err.fold("")(e => s" ERR $e")}")
+    ((dt, err), (Scratch.held -- held).map(_._1))
+  }
+
   /** Time one list of queries, recycling the session every
     * [[Harness.RecycleEvery]] queries (ThreadLocal pollution — see
     * main's comment). ONE definition for the main passes and the
     * targeted retry pass: a timing or error-truncation tweak edited in
-    * one arm would silently diverge the other.
+    * one arm would silently diverge the other. Returns the timings and
+    * each built Scratch kind's builder.
     */
-  private def timeChunk(
-      names: Seq[String], label: String, sfDir: String,
-      cpus: String): Map[String, (Double, Option[String])] =
-    names.grouped(Harness.RecycleEvery).flatMap { chunk =>
+  private def timeChunk(names: Seq[String], label: String, sfDir: String,
+      cpus: String): (Map[String, (Double, Option[String])], Map[String, String]) = {
+    val rs = names.grouped(Harness.RecycleEvery).flatMap { chunk =>
       val spark = Harness.newSession(cpus)
-      val rs = chunk.map { name =>
-        System.err.println(s"[bench] $label start $name")
-        val t0 = System.nanoTime()
-        val err: Option[String] =
-          try { SparkEntry.queries(name)(spark, sfDir)
-            .write.format("noop").mode("overwrite").save(); None }
-          catch { case e: Throwable =>
-            Some(Option(e.getMessage).getOrElse(e.getClass.getName).take(200)) }
-        val dt = (System.nanoTime() - t0) / 1e9
-        System.err.println(
-          f"[bench] $label done  $name $dt%.2f s${err.fold("")(e => s" ERR $e")}")
-        (name, (dt, err))
-      }
+      val r = chunk.map(name => name -> timeQuery(spark, name, label, sfDir))
       Harness.recycle(spark)
-      rs
-    }.toMap
+      r
+    }.toSeq
+    (rs.map { case (n, (t, _)) => n -> t }.toMap,
+      rs.flatMap { case (n, (_, built)) => built.map(_ -> n) }.toMap)
+  }
+
+  /** Kinds the targeted retry must re-derive: those whose builder in
+    * either main pass is retried. Every other consumer was warm in the
+    * main passes and stays warm (a reset would charge it a derivation
+    * it never paid); a retried builder re-timed warm would beat its
+    * honest main-pass time and drop the derivation from the total.
+    */
+  private[graft] def kindsToReset(
+      builtBy: Seq[Map[String, String]], retried: Set[String]): Set[String] =
+    builtBy.flatMap(_.collect { case (kind, q) if retried(q) => kind }).toSet
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -193,11 +217,10 @@ object Bench {
     val probes = scala.collection.mutable.ArrayBuffer[(Double, Double)]()
     probes += probeSample()
     val passes = (1 to Passes).map { p =>
-      // Each pass re-derives every shared scratch set (mined pairs,
-      // shingles, pair stats, gram hashes) once: carrying any cache
-      // across passes would let min-of-passes erase its derivation
-      // cost from the totals (see LlmQueries.sharedScratchCaches).
-      graft.queries.LlmQueries.resetSharedScratch()
+      // Each pass re-derives every shared derivation once: carrying
+      // one across passes would let min-of-passes erase its cost
+      // from the totals (see Scratch).
+      Scratch.reset()
       val r = timeChunk(names, s"p$p", sfDir, cpus)
       probes += probeSample()
       r
@@ -227,32 +250,20 @@ object Bench {
     // more than 2x — min-of-2 is not enough when a pass sits inside one
     // of this host's multi-minute stall windows; re-timing ONLY the
     // noisy queries keeps the extra cost proportional to the noise.
-    val noisy = names.filter(n => spread(passes.map(_(n))) > 2.0)
+    val noisy = names.filter(n => spread(passes.map(_._1(n))) > 2.0)
     val retry: Map[String, (Double, Option[String])] =
       if (noisy.isEmpty) Map.empty
       else {
         System.err.println(
           s"[bench] retrying high-spread queries: ${noisy.mkString(", ")}")
-        // Cache policy for the retry, PER shared-scratch cache:
-        // non-first consumers were WARM in the main passes, so the
-        // retry stays warm for them (a reset would charge them a
-        // derivation they never paid, inflating the retry time and
-        // the reported spread). Only when the retried set contains a
-        // cache's FIRST consumer — the query its derivation is
-        // attributed to — must the retry re-derive that cache, or its
-        // warm re-time would beat the honest main-pass minimum and
-        // drop the derivation from the total. `noisy` preserves
-        // `names` order, so that consumer also runs first within the
-        // retry.
-        graft.queries.LlmQueries.sharedScratchCaches.foreach {
-          case (_, reset, consumers) =>
-            if (names.find(consumers).exists(noisy.contains)) reset()
-        }
-        timeChunk(noisy, "retry", sfDir, cpus)
+        // `noisy` preserves `names` order, so a re-derived kind's
+        // builder also runs first within the retry.
+        kindsToReset(passes.map(_._2), noisy.toSet).foreach(Scratch.resetKind)
+        timeChunk(noisy, "retry", sfDir, cpus)._1
       }
 
     val results = names.map { name =>
-      val runs = passes.map(_(name)) ++ retry.get(name)
+      val runs = passes.map(_._1(name)) ++ retry.get(name)
       val (t, err) = pick(runs)
       (name, t, err, spread(runs))
     }
@@ -385,8 +396,11 @@ object Bench {
       probes.map(p => num(p._1, "%.3f")).mkString("[", ",", "]")
     val ioProbesJson =
       probes.map(p => num(p._2, "%.3f")).mkString("[", ",", "]")
+    val builtBy = passes.map(_._2.toSeq.sorted
+      .map { case (k, q) => s"${jstr(k)}:${jstr(q)}" }.mkString("{", ",", "}"))
+      .mkString("[", ",", "]")
     val full =
-      s"""{"metric":"total","value":${num(total, "%.3f")},"unit":"sec","host_speed_index":${num(hostSpeedIndex, "%.2f")},"host_probe_sec":$probesJson,"host_io_index":${num(hostIoIndex, "%.2f")},"host_io_probe_sec":$ioProbesJson,"host_probe_drift":${num(probeDrift, "%.2f")},"host_window_unstable":$hostWindowUnstable,"queries":$qs,"errors":$errs,"spread":$spreads,"trend":$trend,"regressions":$regressions,"regressions_raw":$regressionsRaw,"regressions_vs_best":$vsBest,"sf":${jstr(sfDir)}}"""
+      s"""{"metric":"total","value":${num(total, "%.3f")},"unit":"sec","host_speed_index":${num(hostSpeedIndex, "%.2f")},"host_probe_sec":$probesJson,"host_io_index":${num(hostIoIndex, "%.2f")},"host_io_probe_sec":$ioProbesJson,"host_probe_drift":${num(probeDrift, "%.2f")},"host_window_unstable":$hostWindowUnstable,"queries":$qs,"errors":$errs,"spread":$spreads,"trend":$trend,"regressions":$regressions,"regressions_raw":$regressionsRaw,"regressions_vs_best":$vsBest,"scratch_built_by":$builtBy,"sf":${jstr(sfDir)}}"""
     // Belt-and-braces for the driver's tail parser: the compact headline
     // brackets the long map line on stdout, AND the full JSON is written
     // to a bare artifact file free of any build-tool log prefixes.

@@ -34,10 +34,8 @@ object Harness {
       // tiny exchanges but lets a 3 MB shuffle spread across the
       // session's cores. Scale-inert by construction: any exchange
       // past ~32 MB at 32 cores already beats the floor, so a 100 TB
-      // deployment sees identical plans — and the env override keeps
-      // it tunable without a rebuild.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_COALESCED_PARTITION", "64k"))
+      // deployment sees identical plans.
+      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

@@ -102,7 +102,7 @@ private[graft] object PctlMap {
   * row: the builtin is a TypedImperativeAggregate over
   * `OpenHashMap[AnyRef, Long]` — every row boxes its value, hashes a
   * generic object, and allocates a closure (measured ~250k rows/s;
-  * `tools/MadProbe`, r11) — while this buffer is two primitive long
+  * r11 q_profile_mad component timing) — while this buffer is two primitive long
   * arrays with open addressing.
   *
   * Bit-identical by construction, each piece mirroring the builtin

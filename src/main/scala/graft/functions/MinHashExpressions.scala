@@ -44,7 +44,7 @@ object MinHashPerms {
   * Why one aggregate instead of 128 (guide §1.2 "per-task work" +
   * driver cost): Catalyst pays analysis/optimization per
   * AggregateExpression, and the 128-column form measured 0.7-0.9 s of
-  * DRIVER planning per query compilation (tools/PlanCostProbe, r13) —
+  * DRIVER planning per query compilation (r13 planning-cost probe) —
   * the streaming admission loop re-plans it every micro-batch, so 7
   * micro-batches paid ~6 s of pure planning. This form is one
   * AggregateExpression; the per-row work (128 multiply-mods in a tight

@@ -91,7 +91,7 @@ object Dedup {
     * Why not 128 separate `min(pmod(a_k·x + b_k, P))` aggregate columns
     * (the r3-r12 form): Catalyst pays analysis/optimization PER
     * AggregateExpression, and that form measured 0.7-0.9 s of DRIVER
-    * planning per query compilation (tools/PlanCostProbe) — the
+    * planning per query compilation (r13 planning-cost probe) — the
     * streaming admission loop re-plans it every micro-batch. The single
     * aggregate is bit-identical by construction (same longs, same
     * arithmetic — see MinHashMins' scaladoc) and the exchange carries

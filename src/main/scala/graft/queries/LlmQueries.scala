@@ -132,9 +132,9 @@ object LlmQueries {
     embs(s, dir).filter(col("vec_id") < 5).limit(5)
       .select(col("vec_id").as("probe_id"), col("embedding").as("vec"))
 
-  /** MinHash near-dup pairs (doc_a, doc_b) mined ONCE PER RUN and
-    * persisted to scratch parquet; every graph/cluster consumer reads
-    * the stored set.
+  /** MinHash near-dup pairs (doc_a, doc_b, jaccard) mined once per run
+    * into the shared `pairs` scratch parquet (see [[Scratch]]); every
+    * graph/cluster consumer reads the stored set.
     *
     * Two layers of reuse, each fixing a measured cost:
     *  - WITHIN a query (r8): operators reference the pair set through
@@ -144,183 +144,69 @@ object LlmQueries {
     *    exchange reuse cannot dedup them, so a lazy frame re-ran the
     *    whole LSH + exact-verify mining pipeline per reference
     *    (q_graph_pagerank paid mining twice, ~2.5 s of its 5-6 s).
-    *  - ACROSS queries (r9): four registered queries consume the SAME
+    *  - ACROSS queries (r9): six registered queries consume the SAME
     *    (dir, threshold) pair set, and a per-query localCheckpoint
-    *    still re-mined it four times per Verify/bench run. A process-
-    *    wide path cache mines on first demand, writes the pairs to a
-    *    scratch parquet, and hands each consumer (and each later
-    *    query) a plain file read. Caching the PATH, not the frame,
-    *    keeps it valid across Harness.RecycleEvery session recycling —
-    *    a checkpointed frame dies with its session; files don't.
+    *    still re-mined it per consumer per Verify/bench run.
     *
-    * This is exactly the 100 TB shape: a deployment writes the mined
-    * pair set to storage once and feeds every downstream graph op from
-    * it, never re-mining per consumer. The banded-signature cache is
-    * released as soon as the pairs are on disk (no lineage needed).
-    *
-    * Per-query bench attribution note (for anyone reading BENCH
-    * deltas): the FIRST consumer in a run pays the full mining cost;
-    * the five others read parquet. The mining work is still inside
-    * every full run's total — it just appears once, which is the
-    * point.
+    * The banded-signature cache is released as soon as the pairs are
+    * on disk (no lineage needed). q_dedup_minhash ships this full row
+    * set; graph consumers use [[minedPairs]]'s two-column projection
+    * so an extra column can never ride into an operator's
+    * union/select-star path.
     */
-  private val minedPairsCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Double, String), String]()
-
-  /** Drop the cross-query pair cache. Bench calls this at the start of
-    * every timing pass so each pass pays mining exactly ONCE — without
-    * the reset, pass 2 reads pass 1's parquet and min-of-passes would
-    * erase the mining cost from the reported totals entirely (a
-    * phantom speed-up the artifact's trend would misread as real).
-    */
-  def resetMinedPairsCache(): Unit = minedPairsCache.clear()
-
-  /** Every shared-scratch cache with its bench-honesty metadata:
-    * (label, reset, consumer registry names). ONE list so Bench and
-    * VerifyTwice reset ALL caches per pass (no cache can silently
-    * carry across passes and erase its derivation cost from
-    * min-of-passes), and Bench's targeted-retry pass can re-prime
-    * exactly the caches whose cost-bearing FIRST consumer is being
-    * re-timed — warm for everyone else, exactly like the main passes.
-    */
-  // lazy: refers to minedPairConsumers, declared further down — an
-  // eager val would capture null during object initialization
-  lazy val sharedScratchCaches: Seq[(String, () => Unit, Set[String])] = Seq(
-    ("pairs", () => resetMinedPairsCache(), minedPairConsumers),
-    ("shingles3", () => Scratch.resetKind("shingles3"),
-      Set("q_dedup_ngram", "q_dedup_contain", "q_dedup_prefix")),
-    ("pairstats3", () => Scratch.resetKind("pairstats3"),
-      Set("q_dedup_ngram", "q_dedup_contain")),
-    ("grams8", () => Scratch.resetKind("grams8"),
-      Set("q_decon_ngram", "q_decon_overlap")),
-    ("crosspairs", () => Scratch.resetKind("crosspairs"),
-      Set("q_decontaminate", "q_dedup_incremental")),
-    ("pqcodebook", () => resetPqCodebookCache(),
-      Set("q_ann_pq", "q_pq_codes")),
-    ("bpemerges", () => resetBpeMergesCache(),
-      Set("q_vocab_bpe", "q_vocab_pieces")),
-    ("langmodel", () => resetLangModelCache(),
-      Set("q_text_perplexity", "q_text_perplexity_bcast")),
-    ("annexact", () => Scratch.resetKind("annexact"),
-      Set("q_ann_topk", "q_eval_mrr", "q_eval_rbo", "q_eval_ndcg",
-        "q_eval_annrecall")),
-    ("annlsh", () => Scratch.resetKind("annlsh"),
-      Set("q_ann_lsh", "q_eval_rbo", "q_eval_ndcg", "q_eval_annrecall")))
-
-  /** Reset every shared-scratch cache — the per-pass call. */
-  def resetSharedScratch(): Unit = sharedScratchCaches.foreach(_._2())
-
-  /** Registry names that consume the shared mined pair set — the
-    * queries whose timings depend on cache state. Bench uses this to
-    * decide whether a targeted retry pass must re-mine (only when the
-    * retried set contains the FIRST consumer, the one mining is
-    * attributed to) or should stay warm like every non-first consumer
-    * was in the main passes.
-    */
-  val minedPairConsumers: Set[String] = Set(
-    "q_dedup_minhash", "q_dedup_clusters", "q_dedup_canonical",
-    "q_graph_pagerank", "q_graph_triangles", "q_split_leakfree")
-
-  /** The full mined row set (doc_a, doc_b, jaccard) — what
-    * q_dedup_minhash ships; graph consumers use [[minedPairs]]'s
-    * two-column projection so an extra column can never ride into an
-    * operator's union/select-star path.
-    */
-  private def minedPairsFull(s: SparkSession, dir: String, threshold: Double) = {
-    // The key carries the docs table's file-listing fingerprint (the
-    // Scratch contract): a harness that rewrites documents.parquet in
-    // place mid-process invalidates the entry and the next consumer
-    // re-mines — the bare (dir, threshold) key only IMPLIED that dirs
-    // are immutable for a process lifetime (r9 verdict, "What's
-    // wrong" #2). ScratchSpec pins the invalidation.
-    val fp = Scratch.tableFingerprint(dir, "documents")
-    val path = minedPairsCache.computeIfAbsent((dir, threshold, fp), { key =>
-      val (pairs, release) =
-        Dedup.minhashNearDuplicatesReleasable(
-          QueryUtil.spread(docs(s, key._1)), key._2)
-      val out = QueryUtil.scratchDir("graft_pairs_") + "/pairs"
+  private def minedPairsFull(s: SparkSession, dir: String, threshold: Double) =
+    Scratch.cachedReleasable(s, "pairs", dir, s"t=$threshold") {
+      val (pairs, release) = Dedup.minhashNearDuplicatesReleasable(
+        QueryUtil.spread(docs(s, dir)), threshold)
       // repartition(1): the pair list is oracle-sized (thousands of
       // rows) and its six consumers re-scan it many times (pointer-
       // jumping rounds, triangle passes) — 32 part files made every
       // one of those scans a 32-task stage of pure scheduler overhead
-      pairs.repartition(1).write.mode("overwrite").parquet(out) // (doc_a, doc_b, jaccard)
-      release()
-      out
-    })
-    s.read.parquet(path)
-  }
+      (pairs.repartition(1), release)
+    }
 
   private def minedPairs(s: SparkSession, dir: String, threshold: Double) =
     minedPairsFull(s, dir, threshold).select(col("doc_a"), col("doc_b"))
 
   /** The whole-vector PQ codebook (m=4, subDim=16, k=4, iters=1 over
-    * the embeddings corpus), trained once per run — q_ann_pq and
-    * q_pq_codes call [[ProductQuant.fit]] with IDENTICAL inputs and
-    * parameters, and the training is deterministic, so per-query
-    * refits were pure duplicate work. This is the deployment shape
-    * too: a PQ index stores ONE codebook that both the
-    * code-materialization job and every ANN query read — nobody
-    * retrains per query. Driver-side model object (m·k·subDim floats),
-    * fingerprint-keyed like every Scratch entry, reset per bench pass
-    * through [[sharedScratchCaches]] so min-of-passes can never erase
-    * the training cost (first consumer per pass pays it). The IVF-PQ
-    * codebook is NOT shareable from here: it trains over residuals
-    * against the coarse centroids, a different input frame.
+    * the embeddings corpus), trained once per run as a [[Scratch]]
+    * driver value — q_ann_pq and q_pq_codes call [[ProductQuant.fit]]
+    * with IDENTICAL inputs and parameters, and the training is
+    * deterministic, so per-query refits were pure duplicate work. This
+    * is the deployment shape too: a PQ index stores ONE codebook that
+    * both the code-materialization job and every ANN query read. The
+    * IVF-PQ codebook is NOT shareable from here: it trains over
+    * residuals against the coarse centroids, a different input frame.
     */
-  private val pqCodebookCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String),
-      ProductQuant.Codebooks]()
-
-  def resetPqCodebookCache(): Unit = pqCodebookCache.clear()
-
-  private def pqCodebook(s: SparkSession, dir: String): ProductQuant.Codebooks = {
-    val fp = Scratch.tableFingerprint(dir, "embeddings")
-    pqCodebookCache.computeIfAbsent((dir, fp), _ =>
+  private def pqCodebook(s: SparkSession, dir: String): ProductQuant.Codebooks =
+    Scratch.value("pqcodebook", dir, "m=4;subDim=16;k=4;iters=1", "embeddings") {
       ProductQuant.fit(corpus(s, dir), "id", "vec",
-        m = 4, subDim = 16, k = 4, iters = 1))
-  }
+        m = 4, subDim = 16, k = 4, iters = 1)
+    }
 
-  /** The k=3 BPE merge list, trained once per run — q_vocab_bpe SHIPS
-    * this table and q_vocab_pieces APPLIES the same merges, and greedy
-    * BPE training is deterministic (argmax ties on the pair string),
-    * so the second k-round sequential training per run was duplicate
-    * work. Driver-local Seq (5 fields × k rows); same reset/attribution
-    * contract as [[pqCodebook]]. q_vocab_bpe_batched keeps its own
+  /** The k-merge BPE list, trained once per run as a [[Scratch]] driver
+    * value — q_vocab_bpe SHIPS this table and q_vocab_pieces APPLIES
+    * the same merges, and greedy BPE training is deterministic (argmax
+    * ties on the pair string). q_vocab_bpe_batched keeps its own
     * trainer — different algorithm (k=4, batch=2), different oracle.
     */
-  private val bpeMergesCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, Int),
-      Seq[(Int, String, String, String, Long)]]()
-
-  def resetBpeMergesCache(): Unit = bpeMergesCache.clear()
-
   private def bpeMerges(
-      s: SparkSession, dir: String, k: Int): Seq[(Int, String, String, String, Long)] = {
-    val fp = Scratch.tableFingerprint(dir, "documents")
-    bpeMergesCache.computeIfAbsent((dir, fp, k), _ =>
-      Bpe.trainMergesLocal(docs(s, dir), "text", k))
-  }
+      s: SparkSession, dir: String, k: Int): Seq[(Int, String, String, String, Long)] =
+    Scratch.value("bpemerges", dir, s"k=$k") {
+      Bpe.trainMergesLocal(docs(s, dir), "text", k)
+    }
 
-  /** The default bigram language model, trained once per run —
-    * q_text_perplexity and q_text_perplexity_bcast exist to pin the
-    * LITERAL and BROADCAST scoring paths against each other, and both
-    * train the identical deterministic model first; the second
-    * training per run was duplicate work that exercises nothing (the
-    * paths diverge at SCORING, which each query still runs its own
-    * way). Driver-local model object; same reset/attribution contract
-    * as [[pqCodebook]].
+  /** The default bigram language model, trained once per run as a
+    * [[Scratch]] driver value — q_text_perplexity and
+    * q_text_perplexity_bcast pin the LITERAL and BROADCAST scoring
+    * paths against each other, and both need the identical
+    * deterministic model; the paths diverge only at SCORING, which each
+    * query still runs its own way.
     */
-  private val langModelCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String),
-      graft.operators.LangModel.BigramModel]()
-
-  def resetLangModelCache(): Unit = langModelCache.clear()
-
-  private def langModel(s: SparkSession, dir: String): graft.operators.LangModel.BigramModel = {
-    val fp = Scratch.tableFingerprint(dir, "documents")
-    langModelCache.computeIfAbsent((dir, fp), _ =>
-      LangModel.train(docs(s, dir), "text"))
-  }
+  private def langModel(s: SparkSession, dir: String): LangModel.BigramModel =
+    Scratch.value("langmodel", dir, "bigram") {
+      LangModel.train(docs(s, dir), "text")
+    }
 
   val queries: Map[String, Q] = Map(
     // Exact dedup: one uniform md5 shuffle (Dedup.exactDuplicateGroups).

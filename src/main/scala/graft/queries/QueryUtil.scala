@@ -109,17 +109,7 @@ object QueryUtil {
     new java.util.concurrent.atomic.AtomicReference[
       (SparkSession, scala.collection.concurrent.TrieMap[(String, String), DataFrame])](null)
 
-  /** Kill switch for the memo (A/B measurement + falsification lever:
-    * `SPARK_GRAFT_TABLE_MEMO=off` restores the resolve-per-call
-    * behavior; the system property form serves in-process A/B tools).
-    */
-  private def memoEnabled: Boolean =
-    !sys.props.get("graft.table.memo")
-      .orElse(sys.env.get("SPARK_GRAFT_TABLE_MEMO"))
-      .contains("off")
-
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    if (!memoEnabled) return resolveTable(spark, sfDir, name)
     val entry = tableFrameCache.updateAndGet { cur =>
       if (cur != null && (cur._1 eq spark)) cur
       else (spark, scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame])

@@ -1,57 +1,59 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
-/** Process-wide cache of SHARED derived working sets, materialized to
-  * scratch parquet once per run and read by every consumer query — the
-  * write-once-feed-many shape a 100 TB deployment uses for any derived
-  * set more than one downstream job needs (mined near-dup pairs,
-  * shingle indexes, gram vocabularies). A per-query lazy frame (or even
-  * a localCheckpoint) re-derives the set per consumer and dies with its
-  * session; a stored file costs one write and survives
-  * [[graft.Harness.RecycleEvery]] session recycling.
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+/** The process-wide cache of SHARED derivations: every derived working
+  * set or model that more than one registered query needs is built once
+  * per run and read by every consumer — the write-once-feed-many shape a
+  * 100 TB deployment uses for mined near-dup pairs, shingle indexes,
+  * gram vocabularies and trained models. This object is the ONE such
+  * cache; no query keeps its own.
   *
-  * Each entry carries a FINGERPRINT of the source table's file listing
-  * (name + length + mtime of every part file), so rewriting the data
-  * under the SAME directory path invalidates the entry and the next
-  * consumer re-derives — the path alone was the r9-flagged staleness
-  * hole (VERDICT r9 "What's wrong" #2): a harness that regenerates
-  * `documents.parquet` in place mid-process would otherwise feed every
-  * consumer the previous corpus's pairs. A superseded entry's scratch
-  * dir is deleted when the fingerprint moves (ADVICE r10). `ScratchSpec`
-  * pins both (rewrite docs → re-derivation + eviction).
+  * Two entry forms share one map and one set of rules:
+  *  - [[cached]] (and [[cachedReleasable]]): a DataFrame written to a
+  *    scratch parquet dir. The PATH is cached, not the frame — frames
+  *    die with their session, files survive
+  *    [[graft.Harness.RecycleEvery]] session recycling — and each
+  *    consumer gets a plain file read. `cachedReleasable`'s builder
+  *    also hands back a release hook (e.g. the banded-signature cache
+  *    of [[graft.operators.Dedup.minhashNearDuplicatesReleasable]]),
+  *    run as soon as the write succeeds.
+  *  - [[value]]: a driver-side object (PQ codebook, BPE merge list,
+  *    bigram model) held as-is.
   *
-  * Bench honesty (same rules as the mined-pair cache that preceded
-  * this object, see [[LlmQueries.resetMinedPairsCache]]): every timing
-  * pass resets all kinds so each pass pays derivation exactly once —
-  * the first consumer in registry order is the one charged. The
-  * per-kind consumer sets live in [[LlmQueries.sharedScratchCaches]]
-  * so Bench's targeted-retry pass can re-prime exactly the caches
-  * whose first consumer is being retried.
+  * Key: (kind, dir, param). The value carries a FINGERPRINT of the
+  * source table's file listing ([[tableFingerprint]]), so rewriting the
+  * data under the SAME path makes the next consumer re-derive (the r9
+  * staleness hole: a harness that regenerates `documents.parquet` in
+  * place would otherwise be fed the previous corpus's derivation).
+  * Build-then-evict: the replacement is built first, and only after it
+  * succeeds is the superseded entry dropped and its scratch dir deleted
+  * — a failed rebuild leaves the old entry servable and the next call
+  * retries. A builder must never call back into this object (the
+  * per-key `compute` is not re-entrant); a per-thread guard THROWS on a
+  * nested call instead of deadlocking, so prime any upstream kind first
+  * and pass its frame into the builder closure.
+  *
+  * Bench honesty: Bench, VerifyTwice and the A/B tools call [[reset]]
+  * before every pass, so each pass pays each derivation exactly once and
+  * min-of-passes can never erase it. The query that pays is OBSERVED,
+  * not declared: every build runs eagerly while a query's frame is
+  * built, so Bench diffs [[held]] around each query and records that
+  * query as the kind's builder; a targeted retry re-derives (via
+  * [[resetKind]]) exactly the kinds whose builder it re-times.
   */
 object Scratch {
 
-  /** (kind, dir, param) -> (source fingerprint, scratch parquet path).
-    * One map for all kinds; builders must NEVER call back into
-    * [[cached]] from inside a mapping function
-    * (ConcurrentHashMap.compute is non-reentrant) — prime any upstream
-    * kind BEFORE entering and pass the primed frame into the builder
-    * closure. [[cached]] enforces this with a per-thread guard that
-    * THROWS on a nested call instead of deadlocking (r10 verdict
-    * item 4).
-    *
-    * The fingerprint lives in the VALUE, not the key (ADVICE r10): a
-    * superseded entry (same kind/dir/param, new fingerprint after an
-    * in-place table rewrite) is replaced and its scratch dir deleted,
-    * instead of both accumulating for the JVM lifetime.
-    */
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, String), (String, String)]()
+  /** A parquet entry's value: the scratch path its builder wrote. */
+  private final case class Files(path: String)
 
-  /** True while THIS thread is inside a builder — a nested [[cached]]
-    * call would deadlock `compute`, so fail loudly instead.
-    */
+  /** (kind, dir, param) -> (source fingerprint, value). */
+  private val cache =
+    new java.util.concurrent.ConcurrentHashMap[(String, String, String), (String, Any)]()
+
+  /** True while THIS thread is inside a builder. */
   private val inBuilder = new ThreadLocal[java.lang.Boolean] {
     override def initialValue(): java.lang.Boolean = java.lang.Boolean.FALSE
   }
@@ -67,16 +69,17 @@ object Scratch {
     walk(new java.io.File(path).getParentFile)
   }
 
-  /** Drop every cached kind (Bench/VerifyTwice per-pass reset). */
+  /** Drop every entry (the per-pass reset). */
   def reset(): Unit = cache.clear()
 
-  /** Drop one kind — Bench's targeted-retry honesty: only the caches
-    * whose cost-bearing first consumer is re-timed get re-primed.
+  /** Drop one kind (Bench's targeted retry). */
+  def resetKind(kind: String): Unit = cache.keySet().removeIf(_._1 == kind)
+
+  /** Every entry held now, as (kind, dir, param, fingerprint): two
+    * snapshots differ exactly by the entries built in between.
     */
-  def resetKind(kind: String): Unit = {
-    val it = cache.keySet().iterator()
-    while (it.hasNext) if (it.next()._1 == kind) it.remove()
-  }
+  def held: Set[(String, String, String, String)] =
+    cache.asScala.iterator.map { case ((k, d, p), (fp, _)) => (k, d, p, fp) }.toSet
 
   /** Listing fingerprint of `dir/<table>.parquet` (file or directory):
     * every part file's path, length, and mtime, digest-folded in
@@ -85,6 +88,12 @@ object Scratch {
     * FileSystem.listStatus walk (same contract). An absent table
     * fingerprints as "absent:<path>" so the downstream read fails with
     * the real missing-path error, not a fingerprint NPE.
+    *
+    * Caveat: a same-length in-place byte mutation landing within the
+    * file system's mtime resolution would not move it. Spark rewrites
+    * produce fresh UUID part-file names, which always move the
+    * listing; a non-Spark writer mutating bytes in place is outside
+    * this contract.
     */
   def tableFingerprint(dir: String, tableName: String): String = {
     val root = new java.io.File(dir, s"$tableName.parquet")
@@ -103,47 +112,53 @@ object Scratch {
     }
   }
 
-  /** Materialize-once: on first demand per (kind, dir, param) at the
-    * source table's CURRENT fingerprint, run `build` and write the
-    * result to a scratch parquet; every later demand (any session,
-    * same process) is a plain file read. The PATH is cached, not the
-    * frame — frames die with their session, files don't. A fingerprint
-    * change (in-place table rewrite) replaces the entry and DELETES
-    * the superseded scratch dir.
-    *
-    * Fingerprint caveat: the listing hash is name+length+mtime, so a
-    * same-length in-place byte mutation landing within the file
-    * system's mtime resolution would not move it. In practice Spark
-    * rewrites produce fresh UUID part-file names, which always move
-    * the listing; a non-Spark writer mutating bytes in place is
-    * outside this contract.
+  /** The driver-value entry: `build` runs on first demand per key at the
+    * source table's current fingerprint; every later demand returns the
+    * held object.
     */
-  def cached(s: SparkSession, kind: String, dir: String, param: String,
-      sourceTable: String = "documents")(build: => DataFrame): DataFrame = {
+  def value[T](kind: String, dir: String, param: String,
+      sourceTable: String = "documents")(build: => T): T = {
     if (inBuilder.get())
       throw new IllegalStateException(
-        s"nested Scratch.cached('$kind') call from inside a builder — " +
+        s"nested Scratch.cached/value('$kind') call from inside a builder — " +
           "compute would deadlock; prime the upstream kind first and " +
           "pass the primed frame into the builder closure")
     val fp = tableFingerprint(dir, sourceTable)
-    val path = cache.compute((kind, dir, param), { (_, prev) =>
+    cache.compute((kind, dir, param), { (_, prev) =>
       if (prev != null && prev._1 == fp) prev
       else {
-        // Build the replacement FIRST, evict the superseded dir only
-        // after the write succeeds (ADVICE r11): deleting up front
-        // left a failed rebuild's mapping pointing at a deleted path,
-        // so the next consumer read FileNotFoundException instead of
-        // retrying the build. Frames handed out before the rewrite
-        // are invalidated by contract once the old dir goes — the
-        // fingerprint moved, so their source data is gone regardless.
-        val out = QueryUtil.scratchDir(s"graft_${kind}_") + s"/$kind"
         inBuilder.set(java.lang.Boolean.TRUE)
-        try build.write.mode("overwrite").parquet(out)
-        finally inBuilder.set(java.lang.Boolean.FALSE)
-        if (prev != null) deleteRecursively(prev._2)
-        (fp, out)
+        val v = try build finally inBuilder.set(java.lang.Boolean.FALSE)
+        prev match {
+          case (_, Files(old)) => deleteRecursively(old)
+          case _ => ()
+        }
+        (fp, v)
       }
-    })._2
-    s.read.parquet(path)
+    })._2.asInstanceOf[T]
+  }
+
+  /** The parquet entry: `build`'s frame is written to a fresh scratch
+    * dir once per key and fingerprint; every demand reads the file.
+    */
+  def cached(s: SparkSession, kind: String, dir: String, param: String,
+      sourceTable: String = "documents")(build: => DataFrame): DataFrame =
+    cachedReleasable(s, kind, dir, param, sourceTable)((build, () => ()))
+
+  /** [[cached]] for a builder whose frame pins resources until released:
+    * `build` returns (frame, release), and release runs once the write
+    * has succeeded.
+    */
+  private[queries] def cachedReleasable(s: SparkSession, kind: String,
+      dir: String, param: String, sourceTable: String = "documents")(
+      build: => (DataFrame, () => Unit)): DataFrame = {
+    val files = value(kind, dir, param, sourceTable) {
+      val (df, release) = build
+      val out = QueryUtil.scratchDir(s"graft_${kind}_") + s"/$kind"
+      df.write.mode("overwrite").parquet(out)
+      release()
+      Files(out)
+    }
+    s.read.parquet(files.path)
   }
 }

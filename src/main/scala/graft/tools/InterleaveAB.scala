@@ -28,9 +28,9 @@ object InterleaveAB {
     }
 
     val rows = (1 to reps).map { rep =>
-      // Per-pair scratch reset: the target may read shared caches; each
-      // rep must pay the same derivation the bench's first consumer does.
-      graft.queries.LlmQueries.resetSharedScratch()
+      // Per-pair Scratch reset: the target may read shared derivations;
+      // each rep must pay the same derivation the bench's builder does.
+      graft.queries.Scratch.reset()
       val s = Harness.newSession(cpus)
       val tc = time(control, s)
       val tt = time(target, s)

@@ -29,11 +29,11 @@ object VerifyAllScales {
       .getOrElse(Seq("sf0.001", "sf0.01", "sf0.1"))
     sfs.foreach { sf =>
       System.err.println(s"[verify-all] dumping $sf")
-      // Each scale derives its shared scratch sets fresh — the cache
+      // Each scale derives its shared derivations fresh — Scratch's
       // keys already isolate by dir, but an explicit per-scale reset
       // keeps the dumps independent even if a future key regression
       // collides across dirs.
-      graft.queries.LlmQueries.resetSharedScratch()
+      graft.queries.Scratch.reset()
       graft.Verify.main(Array(s"/root/testdata/$sf", s"$outRoot/$sf"))
     }
     println(s"[verify-all] dumps complete under $outRoot; check per scale:")

@@ -38,11 +38,11 @@ object VerifyTwice {
     val names = Harness.selectedNames("verify2")
 
     def onePass(pass: Int): Map[String, Either[String, String]] = {
-      // Re-derive EVERY shared scratch set per pass (mined pairs,
-      // shingles, pair stats, gram hashes): letting run 2 read run 1's
-      // parquet would exempt those pipelines from exactly the
-      // cross-run stability check this tool exists to perform.
-      graft.queries.LlmQueries.resetSharedScratch()
+      // Re-derive EVERY shared derivation per pass (Scratch): letting
+      // run 2 read run 1's parquet or models would exempt those
+      // pipelines from exactly the cross-run stability check this
+      // tool exists to perform.
+      graft.queries.Scratch.reset()
       names.grouped(Harness.RecycleEvery).flatMap { chunk =>
         val spark = Harness.newSession(cpus)
         val rs = chunk.map { name =>

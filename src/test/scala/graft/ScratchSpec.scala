@@ -68,6 +68,55 @@ class ScratchSpec extends SparkTestBase {
     assert(rows(Scratch.cached(spark, "testev_inner", dir, "p")(docs())).size === 2)
   }
 
+  test("value: same fingerprint reuses; rewrite re-runs the builder and leaves one entry; nested call throws") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_val_").toString
+    writeDocs(dir, Seq((1L, "a b c d")))
+    var builds = 0
+    def model(): Long = Scratch.value("testval", dir, "p") {
+      builds += 1
+      spark.read.parquet(s"$dir/documents.parquet").count()
+    }
+    assert(model() === 1L && builds === 1)
+    assert(model() === 1L && builds === 1, "builder re-ran on an unchanged fingerprint")
+    writeDocs(dir, Seq((1L, "x y z w"), (2L, "q r s t")))
+    assert(model() === 2L && builds === 2, "rewrite did not re-run the builder")
+    assert(Scratch.held.count(_._1 == "testval") === 1,
+      "superseded driver value kept beside its replacement")
+    val e = intercept[IllegalStateException] {
+      Scratch.value("testval_outer", dir, "p") {
+        Scratch.value("testval_inner", dir, "p")(0L)
+      }
+    }
+    assert(e.getMessage.contains("nested Scratch.cached/value('testval_inner')"))
+    assert(Scratch.value("testval_inner", dir, "p")(7L) === 7L)
+  }
+
+  test("pairs: a docs rewrite re-mines, evicts the superseded scratch dir and releases the banded cache") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_pairsev_").toString
+    val base = "w1 w2 w3 w4 w5 w6 w7 w8 w9 w10 w11 w12"
+    writeDocs(dir, Seq((1L, base), (2L, base), (7L, "x1 x2 x3 x4 x5 x6 x7 x8")))
+    val tmpRoot = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
+    def pairDirs(): Long = {
+      val s = java.nio.file.Files.list(tmpRoot)
+      try s.filter(_.getFileName.toString.startsWith("graft_pairs_")).count()
+      finally s.close()
+    }
+    def pairKeys(): Set[(Long, Long)] =
+      rows(SparkEntry.queries("q_dedup_minhash")(spark, dir))
+        .map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"))).toSet
+    val dirsBefore = pairDirs()
+    val persistedBefore = spark.sparkContext.getPersistentRDDs.size
+    assert(pairKeys() === Set((1L, 2L)))
+    assert(spark.sparkContext.getPersistentRDDs.size <= persistedBefore,
+      "the banded-signature cache outlived the pairs write")
+    assert(pairDirs() === dirsBefore + 1)
+    writeDocs(dir, Seq((1L, "y1 y2 y3 y4 y5 y6 y7 y8"), (2L, base), (7L, base)))
+    assert(pairKeys() === Set((2L, 7L)))
+    assert(pairDirs() === dirsBefore + 1,
+      "superseded pairs scratch dir not deleted on fingerprint change")
+    assert(Scratch.held.count(e => e._1 == "pairs" && e._2 == dir) === 1)
+  }
+
   test("cached: a FAILED rebuild keeps the previous entry servable (build-then-evict order)") {
     val dir = java.nio.file.Files.createTempDirectory("graft_fail_").toString
     writeDocs(dir, Seq((1L, "a b c d")))
