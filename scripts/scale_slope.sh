@@ -1,10 +1,10 @@
 #!/usr/bin/env bash
 # Scale-slope gate (r12): run the full Bench at sf0.01 in a scratch
-# CWD (so bench_total.json / bench_best.json in the repo are never
-# clobbered) and compare per-query times against the committed sf0.1
-# artifact. With 10x the data, a healthy registry query scales at
-# <= ~10x; anything past the threshold (default 15x, leaving headroom
-# for index-growth shapes like PPJoin's 9.1x) is flagged as a
+# CWD (so the repo's bench_total.json is never clobbered) and compare
+# per-query times against the committed sf0.1 artifact. With 10x the
+# data, a healthy registry query scales at <= ~10x; anything past the
+# threshold (default 15x, leaving headroom for index-growth shapes
+# like PPJoin's 9.1x) is flagged as a
 # superlinear suspect — the empirical backstop for the 100 TB design
 # claim the per-plan audits argue structurally.
 #
@@ -50,8 +50,7 @@ for k, tb in big["queries"].items():
     if ts is not None and tb >= 1.0 and ts > 0.05:
         rows.append((tb / ts, k, ts, tb))
 rows.sort(reverse=True)
-print(f"[scale-slope] sf0.01 total {small['value']:.1f} s "
-      f"(hsi {small['host_speed_index']}) vs committed sf0.1 "
+print(f"[scale-slope] sf0.01 total {small['value']:.1f} s vs committed sf0.1 "
       f"{big['value']:.1f} s; worst slopes over 10x data:")
 for r, k, ts, tb in rows[:10]:
     print(f"  {k:26s} {r:5.1f}x  ({ts:.2f} -> {tb:.2f} s)")

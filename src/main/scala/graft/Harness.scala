@@ -2,12 +2,13 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Shared plumbing for the harness mains (Verify / Bench / VerifyTwice /
-  * RunQ): ONE session recipe and ONE `SPARK_GRAFT_ONLY` parse. The
-  * session confs (UTC session zone, scoped shuffle partitions, no UI)
-  * are load-bearing for oracle parity — a harness-wide conf change that
-  * reaches only two of the three mains gives a main whose results
-  * silently differ from the others, which is exactly how the
-  * session.timeZone class of divergence starts.
+  * RunQ): ONE session recipe, ONE core-count read ([[cpus]]) and ONE
+  * `SPARK_GRAFT_ONLY` parse. The session confs (UTC session zone,
+  * scoped shuffle partitions, no UI) are load-bearing for oracle
+  * parity — a harness-wide conf change that reaches only two of the
+  * three mains gives a main whose results silently differ from the
+  * others, which is exactly how the session.timeZone class of
+  * divergence starts.
   */
 object Harness {
 
@@ -17,6 +18,12 @@ object Harness {
     * run conditions.
     */
   val RecycleEvery = 8
+
+  /** Core count for the harness mains' sessions: the env var when set,
+    * else this host's available processors.
+    */
+  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors.toString)
 
   def newSession(cpus: String): SparkSession = {
     val spark = SparkSession.builder()
@@ -76,8 +83,8 @@ object Harness {
   }
 
   /** True when `SPARK_GRAFT_ONLY` is set — subset runs are iteration
-    * aids and must not clobber full-run artifacts (bench_total.json's
-    * trend baseline).
+    * aids and must not overwrite bench_total.json, the prior artifact
+    * the next full run's trend compares against.
     */
   def isSubsetRun: Boolean = sys.env.contains("SPARK_GRAFT_ONLY")
 }

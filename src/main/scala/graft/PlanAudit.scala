@@ -121,7 +121,7 @@ object PlanAudit {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+    val cpus = Harness.cpus
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
 
     val stale = exclusions.keySet.diff(SparkEntry.queries.keySet)

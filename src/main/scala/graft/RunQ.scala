@@ -18,7 +18,7 @@ object RunQ {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val spark = Harness.newSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "16"))
+    val spark = Harness.newSession(Harness.cpus)
     // plan printed from its OWN construction, outside any timer — an
     // explain inside the timed window would bill plan formatting to
     // the reported write component (and eager queries would run their

@@ -5,7 +5,7 @@ package graft
   * sbt "runMain graft.Smoke". */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = Harness.newSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+    val spark = Harness.newSession(Harness.cpus)
     val df = SparkEntry.entry(spark)
     val n = df.count()
     println(s"ENTRY_ROWS=$n")

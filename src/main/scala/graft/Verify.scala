@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val spark = Harness.newSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+    val spark = Harness.newSession(Harness.cpus)
     new java.io.File(outDir).mkdirs()
     // Side-channel for self-diagnosing queries (q_sink_jdbc): raw
     // un-hashed evidence lands in a SIBLING of outDir, never inside it.

@@ -69,11 +69,21 @@ object Scratch {
     walk(new java.io.File(path).getParentFile)
   }
 
-  /** Drop every entry (the per-pass reset). */
-  def reset(): Unit = cache.clear()
+  /** Drop every entry (the per-pass reset), deleting each parquet
+    * entry's scratch dir.
+    */
+  def reset(): Unit = drop(_ => true)
 
-  /** Drop one kind (Bench's targeted retry). */
-  def resetKind(kind: String): Unit = cache.keySet().removeIf(_._1 == kind)
+  /** Drop one kind (Bench's targeted retry), deleting its scratch dirs. */
+  def resetKind(kind: String): Unit = drop(_._1 == kind)
+
+  private def drop(which: ((String, String, String)) => Boolean): Unit =
+    cache.keySet().asScala.filter(which).foreach { key =>
+      cache.remove(key) match {
+        case (_, Files(path)) => deleteRecursively(path)
+        case _ => ()
+      }
+    }
 
   /** Every entry held now, as (kind, dir, param, fingerprint): two
     * snapshots differ exactly by the entries built in between.

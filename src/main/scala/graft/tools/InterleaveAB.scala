@@ -6,9 +6,9 @@ import graft.{Harness, SparkEntry}
   * CONTROL query inside one process, several reps, fresh session per
   * pair (Bench's recycle conditions). The control's rep-to-rep drift
   * measures the host window; the target's floor net of that drift is
-  * its true cost — the adjudication the r10 verdict asked for on
-  * `q_stream_dedup` (2.0x its best fold in the driver artifact: code
-  * or weather?).
+  * its true cost. This is how a Bench trend entry is settled as code
+  * or host weather: interleaving cancels the host window without any
+  * calibration constant.
   *
   * Usage: graft.tools.InterleaveAB <target> [control] [reps] [sfDir]
   */
@@ -18,7 +18,7 @@ object InterleaveAB {
     val control = if (args.length > 1) args(1) else "q_join_inner"
     val reps = if (args.length > 2) args(2).toInt else 10
     val sfDir = if (args.length > 3) args(3) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Harness.cpus
 
     def time(name: String, s: org.apache.spark.sql.SparkSession): Double = {
       val t0 = System.nanoTime()

@@ -34,7 +34,7 @@ import graft.{Harness, SparkEntry}
 object VerifyTwice {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+    val cpus = Harness.cpus
     val names = Harness.selectedNames("verify2")
 
     def onePass(pass: Int): Map[String, Either[String, String]] = {

@@ -63,6 +63,40 @@ class BenchSpec extends SparkTestBase {
     assert(built2 === Set.empty)
   }
 
+  /** A prior bench artifact with three query times, a same-named
+    * "spread" entry after them, and the given trailing fields.
+    */
+  private def priorArtifact(fields: String): String = {
+    val f = java.nio.file.Files.createTempFile("graft_bench_prior_", ".json")
+    java.nio.file.Files.writeString(f,
+      s"""{"metric":"total","value":14.000,"unit":"sec","queries":{"q_a":1.000,"q_b":2.000,"q_c":4.000,"q_d":8.000},"errors":{},"spread":{"q_a":9.00},$fields}""")
+    f.toString
+  }
+
+  private val now = Seq("q_a" -> 1.5, "q_b" -> 2.75, "q_c" -> 2.5, "q_d" -> 9.75, "q_new" -> 5.0)
+
+  test("trend guard: a prior artifact at another sf yields no trend") {
+    val prior = Bench.priorTimes(priorArtifact(""""cpus":"4","sf":"/data/sf0.1""""), "/data/sf0.01", "4")
+    assert(prior === Map.empty)
+    assert(Bench.trend(now, prior) === Seq.empty)
+  }
+
+  test("trend guard: a prior artifact at another cpus, or with no cpus, yields no trend") {
+    assert(Bench.priorTimes(priorArtifact(""""cpus":"32","sf":"/d""""), "/d", "4") === Map.empty)
+    assert(Bench.priorTimes(priorArtifact(""""sf":"/d""""), "/d", "4") === Map.empty)
+  }
+
+  test("trend guard: a matching prior yields the raw delta and flags exactly the entries past the bar") {
+    val prior = Bench.priorTimes(priorArtifact(""""cpus":"4","sf":"/d""""), "/d", "4")
+    // times come from "queries" only, never from the later "spread" map
+    assert(prior === Map("q_a" -> 1.0, "q_b" -> 2.0, "q_c" -> 4.0, "q_d" -> 8.0))
+    val trend = Bench.trend(now, prior)
+    assert(trend === Seq("q_a" -> 0.5, "q_b" -> 0.75, "q_c" -> -1.5, "q_d" -> 1.75))
+    // bar = max(0.5 s, 25% of prior): q_a sits on it, q_d is under its
+    // 2.0 s bar, q_c is flagged as an improvement
+    assert(Bench.regressions(trend, prior) === Seq("q_b" -> 0.75, "q_c" -> -1.5))
+  }
+
   test("JSON escaper handles quotes, backslashes, and control chars") {
     assert(Jsons.str("a\"b\\c") === "\"a\\\"b\\\\c\"")
     assert(Jsons.str("x\n\t\ry") === "\"x\\n\\t\\ry\"")

@@ -18,6 +18,14 @@ class ScratchSpec extends SparkTestBase {
     texts.toDF("doc_id", "text").repartition(1)
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
 
+  /** Scratch dirs of `kind` in the temp root right now. */
+  private def scratchDirs(kind: String): Long = {
+    val s = java.nio.file.Files.list(
+      java.nio.file.Paths.get(System.getProperty("java.io.tmpdir")))
+    try s.filter(_.getFileName.toString.startsWith(s"graft_${kind}_")).count()
+    finally s.close()
+  }
+
   test("tableFingerprint: stable on identical listing, changes on rewrite, absent-safe") {
     val dir = java.nio.file.Files.createTempDirectory("graft_fp_").toString
     assert(Scratch.tableFingerprint(dir, "documents").startsWith("absent:"))
@@ -35,26 +43,20 @@ class ScratchSpec extends SparkTestBase {
   test("cached: same fingerprint reuses; rewrite evicts the superseded scratch dir; nested call throws") {
     val dir = java.nio.file.Files.createTempDirectory("graft_evict_").toString
     writeDocs(dir, Seq((1L, "a b c d")))
-    val tmpRoot = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-    def scratchDirs(): Long = {
-      val s = java.nio.file.Files.list(tmpRoot)
-      try s.filter(_.getFileName.toString.startsWith("graft_testev_")).count()
-      finally s.close()
-    }
     val docs = () => spark.read.parquet(s"$dir/documents.parquet")
-    val before = scratchDirs()
+    val before = scratchDirs("testev")
     assert(rows(Scratch.cached(spark, "testev", dir, "p")(docs())).size === 1)
-    assert(scratchDirs() === before + 1)
+    assert(scratchDirs("testev") === before + 1)
     // unchanged source: served from the stored file — the builder must
     // not run (it would throw)
     assert(rows(Scratch.cached(spark, "testev", dir, "p")(
       sys.error("builder ran on an unchanged fingerprint"))).size === 1)
-    assert(scratchDirs() === before + 1)
+    assert(scratchDirs("testev") === before + 1)
     // in-place rewrite: re-derives AND deletes the superseded scratch
     // dir (ADVICE r10: entries/dirs used to accumulate per rewrite)
     writeDocs(dir, Seq((1L, "x y z w"), (2L, "q r s t")))
     assert(rows(Scratch.cached(spark, "testev", dir, "p")(docs())).size === 2)
-    assert(scratchDirs() === before + 1,
+    assert(scratchDirs("testev") === before + 1,
       "superseded scratch dir not deleted on fingerprint change")
     // nested cached call from inside a builder: loud failure, not a
     // computeIfAbsent deadlock (r10 verdict item 4)
@@ -95,26 +97,50 @@ class ScratchSpec extends SparkTestBase {
     val dir = java.nio.file.Files.createTempDirectory("graft_pairsev_").toString
     val base = "w1 w2 w3 w4 w5 w6 w7 w8 w9 w10 w11 w12"
     writeDocs(dir, Seq((1L, base), (2L, base), (7L, "x1 x2 x3 x4 x5 x6 x7 x8")))
-    val tmpRoot = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-    def pairDirs(): Long = {
-      val s = java.nio.file.Files.list(tmpRoot)
-      try s.filter(_.getFileName.toString.startsWith("graft_pairs_")).count()
-      finally s.close()
-    }
     def pairKeys(): Set[(Long, Long)] =
       rows(SparkEntry.queries("q_dedup_minhash")(spark, dir))
         .map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"))).toSet
-    val dirsBefore = pairDirs()
+    val dirsBefore = scratchDirs("pairs")
     val persistedBefore = spark.sparkContext.getPersistentRDDs.size
     assert(pairKeys() === Set((1L, 2L)))
     assert(spark.sparkContext.getPersistentRDDs.size <= persistedBefore,
       "the banded-signature cache outlived the pairs write")
-    assert(pairDirs() === dirsBefore + 1)
+    assert(scratchDirs("pairs") === dirsBefore + 1)
     writeDocs(dir, Seq((1L, "y1 y2 y3 y4 y5 y6 y7 y8"), (2L, base), (7L, base)))
     assert(pairKeys() === Set((2L, 7L)))
-    assert(pairDirs() === dirsBefore + 1,
+    assert(scratchDirs("pairs") === dirsBefore + 1,
       "superseded pairs scratch dir not deleted on fingerprint change")
     assert(Scratch.held.count(e => e._1 == "pairs" && e._2 == dir) === 1)
+  }
+
+  test("reset deletes the scratch dir of every parquet entry it drops") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_reset_").toString
+    writeDocs(dir, Seq((1L, "a b c d")))
+    val before = scratchDirs("testreset")
+    Scratch.cached(spark, "testreset", dir, "p")(spark.read.parquet(s"$dir/documents.parquet"))
+    Scratch.value("testresetval", dir, "p")(1L)
+    assert(scratchDirs("testreset") === before + 1)
+    Scratch.reset()
+    assert(Scratch.held.isEmpty)
+    assert(scratchDirs("testreset") === before,
+      "reset stranded a dropped entry's scratch dir")
+  }
+
+  test("resetKind deletes only its own kind's scratch dirs") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_resetkind_").toString
+    writeDocs(dir, Seq((1L, "a b c d")))
+    val docs = () => spark.read.parquet(s"$dir/documents.parquet")
+    val (beforeA, beforeB) = (scratchDirs("testrkA"), scratchDirs("testrkB"))
+    Scratch.cached(spark, "testrkA", dir, "p")(docs())
+    Scratch.cached(spark, "testrkA", dir, "q")(docs())
+    val dfB = Scratch.cached(spark, "testrkB", dir, "p")(docs())
+    assert(scratchDirs("testrkA") === beforeA + 2)
+    Scratch.resetKind("testrkA")
+    assert(scratchDirs("testrkA") === beforeA,
+      "resetKind stranded a dropped entry's scratch dir")
+    assert(scratchDirs("testrkB") === beforeB + 1 && rows(dfB).size === 1,
+      "resetKind deleted another kind's scratch dir")
+    assert(Scratch.held.map(_._1).filter(_.startsWith("testrk")) === Set("testrkB"))
   }
 
   test("cached: a FAILED rebuild keeps the previous entry servable (build-then-evict order)") {
