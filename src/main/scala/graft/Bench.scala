@@ -19,10 +19,13 @@ import graft.queries.Scratch
   *  - Retry: queries with spread > 2 are re-timed once more, after
   *    re-deriving the Scratch kinds they built ([[kindsToReset]]).
   *  - Trend: the raw per-query delta against the previous
-  *    bench_total.json in the working directory, only when that
-  *    artifact was measured at the same sf AND the same cpus
-  *    ([[priorTimes]]); otherwise no comparison at all. "regressions"
-  *    holds the trend entries past the bar of [[regressions]].
+  *    bench_total.json in the working directory, only on a full run
+  *    and only when that artifact was measured at the same sf AND the
+  *    same cpus ([[priorTimes]]); otherwise no comparison at all. A
+  *    SPARK_GRAFT_ONLY subset run times its few queries JIT-cold in a
+  *    fresh JVM, so its times are not comparable with a full run's warm
+  *    min-of-passes. "regressions" holds the trend entries past the bar
+  *    of [[regressions]].
   *
   * Output: the compact headline {"metric","value","unit","n_queries",
   * "n_errors","sf"} on stdout, then the full line ("queries", "errors",
@@ -77,21 +80,15 @@ object Bench {
     ((dt, err), (Scratch.held -- held).map(_._1))
   }
 
-  /** Time one list of queries, recycling the session every
-    * [[Harness.RecycleEvery]] queries (ThreadLocal pollution — see
-    * main's comment). ONE definition for the main passes and the
-    * targeted retry pass: a timing or error-truncation tweak edited in
-    * one arm would silently diverge the other. Returns the timings and
-    * each built Scratch kind's builder.
+  /** Time one list of queries over [[Harness.sweep]] (sessions recycled
+    * against ThreadLocal pollution — see main's comment). ONE definition
+    * for the main passes and the targeted retry pass: a timing or
+    * error-truncation tweak edited in one arm would silently diverge the
+    * other. Returns the timings and each built Scratch kind's builder.
     */
   private def timeChunk(names: Seq[String], label: String, sfDir: String,
       cpus: String): (Map[String, (Double, Option[String])], Map[String, String]) = {
-    val rs = names.grouped(Harness.RecycleEvery).flatMap { chunk =>
-      val spark = Harness.newSession(cpus)
-      val r = chunk.map(name => name -> timeQuery(spark, name, label, sfDir))
-      Harness.recycle(spark)
-      r
-    }.toSeq
+    val rs = Harness.sweep(names, cpus)(timeQuery(_, _, label, sfDir))
     (rs.map { case (n, (t, _)) => n -> t }.toMap,
       rs.flatMap { case (n, (_, built)) => built.map(_ -> n) }.toMap)
   }
@@ -106,18 +103,19 @@ object Bench {
       builtBy: Seq[Map[String, String]], retried: Set[String]): Set[String] =
     builtBy.flatMap(_.collect { case (kind, q) if retried(q) => kind }).toSet
 
-  /** Per-query times of the bench artifact at `path`, or empty when it
-    * is missing, unreadable, or was measured at another `sf` or `cpus`
-    * than this run (an artifact without a "cpus" field included):
-    * times from another scale factor or core count are not comparable.
+  /** Per-query times of the bench artifact at `path`, or empty when
+    * this run is a `subset` run, or the artifact is missing, unreadable,
+    * or was measured at another `sf` or `cpus` than this run (an
+    * artifact without a "cpus" field included): times from a subset
+    * run, another scale factor or another core count are not comparable.
     * Times come from the "queries" map, extracted with a regex — the
     * artifact is machine-written, flat, and number-valued by
     * construction.
     */
   private[graft] def priorTimes(path: String, sf: String,
-      cpus: String): Map[String, Double] = {
+      cpus: String, subset: Boolean): Map[String, Double] = {
     val f = java.nio.file.Paths.get(path)
-    if (!java.nio.file.Files.isRegularFile(f)) Map.empty
+    if (subset || !java.nio.file.Files.isRegularFile(f)) Map.empty
     else try {
       val txt = java.nio.file.Files.readString(f)
       val sameRun = Seq("sf" -> sf, "cpus" -> cpus)
@@ -229,7 +227,7 @@ object Bench {
     // survives whether the capture keeps the head or the tail.
     val compact =
       s"""{"metric":"total","value":${num(total, "%.3f")},"unit":"sec","n_queries":${results.size},"n_errors":${results.count(_._3.isDefined)},"sf":${jstr(sfDir)}}"""
-    val prior = priorTimes("bench_total.json", sfDir, cpus)
+    val prior = priorTimes("bench_total.json", sfDir, cpus, Harness.isSubsetRun)
     val deltas = trend(times, prior)
     val builtBy = passes.map(_._2.toSeq.sorted
       .map { case (k, q) => s"${jstr(k)}:${jstr(q)}" }.mkString("{", ",", "}"))

@@ -12,10 +12,9 @@ import org.apache.spark.sql.SparkSession
   */
 object Harness {
 
-  /** Session-recycle cadence for registry-sweeping mains (Bench,
-    * VerifyTwice): ONE constant, so retuning the ThreadLocal-pollution
-    * mitigation cannot reach one main and silently diverge the other's
-    * run conditions.
+  /** Session-recycle cadence of [[sweep]]: ONE constant, so retuning
+    * the ThreadLocal-pollution mitigation reaches every registry-sweeping
+    * main at once.
     */
   val RecycleEvery = 8
 
@@ -62,6 +61,17 @@ object Harness {
     SparkSession.clearDefaultSession()
   }
 
+  /** Run `f` over `names` in order, on a fresh [[newSession]] for every
+    * [[RecycleEvery]] names, recycling each session after its chunk: the
+    * one registry-sweep loop of Bench, VerifyTwice and PlanAudit.
+    */
+  def sweep[A](names: Seq[String], cpus: String)(
+      f: (SparkSession, String) => A): Seq[(String, A)] =
+    names.grouped(RecycleEvery).flatMap { chunk =>
+      val spark = newSession(cpus)
+      try chunk.map(n => n -> f(spark, n)) finally recycle(spark)
+    }.toSeq
+
   /** Sorted registry names selected by `SPARK_GRAFT_ONLY` (everything
     * when unset), with the matches-nothing warnings EVERY main must
     * print: a typo'd filter that selects zero queries must never read
@@ -83,8 +93,9 @@ object Harness {
   }
 
   /** True when `SPARK_GRAFT_ONLY` is set — subset runs are iteration
-    * aids and must not overwrite bench_total.json, the prior artifact
-    * the next full run's trend compares against.
+    * aids: Bench neither compares them with bench_total.json nor
+    * overwrites it, the prior artifact the next full run's trend
+    * compares against.
     */
   def isSubsetRun: Boolean = sys.env.contains("SPARK_GRAFT_ONLY")
 }

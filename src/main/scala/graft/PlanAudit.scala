@@ -9,10 +9,10 @@ import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
 /** Physical-plan audit over the FULL query registry: exchange counts +
   * join-strategy flags per query, so a shuffle regression or an
   * accidental BroadcastNestedLoopJoin/CartesianProduct is visible at a
-  * glance. The target list is DERIVED from `SparkEntry.queries` minus
-  * an explicit exclusion map (r9 verdict item 6) — a newly registered
-  * query cannot silently skip the audit, and a stale exclusion fails
-  * loudly.
+  * glance. The target list is DERIVED from `SparkEntry.specs` minus the
+  * specs that carry an `auditSkip` reason — a newly registered query
+  * cannot silently skip the audit, and a skip reason cannot name a
+  * query that does not exist. Keep the skips few and justified.
   *
   * BNLJ boundedness is ASSERTED, not just flagged (r11 verdict
   * item 3 — "zero BNLJ" drifted into the r10 record while ~15
@@ -20,9 +20,12 @@ import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
   * build-side judgment): every BroadcastNestedLoopJoin's build side
   * must be a PROVABLY bounded subtree — a LocalTableScan, a global
   * (no-grouping-key) aggregate, a small literal Range spine, or a
-  * limit — or the query must be listed in [[bnljAllowed]] with its
-  * reason (printed with the audit). Any other BNLJ build side — one
-  * that scans a data table — fails the audit.
+  * limit — or the query's spec must carry a `bnljAllowed` reason
+  * (printed with the audit): a build side bounded BY CONSTRUCTION but
+  * not provable from the plan shape, typically a parquet read of a
+  * k-row model file. Any other BNLJ build side — one that scans a data
+  * table — fails the audit, and an allowance its query no longer needs
+  * fails it too.
   *
   * Reading the output: `veiled` flags a plan whose root is a
   * `Scan ExistingRDD` — iterative operators (PageRank, label
@@ -38,36 +41,6 @@ import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
   * audit error (a query whose plan cannot even be constructed).
   */
 object PlanAudit {
-
-  /** Excluded queries, each with its reason — keep this list justified
-    * and SHORT; anything not listed here is audited.
-    */
-  val exclusions: Map[String, String] = Map(
-    "q_load_metrics" -> ("driver-local metric rows (LocalTableScan " +
-      "wrapper over the JDBC load's outcome); auditing would print the " +
-      "wrapper's plan, not the real write, while executing the load as " +
-      "a side effect — physical behavior asserted in SinksSpec/JdbcSpec"),
-    "q_meta_stats" -> ("footer-stats LocalTableScan wrapper (driver " +
-      "reads parquet footers, no Spark scan at all); asserted in " +
-      "SinksSpec — the audited plan would be an empty shell"))
-
-  /** BNLJ sites whose build side is bounded BY CONSTRUCTION but not
-    * provable from the plan shape alone (typically a parquet read of a
-    * k-row model/codebook file — the scan leaf looks like any data
-    * scan). Keep this list short and justified; an entry here is the
-    * audit's record of a deliberate bounded broadcast, and anything
-    * NOT listed with an unprovable build side is an audit failure.
-    */
-  val bnljAllowed: Map[String, String] = Map(
-    // the probe-frame broadcasts (q_ann_topk, q_eval_*) that sat here
-    // in the first r12 sweep were made PROVABLE instead: the probes
-    // helper plants a semantically-no-op limit(5), so the classifier
-    // proves them and the allow-list stays at its honest minimum
-    "q_embed_separation" -> ("broadcasts the per-label centroid " +
-      "aggregate (one row per label; grouped aggregates are not " +
-      "provably bounded in general, but the label vocabulary is " +
-      "O(k) by the clusterSeparation contract — the corpus side " +
-      "never shuffles, which is the point of the broadcast)"))
 
   /** True when `p` provably produces a BOUNDED (O(k), data-independent)
     * row count from the plan shape alone: local/literal leaves, global
@@ -124,70 +97,57 @@ object PlanAudit {
     val cpus = Harness.cpus
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
 
-    val stale = exclusions.keySet.diff(SparkEntry.queries.keySet)
-    require(stale.isEmpty,
-      s"stale PlanAudit exclusions (not in the registry): ${stale.mkString(", ")}")
-
-    val staleAllow = bnljAllowed.keySet.diff(SparkEntry.queries.keySet)
-    require(staleAllow.isEmpty,
-      s"stale bnljAllowed entries (not in the registry): ${staleAllow.mkString(", ")}")
-
+    val specs = SparkEntry.specs.map(q => q.name -> q).toMap
     val targets = Harness.selectedNames("planaudit")
-      .filterNot(exclusions.contains)
+      .filter(specs(_).auditSkip.isEmpty)
     var errs = 0
     val usedAllowances = scala.collection.mutable.Set[String]()
-    targets.grouped(Harness.RecycleEvery).foreach { chunk =>
-      // the ONE session recipe (Harness.newSession) — a hand-inlined
-      // builder here had already drifted (log level, hardcoded core
-      // count) and would silently miss any future plan-affecting conf,
-      // making the audited exchange counts reflect plans the verified
-      // mains never run. Recycled like Bench/VerifyTwice: a 276-query
-      // sweep in one session hits the ThreadLocal degradation.
-      val spark = Harness.newSession(cpus)
-      chunk.foreach { n =>
-        try {
-          val planTree = SparkEntry.queries(n)(spark, dir)
-            .queryExecution.executedPlan
-          val plan = planTree.toString
-          val ex = "Exchange".r.findAllIn(plan).size
-          // BNLJ verdict per query (r11 item 3): bounded build sides
-          // print as a flag; an unprovable build side is an ERROR
-          // unless the query carries an allowance (printed with its
-          // reason, so the allowed set can never drift from the log).
-          val unbounded = unboundedBnljs(planTree)
-          val bnljFlag =
-            if (unbounded.isEmpty)
-              if (plan.contains("BroadcastNestedLoopJoin"))
-                Seq("BNLJ-bounded") else Nil
-            else if (bnljAllowed.contains(n)) {
+    // the ONE session recipe and recycle cadence (Harness.sweep): a
+    // hand-inlined builder here once drifted from the verified mains,
+    // so the audited exchange counts reflected plans they never run
+    Harness.sweep(targets, cpus) { (spark, n) =>
+      try {
+        val planTree = SparkEntry.queries(n)(spark, dir)
+          .queryExecution.executedPlan
+        val plan = planTree.toString
+        val ex = "Exchange".r.findAllIn(plan).size
+        // BNLJ verdict per query (r11 item 3): bounded build sides
+        // print as a flag; an unprovable build side is an ERROR
+        // unless the query carries an allowance (printed with its
+        // reason, so the allowed set can never drift from the log).
+        val unbounded = unboundedBnljs(planTree)
+        val bnljFlag =
+          if (unbounded.isEmpty)
+            if (plan.contains("BroadcastNestedLoopJoin"))
+              Seq("BNLJ-bounded") else Nil
+          else specs(n).bnljAllowed match {
+            case Some(reason) =>
               usedAllowances += n
-              println(s"$n ALLOWED-BNLJ: ${bnljAllowed(n)}")
+              println(s"$n ALLOWED-BNLJ: $reason")
               Seq("BNLJ-allowed")
-            } else {
+            case None =>
               errs += 1
               unbounded.foreach(u => println(s"$n AUDIT-ERR $u"))
               Seq("BNLJ-UNBOUNDED")
-            }
-          val flags = bnljFlag ++ Seq(
-            "cartesian" -> plan.contains("CartesianProduct"),
-            "bcast" -> plan.contains("BroadcastHashJoin"),
-            "window" -> plan.contains("Window"),
-            "veiled" -> plan.contains("ExistingRDD")).collect { case (k, true) => k }
-          println(f"$n%-26s exchanges=$ex%-3d ${flags.mkString(",")}")
-        } catch { case e: Throwable =>
-          errs += 1
-          val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
-            .replace('\n', ' ').take(160)
-          println(f"$n%-26s AUDIT-ERR $msg")
-        }
+          }
+        val flags = bnljFlag ++ Seq(
+          "cartesian" -> plan.contains("CartesianProduct"),
+          "bcast" -> plan.contains("BroadcastHashJoin"),
+          "window" -> plan.contains("Window"),
+          "veiled" -> plan.contains("ExistingRDD")).collect { case (k, true) => k }
+        println(f"$n%-26s exchanges=$ex%-3d ${flags.mkString(",")}")
+      } catch { case e: Throwable =>
+        errs += 1
+        val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
+          .replace('\n', ' ').take(160)
+        println(f"$n%-26s AUDIT-ERR $msg")
       }
-      Harness.recycle(spark)
     }
     // an allowance that no audited query needed is stale — it would
     // silently green a FUTURE unbounded BNLJ under that name. Only
     // enforced on full sweeps (a SPARK_GRAFT_ONLY subset legitimately
     // skips the allowed queries).
-    val unused = bnljAllowed.keySet.filter(targets.contains)
+    val unused = targets.filter(specs(_).bnljAllowed.isDefined).toSet
       .diff(usedAllowances)
     if (!Harness.isSubsetRun && unused.nonEmpty) {
       unused.foreach(n => println(
@@ -195,7 +155,7 @@ object PlanAudit {
       errs += unused.size
     }
     println(s"[planaudit] audited=${targets.size} " +
-      s"excluded=${exclusions.size} errors=$errs " +
+      s"excluded=${specs.values.count(_.auditSkip.isDefined)} errors=$errs " +
       s"bnlj_allowed=${usedAllowances.toSeq.sorted.mkString(",")}")
     if (errs > 0) sys.exit(1)
   }

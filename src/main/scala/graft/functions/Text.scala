@@ -454,18 +454,4 @@ object Text {
       i => md5Long63(substr(text, i, lit(n))))
     array_min(grams)
   }
-
-  /** Production-throughput variant of [[rollingMinFingerprint]]: same
-    * winnowing contract, but grams hash through Spark's native xxhash64
-    * (~10× the md5 form — md5 dominates the portable variant's cost).
-    * Not reproducible outside Spark, so not oracle-checkable; use the
-    * md5 variant where cross-engine parity matters and this one on the
-    * 100 TB path.
-    */
-  def rollingMinFingerprintFast(text: Column): Column = {
-    val n = 16
-    array_min(transform(
-      sequence(lit(1), greatest(length(text) - lit(n - 1), lit(1))),
-      i => xxhash64(substr(text, i, lit(n)))))
-  }
 }

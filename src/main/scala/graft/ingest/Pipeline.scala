@@ -47,31 +47,24 @@ object Pipeline {
       ctx: RunContext,
       rawZone: String,
       curatedPath: String,
-      url: String = Ingest.VelibStatusUrl): BranchResult = {
-    val raw = Ingest.fetchVelibSnapshot(spark, transport, url)
-    val (rawObs, rawMetric) = observed(raw)
-    Ingest.landRaw(rawObs, rawZone, ctx.executionDate.replaceAll("[^0-9]", ""))
-    val curated = Velib.withRunMetadata(
-      Velib.dedupSnapshots(
-        Velib.curateStations(Velib.flattenStations(raw))), ctx)
-    val (curObs, curMetric) = observed(
-      curated.withColumn("ingest_date", col("execution_date").cast("date")))
-    Sinks.writeCuratedParquet(curObs, curatedPath, Seq("ingest_date"))
-    BranchResult(rowsOf(rawMetric), rowsOf(curMetric))
-  }
+      url: String = Ingest.VelibStatusUrl): BranchResult =
+    runBranch(Ingest.fetchVelibSnapshot(spark, transport, url),
+      raw => Velib.dedupSnapshots(Velib.curateStations(Velib.flattenStations(raw))),
+      ctx, rawZone, curatedPath)
 
-  /** Weather branch (`etl_dag.py:325-364`). */
-  def runWeatherBranch(
-      spark: SparkSession,
-      transport: Ingest.Transport,
+  /** One branch over its fetched snapshot: land it raw, then curate it,
+    * stamp the run metadata and write it to the curated zone. The raw
+    * land finishes before the curated write starts.
+    */
+  private def runBranch(
+      raw: DataFrame,
+      curate: DataFrame => DataFrame,
       ctx: RunContext,
       rawZone: String,
-      curatedPath: String,
-      url: String): BranchResult = {
-    val raw = Ingest.fetchWeatherSnapshot(spark, transport, url)
+      curatedPath: String): BranchResult = {
     val (rawObs, rawMetric) = observed(raw)
     Ingest.landRaw(rawObs, rawZone, ctx.executionDate.replaceAll("[^0-9]", ""))
-    val curated = Velib.withRunMetadata(Weather.projectWeather(raw), ctx)
+    val curated = Velib.withRunMetadata(curate(raw), ctx)
     val (curObs, curMetric) = observed(
       curated.withColumn("ingest_date", col("execution_date").cast("date")))
     Sinks.writeCuratedParquet(curObs, curatedPath, Seq("ingest_date"))
@@ -124,9 +117,10 @@ object Pipeline {
       try Right(branch) catch { case e: Throwable => Left(e) }
     // join() orders the thread's write before the read below
     var weather: Either[Throwable, BranchResult] = null
+    // the weather branch (`etl_dag.py:325-364`)
     val weatherThread = new Thread(() => weather = attempt(
-      runWeatherBranch(spark, wrapped(weatherTransport), ctx,
-        s"$baseDir/raw/weather", s"$baseDir/curated/weather", weatherUrl)),
+      runBranch(Ingest.fetchWeatherSnapshot(spark, wrapped(weatherTransport), weatherUrl),
+        Weather.projectWeather, ctx, s"$baseDir/raw/weather", s"$baseDir/curated/weather")),
       "graft-weather-branch")
     weatherThread.start()
     val station = attempt(runStationBranch(spark, wrapped(velibTransport),

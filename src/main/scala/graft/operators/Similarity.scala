@@ -373,50 +373,6 @@ object Similarity {
   def assignToCentroids(embs: DataFrame, centroids: DataFrame): DataFrame =
     assignWithCodebook(embs, loadCodebook(centroids))
 
-  /** Broadcast-JOIN nearest-centroid assignment — the escape hatch for
-    * codebooks near the 256 ceiling, where the literal path's unrolled
-    * `array_max(array(k structs))` approaches the JVM codegen
-    * method-size limit and falls out of whole-stage codegen into
-    * interpreted evaluation (the documented mega-expression lesson).
-    *
-    * Shape: the codebook broadcasts as a 256-row DataFrame into an
-    * inner nested-loop join (the correct physical op for
-    * score-against-every-model-row, and codegen'd — each scored row
-    * evaluates ONE `FloatVecDot`, never a k-wide expression tree).
-    * The per-id argmax is the bounded-heap [[TopK]] aggregator at
-    * k=1 (ObjectHashAggregate — no per-partition sort of the n*k
-    * scored stream, unlike `max(struct(...))`, which plans a
-    * SortAggregate because struct maxes have no mutable hash buffer).
-    * Its map-side partial collapses the k scored copies of each row
-    * BEFORE the exchange, so the one shuffle carries one row per
-    * input row, not k. Same (score desc, cid asc) tie-break as
-    * [[assignToCentroids]]; the two variants agree bit-for-bit
-    * (asserted at k=256 in PlanShapeSpec).
-    *
-    * Trade: one n-row exchange vs zero — at 100 TB prefer the literal
-    * path below ~128 centroids, this one beyond it (or persist/bucket
-    * the assignment column, after which neither runs per query).
-    */
-  def assignToCentroidsBcast(embs: DataFrame, centroids: DataFrame): DataFrame = {
-    val cb = centroids
-      .select(col("centroid_id").cast("long").as("__cid"),
-        col("vec").as("__cvec"))
-      .withColumn("__cn", VectorOps.norm(col("__cvec")))
-    embs
-      .select(col("id"), col("vec"), VectorOps.norm(col("vec")).as("__n"))
-      .crossJoin(broadcast(cb))
-      .select(col("id"), col("vec"), col("__cid"),
-        VectorOps.guardCos(try_divide(
-          VectorOps.dot(col("vec"), col("__cvec")),
-          col("__n") * col("__cn"))).as("__s"))
-      .groupBy(col("id"))
-      .agg(
-        TopK.topK(1)(col("__cid"), col("__s")).as("__best"),
-        first(col("vec")).as("vec")) // all copies carry the same vec
-      .select(col("id"), col("vec"),
-        element_at(col("__best"), 1).getField("id").as("centroid_id"))
-  }
-
   /** IVF (inverted-file) approximate top-k — the centroid-bucketed scale
     * path alongside `lshTopK`.
     *

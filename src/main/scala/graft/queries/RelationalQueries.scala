@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -11,8 +10,8 @@ import graft.sources.{Sinks, Sources}
 import QueryUtil._
 
 /** The relational capability envelope (SURVEY.md §2.4-2.9 [E] operators)
-  * over the harness tables. Each query has an ANSI-SQL oracle in
-  * `oracleSql`, hash-compared by the driver against DuckDB.
+  * over the harness tables. Each spec carries an ANSI-SQL oracle,
+  * hash-compared by the driver against DuckDB.
   *
   * Scale notes are per-query in comments: which side broadcasts, where
   * the one shuffle lands, why no plan node degenerates to a cartesian
@@ -20,13 +19,20 @@ import QueryUtil._
   */
 object RelationalQueries {
 
-  type Q = (SparkSession, String) => DataFrame
-
-  val queries: Map[String, Q] = Map(
+  val specs: Seq[QuerySpec] = Seq(
     // A1 + F6: partial (map-side) + final hash aggregation; one shuffle
     // on the 6-value group key. At 100 TB the partial agg collapses the
     // scan to ~6 rows per task before the exchange.
-    "q_agg_pricing" -> ((s, dir) => {
+    QuerySpec("q_agg_pricing",
+      """SELECT l_returnflag, l_linestatus,
+        | CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
+        | CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
+        | CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS sum_disc_price,
+        | COUNT(*) AS count_order,
+        | CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE)
+        |   / COUNT(l_quantity) AS avg_qty
+        |FROM lineitem GROUP BY l_returnflag, l_linestatus
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin) { (s, dir) =>
       table(s, dir, "lineitem")
         .groupBy(col("l_returnflag"), col("l_linestatus"))
         .agg(
@@ -37,10 +43,13 @@ object RelationalQueries {
           count(lit(1)).as("count_order"),
           davg(col("l_quantity")).as("avg_qty"))
         .orderBy(col("l_returnflag"), col("l_linestatus"))
-    }),
+    },
 
     // A2: exact distinct counts — Catalyst plans expand + two-phase agg.
-    "q_agg_distinct" -> ((s, dir) => {
+    QuerySpec("q_agg_distinct",
+      """SELECT l_returnflag, COUNT(DISTINCT l_partkey) AS n_parts,
+        | COUNT(DISTINCT l_suppkey) AS n_supps, COUNT(*) AS n_rows
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin) { (s, dir) =>
       table(s, dir, "lineitem")
         .groupBy(col("l_returnflag"))
         .agg(
@@ -48,7 +57,7 @@ object RelationalQueries {
           countDistinct(col("l_suppkey")).as("n_supps"),
           count(lit(1)).as("n_rows"))
         .orderBy(col("l_returnflag"))
-    }),
+    },
 
     // A6 pivot with a non-count MEASURE: long-to-wide SUM cells (the
     // pandas pivot_table(values=..., aggfunc="sum") — q_agg_pivot
@@ -57,7 +66,16 @@ object RelationalQueries {
     // single shuffle on the row key. Empty cells stay NULL (SUM over
     // no rows), pinning the sum-vs-count NULL semantics the count
     // pivot's coalesce hides.
-    "q_pivot" -> ((s, dir) => {
+    QuerySpec("q_pivot",
+      """SELECT o_orderpriority,
+        | CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2)))
+        |   FILTER (WHERE o_orderstatus = 'F') AS DOUBLE) AS sum_f,
+        | CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2)))
+        |   FILTER (WHERE o_orderstatus = 'O') AS DOUBLE) AS sum_o,
+        | CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2)))
+        |   FILTER (WHERE o_orderstatus = 'P') AS DOUBLE) AS sum_p
+        |FROM orders GROUP BY o_orderpriority
+        |ORDER BY o_orderpriority""".stripMargin) { (s, dir) =>
       table(s, dir, "orders")
         .groupBy(col("o_orderpriority"))
         .pivot("o_orderstatus", Seq("F", "O", "P"))
@@ -65,13 +83,23 @@ object RelationalQueries {
         .select(col("o_orderpriority"),
           col("F").as("sum_f"), col("O").as("sum_o"), col("P").as("sum_p"))
         .orderBy(col("o_orderpriority"))
-    }),
+    },
 
     // A6b unpivot: wide-to-long melt (pandas melt) over a per-flag
     // aggregate — the inverse reshape. unpivot() is a generate-side
     // expansion (no shuffle beyond the feeding aggregate's), so the
     // exchange carries the narrow aggregate, never the melted rows.
-    "q_unpivot" -> ((s, dir) => {
+    QuerySpec("q_unpivot",
+      """WITH w AS (
+        |  SELECT l_returnflag,
+        |    CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
+        |    CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
+        |  FROM lineitem GROUP BY l_returnflag
+        |)
+        |SELECT l_returnflag, 'sum_qty' AS metric, sum_qty AS value FROM w
+        |UNION ALL
+        |SELECT l_returnflag, 'sum_price' AS metric, sum_price AS value FROM w
+        |ORDER BY l_returnflag, metric""".stripMargin) { (s, dir) =>
       table(s, dir, "lineitem")
         .groupBy(col("l_returnflag"))
         .agg(dsum(col("l_quantity")).as("sum_qty"),
@@ -79,14 +107,24 @@ object RelationalQueries {
         .unpivot(Array(col("l_returnflag")),
           Array(col("sum_qty"), col("sum_price")), "metric", "value")
         .orderBy(col("l_returnflag"), col("metric"))
-    }),
+    },
 
     // W4 ntile: equal-frequency ranking buckets per partition — the
     // quartile assignment BI tools lean on. The (price desc, key asc)
     // ordering is TOTAL, so tile boundaries are deterministic and both
     // engines' standard ntile (first tiles take the remainder rows)
     // agree row-for-row; aggregating per tile checks every boundary.
-    "q_window_ntile" -> ((s, dir) => {
+    QuerySpec("q_window_ntile",
+      """WITH t AS (
+        |  SELECT o_orderstatus, CAST(o_totalprice AS DOUBLE) AS p,
+        |    ntile(4) OVER (PARTITION BY o_orderstatus
+        |      ORDER BY CAST(o_totalprice AS DOUBLE) DESC, o_orderkey ASC) AS tile
+        |  FROM orders
+        |)
+        |SELECT o_orderstatus, tile, COUNT(*) AS n,
+        | MIN(p) AS min_price, MAX(p) AS max_price
+        |FROM t GROUP BY o_orderstatus, tile
+        |ORDER BY o_orderstatus, tile""".stripMargin) { (s, dir) =>
       val w = Window.partitionBy(col("o_orderstatus"))
         .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
       table(s, dir, "orders")
@@ -98,29 +136,40 @@ object RelationalQueries {
           min(col("o_totalprice")).as("min_price"),
           max(col("o_totalprice")).as("max_price"))
         .orderBy(col("o_orderstatus"), col("tile"))
-    }),
+    },
 
     // A3: rollup — grouping-set expansion happens before the shuffle, so
     // the exchange still carries only aggregated rows.
-    "q_agg_rollup" -> ((s, dir) => {
+    QuerySpec("q_agg_rollup",
+      """SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n_orders,
+        | CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_total
+        |FROM orders GROUP BY ROLLUP(o_orderstatus, o_orderpriority)
+        |ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST""".stripMargin) { (s, dir) =>
       table(s, dir, "orders")
         .rollup(col("o_orderstatus"), col("o_orderpriority"))
         .agg(count(lit(1)).as("n_orders"), dsum(col("o_totalprice")).as("sum_total"))
         .orderBy(col("o_orderstatus").asc_nulls_first,
           col("o_orderpriority").asc_nulls_first)
-    }),
+    },
 
-    "q_agg_cube" -> ((s, dir) => {
+    QuerySpec("q_agg_cube",
+      """SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n_orders
+        |FROM orders GROUP BY CUBE(o_orderstatus, o_orderpriority)
+        |ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST""".stripMargin) { (s, dir) =>
       table(s, dir, "orders")
         .cube(col("o_orderstatus"), col("o_orderpriority"))
         .agg(count(lit(1)).as("n_orders"))
         .orderBy(col("o_orderstatus").asc_nulls_first,
           col("o_orderpriority").asc_nulls_first)
-    }),
+    },
 
     // A3 via the SQL surface: explicit GROUPING SETS through spark.sql —
     // exercises the engine's SQL entry point end-to-end.
-    "q_agg_groupingsets" -> ((s, dir) => {
+    QuerySpec("q_agg_groupingsets",
+      """SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n_orders
+        |FROM orders
+        |GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
+        |ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST""".stripMargin) { (s, dir) =>
       table(s, dir, "orders").createOrReplaceTempView("orders_gs")
       s.sql(
         """SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n_orders
@@ -128,13 +177,19 @@ object RelationalQueries {
           |GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
           |ORDER BY o_orderstatus ASC NULLS FIRST,
           |  o_orderpriority ASC NULLS FIRST""".stripMargin)
-    }),
+    },
 
     // A3b grouping() disambiguation: a NULL group value and the
     // rollup's total row are indistinguishable without grouping() —
     // the flag column is how consumers tell data-null from
     // aggregation-level.
-    "q_agg_groupingid" -> ((s, dir) => {
+    QuerySpec("q_agg_groupingid",
+      """SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n_orders,
+        | CAST(GROUPING(o_orderstatus) AS INT) AS g_status,
+        | CAST(GROUPING(o_orderpriority) AS INT) AS g_prio
+        |FROM orders GROUP BY ROLLUP(o_orderstatus, o_orderpriority)
+        |ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST,
+        |  g_status, g_prio""".stripMargin) { (s, dir) =>
       table(s, dir, "orders")
         .rollup(col("o_orderstatus"), col("o_orderpriority"))
         .agg(count(lit(1)).as("n_orders"),
@@ -143,13 +198,20 @@ object RelationalQueries {
         .orderBy(col("o_orderstatus").asc_nulls_first,
           col("o_orderpriority").asc_nulls_first,
           col("g_status"), col("g_prio"))
-    }),
+    },
 
     // F9 error-safe evaluation: try_cast / try_divide return NULL
     // where ANSI would raise — the difference between one malformed
     // row poisoning a 100 TB job and it landing in a quarantine
     // column.
-    "q_fn_try" -> ((s, dir) => {
+    QuerySpec("q_fn_try",
+      """SELECT c_custkey,
+        | CASE WHEN c_custkey % 5 = 0 THEN NULL
+        |   ELSE CAST(c_acctbal AS DOUBLE) / CAST(c_custkey % 5 AS DOUBLE)
+        | END AS per_bucket,
+        | TRY_CAST(substring(c_name, 10, 9) AS BIGINT) AS name_num,
+        | TRY_CAST(c_mktsegment AS BIGINT) AS seg_num
+        |FROM customer ORDER BY c_custkey""".stripMargin) { (s, dir) =>
       table(s, dir, "customer").select(
         col("c_custkey"),
         try_divide(col("c_acctbal").cast("double"),
@@ -157,7 +219,7 @@ object RelationalQueries {
         expr("try_cast(substring(c_name, 10, 9) AS BIGINT)").as("name_num"),
         expr("try_cast(c_mktsegment AS BIGINT)").as("seg_num"))
         .orderBy(col("c_custkey"))
-    }),
+    },
 
     // A8 argmax/argmin: max_by/min_by carry a payload to the row that
     // extremizes an ordering — one aggregation pass, no self-join back
@@ -166,7 +228,21 @@ object RelationalQueries {
     // construction: the ordering struct ends in (orderkey, linenumber),
     // and rows that still tie are fully identical (the harness's
     // documented duplicate rows), so the carried payload is unique.
-    "q_agg_argmax" -> ((s, dir) => {
+    QuerySpec("q_agg_argmax",
+      """WITH r AS (
+        |  SELECT l_returnflag, l_orderkey, l_extendedprice, l_shipdate,
+        |    ROW_NUMBER() OVER (PARTITION BY l_returnflag
+        |      ORDER BY l_extendedprice DESC, l_orderkey DESC, l_linenumber DESC)
+        |      AS rx,
+        |    ROW_NUMBER() OVER (PARTITION BY l_returnflag
+        |      ORDER BY l_shipdate ASC, l_orderkey ASC, l_linenumber ASC) AS rn
+        |  FROM lineitem
+        |)
+        |SELECT l_returnflag,
+        |  MAX(CASE WHEN rx = 1 THEN l_orderkey END) AS top_orderkey,
+        |  MAX(CASE WHEN rx = 1 THEN l_extendedprice END) AS top_price,
+        |  MAX(CASE WHEN rn = 1 THEN l_shipdate END) AS first_ship
+        |FROM r GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin) { (s, dir) =>
       table(s, dir, "lineitem")
         .groupBy(col("l_returnflag"))
         .agg(
@@ -180,14 +256,25 @@ object RelationalQueries {
         .select(col("l_returnflag"), col("top.k").as("top_orderkey"),
           col("top.p").as("top_price"), col("first_ship"))
         .orderBy(col("l_returnflag"))
-    }),
+    },
 
     // A10 statistical MODE per group (most frequent value, smallest on
     // ties): one count aggregate then argmax over the bounded count
     // table. The argmax ordering is the zero-padded string composite
     // (count desc, inverted quantity) — the one composite tie-break
     // both engines' arg_max accepts (the q_ts_ohlc lesson).
-    "q_agg_mode" -> ((s, dir) => {
+    QuerySpec("q_agg_mode",
+      """WITH c AS (
+        |  SELECT l_returnflag, l_quantity, COUNT(*) AS cnt
+        |  FROM lineitem GROUP BY 1, 2
+        |)
+        |SELECT l_returnflag,
+        |  arg_max(l_quantity,
+        |    lpad(CAST(cnt AS VARCHAR), 12, '0')
+        |    || lpad(CAST(10000000 - CAST(ROUND(l_quantity * 100) AS BIGINT)
+        |         AS VARCHAR), 9, '0')) AS mode_qty,
+        |  MAX(cnt) AS mode_n
+        |FROM c GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin) { (s, dir) =>
       val counts = table(s, dir, "lineitem")
         .groupBy(col("l_returnflag"), col("l_quantity"))
         .agg(count(lit(1)).as("cnt"))
@@ -200,7 +287,7 @@ object RelationalQueries {
         .agg(max_by(col("l_quantity"), key).as("mode_qty"),
           max(col("cnt")).as("mode_n"))
         .orderBy(col("l_returnflag"))
-    }),
+    },
 
     // A9 per-group standardization (z-score): the q_agg_stats portable
     // moments (exact decimal sums cast to double once) produce per-group
@@ -211,7 +298,22 @@ object RelationalQueries {
     // exchange-free. Every double op after the decimal sums is
     // IEEE-deterministic cross-engine; round(6) guards nothing but is
     // kept for the project-wide oracle policy.
-    "q_norm_group" -> ((s, dir) => {
+    QuerySpec("q_norm_group",
+      """WITH m AS (
+        |  SELECT l_returnflag, CAST(COUNT(*) AS DOUBLE) AS n,
+        |    CAST(SUM(CAST(l_quantity AS DECIMAL(28,2))) AS DOUBLE) AS sx,
+        |    CAST(SUM(CAST(l_quantity * l_quantity AS DECIMAL(28,4))) AS DOUBLE)
+        |      AS sxx
+        |  FROM lineitem GROUP BY l_returnflag
+        |), s AS (
+        |  SELECT l_returnflag, sx / n AS mu,
+        |    sqrt((sxx - sx * sx / n) / n) AS sigma
+        |  FROM m
+        |)
+        |SELECT l.l_orderkey, l.l_linenumber, l.l_returnflag, l.l_quantity,
+        |  ROUND((l.l_quantity - s.mu) / NULLIF(s.sigma, 0), 6) AS z
+        |FROM lineitem l JOIN s USING (l_returnflag)
+        |ORDER BY l_orderkey, l_linenumber, l_quantity""".stripMargin) { (s, dir) =>
       val li = table(s, dir, "lineitem")
       val stats = li.groupBy(col("l_returnflag"))
         .agg(
@@ -230,7 +332,7 @@ object RelationalQueries {
           round((col("l_quantity") - col("mu")) / nullif(col("sigma"), lit(0.0)), 6)
             .as("z"))
         .orderBy(col("l_orderkey"), col("l_linenumber"), col("l_quantity"))
-    }),
+    },
 
     // K9 SCD-2 history merge: the versioned complement to q_upsert's
     // SCD-1 overwrite. The change batch (orders for every third
@@ -239,7 +341,33 @@ object RelationalQueries {
     // at the key's first change. Only the batch is shuffled — the
     // dimension passes through as a filter + broadcast-joined open
     // slice.
-    "q_scd2" -> ((s, dir) => {
+    QuerySpec("q_scd2",
+      """WITH hist AS (
+        |  SELECT c_custkey AS cust_id, c_mktsegment AS segment,
+        |    TIMESTAMP '1990-01-01 00:00:00' AS valid_from,
+        |    CAST(NULL AS TIMESTAMP) AS valid_to
+        |  FROM customer
+        |), chg AS (
+        |  SELECT cust_id, ts, MAX(segment) AS segment FROM (
+        |    SELECT o_custkey AS cust_id, o_orderpriority AS segment,
+        |      o_orderdate AS ts
+        |    FROM orders WHERE o_custkey % 3 = 0
+        |  ) GROUP BY cust_id, ts
+        |), versioned AS (
+        |  SELECT cust_id, segment, ts AS valid_from,
+        |    LEAD(ts) OVER (PARTITION BY cust_id ORDER BY ts) AS valid_to
+        |  FROM chg
+        |), f AS (
+        |  SELECT cust_id, MIN(ts) AS fts FROM chg GROUP BY cust_id
+        |)
+        |SELECT h.cust_id, h.segment, h.valid_from, f.fts AS valid_to
+        |FROM hist h JOIN f ON h.cust_id = f.cust_id
+        |UNION ALL
+        |SELECT h.cust_id, h.segment, h.valid_from, h.valid_to
+        |FROM hist h ANTI JOIN f ON h.cust_id = f.cust_id
+        |UNION ALL
+        |SELECT cust_id, segment, valid_from, valid_to FROM versioned
+        |ORDER BY cust_id, valid_from""".stripMargin) { (s, dir) =>
       val hist = table(s, dir, "customer").select(
         col("c_custkey").as("cust_id"), col("c_mktsegment").as("segment"),
         lit("1990-01-01 00:00:00").cast("timestamp").as("valid_from"),
@@ -250,7 +378,7 @@ object RelationalQueries {
           col("o_orderpriority").as("segment"), col("o_orderdate").as("ts"))
       Upsert.scd2Apply(hist, changes, Seq("cust_id"), "ts")
         .orderBy(col("cust_id"), col("valid_from"))
-    }),
+    },
 
     // A2 approximate distinct (HLL++) — PARTIAL ORACLE: the sketch
     // estimate itself is engine-specific, so the query emits (a) the
@@ -260,7 +388,15 @@ object RelationalQueries {
     // out-of-bound estimate hash-mismatches — the driver now verifies
     // the error bound, not just row counts. The tighter ±rsd assertion
     // stays in PlanShapeSpec.
-    "q_agg_approx" -> ((s, dir) => {
+    // Partial oracles for the sketch queries: the exact companion
+    // columns are recomputed and hash-checked; the bound/consistency
+    // booleans are pinned TRUE — Spark computes them from the real
+    // estimates, so a violated bound hash-mismatches.
+    QuerySpec("q_agg_approx",
+      """SELECT l_returnflag,
+        | COUNT(DISTINCT l_partkey) AS exact_parts,
+        | TRUE AS approx_ok
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin) { (s, dir) =>
       table(s, dir, "lineitem")
         .groupBy(col("l_returnflag"))
         .agg(
@@ -272,7 +408,7 @@ object RelationalQueries {
           (abs(col("__approx") - col("exact_parts")).cast("double")
             / col("exact_parts") <= 0.15).as("approx_ok"))
         .orderBy(col("l_returnflag"))
-    }),
+    },
 
     // A2b re-aggregatable distinct sketches — THE 100 TB rollup
     // pattern: build a Datasketches HLL per fine-grained cell once,
@@ -286,7 +422,12 @@ object RelationalQueries {
     // drift by a few counts, measured 1991 vs 1999 on 2000 distincts)
     // and approx_ok (estimate within 3x rsd of exact) — both pinned
     // TRUE in the oracle, so either property failing hash-mismatches.
-    "q_agg_hll_merge" -> ((s, dir) => {
+    QuerySpec("q_agg_hll_merge",
+      """SELECT l_returnflag,
+        | COUNT(DISTINCT l_partkey) AS exact_parts,
+        | TRUE AS merge_consistent,
+        | TRUE AS approx_ok
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin) { (s, dir) =>
       val li = table(s, dir, "lineitem")
       val merged = li
         .groupBy(col("l_returnflag"), col("l_linestatus"))
@@ -306,7 +447,7 @@ object RelationalQueries {
           (abs(col("__merged") - col("exact_parts")).cast("double")
             / col("exact_parts") <= 0.15).as("approx_ok"))
         .orderBy(col("l_returnflag"))
-    }),
+    },
 
     // A1b-approx: the documented 100 TB percentile path made concrete —
     // approx_percentile's quantile sketch aggregates partially and
@@ -321,7 +462,13 @@ object RelationalQueries {
     // percentages) and both sketch quantiles share one t-digest —
     // separate percentile() calls each build their own per-group
     // value-count map and the query pays 6x the memory and time.
-    "q_agg_approxpct" -> ((s, dir) => {
+    QuerySpec("q_agg_approxpct",
+      """SELECT l_returnflag,
+        | ROUND(quantile_cont(l_extendedprice, 0.5), 4) AS p50_exact,
+        | ROUND(quantile_cont(l_extendedprice, 0.95), 4) AS p95_exact,
+        | TRUE AS p50_ok,
+        | TRUE AS p95_ok
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin) { (s, dir) =>
       table(s, dir, "lineitem")
         .groupBy(col("l_returnflag"))
         .agg(
@@ -341,7 +488,7 @@ object RelationalQueries {
             .between(element_at(col("__px"), 4), element_at(col("__px"), 6))
             .as("p95_ok"))
         .orderBy(col("l_returnflag"))
-    }),
+    },
 
     // A1c incremental aggregate maintenance — the refresh pattern that
     // turns a daily 100 TB rollup into a scan of only the new partition
@@ -360,7 +507,23 @@ object RelationalQueries {
     // needed (contrast q_join_range, where NO equi key exists). The
     // two-version history is derived deterministically (TPC-H has no
     // native history table).
-    "q_join_temporal" -> ((s, dir) => {
+    QuerySpec("q_join_temporal",
+      """WITH hist AS (
+        |  SELECT c_custkey, 'seg_old' AS segment,
+        |    DATE '1990-01-01' AS valid_from,
+        |    DATE '1995-01-01' + (c_custkey % 365)::INT AS valid_to
+        |  FROM customer
+        |  UNION ALL
+        |  SELECT c_custkey, 'seg_new_' || (c_custkey % 3),
+        |    DATE '1995-01-01' + (c_custkey % 365)::INT, NULL
+        |  FROM customer
+        |)
+        |SELECT segment, COUNT(*) AS n_orders,
+        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
+        |FROM orders o JOIN hist h ON o.o_custkey = h.c_custkey
+        |  AND h.valid_from <= o.o_orderdate::DATE
+        |  AND (h.valid_to IS NULL OR o.o_orderdate::DATE < h.valid_to)
+        |GROUP BY segment ORDER BY segment""".stripMargin) { (s, dir) =>
       val cust = table(s, dir, "customer").select(col("c_custkey"))
       val changeDate = expr("date_add(DATE '1995-01-01', CAST(c_custkey % 365 AS INT))")
       val hist = cust.select(col("c_custkey"), lit("seg_old").as("segment"),
@@ -378,7 +541,7 @@ object RelationalQueries {
         .groupBy(col("segment"))
         .agg(count(lit(1)).as("n_orders"), dsum(col("o_totalprice")).as("revenue"))
         .orderBy(col("segment"))
-    }),
+    },
 
     // Incremental JOIN-view maintenance: both tables split into
     // (old, delta) slices, the maintained view = old view + the
@@ -386,7 +549,13 @@ object RelationalQueries {
     // oracle is the FULL recompute over the complete tables, so a
     // hash match proves the maintenance algebra end-to-end. Each delta
     // term broadcasts its small side at real refresh cadences.
-    "q_incremental_join" -> ((s, dir) => {
+    QuerySpec("q_incremental_join",
+      """SELECT o_orderpriority, l_returnflag, COUNT(*) AS n,
+        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
+        |    AS revenue
+        |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
+        |GROUP BY o_orderpriority, l_returnflag
+        |ORDER BY o_orderpriority, l_returnflag""".stripMargin) { (s, dir) =>
       val o = table(s, dir, "orders")
         .select(col("o_orderkey"), col("o_orderpriority"))
       val l = table(s, dir, "lineitem")
@@ -402,7 +571,7 @@ object RelationalQueries {
       newView.groupBy(col("o_orderpriority"), col("l_returnflag"))
         .agg(count(lit(1)).as("n"), dsum(col("l_extendedprice")).as("revenue"))
         .orderBy(col("o_orderpriority"), col("l_returnflag"))
-    }),
+    },
 
     // Retraction-aware maintenance: the DELETE channel. Sums/counts
     // retract by exact decimal subtraction; groups whose stored
@@ -410,7 +579,22 @@ object RelationalQueries {
     // slice only (key-pruned partial rescan) — everything else is pure
     // state math. The oracle is the full recompute over survivors, so
     // a hash match proves retraction + selective rebuild end-to-end.
-    "q_agg_retract" -> ((s, dir) => {
+    QuerySpec("q_agg_retract",
+      """SELECT l_returnflag, l_linestatus,
+        | CAST(SUM(CAST(l_extendedprice AS DECIMAL(28,2))) AS DOUBLE) AS sum_v,
+        | COUNT(l_extendedprice) AS n_v,
+        | MIN(l_extendedprice) AS min_v,
+        | MAX(l_extendedprice) AS max_v,
+        | CAST(SUM(CAST(l_extendedprice AS DECIMAL(28,2))) AS DOUBLE)
+        |   / CAST(COUNT(l_extendedprice) AS DOUBLE) AS avg_v
+        |FROM lineitem WHERE l_orderkey % 5 <> 0
+        |  -- replay buildState's entry guard: NULL stays (its group
+        |  -- keeps a state row), non-finite/over-magnitude rows cost
+        |  -- themselves (NaN fails <= under DuckDB's total order too)
+        |  AND (l_extendedprice IS NULL
+        |       OR (l_extendedprice >= -9e25 AND l_extendedprice <= 9e25))
+        |GROUP BY l_returnflag, l_linestatus
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin) { (s, dir) =>
       val li = table(s, dir, "lineitem")
       val groups = Seq("l_returnflag", "l_linestatus")
       val deletes = li.filter(col("l_orderkey") % 5 === 0)
@@ -429,9 +613,21 @@ object RelationalQueries {
           col("sum_v").cast("double").as("sum_v"), col("n_v"),
           col("min_v"), col("max_v"), col("avg_v"))
         .orderBy(col("l_returnflag"), col("l_linestatus"))
-    }),
+    },
 
-    "q_agg_incremental" -> ((s, dir) => {
+    QuerySpec("q_agg_incremental",
+      """SELECT l_returnflag, l_linestatus,
+        | CAST(SUM(CAST(l_extendedprice AS DECIMAL(28,2))) AS DOUBLE) AS sum_v,
+        | COUNT(l_extendedprice) AS n_v,
+        | MIN(l_extendedprice) AS min_v,
+        | MAX(l_extendedprice) AS max_v,
+        | CAST(SUM(CAST(l_extendedprice AS DECIMAL(28,2))) AS DOUBLE)
+        |   / CAST(COUNT(l_extendedprice) AS DOUBLE) AS avg_v
+        |FROM lineitem
+        |WHERE l_extendedprice IS NULL
+        |   OR (l_extendedprice >= -9e25 AND l_extendedprice <= 9e25)
+        |GROUP BY l_returnflag, l_linestatus
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin) { (s, dir) =>
       val li = table(s, dir, "lineitem")
       val cut = lit("1997-06-01").cast("date")
       val groups = Seq("l_returnflag", "l_linestatus")
@@ -445,7 +641,7 @@ object RelationalQueries {
           col("sum_v").cast("double").as("sum_v"), col("n_v"),
           col("min_v"), col("max_v"), col("avg_v"))
         .orderBy(col("l_returnflag"), col("l_linestatus"))
-    }),
+    },
 
     // A6 pivot: long->wide reshaping. The explicit value list keeps the
     // plan a single pass (no distinct-values pre-query) and makes the
@@ -453,7 +649,13 @@ object RelationalQueries {
     // values runs an extra job to discover them. Empty combinations
     // yield NULL counts in Spark; coalesce to 0 to match the oracle's
     // COUNT FILTER semantics.
-    "q_agg_pivot" -> ((s, dir) => {
+    QuerySpec("q_agg_pivot",
+      """SELECT o_orderpriority,
+        | COUNT(*) FILTER (o_orderstatus = 'F') AS n_F,
+        | COUNT(*) FILTER (o_orderstatus = 'O') AS n_O,
+        | COUNT(*) FILTER (o_orderstatus = 'P') AS n_P
+        |FROM orders GROUP BY o_orderpriority
+        |ORDER BY o_orderpriority""".stripMargin) { (s, dir) =>
       val statuses = Seq("F", "O", "P")
       table(s, dir, "orders")
         .groupBy(col("o_orderpriority"))
@@ -462,12 +664,20 @@ object RelationalQueries {
         .select(col("o_orderpriority") +:
           statuses.map(st => coalesce(col(st), lit(0L)).as(s"n_$st")): _*)
         .orderBy(col("o_orderpriority"))
-    }),
+    },
 
     // A6 unpivot (melt): wide->long — the inverse reshaping, built-in
     // since Spark 3.4. Values become (metric, value) rows; map-side
     // only, no shuffle beyond the final presentation sort.
-    "q_agg_unpivot" -> ((s, dir) => {
+    QuerySpec("q_agg_unpivot",
+      """SELECT l_orderkey, l_linenumber, metric, metric_value
+        |FROM (
+        |  UNPIVOT (SELECT l_orderkey, l_linenumber, l_quantity, l_discount, l_tax
+        |           FROM lineitem)
+        |  ON l_quantity, l_discount, l_tax
+        |  INTO NAME metric VALUE metric_value
+        |)
+        |ORDER BY l_orderkey, l_linenumber, metric, metric_value""".stripMargin) { (s, dir) =>
       table(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_linenumber"),
           col("l_quantity"), col("l_discount"), col("l_tax"))
@@ -485,7 +695,7 @@ object RelationalQueries {
         // the row-order-sensitive hash compare
         .orderBy(col("l_orderkey"), col("l_linenumber"), col("metric"),
           col("metric_value"))
-    }),
+    },
 
     // A1 percentiles — EXACT `percentile` (linear interpolation, the
     // same definition as DuckDB's quantile_cont, so the oracle matches).
@@ -495,7 +705,12 @@ object RelationalQueries {
     // the scale path is `approx_percentile` (t-digest sketch, map-side
     // mergeable, bounded memory), following q_agg_approx's
     // sketch-instead-of-exact pattern.
-    "q_agg_percentile" -> ((s, dir) => {
+    QuerySpec("q_agg_percentile",
+      """SELECT l_returnflag,
+        | ROUND(quantile_cont(l_extendedprice, 0.5), 4) AS p50_price,
+        | ROUND(quantile_cont(l_extendedprice, 0.95), 4) AS p95_price,
+        | COUNT(*) AS n_rows
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin) { (s, dir) =>
       table(s, dir, "lineitem")
         .groupBy(col("l_returnflag"))
         .agg(
@@ -503,14 +718,35 @@ object RelationalQueries {
           round(graft.functions.FastPercentile.pctl(col("l_extendedprice"), lit(0.95)), 4).as("p95_price"),
           count(lit(1)).as("n_rows"))
         .orderBy(col("l_returnflag"))
-    }),
+    },
 
     // A5/ST: session windows — per-user activity sessions with a 30-min
     // inactivity gap. session_window is computed map-side, merged in the
     // aggregation; one shuffle on user_id. The oracle reproduces the
     // semantics with gaps-and-islands SQL (new island when the gap from
     // the previous event exceeds 30 min; session end = last event + gap).
-    "q_agg_session" -> ((s, dir) => {
+    QuerySpec("q_agg_session",
+      """WITH g AS (
+        |  SELECT user_id, ts, value,
+    |    -- session intervals are end-exclusive: a gap of exactly 30 min
+        |    -- does NOT merge (Spark merges only when next.ts < prev end)
+        |    CASE WHEN ts - LAG(ts) OVER (PARTITION BY user_id ORDER BY ts)
+        |           >= INTERVAL 30 MINUTE OR
+        |         LAG(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
+        |    THEN 1 ELSE 0 END AS new_session
+        |  FROM events WHERE ts IS NOT NULL
+        |), i AS (
+        |  SELECT user_id, ts, value,
+        |    SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
+        |  FROM g
+        |)
+        |SELECT user_id, MIN(ts) AS session_start,
+        |  MAX(ts) + INTERVAL 30 MINUTE AS session_end,
+        |  COUNT(*) AS n_events,
+        |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
+        |FROM i GROUP BY user_id, sid
+        |ORDER BY user_id, session_start""".stripMargin) { (s, dir) =>
       table(s, dir, "events")
         .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
         .agg(count(lit(1)).as("n_events"), dsum(col("value")).as("sum_value"))
@@ -520,24 +756,42 @@ object RelationalQueries {
           col("session_window.end").as("session_end"),
           col("n_events"), col("sum_value"))
         .orderBy(col("user_id"), col("session_start"))
-    }),
+    },
 
     // A5: tumbling 1-hour buckets via window() — bucket key is computed
     // map-side; one shuffle on (hour, type).
-    "q_agg_timebucket" -> ((s, dir) => {
+    // ts IS NOT NULL replays Catalyst's TimeWindowing rule, which
+    // injects an isnotnull(ts) filter under window()/session_window()
+    // — the oracle would otherwise keep a NULL-bucket group Spark
+    // silently drops (same filter on q_agg_sliding/q_agg_session)
+    QuerySpec("q_agg_timebucket",
+      """SELECT date_trunc('hour', ts) AS hour_start, event_type,
+        | COUNT(*) AS n_events,
+        | CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
+        |FROM events WHERE ts IS NOT NULL
+        |GROUP BY 1, 2 ORDER BY hour_start, event_type""".stripMargin) { (s, dir) =>
       table(s, dir, "events")
         .groupBy(
           window(col("ts"), "1 hour").getField("start").as("hour_start"),
           col("event_type"))
         .agg(count(lit(1)).as("n_events"), dsum(col("value")).as("sum_value"))
         .orderBy(col("hour_start"), col("event_type"))
-    }),
+    },
 
     // A5b SLIDING event-time windows (2h window, 1h slide): each event
     // lands in exactly two overlapping buckets — the trailing-window
     // aggregation tumbling buckets can't express. Spark's window()
     // generates the bucket spine map-side; one aggregate after.
-    "q_agg_sliding" -> ((s, dir) => {
+    QuerySpec("q_agg_sliding",
+      """WITH b AS (
+        |  SELECT unnest([date_trunc('hour', ts),
+        |    date_trunc('hour', ts) - INTERVAL 1 HOUR]) AS win_start, value
+        |  FROM events WHERE ts IS NOT NULL
+        |)
+        |SELECT win_start, win_start + INTERVAL 2 HOUR AS win_end,
+        | COUNT(*) AS n_events,
+        | CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
+        |FROM b GROUP BY win_start ORDER BY win_start""".stripMargin) { (s, dir) =>
       table(s, dir, "events")
         .groupBy(window(col("ts"), "2 hours", "1 hour"))
         .agg(count(lit(1)).as("n_events"), dsum(col("value")).as("sum_value"))
@@ -545,12 +799,24 @@ object RelationalQueries {
           col("window.end").as("win_end"),
           col("n_events"), col("sum_value"))
         .orderBy(col("win_start"))
-    }),
+    },
 
     // J1 null-safe equi join (<=>): NULL keys MATCH each other instead
     // of silently dropping — the merge/dedup-by-key semantic CDC and
     // upsert paths depend on, surfaced as its own join query.
-    "q_join_nullsafe" -> ((s, dir) => {
+    QuerySpec("q_join_nullsafe",
+      """WITH c AS (
+        |  SELECT CASE WHEN c_custkey % 50 = 0 THEN NULL
+        |    ELSE c_nationkey END AS k, c_custkey FROM customer
+        |), s AS (
+        |  SELECT CASE WHEN s_suppkey % 7 = 0 THEN NULL
+        |    ELSE s_nationkey END AS k, s_suppkey FROM supplier
+        |)
+        |SELECT c.k AS k, COUNT(*) AS n_pairs,
+        | COUNT(DISTINCT c_custkey) AS n_cust,
+        | COUNT(DISTINCT s_suppkey) AS n_supp
+        |FROM c JOIN s ON c.k IS NOT DISTINCT FROM s.k
+        |GROUP BY c.k ORDER BY c.k NULLS FIRST""".stripMargin) { (s, dir) =>
       val cust = table(s, dir, "customer").select(
         when(col("c_custkey") % 50 === 0, lit(null)).otherwise(col("c_nationkey"))
           .as("k"),
@@ -565,19 +831,26 @@ object RelationalQueries {
           countDistinct(col("c_custkey")).as("n_cust"),
           countDistinct(col("s_suppkey")).as("n_supp"))
         .orderBy(col("k").asc_nulls_first)
-    }),
+    },
 
     // J1 inner: orders⋈customer. customer is the small side → Catalyst
     // broadcasts it (verified in plan); no shuffle of orders.
-    "q_join_inner" -> ((s, dir) => {
+    QuerySpec("q_join_inner",
+      """SELECT o_orderkey, c_name, o_totalprice
+        |FROM orders JOIN customer ON o_custkey = c_custkey
+        |ORDER BY o_orderkey""".stripMargin) { (s, dir) =>
       table(s, dir, "orders")
         .join(table(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
         .select(col("o_orderkey"), col("c_name"), col("o_totalprice"))
         .orderBy(col("o_orderkey"))
-    }),
+    },
 
     // J1 left outer + A1: customers keep their zero-order rows.
-    "q_join_left" -> ((s, dir) => {
+    QuerySpec("q_join_left",
+      """SELECT c_custkey, c_name, COUNT(o_orderkey) AS n_orders,
+        | COALESCE(CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE), 0.0) AS sum_spent
+        |FROM customer LEFT JOIN orders ON c_custkey = o_custkey
+        |GROUP BY c_custkey, c_name ORDER BY c_custkey""".stripMargin) { (s, dir) =>
       table(s, dir, "customer")
         .join(table(s, dir, "orders"), col("c_custkey") === col("o_custkey"), "left")
         .groupBy(col("c_custkey"), col("c_name"))
@@ -585,11 +858,18 @@ object RelationalQueries {
           count(col("o_orderkey")).as("n_orders"),
           coalesce(dsum(col("o_totalprice")), lit(0.0)).as("sum_spent"))
         .orderBy(col("c_custkey"))
-    }),
+    },
 
     // J2: explicit broadcast of the dim chain region→nation — the fact
     // side never shuffles for the joins, only for the final group-by.
-    "q_join_broadcast" -> ((s, dir) => {
+    QuerySpec("q_join_broadcast",
+      """SELECT r_name, n_name, COUNT(*) AS n_orders,
+        | CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
+        |FROM orders
+        | JOIN customer ON o_custkey = c_custkey
+        | JOIN nation ON c_nationkey = n_nationkey
+        | JOIN region ON n_regionkey = r_regionkey
+        |GROUP BY r_name, n_name ORDER BY r_name, n_name""".stripMargin) { (s, dir) =>
       table(s, dir, "orders")
         .join(table(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
         .join(broadcast(table(s, dir, "nation")),
@@ -599,13 +879,24 @@ object RelationalQueries {
         .groupBy(col("r_name"), col("n_name"))
         .agg(count(lit(1)).as("n_orders"), dsum(col("o_totalprice")).as("revenue"))
         .orderBy(col("r_name"), col("n_name"))
-    }),
+    },
 
     // J1 full outer: customers limited to half the nations so BOTH
     // sides have unmatched rows (customers with no orders; orders of
     // excluded customers). Keys are unique per side, so
     // coalesce(c_custkey, o_custkey) is a total order.
-    "q_join_full" -> ((s, dir) => {
+    QuerySpec("q_join_full",
+      """WITH cust AS (
+        |  SELECT c_custkey, c_mktsegment FROM customer WHERE c_nationkey < 13
+        |), ords AS (
+        |  SELECT o_custkey, COUNT(*) AS n_orders,
+        |    CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
+        |  FROM orders GROUP BY o_custkey
+        |)
+        |SELECT COALESCE(c_custkey, o_custkey) AS custkey, c_mktsegment,
+        |  n_orders, sum_price
+        |FROM cust FULL OUTER JOIN ords ON c_custkey = o_custkey
+        |ORDER BY custkey""".stripMargin) { (s, dir) =>
       val cust = table(s, dir, "customer").filter(col("c_nationkey") < 13)
         .select(col("c_custkey"), col("c_mktsegment"))
       val ords = table(s, dir, "orders").groupBy(col("o_custkey"))
@@ -615,14 +906,18 @@ object RelationalQueries {
           coalesce(col("c_custkey"), col("o_custkey")).as("custkey"),
           col("c_mktsegment"), col("n_orders"), col("sum_price"))
         .orderBy(col("custkey"))
-    }),
+    },
 
     // J1 under skew: salted shuffled-hash join — lineitem's per-row salt
     // spreads any hot supplier key over 8 reducers; supplier fans out
     // 8x. Salting must not change the join result, so the oracle is the
     // plain join. Plan shape (asserted in tests): the exchange
     // partitions on (suppkey, salt), no broadcast.
-    "q_join_salted" -> ((s, dir) => {
+    QuerySpec("q_join_salted",
+      """SELECT s_nationkey, COUNT(*) AS n_items,
+        | CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
+        |FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
+        |GROUP BY s_nationkey ORDER BY s_nationkey""".stripMargin) { (s, dir) =>
       SkewJoin.saltedEquiJoin(
           table(s, dir, "lineitem"), table(s, dir, "supplier"),
           "l_suppkey", "s_suppkey", salts = 8,
@@ -631,7 +926,7 @@ object RelationalQueries {
         .agg(count(lit(1)).as("n_items"),
           dsum(col("l_extendedprice")).as("revenue"))
         .orderBy(col("s_nationkey"))
-    }),
+    },
 
     // Bloom-pruned semi join: the selective-dim join-pruning pattern
     // for when the dim key set is too big to broadcast exactly — a
@@ -640,7 +935,12 @@ object RelationalQueries {
     // false positives, so pruning is transparent and the oracle is the
     // plain semi join. BloomSpec asserts the filter really prunes and
     // has zero false negatives.
-    "q_join_bloom" -> ((s, dir) => {
+    QuerySpec("q_join_bloom",
+      """SELECT l_returnflag, COUNT(*) AS n_items,
+        | CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
+        |FROM lineitem
+        |WHERE l_partkey IN (SELECT p_partkey FROM part WHERE p_size >= 48)
+        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin) { (s, dir) =>
       val dim = table(s, dir, "part").filter(col("p_size") >= 48)
       Bloom.prunedSemiJoin(
           table(s, dir, "lineitem"), "l_partkey", dim, "p_partkey")
@@ -648,15 +948,24 @@ object RelationalQueries {
         .agg(count(lit(1)).as("n_items"),
           dsum(col("l_extendedprice")).as("revenue"))
         .orderBy(col("l_returnflag"))
-    }),
+    },
 
     // Heavy-hitter diagnostic: the 25 hottest customer keys in orders
     // with count and share — partial-combined counts, broadcast 1-row
     // total, TakeOrderedAndProject top-N (the decision input for
     // salting / AQE skew handling).
-    "q_skew_keys" -> ((s, dir) => {
+    QuerySpec("q_skew_keys",
+      s"""WITH c AS (
+        |  SELECT o_custkey, COUNT(*) AS cnt FROM orders GROUP BY o_custkey
+        |), t AS (
+        |  SELECT COUNT(*) AS total FROM orders
+        |)
+        |SELECT o_custkey, cnt, ${graft.functions.Num.portableRound6Sql(
+            "cnt::DOUBLE / total")} AS share
+        |FROM c CROSS JOIN t
+        |ORDER BY cnt DESC, o_custkey LIMIT 25""".stripMargin) { (s, dir) =>
       SkewJoin.keySkewStats(table(s, dir, "orders"), "o_custkey", 25)
-    }),
+    },
 
     // Count-min sketch frequency estimation: the fixed-memory
     // heavy-hitter path when per-key exact counts are as big as the
@@ -665,7 +974,31 @@ object RelationalQueries {
     // est_cnt >= exact_cnt row-for-row. Fully md5-portable, so the
     // oracle replays the whole matrix — the one sketch family with a
     // bit-exact cross-engine check (HLL/quantile are rows-only).
-    "q_sketch_cms" -> ((s, dir) => {
+    QuerySpec("q_sketch_cms",
+      """WITH i AS (SELECT unnest(range(4)) AS cms_row),
+        |cells AS (
+        |  SELECT cms_row,
+        |    CAST((('0x' || substr(md5(CAST(o_custkey AS VARCHAR) || ':' || cms_row), 1, 16))::UBIGINT
+        |      & 9223372036854775807::UBIGINT) % 256 AS BIGINT) AS cms_col,
+        |    COUNT(*) AS cnt
+        |  FROM orders CROSS JOIN i GROUP BY 1, 2
+        |),
+        |probe AS (SELECT DISTINCT o_custkey FROM orders WHERE o_custkey <= 30),
+        |pcell AS (
+        |  SELECT o_custkey, cms_row,
+        |    CAST((('0x' || substr(md5(CAST(o_custkey AS VARCHAR) || ':' || cms_row), 1, 16))::UBIGINT
+        |      & 9223372036854775807::UBIGINT) % 256 AS BIGINT) AS cms_col
+        |  FROM probe CROSS JOIN i
+        |),
+        |est AS (
+        |  SELECT o_custkey, MIN(COALESCE(c.cnt, 0)) AS est_cnt
+        |  FROM pcell p LEFT JOIN cells c USING (cms_row, cms_col)
+        |  GROUP BY 1
+        |),
+        |exact AS (SELECT o_custkey, COUNT(*) AS exact_cnt FROM orders GROUP BY 1)
+        |SELECT est.o_custkey AS custkey, est.est_cnt, exact.exact_cnt
+        |FROM est JOIN exact USING (o_custkey)
+        |ORDER BY custkey""".stripMargin) { (s, dir) =>
       val orders = table(s, dir, "orders")
       val cms = Sketch.cmsBuild(orders, "o_custkey", depth = 4, width = 256)
       val est = Sketch.cmsEstimate(cms,
@@ -674,7 +1007,7 @@ object RelationalQueries {
       est.join(exact, Seq("o_custkey"))
         .select(col("o_custkey").as("custkey"), col("est_cnt"), col("exact_cnt"))
         .orderBy(col("custkey"))
-    }),
+    },
 
     // Join-cardinality prediction from CMS inner products — the
     // decide-before-you-shuffle diagnostic: est = min over depth rows
@@ -683,7 +1016,62 @@ object RelationalQueries {
     // shuffle explosion). Width 512 under 15k distinct orderkeys, so
     // collision noise is real and est > exact; both rows assert
     // est >= exact through the oracle's identical replay.
-    "q_sketch_joinsize" -> ((s, dir) => {
+    QuerySpec("q_sketch_joinsize",
+      """WITH i AS (SELECT unnest(range(4)) AS cms_row),
+        |co AS (
+        |  SELECT cms_row,
+        |    CAST((('0x' || substr(md5(CAST(o_orderkey AS VARCHAR) || ':' || cms_row), 1, 16))::UBIGINT
+        |      & 9223372036854775807::UBIGINT) % 512 AS BIGINT) AS cms_col,
+        |    COUNT(*) AS cnt
+        |  FROM orders CROSS JOIN i GROUP BY 1, 2
+        |),
+        |cl AS (
+        |  SELECT cms_row,
+        |    CAST((('0x' || substr(md5(CAST(l_orderkey AS VARCHAR) || ':' || cms_row), 1, 16))::UBIGINT
+        |      & 9223372036854775807::UBIGINT) % 512 AS BIGINT) AS cms_col,
+        |    COUNT(*) AS cnt
+        |  FROM lineitem CROSS JOIN i GROUP BY 1, 2
+        |),
+        |cc AS (
+        |  SELECT cms_row,
+        |    CAST((('0x' || substr(md5(CAST(o_custkey AS VARCHAR) || ':' || cms_row), 1, 16))::UBIGINT
+        |      & 9223372036854775807::UBIGINT) % 512 AS BIGINT) AS cms_col,
+        |    COUNT(*) AS cnt
+        |  FROM orders CROSS JOIN i GROUP BY 1, 2
+        |),
+        |ip1 AS (
+        |  -- HUGEINT products + DOUBLE estimate mirror the engine's
+        |  -- DECIMAL(38,0)-then-double form (raw 64-bit products
+        |  -- overflow at the 1e12-row regime)
+        |  SELECT a.cms_row, CAST(SUM(CAST(a.cnt AS HUGEINT) * b.cnt) AS HUGEINT) AS ip
+        |  FROM co a JOIN cl b USING (cms_row, cms_col) GROUP BY 1
+        |),
+        |est1 AS (
+        |  SELECT CAST(MIN(COALESCE(ip, 0)) AS DOUBLE) AS est_size
+        |  FROM i LEFT JOIN ip1 USING (cms_row)
+        |),
+        |ex1 AS (
+        |  SELECT COUNT(*) AS exact_size FROM orders JOIN lineitem ON o_orderkey = l_orderkey
+        |),
+        |ip2 AS (
+        |  SELECT a.cms_row, CAST(SUM(CAST(a.cnt AS HUGEINT) * b.cnt) AS HUGEINT) AS ip
+        |  FROM cc a JOIN cc b USING (cms_row, cms_col) GROUP BY 1
+        |),
+        |est2 AS (
+        |  SELECT CAST(MIN(COALESCE(ip, 0)) AS DOUBLE) AS est_size
+        |  FROM i LEFT JOIN ip2 USING (cms_row)
+        |),
+        |ex2 AS (
+        |  SELECT CAST(SUM(c * c) AS BIGINT) AS exact_size
+        |  FROM (SELECT COUNT(*) AS c FROM orders GROUP BY o_custkey)
+        |)
+        |SELECT * FROM (
+        |  SELECT 'orders_lineitem_orderkey' AS rel, est1.est_size, ex1.exact_size
+        |  FROM est1 CROSS JOIN ex1
+        |  UNION ALL
+        |  SELECT 'orders_self_custkey', est2.est_size, ex2.exact_size
+        |  FROM est2 CROSS JOIN ex2
+        |) ORDER BY rel""".stripMargin) { (s, dir) =>
       val orders = table(s, dir, "orders")
       val li = table(s, dir, "lineitem")
       val cmsO = Sketch.cmsBuild(orders, "o_orderkey", depth = 4, width = 512)
@@ -703,7 +1091,7 @@ object RelationalQueries {
         .select(lit("orders_self_custkey").as("rel"),
           col("est_join_size").as("est_size"), col("exact_size"))
       r1.unionByName(r2).orderBy(col("rel"))
-    }),
+    },
 
     // Exact heavy hitters through a bounded-state candidate pass: a
     // Misra-Gries summary (k=100 counters << 1003 distinct keys, so
@@ -712,7 +1100,20 @@ object RelationalQueries {
     // derived (3 hot keys at ~8% share over a 1000-key cold tail)
     // because TPC-H columns are uniform. The output is EXACT, so the
     // oracle is the plain HAVING aggregate — no sketch replay.
-    "q_sketch_heavy" -> ((s, dir) => {
+    QuerySpec("q_sketch_heavy",
+      s"""WITH keyed AS (
+        |  SELECT CASE WHEN o_orderkey % 4 = 0 THEN 'hot_' || (o_orderkey % 3)
+        |              ELSE 'cold_' || o_custkey END AS key
+        |  FROM orders
+        |), t AS (SELECT COUNT(*) AS total FROM keyed),
+        |c AS (SELECT key, COUNT(*) AS cnt FROM keyed GROUP BY 1)
+        |SELECT key, cnt, ${graft.functions.Num.portableRound6Sql(
+            "cnt::DOUBLE / total")} AS share
+        |FROM c CROSS JOIN t
+        |-- CAST AS DOUBLE: lockstep with the Spark side's double
+        |-- threshold (see q_sketch_heavy_group's note)
+        |WHERE cnt > total * CAST(0.02 AS DOUBLE)
+        |ORDER BY key""".stripMargin) { (s, dir) =>
       val keyed = table(s, dir, "orders").select(
         when(col("o_orderkey") % 4 === 0,
           concat(lit("hot_"), col("o_orderkey") % 3))
@@ -720,14 +1121,34 @@ object RelationalQueries {
       HeavyHitters.heavyHitters(keyed, "k", minShare = 0.02)
         .select(col("key"), col("cnt"), col("share"))
         .orderBy(col("key"))
-    }),
+    },
 
     // Per-group heavy hitters — hot keys per tenant/shard, the
     // operational telemetry shape: one Misra-Gries summary PER GROUP
     // (each independently bounded by k), then the broadcast-membership
     // exact verify scoped by (group, key). Exact output, plain
     // per-group HAVING oracle.
-    "q_sketch_heavy_group" -> ((s, dir) => {
+    QuerySpec("q_sketch_heavy_group",
+      s"""WITH keyed AS (
+        |  SELECT o_orderpriority,
+        |    CASE WHEN o_orderkey % 4 = 0 THEN 'hot_' || (o_orderkey % 3)
+        |         ELSE 'cold_' || o_custkey END AS key
+        |  FROM orders
+        |), t AS (
+        |  SELECT o_orderpriority, COUNT(*) AS total FROM keyed GROUP BY 1
+        |), c AS (
+        |  SELECT o_orderpriority, key, COUNT(*) AS cnt
+        |  FROM keyed GROUP BY 1, 2
+        |)
+        |SELECT c.o_orderpriority, c.key, c.cnt,
+        |  ${graft.functions.Num.portableRound6Sql("c.cnt::DOUBLE / t.total")} AS share
+        |FROM c JOIN t USING (o_orderpriority)
+        |-- CAST AS DOUBLE: a bare 0.03 parses as DECIMAL and computes
+        |-- total*0.03 EXACTLY, while the Spark side multiplies by the
+        |-- double 0.03 (= 0.029999...96) — a count sitting exactly on
+        |-- the share boundary would pass one engine and fail the other
+        |WHERE c.cnt > t.total * CAST(0.03 AS DOUBLE)
+        |ORDER BY o_orderpriority, key""".stripMargin) { (s, dir) =>
       val keyed = table(s, dir, "orders").select(col("o_orderpriority"),
         when(col("o_orderkey") % 4 === 0,
           concat(lit("hot_"), col("o_orderkey") % 3))
@@ -735,14 +1156,17 @@ object RelationalQueries {
       HeavyHitters.heavyHittersPerGroup(keyed, "o_orderpriority", "k",
           minShare = 0.03)
         .orderBy(col("o_orderpriority"), col("key"))
-    }),
+    },
 
     // F-family: CSV-in-a-string (from_csv) — the payload-column twin
     // of q_fn_json/q_fn_xml: the CSV text is CONSTRUCTED from order
     // columns, so parsing provably inverts construction and the oracle
     // is the original columns (doubles round-trip exactly through
     // shortest-repr toString/parse).
-    "q_fn_csv" -> ((s, dir) => {
+    QuerySpec("q_fn_csv",
+      """SELECT o_orderkey, o_orderkey AS k, o_orderstatus AS status,
+        |  o_totalprice AS total, o_orderdate::DATE AS odate
+        |FROM orders ORDER BY o_orderkey""".stripMargin) { (s, dir) =>
       // explicit concat with per-field coalesce, NOT concat_ws:
       // concat_ws silently SKIPS null parts, so one NULL column would
       // shift every following field left and the parse would invert a
@@ -765,27 +1189,82 @@ object RelationalQueries {
           col("p.status").as("status"), col("p.total").as("total"),
           col("p.odate").as("odate"))
         .orderBy(col("o_orderkey"))
-    }),
+    },
 
     // Single-pass numeric profiling: 5 metrics x 3 columns in ONE
     // aggregate node (15 partial aggregates, one 1-row exchange), then
     // a driver-free explode to per-column rows. The mean goes through
     // an exact decimal sum — see Profile's Scaladoc.
-    "q_profile_stats" -> ((s, dir) => {
+    // avg_val rounds through the portableRound6 fragment (lockstep
+    // with Profile's Spark side): a 6dp-decimal sum over the row count
+    // is the .5e-6 boundary class where built-in ROUNDs tie-diverge
+    QuerySpec("q_profile_stats",
+      s"""SELECT col_name, n_rows, n_null, min_val, max_val,
+        |  ${graft.functions.Num.portableRound6Sql("av")} AS avg_val
+        |FROM (
+        |  SELECT 'l_discount' AS col_name, COUNT(*) AS n_rows,
+        |    COUNT(*) - COUNT(l_discount) AS n_null,
+        |    ROUND(MIN(l_discount), 6) AS min_val,
+        |    ROUND(MAX(l_discount), 6) AS max_val,
+        |    CAST(SUM(CAST(l_discount AS DECIMAL(28,6))) AS DOUBLE)
+        |      / COUNT(l_discount) AS av
+        |  FROM lineitem
+        |  UNION ALL
+        |  SELECT 'l_extendedprice', COUNT(*), COUNT(*) - COUNT(l_extendedprice),
+        |    ROUND(MIN(l_extendedprice), 6), ROUND(MAX(l_extendedprice), 6),
+        |    CAST(SUM(CAST(l_extendedprice AS DECIMAL(28,6))) AS DOUBLE)
+        |      / COUNT(l_extendedprice)
+        |  FROM lineitem
+        |  UNION ALL
+        |  SELECT 'l_quantity', COUNT(*), COUNT(*) - COUNT(l_quantity),
+        |    ROUND(MIN(l_quantity), 6), ROUND(MAX(l_quantity), 6),
+        |    CAST(SUM(CAST(l_quantity AS DECIMAL(28,6))) AS DOUBLE)
+        |      / COUNT(l_quantity)
+        |  FROM lineitem
+        |) ORDER BY col_name""".stripMargin) { (s, dir) =>
       Profile.numericProfile(table(s, dir, "lineitem"),
         Seq("l_quantity", "l_extendedprice", "l_discount"))
         .orderBy(col("col_name"))
-    }),
+    },
 
     // Exact-integer Pearson correlation matrix: built-in corr() streams
     // order-dependent double moments (not reproducible), so every sum
     // of products is exact DECIMAL(38,0) over integer hundredths and
     // only the final sqrt/divide touches floating point — the oracle
     // replays the identical integer sums on HUGEINT.
-    "q_profile_corr" -> ((s, dir) => {
+    QuerySpec("q_profile_corr",
+      """WITH c AS (
+        |  SELECT CAST(ROUND(l_quantity * 100) AS HUGEINT) AS q,
+        |    CAST(ROUND(l_extendedprice * 100) AS HUGEINT) AS p,
+        |    CAST(ROUND(l_discount * 100) AS HUGEINT) AS d
+        |  FROM lineitem
+        |  WHERE l_quantity IS NOT NULL AND l_extendedprice IS NOT NULL
+        |    AND l_discount IS NOT NULL
+        |), s AS (
+        |  SELECT CAST(COUNT(*) AS HUGEINT) AS n,
+        |    SUM(q) AS sq, SUM(q*q) AS ssq,
+        |    SUM(p) AS sp, SUM(p*p) AS ssp,
+        |    SUM(d) AS sd, SUM(d*d) AS ssd,
+        |    SUM(q*p) AS sqp, SUM(q*d) AS sqd, SUM(p*d) AS spd
+        |  FROM c
+        |)
+        |SELECT CAST(n AS BIGINT) AS n,
+        |  ROUND(CAST(n*sqp - sq*sp AS DOUBLE)
+        |    / (sqrt(CAST(n*ssq - sq*sq AS DOUBLE))
+        |       * sqrt(CAST(n*ssp - sp*sp AS DOUBLE))), 6)
+        |    AS corr_l_quantity_l_extendedprice,
+        |  ROUND(CAST(n*sqd - sq*sd AS DOUBLE)
+        |    / (sqrt(CAST(n*ssq - sq*sq AS DOUBLE))
+        |       * sqrt(CAST(n*ssd - sd*sd AS DOUBLE))), 6)
+        |    AS corr_l_quantity_l_discount,
+        |  ROUND(CAST(n*spd - sp*sd AS DOUBLE)
+        |    / (sqrt(CAST(n*ssp - sp*sp AS DOUBLE))
+        |       * sqrt(CAST(n*ssd - sd*sd AS DOUBLE))), 6)
+        |    AS corr_l_extendedprice_l_discount
+        |FROM s""".stripMargin) { (s, dir) =>
       Profile.pearsonExact(table(s, dir, "lineitem"),
         Seq("l_quantity", "l_extendedprice", "l_discount"))
-    }),
+    },
 
     // Bloom-filter quality measurement: EXACT false-positive count and
     // rate of the md5-portable filter (2048 bits, k=4, deliberately
@@ -794,7 +1273,40 @@ object RelationalQueries {
     // read-it-before-you-trust-it diagnostic for a persisted filter
     // artifact: the oracle rebuilds the identical bit set and replays
     // every probe, so the reported FPR is cross-engine exact.
-    "q_diag_bloomfpr" -> ((s, dir) => {
+    QuerySpec("q_diag_bloomfpr",
+      """WITH dimk AS (
+        |  SELECT DISTINCT c_custkey AS key FROM customer
+        |  WHERE c_mktsegment = 'BUILDING'
+        |), setbits AS (
+        |  SELECT DISTINCT
+        |    CAST(((('0x' || substr(md5(CAST(key AS VARCHAR) || ':' || i), 1, 16))
+        |      ::UBIGINT & 9223372036854775807::UBIGINT) % 2048) AS BIGINT) AS pos
+        |  FROM dimk CROSS JOIN range(4) r(i)
+        |), probes AS (
+        |  SELECT DISTINCT o_custkey AS key FROM orders
+        |), ppos AS (
+        |  SELECT key,
+        |    CAST(((('0x' || substr(md5(CAST(key AS VARCHAR) || ':' || i), 1, 16))
+        |      ::UBIGINT & 9223372036854775807::UBIGINT) % 2048) AS BIGINT) AS pos
+        |  FROM probes CROSS JOIN range(4) r(i)
+        |), passes AS (
+        |  SELECT p.key,
+        |    MIN(CASE WHEN sb.pos IS NULL THEN 0 ELSE 1 END) AS pass
+        |  FROM ppos p LEFT JOIN setbits sb USING (pos)
+        |  GROUP BY p.key
+        |), scored AS (
+        |  SELECT ps.pass,
+        |    CASE WHEN d.key IS NULL THEN 0 ELSE 1 END AS truth
+        |  FROM passes ps LEFT JOIN dimk d USING (key)
+        |)
+        |SELECT CAST(COUNT(*) AS BIGINT) AS n_probes,
+        |  CAST(SUM(truth) AS BIGINT) AS n_true,
+        |  CAST(SUM(pass) AS BIGINT) AS n_pass,
+        |  CAST(SUM(CASE WHEN pass = 1 AND truth = 0 THEN 1 ELSE 0 END)
+        |    AS BIGINT) AS n_fp,
+        |  ROUND(SUM(CASE WHEN pass = 1 AND truth = 0 THEN 1 ELSE 0 END)::DOUBLE
+        |    / SUM(CASE WHEN truth = 0 THEN 1 ELSE 0 END), 6) AS fpr
+        |FROM scored""".stripMargin) { (s, dir) =>
       val dim = table(s, dir, "customer")
         .filter(col("c_mktsegment") === "BUILDING")
         .select(col("c_custkey").as("key"))
@@ -817,99 +1329,353 @@ object RelationalQueries {
               .cast("double")
               / sum(when(col("truth") === 0, 1).otherwise(0)).cast("double"),
             6).as("fpr"))
-    }),
+    },
 
     // Population Stability Index between the early and late halves of
     // the order-date range — the binned drift alarm (thresholds 0.1 /
     // 0.25) beside KS's worst-point statistic. Reference deciles from
     // one shared-buffer percentile aggregate; half-count continuity
     // floor; bin-ordered fold.
-    "q_profile_psi" -> ((s, dir) => {
+    QuerySpec("q_profile_psi",
+      """WITH refv AS (
+        |  SELECT CAST(o_totalprice AS DOUBLE) AS x FROM orders
+        |  WHERE o_orderdate < DATE '1998-01-01' AND o_totalprice IS NOT NULL
+        |), curv AS (
+        |  SELECT CAST(o_totalprice AS DOUBLE) AS x FROM orders
+        |  WHERE o_orderdate >= DATE '1998-01-01' AND o_totalprice IS NOT NULL
+        |), q AS (
+        |  SELECT quantile_cont(x,
+        |    [0.1, 0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9]) AS cuts
+        |  FROM refv
+        |), ca AS (
+        |  SELECT bin, COUNT(*) AS c FROM (
+        |    SELECT CAST(len(list_filter(q.cuts, c -> r.x > c)) AS INT) AS bin
+        |    FROM refv r CROSS JOIN q) GROUP BY bin
+        |), cb AS (
+        |  SELECT bin, COUNT(*) AS c FROM (
+        |    SELECT CAST(len(list_filter(q.cuts, c -> r.x > c)) AS INT) AS bin
+        |    FROM curv r CROSS JOIN q) GROUP BY bin
+        |), spine AS (
+        |  SELECT CAST(unnest(range(10)) AS INT) AS bin
+        |), cells AS (
+        |  SELECT s.bin, COALESCE(ca.c, 0) AS cnt_a, COALESCE(cb.c, 0) AS cnt_b
+        |  FROM spine s LEFT JOIN ca ON ca.bin = s.bin
+        |  LEFT JOIN cb ON cb.bin = s.bin
+        |), t AS (
+        |  SELECT bin, na, nb,
+        |    greatest(cnt_a::DOUBLE / na, 0.5 / na) AS pa,
+        |    greatest(cnt_b::DOUBLE / nb, 0.5 / nb) AS pb
+        |  FROM (SELECT bin, cnt_a, cnt_b,
+        |    SUM(cnt_a) OVER () AS na, SUM(cnt_b) OVER () AS nb FROM cells)
+        |), tt AS (
+        |  SELECT bin, na, nb, (pb - pa) * ln(pb / pa) AS term FROM t
+        |)
+        |SELECT ROUND(list_sum(list(term ORDER BY bin)), 6) AS psi,
+        |  CAST(MAX(na) AS BIGINT) AS n_ref,
+        |  CAST(MAX(nb) AS BIGINT) AS n_cur,
+        |  CAST(COUNT(*) AS BIGINT) AS n_bins
+        |FROM tt""".stripMargin) { (s, dir) =>
       val o = table(s, dir, "orders")
       val cut = lit("1998-01-01").cast("date")
       Profile.psi(
         o.filter(col("o_orderdate") < cut).select(col("o_totalprice")),
         o.filter(col("o_orderdate") >= cut).select(col("o_totalprice")),
         "o_totalprice", bins = 10)
-    }),
+    },
 
     // Two-sample KS distance: exact empirical-CDF drift between the
     // A-returnflag and R-returnflag price distributions — the
     // new-drop-vs-last-drop distribution guard beyond mean checks.
-    "q_profile_ks" -> ((s, dir) => {
+    QuerySpec("q_profile_ks",
+      s"""WITH t AS (
+        |  SELECT CAST(l_extendedprice AS DOUBLE) AS x,
+        |    CASE WHEN l_returnflag = 'A' THEN 1 ELSE 0 END AS a,
+        |    CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END AS b
+        |  FROM lineitem
+        |  WHERE l_returnflag IN ('A', 'R') AND l_extendedprice IS NOT NULL
+        |), pv AS (
+        |  SELECT x, SUM(a) AS ca, SUM(b) AS cb FROM t GROUP BY x
+        |), st AS (
+        |  SELECT x,
+        |    SUM(ca) OVER (ORDER BY x
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS fa,
+        |    SUM(cb) OVER (ORDER BY x
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS fb,
+        |    SUM(ca) OVER () AS na,
+        |    SUM(cb) OVER () AS nb
+        |  FROM pv
+        |), g AS (
+        |  SELECT x, abs(fa::DOUBLE / na - fb::DOUBLE / nb) AS gap, na, nb
+        |  FROM st
+        |)
+        |SELECT ${graft.functions.Num.portableRound6Sql(
+            "(SELECT MAX(gap) FROM g)")} AS ks_stat,
+        |  (SELECT x FROM g WHERE gap = (SELECT MAX(gap) FROM g)
+        |   ORDER BY x LIMIT 1) AS at_value,
+        |  CAST((SELECT MAX(na) FROM g) AS BIGINT) AS n_a,
+        |  CAST((SELECT MAX(nb) FROM g) AS BIGINT) AS n_b""".stripMargin) { (s, dir) =>
       val li = table(s, dir, "lineitem")
       Profile.ksTwoSample(
         li.filter(col("l_returnflag") === "A").select(col("l_extendedprice")),
         li.filter(col("l_returnflag") === "R").select(col("l_extendedprice")),
         "l_extendedprice")
-    }),
+    },
 
     // Jensen–Shannon divergence of the event-type mix between the
     // first and second half of the month — the bounded symmetric
     // category-drift distance beside KS (numeric CDFs) and PSI
     // (binned magnitudes); safe on one-sided categories where raw KL
     // diverges.
-    "q_profile_jsd" -> ((s, dir) => {
+    QuerySpec("q_profile_jsd",
+      """WITH t AS (
+        |  SELECT event_type AS c,
+        |    CASE WHEN ts < TIMESTAMP '2024-01-16 00:00:00'
+        |      THEN 1 ELSE 0 END AS a,
+        |    CASE WHEN ts >= TIMESTAMP '2024-01-16 00:00:00'
+        |      THEN 1 ELSE 0 END AS b
+        |  FROM events WHERE event_type IS NOT NULL
+        |), pc AS (
+        |  SELECT c, SUM(a) AS ca, SUM(b) AS cb FROM t GROUP BY c
+        |), m AS (
+        |  SELECT c, ca, cb,
+        |    SUM(ca) OVER () AS na, SUM(cb) OVER () AS nb
+        |  FROM pc
+        |), tm AS (
+        |  SELECT c, na, nb,
+        |    (CASE WHEN ca > 0 THEN (ca::DOUBLE / na::DOUBLE)
+        |        * ln((ca::DOUBLE / na::DOUBLE)
+        |          / (((ca::DOUBLE / na::DOUBLE)
+        |            + (cb::DOUBLE / nb::DOUBLE)) / 2.0))
+        |      ELSE 0.0 END) / 2.0
+        |    + (CASE WHEN cb > 0 THEN (cb::DOUBLE / nb::DOUBLE)
+        |        * ln((cb::DOUBLE / nb::DOUBLE)
+        |          / (((ca::DOUBLE / na::DOUBLE)
+        |            + (cb::DOUBLE / nb::DOUBLE)) / 2.0))
+        |      ELSE 0.0 END) / 2.0 AS term
+        |  FROM m
+        |)
+        |SELECT ROUND(list_sum(list(term ORDER BY c)), 6) AS jsd_nats,
+        |  ROUND(list_sum(list(term ORDER BY c)) / 0.6931471805599453, 6)
+        |    AS jsd_bits,
+        |  CAST(MAX(na) AS BIGINT) AS n_a,
+        |  CAST(MAX(nb) AS BIGINT) AS n_b,
+        |  CAST(COUNT(*) AS BIGINT) AS n_cats
+        |FROM tm""".stripMargin) { (s, dir) =>
       val e = table(s, dir, "events")
       val cut = lit("2024-01-16 00:00:00").cast("timestamp")
       Profile.jensenShannon(
         e.filter(col("ts") < cut).select(col("event_type")),
         e.filter(col("ts") >= cut).select(col("event_type")),
         "event_type")
-    }),
+    },
 
     // Mutual information between two categorical columns — the
     // dependency/leakage detector over the exact contingency table;
     // the irrational cell terms fold in (x, y)-sorted order so the
     // sum is deterministic and oracle-replayable.
-    "q_profile_mi" -> ((s, dir) => {
+    QuerySpec("q_profile_mi",
+      """WITH c AS (
+        |  SELECT CAST(c_mktsegment AS VARCHAR) AS x,
+        |    CAST(c_nationkey AS VARCHAR) AS y, COUNT(*) AS cnt
+        |  FROM customer
+        |  WHERE c_mktsegment IS NOT NULL AND c_nationkey IS NOT NULL
+        |  GROUP BY 1, 2
+        |), m AS (
+        |  SELECT x, y, cnt,
+        |    SUM(cnt) OVER (PARTITION BY x) AS cx,
+        |    SUM(cnt) OVER (PARTITION BY y) AS cy,
+        |    SUM(cnt) OVER () AS n
+        |  FROM c
+        |), t AS (
+        |  SELECT x, y, n,
+        |    (cnt::DOUBLE / n) * ln((cnt::DOUBLE * n) / (cx::DOUBLE * cy::DOUBLE))
+        |      AS term
+        |  FROM m
+        |)
+        |SELECT ROUND(list_sum(list(term ORDER BY x, y)), 6) AS mi,
+        |  CAST(MAX(n) AS BIGINT) AS n_rows,
+        |  CAST(COUNT(*) AS BIGINT) AS n_cells
+        |FROM t""".stripMargin) { (s, dir) =>
       Profile.mutualInformation(
         table(s, dir, "customer"), "c_mktsegment", "c_nationkey")
-    }),
+    },
 
     // Corpus concentration: Gini + Herfindahl of characters per source
     // — the "is 90% of the corpus one domain?" audit behind mixture
     // weights. Exact-integer end to end (sorted-rank Gini identity,
     // decimal sums); the rank window runs over n_sources rows, not
     // data rows.
-    "q_profile_gini" -> ((s, dir) => {
+    QuerySpec("q_profile_gini",
+      s"""WITH t AS (
+        |  SELECT CAST(source AS VARCHAR) AS g,
+        |    SUM(CAST(n_chars AS HUGEINT)) AS x
+        |  FROM documents WHERE source IS NOT NULL GROUP BY 1
+        |), r AS (
+        |  SELECT x, ROW_NUMBER() OVER (ORDER BY x, g) AS i FROM t
+        |), s AS (
+        |  SELECT CAST(COUNT(*) AS HUGEINT) AS n, SUM(x) AS sx,
+        |    SUM(i * x) AS six, SUM(x * x) AS sxx, MAX(x) AS mx
+        |  FROM r
+        |)
+        |SELECT CAST(n AS BIGINT) AS n_groups, CAST(sx AS BIGINT) AS total,
+        |  ${graft.functions.Num.portableRound6Sql(
+            "CAST(2 * six - (n + 1) * sx AS DOUBLE) / CAST(n * sx AS DOUBLE)")} AS gini,
+        |  ${graft.functions.Num.portableRound6Sql(
+            "CAST(sxx AS DOUBLE) / CAST(sx * sx AS DOUBLE)")} AS hhi,
+        |  ${graft.functions.Num.portableRound6Sql(
+            "CAST(mx AS DOUBLE) / CAST(sx AS DOUBLE)")} AS top_share
+        |FROM s""".stripMargin) { (s, dir) =>
       Profile.concentration(table(s, dir, "documents"), "source", "n_chars")
-    }),
+    },
 
     // k-anonymity audit on the (nation, segment) quasi-identifier
     // pair: the achieved anonymity level and the at-risk slice below
     // k=5. One count shuffle + one bounded aggregate.
-    "q_profile_kanon" -> ((s, dir) => {
+    QuerySpec("q_profile_kanon",
+      s"""WITH g AS (
+        |  SELECT c_nationkey, c_mktsegment, COUNT(*) AS sz
+        |  FROM customer GROUP BY 1, 2
+        |)
+        |SELECT CAST(SUM(sz) AS BIGINT) AS n_rows,
+        |  CAST(COUNT(*) AS BIGINT) AS n_groups,
+        |  CAST(MIN(sz) AS BIGINT) AS min_group,
+        |  CAST(SUM(CASE WHEN sz < 5 THEN 1 ELSE 0 END) AS BIGINT)
+        |    AS n_small_groups,
+        |  CAST(SUM(CASE WHEN sz < 5 THEN sz ELSE 0 END) AS BIGINT)
+        |    AS rows_at_risk,
+        |  ${graft.functions.Num.portableRound6Sql(
+            "CAST(SUM(CASE WHEN sz < 5 THEN sz ELSE 0 END) AS DOUBLE)" +
+              " / CAST(SUM(sz) AS DOUBLE)")} AS risk_share
+        |FROM g""".stripMargin) { (s, dir) =>
       Profile.kAnonymity(table(s, dir, "customer"),
         Seq("c_nationkey", "c_mktsegment"), k = 5)
-    }),
+    },
 
     // Chi-squared independence + Cramér's V between order priority and
     // status — the effect-size companion to q_profile_mi. Cleared-
     // denominator cell terms over exact integer marginals; sorted fold.
-    "q_profile_chi2" -> ((s, dir) => {
+    QuerySpec("q_profile_chi2",
+      """WITH c AS (
+        |  SELECT CAST(o_orderpriority AS VARCHAR) AS x,
+        |    CAST(o_orderstatus AS VARCHAR) AS y,
+        |    CAST(COUNT(*) AS HUGEINT) AS cnt
+        |  FROM orders
+        |  WHERE o_orderpriority IS NOT NULL AND o_orderstatus IS NOT NULL
+        |  GROUP BY 1, 2
+        |), m AS (
+        |  SELECT x, y, cnt,
+        |    SUM(cnt) OVER (PARTITION BY x) AS cx,
+        |    SUM(cnt) OVER (PARTITION BY y) AS cy,
+        |    SUM(cnt) OVER () AS n
+        |  FROM c
+        |), t AS (
+        |  SELECT x, y, n,
+        |    CAST(n * cnt - cx * cy AS DOUBLE)
+        |      * CAST(n * cnt - cx * cy AS DOUBLE)
+        |      / CAST(n * cx * cy AS DOUBLE) AS term
+        |  FROM m
+        |), agg AS (
+        |  SELECT list_sum(list(term ORDER BY x, y)) AS chi2r,
+        |    CAST(MAX(n) AS BIGINT) AS n_rows,
+        |    CAST(COUNT(*) AS BIGINT) AS n_cells,
+        |    COUNT(DISTINCT x) AS nx, COUNT(DISTINCT y) AS ny
+        |  FROM t
+        |)
+        |SELECT ROUND(chi2r, 6) AS chi2,
+        |  CAST((nx - 1) * (ny - 1) AS BIGINT) AS dof,
+        |  ROUND(sqrt(chi2r
+        |    / (CAST(n_rows AS DOUBLE) * CAST(least(nx - 1, ny - 1) AS DOUBLE))),
+        |    6) AS cramers_v,
+        |  n_rows, n_cells
+        |FROM agg""".stripMargin) { (s, dir) =>
       Profile.chiSquared(table(s, dir, "orders"),
         "o_orderpriority", "o_orderstatus")
-    }),
+    },
 
     // Quantile normalization: map source src1's doc-length
     // distribution onto src0's — the cross-source score calibrator
     // (one threshold can then govern both feeds). Exact ECDF ranks;
     // percentile_cont interpolation against the reference's order
     // statistics.
-    "q_profile_qmap" -> ((s, dir) => {
+    QuerySpec("q_profile_qmap",
+      """WITH refv AS (
+        |  SELECT CAST(n_chars AS DOUBLE) AS a FROM documents
+        |  WHERE source = 'src0' AND n_chars IS NOT NULL
+        |), refr AS (
+        |  SELECT a, ROW_NUMBER() OVER (ORDER BY a) - 1 AS idx,
+        |    COUNT(*) OVER () AS na
+        |  FROM refv
+        |), curv AS (
+        |  SELECT CAST(n_chars AS DOUBLE) AS v, COUNT(*) AS n_rows
+        |  FROM documents WHERE source = 'src1' AND n_chars IS NOT NULL
+        |  GROUP BY 1
+        |), cum AS (
+        |  SELECT v, n_rows,
+        |    SUM(n_rows) OVER (ORDER BY v
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cumle,
+        |    SUM(n_rows) OVER () AS nb
+        |  FROM curv
+        |), pq AS (
+        |  SELECT v, n_rows,
+        |    CAST(cumle - 1 AS DOUBLE) / CAST(nb - 1 AS DOUBLE) AS q
+        |  FROM cum
+        |), pp AS (
+        |  SELECT v, n_rows, q,
+        |    q * CAST((SELECT MAX(na) FROM refr) - 1 AS DOUBLE) AS p
+        |  FROM pq
+        |), lo AS (
+        |  SELECT v, n_rows, q, p, CAST(floor(p) AS BIGINT) AS lo FROM pp
+        |)
+        |SELECT lo.v AS value, CAST(lo.n_rows AS BIGINT) AS n_rows,
+        |  ROUND(lo.q, 6) AS q,
+        |  ROUND(rl.a + (lo.p - CAST(lo.lo AS DOUBLE))
+        |    * (COALESCE(rh.a, rl.a) - rl.a), 6) AS mapped
+        |FROM lo
+        |LEFT JOIN refr rl ON rl.idx = lo.lo
+        |LEFT JOIN refr rh ON rh.idx = lo.lo + 1
+        |ORDER BY value""".stripMargin) { (s, dir) =>
       val d = table(s, dir, "documents")
       Profile.quantileMap(
         d.filter(col("source") === "src0").select(col("n_chars")),
         d.filter(col("source") === "src1").select(col("n_chars")),
         "n_chars")
-    }),
+    },
 
     // Trailing 7-day rolling correlation between daily purchase and
     // view volumes — "did engagement decouple from conversion this
     // week?". Exact decimal frame moments (the pearsonExact contract,
     // windowed); short or flat frames read NULL.
-    "q_ts_rollcorr" -> ((s, dir) => {
+    QuerySpec("q_ts_rollcorr",
+      """WITH d AS (
+        |  SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
+        |    COUNT(*) FILTER (event_type = 'purchase') AS cp,
+        |    COUNT(*) FILTER (event_type = 'view') AS cv
+        |  FROM events GROUP BY 1
+        |), s AS (
+        |  SELECT day, cp, cv,
+        |    CAST(COUNT(*) OVER w AS HUGEINT) AS n,
+        |    SUM(CAST(ROUND(CAST(cp AS DOUBLE) * 100) AS HUGEINT)) OVER w AS sx,
+        |    SUM(CAST(ROUND(CAST(cv AS DOUBLE) * 100) AS HUGEINT)) OVER w AS sy,
+        |    SUM(CAST(ROUND(CAST(cp AS DOUBLE) * 100) AS HUGEINT)
+        |      * CAST(ROUND(CAST(cp AS DOUBLE) * 100) AS HUGEINT)) OVER w AS sxx,
+        |    SUM(CAST(ROUND(CAST(cv AS DOUBLE) * 100) AS HUGEINT)
+        |      * CAST(ROUND(CAST(cv AS DOUBLE) * 100) AS HUGEINT)) OVER w AS syy,
+        |    SUM(CAST(ROUND(CAST(cp AS DOUBLE) * 100) AS HUGEINT)
+        |      * CAST(ROUND(CAST(cv AS DOUBLE) * 100) AS HUGEINT)) OVER w AS sxy
+        |  FROM d
+        |  WINDOW w AS (ORDER BY day ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)
+        |)
+        |SELECT day, CAST(cp AS BIGINT) AS cnt_purchase,
+        |  CAST(cv AS BIGINT) AS cnt_view,
+        |  CAST(n AS BIGINT) AS n_window,
+        |  CASE WHEN n >= 4 THEN
+        |    CASE WHEN (n * sxx - sx * sx) > 0 AND (n * syy - sy * sy) > 0
+        |      THEN ROUND(CAST(n * sxy - sx * sy AS DOUBLE)
+        |        / (sqrt(CAST(n * sxx - sx * sx AS DOUBLE))
+        |          * sqrt(CAST(n * syy - sy * sy AS DOUBLE))), 6)
+        |    END
+        |  END AS roll_corr
+        |FROM s ORDER BY day""".stripMargin) { (s, dir) =>
       val daily = table(s, dir, "events")
         .groupBy(date_trunc("day", col("ts")).as("day"))
         .agg(
@@ -918,20 +1684,60 @@ object RelationalQueries {
       Profile.rollingCorr(daily, Seq.empty, "day",
           "cnt_purchase", "cnt_view", window = 7, minPeriods = 4)
         .orderBy(col("day"))
-    }),
+    },
 
     // Benford first-digit forensics on order totals: digit from the
     // exact integer-hundredths string (never float formatting),
     // expected shares embedded as literals in both engines.
-    "q_profile_benford" -> ((s, dir) => {
+    QuerySpec("q_profile_benford",
+      s"""WITH d AS (
+         |  SELECT CAST(substr(CAST(CAST(ROUND(o_totalprice * 100) AS HUGEINT)
+         |    AS VARCHAR), 1, 1) AS INT) AS digit
+         |  FROM orders WHERE o_totalprice IS NOT NULL AND o_totalprice > 0
+         |), c AS (
+         |  SELECT digit, COUNT(*) AS n FROM d GROUP BY digit
+         |), sp AS (
+         |  SELECT CAST(unnest(range(1, 10)) AS INT) AS digit
+         |), j AS (
+         |  SELECT sp.digit, COALESCE(c.n, 0) AS n
+         |  FROM sp LEFT JOIN c USING (digit)
+         |), t AS (
+         |  SELECT digit, n, SUM(n) OVER () AS total FROM j
+         |)
+         |SELECT digit, CAST(n AS BIGINT) AS n,
+         |  ${graft.functions.Num.portableRound6Sql(
+             "CAST(n AS DOUBLE) / CAST(total AS DOUBLE)")} AS obs_share,
+         |  ROUND(CAST(([${Profile.BenfordShares.mkString(", ")}])[digit]
+         |    AS DOUBLE), 6) AS benford_share,
+         |  ${graft.functions.Num.portableRound6Sql(
+             "CAST(n AS DOUBLE) / CAST(total AS DOUBLE)" +
+               s" - CAST(([${Profile.BenfordShares.mkString(", ")}])[digit] AS DOUBLE)")} AS deviation
+         |FROM t ORDER BY digit""".stripMargin) { (s, dir) =>
       Profile.benford(table(s, dir, "orders"), "o_totalprice")
         .orderBy(col("digit"))
-    }),
+    },
 
     // Trending top-3 event types per day by trailing-7-observed-bucket
     // volume — the leaderboard window composition (trailing sum per
     // type, then rank within day).
-    "q_ts_trending" -> ((s, dir) => {
+    QuerySpec("q_ts_trending",
+      """WITH d AS (
+        |  SELECT event_type, CAST(date_trunc('day', ts) AS TIMESTAMP)
+        |    AS day, COUNT(*) AS cnt
+        |  FROM events GROUP BY 1, 2
+        |), w AS (
+        |  SELECT event_type, day,
+        |    CAST(SUM(cnt) OVER (PARTITION BY event_type ORDER BY day
+        |      ROWS BETWEEN 6 PRECEDING AND CURRENT ROW) AS BIGINT) AS cnt7
+        |  FROM d
+        |), r AS (
+        |  SELECT day, event_type, cnt7,
+        |    CAST(ROW_NUMBER() OVER (PARTITION BY day
+        |      ORDER BY cnt7 DESC, event_type) AS INT) AS rank
+        |  FROM w
+        |)
+        |SELECT day, rank, event_type, cnt7 FROM r
+        |WHERE rank <= 3 ORDER BY day, rank""".stripMargin) { (s, dir) =>
       val daily = table(s, dir, "events")
         .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
         .agg(count(lit(1)).as("cnt"))
@@ -944,13 +1750,39 @@ object RelationalQueries {
         .filter(col("rank") <= 3)
         .select(col("day"), col("rank"), col("event_type"), col("cnt7"))
         .orderBy(col("day"), col("rank"))
-    }),
+    },
 
     // Per-group mean imputation over a deterministically sparsified
     // value channel: NULLs fill from their own event type's exact-
     // decimal mean; was_imputed records provenance; rows never
     // shuffle (stats broadcast back).
-    "q_feat_impute" -> ((s, dir) => {
+    QuerySpec("q_feat_impute",
+      s"""WITH s AS (
+        |  SELECT event_id, event_type,
+        |    CASE WHEN event_id % 13 = 0 THEN NULL ELSE value END AS value
+        |  FROM events
+        |), m0 AS (
+        |  -- NaN is MISSING like NULL (the engine's contract): excluded
+        |  -- from the mean, imputed in the output. Input quantization is
+        |  -- the portable floor-chain (lockstep with Num.portableRound6:
+        |  -- a 6dp-quantized sum over a small count is the ROUND-tie hot
+        |  -- shape, so the built-in ROUNDs may disagree on .5e-6 ties)
+        |  SELECT event_type AS g,
+        |    CAST(SUM(CAST(${graft.functions.Num.portableRound6Sql(
+             "CAST(value AS DOUBLE)")}
+        |      AS DECIMAL(38,12))) AS DOUBLE) / COUNT(*) AS raw
+        |  FROM s WHERE value IS NOT NULL AND NOT isnan(value) GROUP BY 1
+        |), m AS (
+        |  SELECT g, ${graft.functions.Num.portableRound6Sql("raw")} AS gmean
+        |  FROM m0
+        |)
+        |SELECT s.event_id, s.event_type, s.value,
+        |  CASE WHEN s.value IS NULL OR isnan(s.value) THEN m.gmean
+        |    ELSE s.value END AS value_filled,
+        |  ((s.value IS NULL OR isnan(s.value)) AND m.gmean IS NOT NULL)
+        |    AS was_imputed
+        |FROM s LEFT JOIN m ON s.event_type IS NOT DISTINCT FROM m.g
+        |ORDER BY s.event_id""".stripMargin) { (s, dir) =>
       val sparse = table(s, dir, "events").select(
         col("event_id"), col("event_type"),
         when(col("event_id") % 13 === 0, lit(null).cast("double"))
@@ -958,14 +1790,39 @@ object RelationalQueries {
       graft.operators.Features.imputeWithGroupMean(sparse,
           "event_type", "value")
         .orderBy(col("event_id"))
-    }),
+    },
 
     // CUSUM change-point localization on daily purchase volumes — the
     // level-shift detector beside the z-score spike screen. Division-
     // free centered cumulative sum (exact integers end to end); the
     // |cusum| peak marks the most likely regime change, earliest
     // bucket on ties.
-    "q_ts_cusum" -> ((s, dir) => {
+    QuerySpec("q_ts_cusum",
+      """WITH d AS (
+        |  SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
+        |    COUNT(*) AS cnt
+        |  FROM events WHERE event_type = 'purchase' GROUP BY 1
+        |), s AS (
+        |  SELECT day, cnt,
+        |    CAST(ROW_NUMBER() OVER (ORDER BY day) AS INT) AS t,
+        |    SUM(CAST(cnt AS HUGEINT)) OVER (ORDER BY day
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
+        |    CAST(COUNT(cnt) OVER () AS HUGEINT) AS n,
+        |    SUM(CAST(cnt AS HUGEINT)) OVER () AS sx
+        |  FROM d
+        |), c AS (
+        |  SELECT day, cnt, t,
+        |    CAST(n * cum - CAST(t AS HUGEINT) * sx AS BIGINT) AS cusum
+        |  FROM s
+        |), b AS (
+        |  SELECT *, MAX(abs(cusum)) OVER () AS ma FROM c
+        |), b2 AS (
+        |  SELECT *, MIN(CASE WHEN abs(cusum) = ma THEN t END) OVER () AS mt
+        |  FROM b
+        |)
+        |SELECT day, CAST(cnt AS BIGINT) AS cnt, t, cusum,
+        |  (abs(cusum) = ma AND t = mt) AS is_peak
+        |FROM b2 ORDER BY day""".stripMargin) { (s, dir) =>
       val daily = table(s, dir, "events")
         .filter(col("event_type") === "purchase")
         .groupBy(date_trunc("day", col("ts")).as("day"))
@@ -973,14 +1830,53 @@ object RelationalQueries {
       graft.operators.Anomaly.cusumChangePoints(daily, Seq.empty,
           "day", "cnt")
         .orderBy(col("day"))
-    }),
+    },
 
     // Trailing z-score anomaly screen on hourly event volumes: 24-h
     // retrospective frame (an anomalous hour cannot vote itself
     // normal), exact integer Σx/Σx² in the frame so z is a fixed IEEE
     // chain; <12 prior hours or flat history reads NULL and never
     // flags.
-    "q_ts_anomaly" -> ((s, dir) => {
+    QuerySpec("q_ts_anomaly",
+      """WITH h AS (
+        |  SELECT event_type, CAST(date_trunc('hour', ts) AS TIMESTAMP)
+        |    AS bucket, COUNT(*) AS cnt
+        |  FROM events GROUP BY 1, 2
+        |), s AS (
+        |  SELECT event_type, bucket, cnt,
+        |    COUNT(cnt) OVER w AS n,
+        |    SUM(CAST(cnt AS HUGEINT)) OVER w AS sx,
+        |    SUM(CAST(cnt AS HUGEINT) * CAST(cnt AS HUGEINT)) OVER w AS sxx
+        |  FROM h
+        |  WINDOW w AS (PARTITION BY event_type ORDER BY bucket
+        |    ROWS BETWEEN 24 PRECEDING AND 1 PRECEDING)
+        |), t AS (
+        |  SELECT event_type, bucket, cnt, n,
+        |    CAST(sx AS DOUBLE) / CAST(n AS DOUBLE) AS mu,
+        |    CAST(cnt AS DOUBLE)
+        |      - (CAST(sx AS DOUBLE) / CAST(n AS DOUBLE)) AS num,
+        |    sqrt(CAST(n * sxx - sx * sx AS DOUBLE)
+        |      / CAST(n * n AS DOUBLE)) AS sd
+        |  FROM s
+        |), z0 AS (
+        |  SELECT event_type, bucket, cnt, n, mu,
+        |    CASE WHEN sd <> 0 THEN num / sd END AS zraw
+        |  FROM t
+        |), z AS (
+        |  SELECT event_type, bucket, cnt,
+        |    CASE WHEN n >= 12 THEN
+        |      (CASE WHEN (mu) BETWEEN -9e9 AND 9e9
+        |        THEN FLOOR((mu) * 1e6 + 0.5) / 1e6 ELSE (mu) END)
+        |    END AS mean_prior,
+        |    CASE WHEN n >= 12 THEN
+        |      (CASE WHEN (zraw) BETWEEN -9e9 AND 9e9
+        |        THEN FLOOR((zraw) * 1e6 + 0.5) / 1e6 ELSE (zraw) END)
+        |    END AS zz
+        |  FROM z0
+        |)
+        |SELECT event_type, bucket, cnt, mean_prior, zz AS z,
+        |  COALESCE(abs(zz) > 3.0, FALSE) AS is_anomaly
+        |FROM z ORDER BY event_type, bucket""".stripMargin) { (s, dir) =>
       val hourly = table(s, dir, "events")
         .groupBy(col("event_type"),
           date_trunc("hour", col("ts")).as("bucket"))
@@ -988,32 +1884,100 @@ object RelationalQueries {
       graft.operators.Anomaly.trailingZscores(hourly, "event_type",
           "bucket", "cnt", window = 24, minPrior = 12, threshold = 3.0)
         .orderBy(col("event_type"), col("bucket"))
-    }),
+    },
 
     // Fixed-bound equi-width histogram: map-side bucket projection +
     // one bounded agg; the spark.range bucket spine emits empty buckets
     // too, so totals reconcile with the row count.
-    "q_profile_hist" -> ((s, dir) => {
+    QuerySpec("q_profile_hist",
+      """WITH b AS (
+        |  SELECT CAST(LEAST(GREATEST(FLOOR((l_extendedprice - 900.0)
+        |      / ((105000.0 - 900.0) / 20)), 0.0), 19.0) AS BIGINT) AS bucket
+        |  FROM lineitem WHERE l_extendedprice IS NOT NULL
+        |), c AS (
+        |  SELECT bucket, COUNT(*) AS cnt FROM b GROUP BY bucket
+        |)
+        |SELECT r.range AS bucket,
+        | ROUND(900.0 + r.range * ((105000.0 - 900.0) / 20), 6) AS bucket_lo,
+        | ROUND(900.0 + (r.range + 1) * ((105000.0 - 900.0) / 20), 6) AS bucket_hi,
+        | COALESCE(c.cnt, 0) AS cnt
+        |FROM range(20) r LEFT JOIN c ON r.range = c.bucket
+        |ORDER BY bucket""".stripMargin) { (s, dir) =>
       Profile.histogram(table(s, dir, "lineitem"),
         "l_extendedprice", lo = 900.0, hi = 105000.0, nBuckets = 20)
         .orderBy(col("bucket"))
-    }),
+    },
 
     // OLS trend line over daily volumes (y = slope·day + intercept,
     // R²) — "is volume actually growing, and how fast?". Exact
     // decimal moments (the pearsonExact contract), one scan, one
     // 1-row exchange; slope/intercept/R² are a fixed IEEE chain.
-    "q_profile_ols" -> ((s, dir) => {
+    QuerySpec("q_profile_ols",
+      """WITH d AS (
+        |  SELECT day(ts) AS x, COUNT(*) AS y FROM events GROUP BY 1
+        |), sc AS (
+        |  SELECT CAST(ROUND(CAST(x AS DOUBLE) * 100) AS HUGEINT) AS xs,
+        |    CAST(ROUND(CAST(y AS DOUBLE) * 100) AS HUGEINT) AS ys
+        |  FROM d WHERE x IS NOT NULL AND y IS NOT NULL
+        |), s AS (
+        |  SELECT CAST(COUNT(*) AS HUGEINT) AS n,
+        |    SUM(xs) AS sx, SUM(ys) AS sy,
+        |    SUM(xs * xs) AS sxx, SUM(xs * ys) AS sxy, SUM(ys * ys) AS syy
+        |  FROM sc
+        |), f AS (
+        |  SELECT n,
+        |    CAST(n * sxy - sx * sy AS DOUBLE) AS num,
+        |    CAST(n * sxx - sx * sx AS DOUBLE) AS vx,
+        |    CAST(n * syy - sy * sy AS DOUBLE) AS vy,
+        |    CAST(sx AS DOUBLE) AS sxd, CAST(sy AS DOUBLE) AS syd
+        |  FROM s
+        |)
+        |SELECT CAST(n AS BIGINT) AS n,
+        |  ROUND(num / vx, 6) AS slope,
+        |  ROUND((syd - (num / vx) * sxd) / CAST(n AS DOUBLE) / 100.0, 6)
+        |    AS intercept,
+        |  ROUND((num / (sqrt(vx) * sqrt(vy)))
+        |    * (num / (sqrt(vx) * sqrt(vy))), 6) AS r2
+        |FROM f""".stripMargin) { (s, dir) =>
       val daily = table(s, dir, "events")
         .groupBy(dayofmonth(col("ts")).as("x"))
         .agg(count(lit(1)).as("y"))
       Profile.linearFit(daily, "x", "y")
-    }),
+    },
 
     // Funnel latency: p50/p90 time-to-advance over the q_funnel
     // steps (exact percentile over epoch-microsecond gaps; dropouts'
     // NULL gaps are skipped by both engines' aggregates).
-    "q_funnel_latency" -> ((s, dir) => {
+    QuerySpec("q_funnel_latency",
+      """WITH s1 AS (
+        |  SELECT user_id, MIN(ts) AS t_1 FROM events
+        |  WHERE event_type = 'signup' GROUP BY user_id
+        |), s2 AS (
+        |  SELECT s1.user_id, s1.t_1, MIN(e.ts) AS t_2
+        |  FROM s1 LEFT JOIN events e
+        |    ON e.user_id = s1.user_id AND e.event_type = 'view' AND e.ts > s1.t_1
+        |  GROUP BY s1.user_id, s1.t_1
+        |), s3 AS (
+        |  SELECT s2.user_id, s2.t_1, s2.t_2, MIN(e.ts) AS t_3
+        |  FROM s2 LEFT JOIN events e
+        |    ON e.user_id = s2.user_id AND e.event_type = 'click' AND e.ts > s2.t_2
+        |  GROUP BY s2.user_id, s2.t_1, s2.t_2
+        |), s4 AS (
+        |  SELECT s3.user_id, s3.t_1, s3.t_2, s3.t_3, MIN(e.ts) AS t_4
+        |  FROM s3 LEFT JOIN events e
+        |    ON e.user_id = s3.user_id AND e.event_type = 'purchase' AND e.ts > s3.t_3
+        |  GROUP BY s3.user_id, s3.t_1, s3.t_2, s3.t_3
+        |)
+        |SELECT CAST(COUNT(*) AS BIGINT) AS n_entered,
+        |  CAST(COUNT(t_2) AS BIGINT) AS n_step2,
+        |  CAST(COUNT(t_4) AS BIGINT) AS n_converted,
+        |  ROUND(quantile_cont(CAST(epoch_us(t_2) - epoch_us(t_1) AS DOUBLE),
+        |    0.5), 4) AS p50_step2_us,
+        |  ROUND(quantile_cont(CAST(epoch_us(t_4) - epoch_us(t_1) AS DOUBLE),
+        |    0.5), 4) AS p50_convert_us,
+        |  ROUND(quantile_cont(CAST(epoch_us(t_4) - epoch_us(t_1) AS DOUBLE),
+        |    0.9), 4) AS p90_convert_us
+        |FROM s4""".stripMargin) { (s, dir) =>
       val f = Analytics.funnelTimes(table(s, dir, "events"), "user_id",
         "ts", "event_type", Seq("signup", "view", "click", "purchase"))
       val l2 = (unix_micros(col("t_2")) - unix_micros(col("t_1")))
@@ -1027,22 +1991,60 @@ object RelationalQueries {
         round(graft.functions.FastPercentile.pctl(l2, lit(0.5)), 4).as("p50_step2_us"),
         round(graft.functions.FastPercentile.pctl(l4, lit(0.5)), 4).as("p50_convert_us"),
         round(graft.functions.FastPercentile.pctl(l4, lit(0.9)), 4).as("p90_convert_us"))
-    }),
+    },
 
     // 2D heatmap bins: the joint quantity × discount distribution in
     // one map-side double-bucket pass; the full spine emits empty
     // cells so totals reconcile.
-    "q_profile_hist2d" -> ((s, dir) => {
+    QuerySpec("q_profile_hist2d",
+      """WITH w AS (
+        |  SELECT (CAST(51.0 AS DOUBLE) - 1.0) / 10 AS wx,
+        |    (CAST(0.11 AS DOUBLE) - 0.0) / 11 AS wy
+        |), c AS (
+        |  SELECT
+        |    CAST(least(greatest(floor((CAST(l_quantity AS DOUBLE) - 1.0)
+        |      / w.wx), 0), 9) AS BIGINT) AS bucket_x,
+        |    CAST(least(greatest(floor((CAST(l_discount AS DOUBLE) - 0.0)
+        |      / w.wy), 0), 10) AS BIGINT) AS bucket_y
+        |  FROM lineitem CROSS JOIN w
+        |  WHERE l_quantity IS NOT NULL AND l_discount IS NOT NULL
+        |), g AS (
+        |  SELECT bucket_x, bucket_y, COUNT(*) AS cnt
+        |  FROM c GROUP BY 1, 2
+        |), spine AS (
+        |  SELECT CAST(x.i AS BIGINT) AS bucket_x, CAST(y.i AS BIGINT)
+        |    AS bucket_y
+        |  FROM (SELECT unnest(range(10)) AS i) x
+        |  CROSS JOIN (SELECT unnest(range(11)) AS i) y
+        |)
+        |SELECT s.bucket_x, s.bucket_y,
+        |  ROUND(1.0 + s.bucket_x * w.wx, 6) AS x_lo,
+        |  ROUND(0.0 + s.bucket_y * w.wy, 6) AS y_lo,
+        |  COALESCE(g.cnt, 0) AS cnt
+        |FROM spine s CROSS JOIN w
+        |LEFT JOIN g USING (bucket_x, bucket_y)
+        |ORDER BY bucket_x, bucket_y""".stripMargin) { (s, dir) =>
       Profile.histogram2d(table(s, dir, "lineitem"),
           "l_quantity", 1.0, 51.0, 10, "l_discount", 0.0, 0.11, 11)
         .orderBy(col("bucket_x"), col("bucket_y"))
-    }),
+    },
 
     // W3 (RANGE frame): 7-day trailing average spend per customer —
     // an event-TIME range frame, not a row-count frame (the two differ
     // whenever events cluster). The frame sum goes through an exact
     // decimal so the trailing average is order-independent.
-    "q_window_movavg" -> ((s, dir) => {
+    QuerySpec("q_window_movavg",
+      s"""SELECT o_custkey, o_orderdate,
+        | ${graft.functions.Num.portableRoundSql("raw", 4)} AS avg_7d
+        |FROM (
+        |  SELECT o_custkey, o_orderdate,
+        |    CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) OVER w AS DOUBLE)
+        |      / COUNT(*) OVER w AS raw
+        |  FROM orders
+        |  WINDOW w AS (PARTITION BY o_custkey ORDER BY epoch(o_orderdate)
+        |    RANGE BETWEEN 604800 PRECEDING AND CURRENT ROW)
+        |)
+        |ORDER BY o_custkey, o_orderdate, avg_7d""".stripMargin) { (s, dir) =>
       val w = Window.partitionBy(col("o_custkey"))
         .orderBy(unix_timestamp(col("o_orderdate")))
         .rangeBetween(-604800L, 0L)
@@ -1056,7 +2058,7 @@ object RelationalQueries {
           sum(col("o_totalprice").cast(DecimalType(18, 2))).over(w)
             .cast("double") / count(lit(1)).over(w), 4).as("avg_7d"))
         .orderBy(col("o_custkey"), col("o_orderdate"), col("avg_7d"))
-    }),
+    },
 
     // W3 (rolling MEDIAN): Spark's window engine has no median — the
     // robust smoother a spiky metric needs (one outlier saturates a
@@ -1067,7 +2069,13 @@ object RelationalQueries {
     // values. Both engines' interpolation lands within 1 ulp; the
     // 6-place round absorbs it (2-decimal inputs put true midpoints
     // >= 5e-7 from every rounding boundary, 1e7x the ulp noise).
-    "q_window_median" -> ((s, dir) => {
+    QuerySpec("q_window_median",
+      """SELECT user_id, ts, value,
+        |  ROUND(median(value::DOUBLE) OVER (PARTITION BY user_id
+        |    ORDER BY ts, value ROWS BETWEEN 3 PRECEDING AND CURRENT ROW), 6)
+        |    AS med_4
+        |FROM events WHERE event_type = 'purchase'
+        |ORDER BY user_id, ts, value""".stripMargin) { (s, dir) =>
       val w = Window.partitionBy(col("user_id"))
         .orderBy(col("ts"), col("value")).rowsBetween(-3, 0)
       table(s, dir, "events").filter(col("event_type") === "purchase")
@@ -1084,11 +2092,18 @@ object RelationalQueries {
                 (size(col("__arr")) / 2).cast("int") + 1))
               / lit(2.0)), 6).as("med_4"))
         .orderBy(col("user_id"), col("ts"), col("value"))
-    }),
+    },
 
     // F-family: bitwise ops (and/or/xor/shifts) — the key-manipulation
     // primitives partitioners and bucketing schemes lean on.
-    "q_fn_bitwise" -> ((s, dir) => {
+    QuerySpec("q_fn_bitwise",
+      """SELECT l_orderkey, l_linenumber,
+        | l_orderkey & 255 AS k_and,
+        | l_orderkey | CAST(l_linenumber AS BIGINT) AS k_or,
+        | xor(l_orderkey, CAST(l_linenumber AS BIGINT)) AS k_xor,
+        | l_linenumber << 3 AS k_shl,
+        | l_orderkey >> 2 AS k_shr
+        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin) { (s, dir) =>
       table(s, dir, "lineitem").select(
         col("l_orderkey"), col("l_linenumber"),
         col("l_orderkey").bitwiseAND(lit(255L)).as("k_and"),
@@ -1097,46 +2112,88 @@ object RelationalQueries {
         shiftleft(col("l_linenumber"), 3).as("k_shl"),
         shiftright(col("l_orderkey"), 2).as("k_shr"))
         .orderBy(col("l_orderkey"), col("l_linenumber"))
-    }),
+    },
 
     // Categorical profile: top-k values, shares, null and distinct
     // counts for several string columns in ONE corpus scan (map-side
     // melt, one count aggregate, windows over the tiny histogram).
-    "q_profile_cat" -> ((s, dir) => {
+    QuerySpec("q_profile_cat",
+      s"""WITH pairs AS (
+        |  SELECT 'o_orderstatus' AS col_name,
+        |    CAST(o_orderstatus AS VARCHAR) AS val FROM orders
+        |  UNION ALL
+        |  SELECT 'o_orderpriority', CAST(o_orderpriority AS VARCHAR) FROM orders
+        |), counts AS (
+        |  SELECT col_name, val, COUNT(*) AS cnt FROM pairs
+        |  GROUP BY col_name, val
+        |), agg AS (
+        |  SELECT *,
+        |    CAST(SUM(CASE WHEN val IS NULL THEN cnt ELSE 0 END)
+        |      OVER (PARTITION BY col_name) AS BIGINT) AS n_null,
+        |    CAST(SUM(CASE WHEN val IS NULL THEN 0 ELSE cnt END)
+        |      OVER (PARTITION BY col_name) AS BIGINT) AS n_nonnull,
+        |    CAST(SUM(CASE WHEN val IS NULL THEN 0 ELSE 1 END)
+        |      OVER (PARTITION BY col_name) AS BIGINT) AS n_distinct
+        |  FROM counts
+        |), ranked AS (
+        |  SELECT *, CAST(row_number() OVER (PARTITION BY col_name
+        |    ORDER BY cnt DESC, val ASC) AS INT) AS val_rank
+        |  FROM agg WHERE val IS NOT NULL
+        |)
+        |SELECT col_name, val, cnt,
+        |  ${graft.functions.Num.portableRound6Sql("cnt / n_nonnull")} AS share,
+        |  val_rank, n_null, n_distinct
+        |FROM ranked WHERE val_rank <= 3
+        |ORDER BY col_name, val_rank""".stripMargin) { (s, dir) =>
       Profile.categoricalProfile(table(s, dir, "orders"),
         Seq("o_orderstatus", "o_orderpriority"), k = 3)
         .orderBy(col("col_name"), col("val_rank"))
-    }),
+    },
 
     // Winsorization: clip prices to [p05, p95] — one exact-percentile
     // aggregate broadcast back, map-side clip, no row shuffle. Ordered
     // by enough columns that ties are fully identical rows (the
     // lineitem key is not unique in the harness data).
-    "q_profile_clip" -> ((s, dir) => {
+    QuerySpec("q_profile_clip",
+      """WITH q AS (
+        |  SELECT quantile_cont(l_extendedprice, 0.05) AS lo,
+        |    quantile_cont(l_extendedprice, 0.95) AS hi
+        |  FROM lineitem
+        |)
+        |SELECT l_orderkey, l_linenumber,
+        | ROUND(LEAST(GREATEST(l_extendedprice, q.lo), q.hi), 2) AS clipped_price
+        |FROM lineitem CROSS JOIN q
+        |ORDER BY l_orderkey, l_linenumber, clipped_price""".stripMargin) { (s, dir) =>
       Profile.winsorize(table(s, dir, "lineitem"), "l_extendedprice", 0.05, 0.95)
         .select(col("l_orderkey"), col("l_linenumber"),
           round(col("l_extendedprice_clipped"), 2).as("clipped_price"))
         .orderBy(col("l_orderkey"), col("l_linenumber"), col("clipped_price"))
-    }),
+    },
 
     // J3 semi: EXISTS — no duplication of the left side, right side only
     // ships its join key.
-    "q_join_semi" -> ((s, dir) => {
+    QuerySpec("q_join_semi",
+      """SELECT c_custkey, c_name FROM customer
+        |WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
+        |ORDER BY c_custkey""".stripMargin) { (s, dir) =>
       table(s, dir, "customer")
         .join(table(s, dir, "orders"), col("c_custkey") === col("o_custkey"), "left_semi")
         .select(col("c_custkey"), col("c_name"))
         .orderBy(col("c_custkey"))
-    }),
+    },
 
     // J3 anti: customers with no order above 400 — NOT EXISTS against a
     // pre-filtered (pushed-down) right side.
-    "q_join_anti" -> ((s, dir) => {
+    QuerySpec("q_join_anti",
+      """SELECT c_custkey, c_name FROM customer
+        |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey AND o_totalprice > 400.0)
+        |ORDER BY c_custkey""".stripMargin) { (s, dir) =>
       val bigOrders = table(s, dir, "orders").filter(col("o_totalprice") > 400.0)
       table(s, dir, "customer")
         .join(bigOrders, col("c_custkey") === col("o_custkey"), "left_anti")
         .select(col("c_custkey"), col("c_name"))
         .orderBy(col("c_custkey"))
-    }),
+    },
 
     // J3b NOT IN — null-aware anti join, a DIFFERENT operator from
     // NOT EXISTS: a NULL probe key is unknown-membership (filtered,
@@ -1144,7 +2201,15 @@ object RelationalQueries {
     // result. Every 13th probe key is nulled so the null channel is
     // exercised datawise; Spark plans the single-column NOT IN as a
     // broadcast null-aware anti join (no per-row subquery).
-    "q_join_notin" -> ((s, dir) => {
+    QuerySpec("q_join_notin",
+      """SELECT o_orderkey, ck
+        |FROM (SELECT o_orderkey,
+        |        CASE WHEN o_orderkey % 13 = 0 THEN CAST(NULL AS BIGINT)
+        |             ELSE o_custkey END AS ck
+        |      FROM orders)
+        |WHERE ck NOT IN (SELECT c_custkey FROM customer
+        |                 WHERE c_mktsegment = 'BUILDING')
+        |ORDER BY o_orderkey""".stripMargin) { (s, dir) =>
       table(s, dir, "orders").createOrReplaceTempView("__notin_orders")
       table(s, dir, "customer").createOrReplaceTempView("__notin_customer")
       s.sql(
@@ -1156,7 +2221,7 @@ object RelationalQueries {
           |WHERE ck NOT IN (SELECT c_custkey FROM __notin_customer
           |                 WHERE c_mktsegment = 'BUILDING')
           |ORDER BY o_orderkey""".stripMargin)
-    }),
+    },
 
     // J4 theta (suppliers richer than same-nation customers). A direct
     // equi+inequality join materializes |suppliers/nation| x
@@ -1166,7 +2231,11 @@ object RelationalQueries {
     // one sorted-balances array per nation (25 tiny rows), broadcast it,
     // and count per supplier with a HOF — linear per supplier, zero
     // join fan-out, no shuffle of either fact side.
-    "q_join_theta" -> ((s, dir) => {
+    QuerySpec("q_join_theta",
+      """SELECT s_suppkey, s_name, COUNT(*) AS n_poorer
+        |FROM supplier JOIN customer
+        | ON s_nationkey = c_nationkey AND s_acctbal > c_acctbal
+        |GROUP BY s_suppkey, s_name ORDER BY s_suppkey""".stripMargin) { (s, dir) =>
       val balances = table(s, dir, "customer")
         .groupBy(col("c_nationkey"))
         .agg(sort_array(collect_list(col("c_acctbal"))).as("bals"))
@@ -1177,11 +2246,18 @@ object RelationalQueries {
             .cast("long").as("n_poorer"))
         .filter(col("n_poorer") > 0) // inner-join semantics of the oracle
         .orderBy(col("s_suppkey"))
-    }),
+    },
 
     // J5 range: equi key + time interval band — sort-merge on the equi
     // key with a range residual; never quadratic.
-    "q_join_range" -> ((s, dir) => {
+    QuerySpec("q_join_range",
+      """SELECT o_orderstatus, COUNT(*) AS n,
+        | CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
+        |FROM lineitem JOIN orders
+        | ON l_orderkey = o_orderkey
+        | AND l_shipdate >= o_orderdate
+        | AND l_shipdate < o_orderdate + INTERVAL 90 DAY
+        |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin) { (s, dir) =>
       table(s, dir, "lineitem")
         .join(table(s, dir, "orders"),
           col("l_orderkey") === col("o_orderkey") &&
@@ -1190,7 +2266,7 @@ object RelationalQueries {
         .groupBy(col("o_orderstatus"))
         .agg(count(lit(1)).as("n"), dsum(col("l_quantity")).as("sum_qty"))
         .orderBy(col("o_orderstatus"))
-    }),
+    },
 
     // J5b band-only interval join (NO equi key): shipments inside the
     // 14-day window after each big order's date. The naive predicate
@@ -1199,7 +2275,14 @@ object RelationalQueries {
     // as a plain equi-join on the bin key — here Catalyst broadcasts
     // the ~2-bins-per-interval exploded side and the 60k-point fact
     // side is never shuffled. Plan-asserted: no BNLJ, no cartesian.
-    "q_join_range_binned" -> ((s, dir) => {
+    QuerySpec("q_join_range_binned",
+      """SELECT o_orderkey, COUNT(*) AS n_ship,
+        | CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
+        |FROM orders o JOIN lineitem l
+        |  ON l.l_shipdate >= o.o_orderdate
+        | AND l.l_shipdate < o.o_orderdate + INTERVAL 14 DAY
+        |WHERE o.o_totalprice > 495000.0
+        |GROUP BY o_orderkey ORDER BY o_orderkey""".stripMargin) { (s, dir) =>
       val epoch = lit("1970-01-01").cast("date")
       val shipments = table(s, dir, "lineitem").select(
         col("l_quantity"),
@@ -1214,13 +2297,23 @@ object RelationalQueries {
         .groupBy(col("o_orderkey"))
         .agg(count(lit(1)).as("n_ship"), dsum(col("l_quantity")).as("sum_qty"))
         .orderBy(col("o_orderkey"))
-    }),
+    },
 
     // J5c interval-overlap self-join: which big orders' 14-day windows
     // overlap each other. Interval x interval, no equi key — the
     // canonical-bin trick emits each overlapping pair exactly once
     // with zero dedup shuffles.
-    "q_join_overlap" -> ((s, dir) => {
+    QuerySpec("q_join_overlap",
+      """WITH w AS (
+        |  SELECT o_orderkey AS k,
+        |    datediff('day', DATE '1970-01-01', o_orderdate) AS sd
+        |  FROM orders WHERE o_totalprice > 495000.0
+        |)
+        |SELECT a.k AS key_a, b.k AS key_b,
+        |  least(a.sd + 13, b.sd + 13) - greatest(a.sd, b.sd) + 1 AS overlap_days
+        |FROM w a JOIN w b
+        |  ON a.k < b.k AND a.sd <= b.sd + 13 AND b.sd <= a.sd + 13
+        |ORDER BY key_a, key_b""".stripMargin) { (s, dir) =>
       val epoch = lit("1970-01-01").cast("date")
       def windows(keyAs: String, startAs: String, endAs: String) =
         table(s, dir, "orders")
@@ -1237,12 +2330,25 @@ object RelationalQueries {
           (least(col("end_a"), col("end_b")) -
             greatest(col("start_a"), col("start_b")) + 1).as("overlap_days"))
         .orderBy(col("key_a"), col("key_b"))
-    }),
+    },
 
     // J6 as-of: most recent 'click' at or before each 'purchase', per
     // user. Composed union+window implementation — exactly one shuffle
     // on user_id (see graft.operators.AsOfJoin).
-    "q_join_asof" -> ((s, dir) => {
+    // The click side is pre-collapsed per (user_id, ts) to max(value)
+    // in all three as-of oracles: DuckDB's native ASOF JOIN picks an
+    // UNSPECIFIED row among right rows tied on (key, ts) (and the
+    // tolerance oracle's equality re-join would fan out to ALL of
+    // them), while AsOfJoin deterministically carries the greatest
+    // (click_ts, click_value) tuple — equal ts, so max(value).
+    QuerySpec("q_join_asof",
+      """SELECT p.event_id, p.user_id, p.ts, p.value,
+        | c.ts AS click_ts, c.value AS click_value
+        |FROM (SELECT * FROM events WHERE event_type = 'purchase') p
+        |ASOF JOIN (SELECT user_id, ts, max(value) AS value FROM events
+        |  WHERE event_type = 'click' GROUP BY user_id, ts) c
+        | ON p.user_id = c.user_id AND p.ts >= c.ts
+        |ORDER BY p.event_id""".stripMargin) { (s, dir) =>
       val ev = table(s, dir, "events")
       val purchases = ev.filter(col("event_type") === "purchase")
         .select(col("user_id"), col("ts"), col("event_id"), col("value"))
@@ -1253,14 +2359,21 @@ object RelationalQueries {
         .select(col("event_id"), col("user_id"), col("ts"), col("value"),
           col("click_ts"), col("click_value"))
         .orderBy(col("event_id"))
-    }),
+    },
 
     // J6 FORWARD direction: each purchase attaches the NEXT click
     // at-or-after it — the next-event lookup (post-purchase behavior,
     // next snapshot after a query point). Same single-shuffle
     // union+window plan, scanned in descending time; DuckDB's native
     // ASOF JOIN with the <= comparator is the oracle.
-    "q_join_asof_fwd" -> ((s, dir) => {
+    QuerySpec("q_join_asof_fwd",
+      """SELECT p.event_id, p.user_id, p.ts, p.value,
+        | c.ts AS click_ts, c.value AS click_value
+        |FROM (SELECT * FROM events WHERE event_type = 'purchase') p
+        |ASOF JOIN (SELECT user_id, ts, max(value) AS value FROM events
+        |  WHERE event_type = 'click' GROUP BY user_id, ts) c
+        | ON p.user_id = c.user_id AND p.ts <= c.ts
+        |ORDER BY p.event_id""".stripMargin) { (s, dir) =>
       val ev = table(s, dir, "events")
       val purchases = ev.filter(col("event_type") === "purchase")
         .select(col("user_id"), col("ts"), col("event_id"), col("value"))
@@ -1271,13 +2384,26 @@ object RelationalQueries {
         .select(col("event_id"), col("user_id"), col("ts"), col("value"),
           col("click_ts"), col("click_value"))
         .orderBy(col("event_id"))
-    }),
+    },
 
     // J6 with a staleness bound (the pandas merge_asof tolerance
     // contract): a prior click older than 2 hours is NO match — the
     // guard against correlating against arbitrarily old reference
     // data. Same single-shuffle plan; the bound is a post-fill filter.
-    "q_join_asof_tol" -> ((s, dir) => {
+    QuerySpec("q_join_asof_tol",
+      """WITH p AS (SELECT * FROM events WHERE event_type = 'purchase'),
+        |c AS (SELECT user_id, ts, max(value) AS value FROM events
+        |  WHERE event_type = 'click' GROUP BY user_id, ts),
+        |m AS (
+        |  SELECT p.event_id, p.user_id, p.ts, p.value,
+        |    (SELECT max(c.ts) FROM c WHERE c.user_id = p.user_id
+        |      AND c.ts <= p.ts AND p.ts - c.ts <= INTERVAL 2 HOUR) AS click_ts
+        |  FROM p
+        |)
+        |SELECT m.event_id, m.user_id, m.ts, m.value, m.click_ts,
+        | c.value AS click_value
+        |FROM m JOIN c ON c.user_id = m.user_id AND c.ts = m.click_ts
+        |ORDER BY m.event_id""".stripMargin) { (s, dir) =>
       val ev = table(s, dir, "events")
       val purchases = ev.filter(col("event_type") === "purchase")
         .select(col("user_id"), col("ts"), col("event_id"), col("value"))
@@ -1289,11 +2415,15 @@ object RelationalQueries {
         .select(col("event_id"), col("user_id"), col("ts"), col("value"),
           col("click_ts"), col("click_value"))
         .orderBy(col("event_id"))
-    }),
+    },
 
     // W1: dedup-latest via row_number — the pattern that replaces the
     // reference's duplicate-appending loads (SURVEY.md §2.8).
-    "q_window_latest" -> ((s, dir) => {
+    QuerySpec("q_window_latest",
+      """SELECT user_id, event_id, event_type, value, ts FROM (
+        | SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
+        | FROM events) t
+        |WHERE rn = 1 ORDER BY user_id""".stripMargin) { (s, dir) =>
       val w = Window.partitionBy(col("user_id"))
         .orderBy(col("ts").desc, col("event_id").desc)
       table(s, dir, "events")
@@ -1302,31 +2432,46 @@ object RelationalQueries {
         .select(col("user_id"), col("event_id"), col("event_type"),
           col("value"), col("ts"))
         .orderBy(col("user_id"))
-    }),
+    },
 
     // W2: lag delta — the bikes-delta analytic shape from SURVEY §2.6.
-    "q_window_lag" -> ((s, dir) => {
+    QuerySpec("q_window_lag",
+      """SELECT event_id, user_id, value,
+        | value - LAG(value, 1) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS delta
+        |FROM events ORDER BY event_id""".stripMargin) { (s, dir) =>
       val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
       table(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("value"),
           (col("value") - lag(col("value"), 1).over(w)).as("delta"))
         .orderBy(col("event_id"))
-    }),
+    },
 
     // W3: running sum over an explicit ROWS frame (decimal-exact).
-    "q_window_runsum" -> ((s, dir) => {
+    QuerySpec("q_window_runsum",
+      """SELECT event_id, user_id,
+        | CAST(SUM(CAST(value AS DECIMAL(18,2))) OVER (
+        |   PARTITION BY user_id ORDER BY ts, event_id
+        |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS run_sum
+        |FROM events ORDER BY event_id""".stripMargin) { (s, dir) =>
       val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       table(s, dir, "events")
         .select(col("event_id"), col("user_id"),
           sum(col("value").cast("decimal(18,2)")).over(w).cast("double").as("run_sum"))
         .orderBy(col("event_id"))
-    }),
+    },
 
     // W1 distribution ranks: ntile / percent_rank / cume_dist — exact
     // integer-ratio doubles, deterministic cross-engine given the
     // total-order ORDER BY (ties broken by custkey).
-    "q_window_dist" -> ((s, dir) => {
+    QuerySpec("q_window_dist",
+      """SELECT c_custkey, c_mktsegment,
+        | CAST(NTILE(4) OVER w AS INT) AS bal_quartile,
+        | PERCENT_RANK() OVER w AS bal_prank,
+        | CUME_DIST() OVER w AS bal_cume
+        |FROM customer
+        |WINDOW w AS (PARTITION BY c_mktsegment ORDER BY c_acctbal, c_custkey)
+        |ORDER BY c_custkey""".stripMargin) { (s, dir) =>
       val w = Window.partitionBy(col("c_mktsegment"))
         .orderBy(col("c_acctbal"), col("c_custkey"))
       table(s, dir, "customer")
@@ -1335,20 +2480,50 @@ object RelationalQueries {
           percent_rank().over(w).as("bal_prank"),
           cume_dist().over(w).as("bal_cume"))
         .orderBy(col("c_custkey"))
-    }),
+    },
 
     // Time-series gap fill: sparse purchase events regularized onto a
     // 6-hour per-user spine with last-observation-carried-forward —
     // per-key extents (no global calendar cross join), bucket dedup,
     // ignore-nulls running window. The `observed` flag separates real
     // ticks from carried ones.
-    "q_ts_gapfill" -> ((s, dir) => {
+    QuerySpec("q_ts_gapfill",
+      """WITH src AS (
+        |  SELECT user_id, ts, value FROM events
+        |  WHERE event_type = 'purchase' AND user_id IS NOT NULL
+        |), obs AS (
+        |  SELECT user_id,
+        |    -- make_timestamp(micros) builds a NAIVE timestamp: the old
+        |    -- to_timestamp + CAST went through TIMESTAMPTZ and shifted
+        |    -- by the DuckDB connection's TimeZone on any non-UTC host
+        |    make_timestamp(CAST(floor(epoch(ts) / 21600) AS BIGINT)
+        |      * 21600 * 1000000) AS bucket,
+        |    value,
+        |    row_number() OVER (PARTITION BY user_id, floor(epoch(ts) / 21600)
+        |      ORDER BY ts DESC, value DESC) AS rn
+        |  FROM src
+        |), o AS (
+        |  SELECT user_id, bucket, value FROM obs WHERE rn = 1
+        |), span AS (
+        |  SELECT user_id, min(bucket) AS lo, max(bucket) AS hi FROM o GROUP BY user_id
+        |), spine AS (
+        |  SELECT user_id,
+        |    CAST(unnest(generate_series(lo, hi, INTERVAL 21600 SECONDS)) AS TIMESTAMP) AS bucket
+        |  FROM span
+        |)
+        |SELECT s.user_id, s.bucket,
+        |  last_value(o.value IGNORE NULLS) OVER (PARTITION BY s.user_id
+        |    ORDER BY s.bucket
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS value_filled,
+        |  o.value IS NOT NULL AS observed
+        |FROM spine s LEFT JOIN o ON s.user_id = o.user_id AND s.bucket = o.bucket
+        |ORDER BY s.user_id, s.bucket""".stripMargin) { (s, dir) =>
       GapFill.fillGaps(
         table(s, dir, "events").filter(col("event_type") === "purchase")
           .select(col("user_id"), col("ts"), col("value")),
         "user_id", "ts", "value", stepSeconds = 21600L)
         .orderBy(col("user_id"), col("bucket"))
-    }),
+    },
 
     // Bounded-depth reachability (min-hop transitive-closure slice)
     // via level-synchronous BFS: frontier joins edges once per hop, an
@@ -1358,7 +2533,20 @@ object RelationalQueries {
     // graph is a derived functional graph over suppliers (out-degree 2
     // modular edges: cycles and diamonds genuinely occur; TPC-H has no
     // native edge list).
-    "q_graph_reach" -> ((s, dir) => {
+    QuerySpec("q_graph_reach",
+      """WITH RECURSIVE e AS (
+        |  SELECT s_suppkey AS src, (s_suppkey * 7) % 100 AS dst FROM supplier
+        |  UNION
+        |  SELECT s_suppkey, (s_suppkey * 13 + 1) % 100 FROM supplier
+        |), r AS (
+        |  SELECT src, dst, 1 AS hops FROM e
+        |  UNION ALL
+        |  SELECT r.src, e.dst, r.hops + 1
+        |  FROM r JOIN e ON r.dst = e.src WHERE r.hops < 3
+        |)
+        |SELECT src, dst, CAST(MIN(hops) AS BIGINT) AS hops
+        |FROM r GROUP BY src, dst
+        |ORDER BY src, dst""".stripMargin) { (s, dir) =>
       val sup = table(s, dir, "supplier")
       val edges = sup.select(col("s_suppkey").as("src"),
           ((col("s_suppkey") * 7) % 100).as("dst"))
@@ -1366,7 +2554,7 @@ object RelationalQueries {
           ((col("s_suppkey") * 13 + 1) % 100).as("dst")))
       Reachability.kHop(edges, maxHops = 3)
         .orderBy(col("src"), col("dst"))
-    }),
+    },
 
 
     // OHLC resampling: open/high/low/close bars per (event_type, day)
@@ -1378,7 +2566,19 @@ object RelationalQueries {
     // arg_min rejects struct keys). ONE aggregation, map-side
     // partials, no window; raw stored doubles pass through selection
     // untouched — bit-identical cross-engine.
-    "q_ts_ohlc" -> ((s, dir) => {
+    QuerySpec("q_ts_ohlc",
+      """SELECT event_type,
+        | CAST(date_trunc('day', ts) AS TIMESTAMP) AS bar_start,
+        | arg_min(value, lpad(CAST(epoch_us(ts) AS VARCHAR), 20, '0')
+        |   || lpad(CAST(event_id AS VARCHAR), 12, '0')) AS open,
+        | MAX(value) AS high,
+        | MIN(value) AS low,
+        | arg_max(value, lpad(CAST(epoch_us(ts) AS VARCHAR), 20, '0')
+        |   || lpad(CAST(event_id AS VARCHAR), 12, '0')) AS close,
+        | COUNT(*) AS n_events
+        |FROM events
+        |GROUP BY event_type, date_trunc('day', ts)
+        |ORDER BY event_type, bar_start""".stripMargin) { (s, dir) =>
       val tieKey = concat(
         lpad(unix_micros(col("ts")).cast("string"), 20, "0"),
         lpad(col("event_id").cast("string"), 12, "0"))
@@ -1391,7 +2591,7 @@ object RelationalQueries {
           max_by(col("value"), tieKey).as("close"),
           count(lit(1)).as("n_events"))
         .orderBy(col("event_type"), col("bar_start"))
-    }),
+    },
 
     // Inter-arrival (burstiness) profile: per-user gap statistics over
     // consecutive events — the cadence signal behind bot detection,
@@ -1402,7 +2602,20 @@ object RelationalQueries {
     // deliberately: round(x, 6) on an 11-digit value needs more
     // precision than a double carries and the engines' rounding would
     // diverge in the last ulp, while the raw quotient is bit-identical.
-    "q_ts_interarrival" -> ((s, dir) => {
+    QuerySpec("q_ts_interarrival",
+      """WITH e AS (
+        |  SELECT user_id,
+        |    epoch_us(ts) AS us,
+        |    LAG(epoch_us(ts)) OVER (PARTITION BY user_id
+        |      ORDER BY ts, event_id) AS prev
+        |  FROM events
+        |), g AS (
+        |  SELECT user_id, us - prev AS gap FROM e WHERE prev IS NOT NULL
+        |)
+        |SELECT user_id, COUNT(*) AS n_gaps,
+        |  MIN(gap) AS min_gap_us, MAX(gap) AS max_gap_us,
+        |  SUM(gap)::DOUBLE / COUNT(*)::DOUBLE AS mean_gap_us
+        |FROM g GROUP BY user_id ORDER BY user_id""".stripMargin) { (s, dir) =>
       val w = Window.partitionBy(col("user_id"))
         .orderBy(col("ts"), col("event_id"))
       table(s, dir, "events")
@@ -1417,20 +2630,38 @@ object RelationalQueries {
           (sum(col("gap")).cast("double") / count(lit(1)).cast("double"))
             .as("mean_gap_us"))
         .orderBy(col("user_id"))
-    }),
+    },
 
     // EWMA smoothing — a per-key RECURSION no window frame expresses
     // (each output references the previous output). One groupBy
     // shuffle, in-aggregate sort, HOF left fold; alpha=0.25 is dyadic
     // so alpha and 1-alpha are exact doubles and the DuckDB recursive
     // CTE replays the fold bit-for-bit (see GapFill.ewma's Scaladoc).
-    "q_ts_ewma" -> ((s, dir) => {
+    // user_id IS NOT NULL replays GapFill.ewma's keyless-series rule —
+    // the oracle's NULL-user partition would otherwise emit a phantom
+    // smoothed series Spark never produces (q_ts_gapfill already has it)
+    QuerySpec("q_ts_ewma",
+      """WITH RECURSIVE ranked AS (
+        |  SELECT user_id, ts, value,
+        |    ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts, value) AS rn
+        |  FROM events
+        |  WHERE event_type = 'purchase' AND user_id IS NOT NULL
+        |    AND ts IS NOT NULL AND value IS NOT NULL
+        |), r AS (
+        |  SELECT user_id, ts, rn, value::DOUBLE AS ewma FROM ranked WHERE rn = 1
+        |  UNION ALL
+        |  SELECT k.user_id, k.ts, k.rn,
+        |    0.25::DOUBLE * k.value + 0.75::DOUBLE * r.ewma
+        |  FROM ranked k JOIN r ON k.user_id = r.user_id AND k.rn = r.rn + 1
+        |)
+        |SELECT user_id, ts, ewma FROM r
+        |ORDER BY user_id, ts, ewma""".stripMargin) { (s, dir) =>
       GapFill.ewma(
         table(s, dir, "events").filter(col("event_type") === "purchase")
           .select(col("user_id"), col("ts"), col("value")),
         "user_id", "ts", "value", alpha = 0.25)
         .orderBy(col("user_id"), col("ts"), col("ewma"))
-    }),
+    },
 
     // Gaps-and-islands: merge each supplier's overlapping shipment
     // windows [shipdate, shipdate + 3*qty days] into coverage spans
@@ -1439,7 +2670,27 @@ object RelationalQueries {
     // the per-key hash partitioning — ONE shuffle total (vs the
     // quadratic self-join form). The qty filter sparsifies TPC-H's
     // uniform dates so real gaps exist at sf0.01.
-    "q_ts_islands" -> ((s, dir) => {
+    QuerySpec("q_ts_islands",
+      """WITH src AS (
+        |  SELECT l_suppkey, l_shipdate::DATE AS s,
+        |    l_shipdate::DATE + (l_quantity * 3)::INT AS e
+        |  FROM lineitem WHERE l_quantity <= 4
+        |), w AS (
+        |  SELECT l_suppkey, s, e,
+        |    MAX(e) OVER (PARTITION BY l_suppkey ORDER BY s, e
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pm
+        |  FROM src
+        |), isl AS (
+        |  SELECT l_suppkey, s, e,
+        |    SUM(CASE WHEN pm IS NULL OR s > pm THEN 1 ELSE 0 END)
+        |      OVER (PARTITION BY l_suppkey ORDER BY s, e
+        |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island
+        |  FROM w
+        |)
+        |SELECT l_suppkey AS suppkey, MIN(s) AS island_start,
+        |  MAX(e) AS island_end, COUNT(*) AS n_merged
+        |FROM isl GROUP BY l_suppkey, island
+        |ORDER BY suppkey, island_start""".stripMargin) { (s, dir) =>
       RangeJoin.mergeIntervals(
         table(s, dir, "lineitem").filter(col("l_quantity") <= 4)
           .select(col("l_suppkey"), col("l_shipdate").cast("date").as("l_ship"),
@@ -1449,7 +2700,7 @@ object RelationalQueries {
         .select(col("l_suppkey").as("suppkey"),
           col("island_start"), col("island_end"), col("n_merged"))
         .orderBy(col("suppkey"), col("island_start"))
-    }),
+    },
 
     // O2b per-GROUP top-k through the bounded-heap typed Aggregator —
     // the scalable alternative to the row_number window: the window
@@ -1457,7 +2708,15 @@ object RelationalQueries {
     // partial buffers cap at k rows per group per task BEFORE the
     // shuffle. Same tie-break (score desc, id asc) as the oracle's
     // window form; plan-asserted window-free.
-    "q_topk_groups" -> ((s, dir) => {
+    QuerySpec("q_topk_groups",
+      """SELECT o_orderpriority, o_orderkey, o_totalprice FROM (
+        |  SELECT o_orderpriority, o_orderkey,
+        |    CAST(o_totalprice AS DOUBLE) AS o_totalprice,
+        |    row_number() OVER (PARTITION BY o_orderpriority
+        |      ORDER BY CAST(o_totalprice AS DOUBLE) DESC, o_orderkey ASC) AS rn
+        |  FROM orders
+        |) WHERE rn <= 3
+        |ORDER BY o_orderpriority, o_totalprice DESC, o_orderkey""".stripMargin) { (s, dir) =>
       table(s, dir, "orders")
         .groupBy(col("o_orderpriority"))
         .agg(graft.operators.TopK.topK(3)(
@@ -1467,27 +2726,35 @@ object RelationalQueries {
           col("t.score").as("o_totalprice"))
         .orderBy(col("o_orderpriority"), col("o_totalprice").desc,
           col("o_orderkey"))
-    }),
+    },
 
     // O2 top-k: planned as TakeOrderedAndProject — per-partition heaps,
     // no global sort, no full shuffle.
-    "q_topk" -> ((s, dir) => {
+    QuerySpec("q_topk",
+      """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
+        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 25""".stripMargin) { (s, dir) =>
       table(s, dir, "orders")
         .orderBy(col("o_totalprice").desc, col("o_orderkey"))
         .limit(25)
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-    }),
+    },
 
     // O1 full sort: range-partitioned sort (sampled bounds) — scales as
     // a standard distributed sort.
-    "q_sort" -> ((s, dir) => {
+    QuerySpec("q_sort",
+      """SELECT c_custkey, c_acctbal, c_mktsegment FROM customer
+        |ORDER BY c_acctbal DESC, c_custkey""".stripMargin) { (s, dir) =>
       table(s, dir, "customer")
         .select(col("c_custkey"), col("c_acctbal"), col("c_mktsegment"))
         .orderBy(col("c_acctbal").desc, col("c_custkey"))
-    }),
+    },
 
     // U1: unionByName over aligned projections.
-    "q_union" -> ((s, dir) => {
+    QuerySpec("q_union",
+      """SELECT c_custkey AS entity_id, c_name AS entity_name, 'customer' AS kind FROM customer
+        |UNION ALL
+        |SELECT s_suppkey AS entity_id, s_name AS entity_name, 'supplier' AS kind FROM supplier
+        |ORDER BY kind, entity_id""".stripMargin) { (s, dir) =>
       val c = table(s, dir, "customer").select(
         col("c_custkey").as("entity_id"), col("c_name").as("entity_name"),
         lit("customer").as("kind"))
@@ -1495,14 +2762,23 @@ object RelationalQueries {
         col("s_suppkey").as("entity_id"), col("s_name").as("entity_name"),
         lit("supplier").as("kind"))
       c.unionByName(sup).orderBy(col("kind"), col("entity_id"))
-    }),
+    },
 
     // U1b: unionByName(allowMissingColumns) — the ragged-schema merge
     // (two feeds carrying overlapping-but-different column sets);
     // each side's absent columns null-fill, names align regardless of
     // position. DuckDB's UNION ALL BY NAME is the oracle's exact
     // counterpart.
-    "q_union_missing" -> ((s, dir) => {
+    QuerySpec("q_union_missing",
+      """SELECT * FROM (
+        |  SELECT c_custkey AS entity_id, c_mktsegment AS segment
+        |  FROM customer
+        |  UNION ALL BY NAME
+        |  SELECT s_suppkey AS entity_id, s_acctbal AS balance
+        |  FROM supplier
+        |)
+        |ORDER BY entity_id, segment NULLS FIRST,
+        |  balance NULLS FIRST""".stripMargin) { (s, dir) =>
       val a = table(s, dir, "customer").select(
         col("c_custkey").as("entity_id"),
         col("c_mktsegment").as("segment"))
@@ -1512,12 +2788,20 @@ object RelationalQueries {
       a.unionByName(b, allowMissingColumns = true)
         .orderBy(col("entity_id"), col("segment").asc_nulls_first,
           col("balance").asc_nulls_first)
-    }),
+    },
 
     // F5d: the SQL-surface UDTF form — LATERAL VIEW posexplode, the
     // table-generating syntax SQL users write where the DSL says
     // posexplode(); first 3 tokens per doc.
-    "q_fn_lateral" -> ((s, dir) => {
+    QuerySpec("q_fn_lateral",
+      """WITH w AS (
+        |  SELECT doc_id, string_split(text, ' ') AS w FROM documents
+        |)
+        |SELECT doc_id, CAST(x.i AS INT) AS pos, w[CAST(x.i AS INT) + 1]
+        |  AS tok
+        |FROM w CROSS JOIN (SELECT unnest(range(3)) AS i) x
+        |WHERE x.i < len(w)
+        |ORDER BY doc_id, pos""".stripMargin) { (s, dir) =>
       table(s, dir, "documents")
         .select(col("doc_id"), split(col("text"), " ").as("toks"))
         .createOrReplaceTempView("graft_lateral_docs")
@@ -1527,20 +2811,23 @@ object RelationalQueries {
         LATERAL VIEW posexplode(toks) t AS pos, tok
         WHERE pos < 3
         ORDER BY doc_id, pos""")
-    }),
+    },
 
     // Columnar-format transport: write the customer dim to ORC
     // (overwrite), read it back — the oracle is the plain parquet
     // table, so a green row proves schema- and value-faithful ORC
     // round-tripping (the q_stream_load write-then-read pattern).
-    "q_sink_orc" -> ((s, dir) => {
+    QuerySpec("q_sink_orc",
+      """SELECT c_custkey, c_name, CAST(c_acctbal AS DOUBLE) AS c_acctbal,
+        | c_mktsegment
+        |FROM customer ORDER BY c_custkey""".stripMargin) { (s, dir) =>
       val out = QueryUtil.scratchDir("graft_orc_") + "/customer"
       Sinks.writeOrc(table(s, dir, "customer").select(
         col("c_custkey"), col("c_name"),
         col("c_acctbal").cast("double").as("c_acctbal"), col("c_mktsegment")),
         out)
       Sources.readOrc(s, out).orderBy(col("c_custkey"))
-    }),
+    },
 
     // Range-sorted curated layout: write orders range-partitioned and
     // sorted by o_orderkey (disjoint per-file key ranges — file-level
@@ -1548,7 +2835,10 @@ object RelationalQueries {
     // SinksSpec), then serve a range query from the layout. The oracle
     // is the same range query on the source table, so a green row
     // proves the layout is value-faithful.
-    "q_sink_sorted" -> ((s, dir) => {
+    QuerySpec("q_sink_sorted",
+      """SELECT o_orderkey, o_custkey, CAST(o_totalprice AS DOUBLE) AS o_totalprice
+        |FROM orders WHERE o_orderkey BETWEEN 1000 AND 5000
+        |ORDER BY o_orderkey""".stripMargin) { (s, dir) =>
       val out = QueryUtil.scratchDir("graft_rs_") + "/orders"
       Sinks.writeRangeSorted(table(s, dir, "orders").select(
         col("o_orderkey"), col("o_custkey"),
@@ -1557,7 +2847,7 @@ object RelationalQueries {
       s.read.parquet(out)
         .filter(col("o_orderkey").between(1000, 5000))
         .orderBy(col("o_orderkey"))
-    }),
+    },
 
     // Z-order layout: write orders Morton-clustered on
     // (o_custkey, o_totalprice), then serve a genuinely 2-dimensional
@@ -1565,7 +2855,12 @@ object RelationalQueries {
     // predicate on the source table — green proves the clustered
     // rewrite is value-faithful; SinksSpec proves the per-file
     // footer boxes actually prune on BOTH axes.
-    "q_sink_zorder" -> ((s, dir) => {
+    QuerySpec("q_sink_zorder",
+      """SELECT o_orderkey, o_custkey, CAST(o_totalprice AS DOUBLE) AS o_totalprice
+        |FROM orders
+        |WHERE o_custkey BETWEEN 100 AND 400
+        |  AND CAST(o_totalprice AS DOUBLE) BETWEEN 50000.0 AND 250000.0
+        |ORDER BY o_orderkey""".stripMargin) { (s, dir) =>
       val out = QueryUtil.scratchDir("graft_zo_") + "/orders"
       Sinks.writeZOrdered(table(s, dir, "orders").select(
         col("o_orderkey"), col("o_custkey"),
@@ -1575,7 +2870,7 @@ object RelationalQueries {
         .filter(col("o_custkey").between(100, 400) &&
           col("o_totalprice").between(50000.0, 250000.0))
         .orderBy(col("o_orderkey"))
-    }),
+    },
 
     // K6 bucketed warehouse tables, driver-visible: write customer and
     // orders hash-clustered on the join key via the catalog (bucket
@@ -1586,7 +2881,12 @@ object RelationalQueries {
     // the zero-Exchange join plan is asserted in SinksSpec. The
     // warehouse database points at /tmp so catalog data never lands
     // in the repo checkout.
-    "q_sink_bucketed" -> ((s, dir) => {
+    QuerySpec("q_sink_bucketed",
+      """SELECT c_mktsegment,
+        | COUNT(*) AS n_orders,
+        | CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
+        |FROM customer JOIN orders ON c_custkey = o_custkey
+        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin) { (s, dir) =>
       // fresh location per session: a stale non-empty dir from an
       // earlier JVM would fail CTAS (allowNonEmptyLocationInCTAS=false);
       // IF NOT EXISTS keeps the first location on same-session re-runs,
@@ -1609,7 +2909,7 @@ object RelationalQueries {
         .agg(count(lit(1)).as("n_orders"),
           dsum(col("o_totalprice")).as("revenue"))
         .orderBy(col("c_mktsegment"))
-    }),
+    },
 
     // P8 partitioned curated layout, driver-visible: write orders
     // hive-partitioned by status, read back with a partition-column
@@ -1617,7 +2917,10 @@ object RelationalQueries {
     // pruned plan is asserted in PipelineSpec), and return the slice.
     // Oracle = the same filter on the source table, so green proves
     // the partitioned round-trip preserves values and loses no rows.
-    "q_sink_partlayout" -> ((s, dir) => {
+    QuerySpec("q_sink_partlayout",
+      """SELECT o_orderkey, o_orderstatus, CAST(o_totalprice AS DOUBLE) AS o_totalprice
+        |FROM orders WHERE o_orderstatus = 'F'
+        |ORDER BY o_orderkey""".stripMargin) { (s, dir) =>
       val out = QueryUtil.scratchDir("graft_pl_") + "/orders"
       Sinks.writeCuratedParquet(
         table(s, dir, "orders").select(
@@ -1628,7 +2931,7 @@ object RelationalQueries {
         .filter(col("o_orderstatus") === "F")
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
         .orderBy(col("o_orderkey"))
-    }),
+    },
 
     // S4 + K2 CSV staging round-trip, driver-visible (mirrors the
     // reference's S3-CSV staging hop: transform writes replace=True CSV
@@ -1641,7 +2944,11 @@ object RelationalQueries {
     // the source table, so green proves header+overwrite+typed-re-read
     // loses nothing and invents nothing. Doubles round-trip exactly:
     // Spark writes Java's shortest round-trippable representation.
-    "q_sink_csvtrip" -> ((s, dir) => {
+    QuerySpec("q_sink_csvtrip",
+      """SELECT c_custkey, c_name, CAST(c_acctbal AS DOUBLE) AS c_acctbal,
+        | c_mktsegment
+        |FROM customer WHERE c_mktsegment = 'BUILDING'
+        |ORDER BY c_custkey""".stripMargin) { (s, dir) =>
       import org.apache.spark.sql.types._
       val out = QueryUtil.scratchDir("graft_csv_") + "/customer"
       val src = table(s, dir, "customer").select(
@@ -1656,7 +2963,7 @@ object RelationalQueries {
         StructField("c_acctbal", DoubleType),
         StructField("c_mktsegment", StringType))))
         .orderBy(col("c_custkey"))
-    }),
+    },
 
     // K1 raw-zone JSON, driver-visible: non-replacing write (the
     // reference's S3 upload without `replace`, `etl_dag.py:51-55`) —
@@ -1667,7 +2974,12 @@ object RelationalQueries {
     // `reland_failed` column pins the non-replacing contract into the
     // oracle hash: if ErrorIfExists ever regressed to overwrite, the
     // column reads false and the row hash-mismatches.
-    "q_sink_rawjson" -> ((s, dir) => {
+    QuerySpec("q_sink_rawjson",
+      """SELECT o_orderkey, o_orderstatus,
+        | CAST(o_totalprice AS DOUBLE) AS o_totalprice,
+        | TRUE AS reland_failed
+        |FROM orders WHERE o_orderstatus = 'P'
+        |ORDER BY o_orderkey""".stripMargin) { (s, dir) =>
       import org.apache.spark.sql.types._
       val out = QueryUtil.scratchDir("graft_rj_") + "/orders"
       val src = table(s, dir, "orders")
@@ -1682,7 +2994,7 @@ object RelationalQueries {
         .option("mode", "FAILFAST").json(out)
         .withColumn("reland_failed", lit(relandFailed))
         .orderBy(col("o_orderkey"))
-    }),
+    },
 
     // K4 idempotent DDL, driver-visible: CREATE TABLE IF NOT EXISTS
     // (`etl_dag.py:116-139`, `:266-280`) through the session catalog.
@@ -1694,7 +3006,11 @@ object RelationalQueries {
     // source table. DROP first so re-runs inside one session start
     // clean; the graft_tmp database points at /tmp (see
     // q_sink_bucketed) so catalog data never lands in the checkout.
-    "q_sink_ddl" -> ((s, dir) => {
+    QuerySpec("q_sink_ddl",
+      """SELECT n_regionkey, COUNT(*) AS n_nations,
+        | CAST(SUM(n_nationkey) AS BIGINT) AS sum_key,
+        | MIN(n_name) AS first_name
+        |FROM nation GROUP BY n_regionkey ORDER BY n_regionkey""".stripMargin) { (s, dir) =>
       val wh = QueryUtil.scratchDir("graft_wh_")
       s.sql(s"CREATE DATABASE IF NOT EXISTS graft_tmp LOCATION '$wh'")
       s.sql("DROP TABLE IF EXISTS graft_tmp.ddl_nation")
@@ -1710,7 +3026,7 @@ object RelationalQueries {
           sum(col("n_nationkey")).as("sum_key"),
           min(col("n_name")).as("first_name"))
         .orderBy(col("n_regionkey"))
-    }),
+    },
 
     // S7+K3 driver-visible: the reference's terminal hop — explicit
     // DDL on a REAL database, then the IDEMPOTENT JDBC loader
@@ -1736,7 +3052,16 @@ object RelationalQueries {
     // re-aliases the group key. Filter pushdown into the JDBC source
     // is plan-asserted in JdbcSpec; mid-write-failure recovery is
     // pinned in JdbcSpec too.
-    "q_sink_jdbc" -> ((s, dir) => {
+    // Suppliers of nations < 5 were appended TWICE; the CASE weight
+    // replays the double-land against the source table directly.
+    QuerySpec("q_sink_jdbc",
+      """SELECT s_nationkey,
+        | CAST(SUM(CASE WHEN s_nationkey < 5 THEN 2 ELSE 1 END) AS BIGINT) AS n_sup,
+        | CAST(SUM(s_suppkey * CASE WHEN s_nationkey < 5 THEN 2 ELSE 1 END) AS BIGINT) AS sum_key,
+        | CAST(CAST(SUM(CAST(s_acctbal AS DECIMAL(12,2)) *
+        |          CASE WHEN s_nationkey < 5 THEN 2 ELSE 1 END) AS DECIMAL(18,2))
+        |      AS DOUBLE) AS sum_bal
+        |FROM supplier GROUP BY s_nationkey ORDER BY s_nationkey""".stripMargin) { (s, dir) =>
       val dbHome = QueryUtil.scratchDir("graft_jdbc_")
       System.setProperty("derby.system.home", dbHome)
       val url = s"jdbc:derby:$dbHome/wh;create=true"
@@ -1813,7 +3138,7 @@ object RelationalQueries {
         .select(col("s_nationkey").cast("int").as("s_nationkey"),
           col("n_sup"), col("sum_key"), col("sum_bal"))
         .orderBy(col("s_nationkey"))
-    }),
+    },
 
     // §2.11 XCom load metrics, driver-visible: the reference counts
     // loaded rows in a SECOND pass and XComs the number downstream
@@ -1823,7 +3148,16 @@ object RelationalQueries {
     // 100 TB. The oracle recomputes the same aggregates over the
     // source table, so a metric that missed rows (or a write that
     // dropped them) hash-mismatches.
-    "q_load_metrics" -> ((s, dir) => {
+    QuerySpec("q_load_metrics",
+      """SELECT COUNT(*) AS n_rows,
+        | COUNT(CASE WHEN o_orderstatus = 'F' THEN 1 END) AS n_f,
+        | CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS DECIMAL(18,2))
+        |      AS DOUBLE) AS sum_price
+        |FROM orders""".stripMargin,
+      auditSkip = Some("driver-local metric rows (LocalTableScan " +
+        "wrapper over the JDBC load's outcome); auditing would print the " +
+        "wrapper's plan, not the real write, while executing the load as " +
+        "a side effect — physical behavior asserted in SinksSpec/JdbcSpec")) { (s, dir) =>
       import s.implicits._
       val out = QueryUtil.scratchDir("graft_obs_") + "/orders"
       val src = table(s, dir, "orders").select(
@@ -1842,7 +3176,7 @@ object RelationalQueries {
         .select(col("n_rows"), col("n_f"),
           col("sum_price").cast("decimal(18,2)")
             .cast("double").as("sum_price"))
-    }),
+    },
 
     // Metadata-only table stats, driver-visible: COUNT(*) + key
     // min/max answered from parquet FOOTERS via DSv2 aggregate
@@ -1851,14 +3185,21 @@ object RelationalQueries {
     // declined rather than run a silent full scan). The oracle
     // recomputes the same stats the slow way, so a stale or wrong
     // footer answer hash-mismatches.
-    "q_meta_stats" -> ((s, dir) => {
+    QuerySpec("q_meta_stats",
+      """SELECT COUNT(*) AS n_rows,
+        | MIN(l_orderkey) AS min_okey, MAX(l_orderkey) AS max_okey,
+        | MIN(l_linenumber) AS min_line, MAX(l_linenumber) AS max_line
+        |FROM lineitem""".stripMargin,
+      auditSkip = Some("footer-stats LocalTableScan wrapper (driver " +
+        "reads parquet footers, no Spark scan at all); asserted in " +
+        "SinksSpec — the audited plan would be an empty shell")) { (s, dir) =>
       import s.implicits._
       val r = Sources.footerStats(s, s"$dir/lineitem.parquet",
         Seq("l_orderkey", "l_linenumber"))
       Seq((r.getLong(0), r.getLong(1), r.getLong(2),
         r.getInt(3), r.getInt(4)))
         .toDF("n_rows", "min_okey", "max_okey", "min_line", "max_line")
-    }),
+    },
 
     // Schema evolution: two drops of the same table where the newer
     // batch gained a column. mergeSchema unifies the layouts at read
@@ -1868,7 +3209,12 @@ object RelationalQueries {
     // Dynamic partition overwrite: re-land ONE status partition with
     // bumped prices; the other partitions must survive untouched
     // (static overwrite would truncate them — the classic wipe).
-    "q_sink_dynpart" -> ((s, dir) => {
+    QuerySpec("q_sink_dynpart",
+      """SELECT o_orderkey, o_orderstatus,
+        | ROUND(CASE WHEN o_orderstatus = 'O'
+        |   THEN CAST(o_totalprice AS DOUBLE) + 1.0
+        |   ELSE CAST(o_totalprice AS DOUBLE) END, 2) AS price
+        |FROM orders ORDER BY o_orderkey""".stripMargin) { (s, dir) =>
       val base = QueryUtil.scratchDir("graft_dp_") + "/orders"
       val orders = table(s, dir, "orders").select(
         col("o_orderkey"), col("o_orderstatus"),
@@ -1881,9 +3227,13 @@ object RelationalQueries {
         .select(col("o_orderkey"), col("o_orderstatus"),
           round(col("price"), 2).as("price"))
         .orderBy(col("o_orderkey"))
-    }),
+    },
 
-    "q_sink_evolve" -> ((s, dir) => {
+    QuerySpec("q_sink_evolve",
+      """SELECT o_orderkey, CAST(o_totalprice AS DOUBLE) AS o_totalprice,
+        | CASE WHEN o_orderkey % 2 = 0 THEN NULL ELSE o_orderstatus END
+        |   AS o_orderstatus
+        |FROM orders ORDER BY o_orderkey""".stripMargin) { (s, dir) =>
       val base = QueryUtil.scratchDir("graft_ev_")
       val orders = table(s, dir, "orders")
       orders.filter(col("o_orderkey") % 2 === 0)
@@ -1898,13 +3248,17 @@ object RelationalQueries {
       s.read.option("mergeSchema", "true").parquet(base)
         .select(col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"))
         .orderBy(col("o_orderkey"))
-    }),
+    },
 
     // Nested-type round-trip: structs and arrays written to parquet
     // and projected back field-by-field — the columnar nested
     // encoding (repetition/definition levels) must preserve struct
     // fields, array order, and element values exactly.
-    "q_sink_nested" -> ((s, dir) => {
+    QuerySpec("q_sink_nested",
+      """SELECT o_orderkey, o_orderstatus AS status,
+        | CAST(o_totalprice AS DOUBLE) AS price,
+        | o_custkey AS k1, o_orderkey % 100 AS k2, 2 AS n_keys
+        |FROM orders ORDER BY o_orderkey""".stripMargin) { (s, dir) =>
       val out = QueryUtil.scratchDir("graft_ne_") + "/nested"
       table(s, dir, "orders")
         .select(col("o_orderkey"),
@@ -1921,7 +3275,7 @@ object RelationalQueries {
           element_at(col("keys"), 2).as("k2"),
           size(col("keys")).as("n_keys"))
         .orderBy(col("o_orderkey"))
-    }),
+    },
 
     // Small-file compaction: fragment a projection into 48 tiny files
     // (the append-heavy layout pathology), compact to ~2 MB targets,
@@ -1929,7 +3283,10 @@ object RelationalQueries {
     // from the source table, so a green row proves the rewrite is
     // value-faithful; SinksSpec asserts the file-count collapse and
     // the no-shuffle plan shape.
-    "q_sink_compact" -> ((s, dir) => {
+    QuerySpec("q_sink_compact",
+      """SELECT l_orderkey, l_linenumber, CAST(l_quantity AS DOUBLE) AS l_quantity
+        |FROM lineitem
+        |ORDER BY l_orderkey, l_linenumber, l_quantity""".stripMargin) { (s, dir) =>
       val base = QueryUtil.scratchDir("graft_cmp_")
       val frag = base + "/frag"
       val compacted = base + "/compacted"
@@ -1941,1815 +3298,13 @@ object RelationalQueries {
       Sinks.compactParquet(s, frag, compacted, targetFileBytes = 2L << 20)
       s.read.parquet(compacted)
         .orderBy(col("l_orderkey"), col("l_linenumber"), col("l_quantity"))
-    }),
+    },
 
     // Warehouse merge: SCD-1 upsert of a deterministic change batch
     // (every 7th customer re-priced, every 97th key inserted fresh)
     // into the customer dimension. LEFT ANTI + union — the update
     // batch is small, so Catalyst broadcasts the anti join.
-    "q_upsert" -> ((s, dir) => {
-      val cust = table(s, dir, "customer").select(
-        col("c_custkey"), col("c_name"), col("c_acctbal").cast("double").as("c_acctbal"))
-      val changed = cust.filter(col("c_custkey") % 7 === 0)
-        .withColumn("c_acctbal", col("c_acctbal") + 100.0)
-      val fresh = cust.filter(col("c_custkey") % 97 === 0)
-        .select((col("c_custkey") + 1000000L).as("c_custkey"),
-          lit("NEW").as("c_name"), lit(0.0).as("c_acctbal"))
-      Upsert.upsert(cust, changed.unionByName(fresh), Seq("c_custkey"))
-        .select(col("c_custkey"), col("c_name"),
-          round(col("c_acctbal"), 2).as("c_acctbal"))
-        .orderBy(col("c_custkey"))
-    }),
-
-    // Full CDC apply: a multi-version change feed (update-then-update,
-    // deletes, inserts) resolves to latest-per-key and lands on the
-    // base in one anti join + union — deletes remove, the second
-    // update wins, unchanged rows pass through.
-    // Spatial nearest-neighbor as a grid-cell equi-join: probes
-    // explode to their 3x3 cell neighborhood (x9 on the SMALL side),
-    // candidates keep one home cell, exact squared-Euclidean verify +
-    // per-probe argmin — the cross-join-free spatial join. Coordinates
-    // are key-derived dyadic doubles (TPC-H has no geometry), so every
-    // distance is IEEE-exact and the naive cross-join oracle matches
-    // bit-for-bit.
-    "q_geo_nearest" -> ((s, dir) => {
-      val cust = table(s, dir, "customer").select(col("c_custkey"),
-        ((col("c_custkey") % 100).cast("double") + lit(0.25)).as("px"),
-        (((col("c_custkey") * 7) % 100).cast("double") + lit(0.75)).as("py"))
-      val sup = table(s, dir, "supplier").select(col("s_suppkey"),
-        ((col("s_suppkey") % 10).cast("double") * lit(10.0) + lit(0.5)).as("sx"),
-        (floor(col("s_suppkey").cast("double") / lit(10.0)) * lit(10.0)
-          + lit(0.5)).as("sy"))
-      Geo.nearestWithinRadius(cust, "c_custkey", "px", "py",
-          sup, "s_suppkey", "sx", "sy", radius = 8.0)
-        .orderBy(col("c_custkey"))
-    }),
-
-    // Snapshot diff — CDC extraction when no change feed exists: two
-    // states of the orders table (deterministic planted deletes /
-    // updates / inserts) diff to one row per CHANGED key; the
-    // unchanged majority dies in a pipelined null-safe struct compare
-    // right after the single full-outer key join, so cost tracks the
-    // change volume, not the table (Upsert.diffSnapshots).
-    "q_diff_snapshots" -> ((s, dir) => {
-      val before = table(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_custkey"),
-          col("o_totalprice"), col("o_orderstatus"))
-      val mutated = before.filter(col("o_orderkey") % 97 =!= 0)
-        .withColumn("o_totalprice",
-          when(col("o_orderkey") % 5 === 0, col("o_totalprice") + lit(1.0))
-            .otherwise(col("o_totalprice")))
-      val inserts = before.filter(col("o_orderkey") % 101 === 0)
-        .select((col("o_orderkey") + lit(10000000L)).as("o_orderkey"),
-          col("o_custkey"), col("o_totalprice"),
-          lit("N").as("o_orderstatus"))
-      Upsert.diffSnapshots(before, mutated.unionByName(inserts),
-          Seq("o_orderkey"))
-        .orderBy(col("o_orderkey"), col("change_type"))
-    }),
-
-    "q_cdc_apply" -> ((s, dir) => {
-      val cust = table(s, dir, "customer").select(
-        col("c_custkey"), col("c_name"),
-        col("c_acctbal").cast("double").as("c_acctbal"))
-      def ch(m: Int, bal: org.apache.spark.sql.Column, ts: Long, op: String) =
-        cust.filter(col("c_custkey") % 10 === m)
-          .select(col("c_custkey"), col("c_name"), bal.as("c_acctbal"),
-            lit(ts).as("ts"), lit(op).as("op"))
-      val ins = cust.filter(col("c_custkey") % 10 === 3)
-        .select((col("c_custkey") + 1000000L).as("c_custkey"),
-          concat(lit("new customer "), col("c_custkey").cast("string")).as("c_name"),
-          col("c_acctbal"), lit(1L).as("ts"), lit("I").as("op"))
-      val changes = ch(0, col("c_acctbal"), 1L, "D")
-        .unionByName(ch(1, col("c_acctbal") + 100.0, 1L, "U"))
-        .unionByName(ch(2, col("c_acctbal") + 1.0, 1L, "U"))
-        .unionByName(ch(2, col("c_acctbal") + 2.0, 2L, "U"))
-        .unionByName(ins)
-      Upsert.applyCdc(cust, changes, Seq("c_custkey"), "ts", "op")
-        .select(col("c_custkey"), col("c_name"),
-          round(col("c_acctbal"), 2).as("acctbal"))
-        .orderBy(col("c_custkey"))
-    }),
-
-    // Robust outliers: |x - median| > 3·MAD — the scale-free rule the
-    // outliers themselves cannot drag (unlike mean/stddev z-scores).
-    // Two tiny percentile broadcasts; the rows never shuffle.
-    "q_profile_mad" -> ((s, dir) => {
-      Profile.madOutliers(table(s, dir, "lineitem"), "l_extendedprice",
-        nMads = 3.0)
-        .groupBy(col("l_extendedprice_outlier").as("is_outlier"))
-        .agg(count(lit(1)).as("n"),
-          round(min(col("l_extendedprice")), 2).as("min_price"),
-          round(max(col("l_extendedprice")), 2).as("max_price"))
-        .orderBy(col("is_outlier"))
-    }),
-
-    // Equi-frequency quantile binning: 8 buckets from one shared
-    // exact-percentile buffer, broadcast back, map-side membership
-    // count — bucket populations stay balanced under the skewed price
-    // distribution where equi-width buckets collapse.
-    "q_profile_bucket" -> ((s, dir) => {
-      Profile.quantileBucket(table(s, dir, "lineitem"), "l_extendedprice", k = 8)
-        .filter(col("l_extendedprice").isNotNull)
-        .groupBy(col("l_extendedprice_qbucket"))
-        .agg(count(lit(1)).as("cnt"),
-          round(min(col("l_extendedprice")), 2).as("lo"),
-          round(max(col("l_extendedprice")), 2).as("hi"))
-        .select(col("l_extendedprice_qbucket").cast("long").as("qbucket"),
-          col("cnt"), col("lo"), col("hi"))
-        .orderBy(col("qbucket"))
-    }),
-
-    // U2 intersect (set semantics both engines).
-    "q_intersect" -> ((s, dir) => {
-      table(s, dir, "customer").select(col("c_nationkey").as("nationkey"))
-        .intersect(table(s, dir, "supplier").select(col("s_nationkey").as("nationkey")))
-        .orderBy(col("nationkey"))
-    }),
-
-    "q_except" -> ((s, dir) => {
-      table(s, dir, "customer").select(col("c_nationkey").as("nationkey"))
-        .except(table(s, dir, "supplier").select(col("s_nationkey").as("nationkey")))
-        .orderBy(col("nationkey"))
-    }),
-
-    // U3: dropDuplicates — hash aggregation on the pair.
-    "q_distinct" -> ((s, dir) => {
-      table(s, dir, "lineitem")
-        .select(col("l_returnflag"), col("l_linestatus"))
-        .dropDuplicates()
-        .orderBy(col("l_returnflag"), col("l_linestatus"))
-    }),
-
-    // F1 date/time family.
-    "q_fn_datetime" -> ((s, dir) => {
-      table(s, dir, "events").select(
-        col("event_id"),
-        date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("ts_str"),
-        year(col("ts")).as("yr"),
-        month(col("ts")).as("mo"),
-        dayofmonth(col("ts")).as("dom"),
-        hour(col("ts")).as("hr"),
-        date_trunc("hour", col("ts")).as("hour_ts"),
-        unix_timestamp(col("ts")).as("epoch_s"))
-        .orderBy(col("event_id"))
-    }),
-
-    // F2 string family.
-    "q_fn_string" -> ((s, dir) => {
-      table(s, dir, "customer").select(
-        col("c_custkey"),
-        upper(col("c_name")).as("name_upper"),
-        length(col("c_name")).as("name_len"),
-        concat_ws("_", col("c_mktsegment"), col("c_custkey").cast("string")).as("seg_key"),
-        substring_index(col("c_name"), "#", 1).as("name_stem"),
-        substring(col("c_name"), 10, 9).as("name_num"),
-        lpad(col("c_custkey").cast("string"), 9, "0").as("padded"))
-        .orderBy(col("c_custkey"))
-    }),
-
-    // F2 regex family: extract / global replace / match. Both engines
-    // return '' on a non-matching extract; DuckDB's replace needs the
-    // 'g' flag to match Spark's replace-all semantics (in the oracle).
-    "q_fn_regex" -> ((s, dir) => {
-      table(s, dir, "customer").select(
-        col("c_custkey"),
-        regexp_extract(col("c_name"), "#([0-9]+)", 1).as("name_id"),
-        regexp_replace(col("c_name"), "[0-9]", "#").as("name_masked"),
-        col("c_name").rlike("[13579]$").cast("int").as("id_is_odd"))
-        .orderBy(col("c_custkey"))
-    }),
-
-    // F3 casts + F6 math: FLOOR/CEIL/SQRT/ABS/% are IEEE-deterministic
-    // cross-engine (unlike double→int casts, which truncate in Spark and
-    // round in DuckDB — deliberately avoided).
-    "q_fn_cast" -> ((s, dir) => {
-      table(s, dir, "lineitem").select(
-        col("l_orderkey"), col("l_linenumber"),
-        floor(col("l_extendedprice")).as("price_floor"),
-        ceil(col("l_discount") * 100).as("disc_pct_ceil"),
-        // greatest(·, 0) on BOTH sides (the q_agg_stats convention): a
-        // negative quantity reads sqrt NaN in Spark but ABORTS DuckDB
-        sqrt(greatest(col("l_quantity"), lit(0.0))).as("qty_sqrt"),
-        abs(col("l_extendedprice") - 500.0).as("abs_diff"),
-        (col("l_orderkey") % 7).as("key_mod"),
-        col("l_linenumber").cast("string").as("line_str"))
-        // (l_orderkey, l_linenumber) is NOT unique in the testdata; sort
-        // by the derived columns too so any remaining ties are fully
-        // identical rows and the row-order-sensitive hash is stable
-        .orderBy(col("l_orderkey"), col("l_linenumber"),
-          col("price_floor"), col("disc_pct_ceil"), col("qty_sqrt"),
-          col("abs_diff"))
-    }),
-
-    // F4 json-in-string access.
-    "q_fn_json" -> ((s, dir) => {
-      table(s, dir, "events").select(
-        col("event_id"),
-        get_json_object(col("props"), "$.k").cast("int").as("prop_k"))
-        .orderBy(col("event_id"))
-    }),
-
-    // F4c XML-in-string parsing: schema'd from_xml (elements, typed
-    // fields, absent element -> NULL) + xpath attribute extraction.
-    // The payload is CONSTRUCTED from order columns, so parsing inverts
-    // construction and the oracle recomputes the fields from the
-    // source columns directly — the q_fn_json pattern; only
-    // XML-safe columns are embedded (status/priority/price have no
-    // markup characters). Double fields survive because Java's
-    // double->string->double round-trip is exact.
-    "q_fn_xml" -> ((s, dir) => {
-      import org.apache.spark.sql.types._
-      val xmlSchema = StructType(Seq(
-        StructField("status", StringType), StructField("price", DoubleType),
-        StructField("priority", StringType), StructField("discount", DoubleType)))
-      val payload = concat(
-        lit("<order id=\""), col("o_orderkey"), lit("\"><status>"),
-        col("o_orderstatus"), lit("</status><price>"), col("o_totalprice"),
-        lit("</price><priority>"), col("o_orderpriority"),
-        lit("</priority></order>"))
-      table(s, dir, "orders").filter(col("o_orderkey") <= 2000)
-        .select(col("o_orderkey"), payload.as("payload"))
-        .select(col("o_orderkey"), from_xml(col("payload"), xmlSchema).as("x"),
-          call_function("xpath_string", col("payload"), lit("/order/@id"))
-            .cast("long").as("xml_id"))
-        .select(col("o_orderkey"),
-          col("x.status").as("xml_status"), col("x.price").as("xml_price"),
-          col("x.priority").as("xml_priority"),
-          col("x.discount").as("xml_discount"), col("xml_id"))
-        .orderBy(col("o_orderkey"))
-    }),
-
-    // F4b schemaless JSON via Spark 4's VARIANT type: parse once,
-    // path-extract with types later — the semi-structured path when no
-    // schema is declared (from_json/get_json_object are the schema'd
-    // and string tiers; variant is the binary-encoded engine tier).
-    "q_fn_variant" -> ((s, dir) => {
-      table(s, dir, "events").select(
-        col("event_id"),
-        try_variant_get(parse_json(col("props")), "$.k", "int").as("vk"),
-        try_variant_get(parse_json(col("props")), "$.missing", "int")
-          .as("v_missing"),
-        is_variant_null(parse_json(col("props"))).as("v_isnull"))
-        .orderBy(col("event_id"))
-    }),
-
-    // F5c map-typed column family: build per-user event-type count
-    // maps, transform values, filter entries, explode back — the
-    // map_* HOF surface with a relationally-expressible oracle.
-    "q_fn_map" -> ((s, dir) => {
-      table(s, dir, "events")
-        .groupBy(col("user_id"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
-        .groupBy(col("user_id"))
-        .agg(map_from_entries(sort_array(
-          collect_list(struct(col("event_type"), col("n"))))).as("m"))
-        .select(col("user_id"),
-          explode(
-            map_filter(
-              transform_values(col("m"), (_, v) => v * 2),
-              (_, v) => v >= 4))
-            .as(Seq("event_type", "n2")))
-        .orderBy(col("user_id"), col("event_type"))
-    }),
-
-    // F7 null handling.
-    "q_fn_null" -> ((s, dir) => {
-      table(s, dir, "events").select(
-        col("event_id"),
-        coalesce(nullif(col("event_type"), lit("error")), lit("unknown")).as("type_clean"),
-        when(col("value") > 150, "high").when(col("value") > 75, "mid")
-          .otherwise("low").as("value_band"))
-        .orderBy(col("event_id"))
-    }),
-
-    // F5b positional explode: ordinals matter whenever array order is
-    // data (embedding dimensions, token positions) — posexplode keeps
-    // them explicit instead of relying on row order.
-    "q_fn_posexplode" -> ((s, dir) => {
-      table(s, dir, "embeddings").filter(col("vec_id") < 3)
-        .select(col("vec_id"), posexplode(col("embedding")).as(Seq("pos", "v")))
-        .select(col("vec_id"), col("pos"), col("v").cast("double").as("v"))
-        .orderBy(col("vec_id"), col("pos"))
-    }),
-
-    // F2b regex extraction family: all-matches extraction and counts.
-    // The match list is serialized with array_join — the driver's pandas
-    // comparator cannot lexsort raw array columns, and a delimited string
-    // hashes identically in both engines (operator exercised unchanged).
-    "q_fn_regex_all" -> ((s, dir) => {
-      table(s, dir, "orders").select(
-        col("o_orderkey"),
-        array_join(
-          regexp_extract_all(col("o_orderpriority"), lit("[A-Z]+"), lit(0)), ",")
-          .as("words"),
-        size(regexp_extract_all(col("o_orderpriority"), lit("[A-Z]+"), lit(0)))
-          .as("n_words"))
-        .orderBy(col("o_orderkey"))
-    }),
-
-    // F8 binary/digest family: md5 / sha-256 / hex / base64 round-trip
-    // — the content-addressing primitives (raw-zone dedup keys, cache
-    // keys, fingerprints). All engine-portable byte-for-byte.
-    "q_fn_binary" -> ((s, dir) => {
-      table(s, dir, "customer").select(
-        col("c_custkey"),
-        md5(col("c_name").cast("binary")).as("name_md5"),
-        sha2(col("c_name").cast("binary"), 256).as("name_sha256"),
-        hex(col("c_name")).as("name_hex"),
-        base64(col("c_name").cast("binary")).as("name_b64"),
-        unbase64(base64(col("c_name").cast("binary"))).cast("string")
-          .as("name_roundtrip"),
-        length(col("c_name").cast("binary")).as("name_bytes"))
-        .orderBy(col("c_custkey"))
-    }),
-
-    // F5 array access + higher-order-function norm. try_element_at:
-    // under ANSI a short/empty array would ABORT the whole query where
-    // the oracle's DuckDB indexing reads NULL — the NULL is the
-    // documented semantics for both engines.
-    "q_fn_array" -> ((s, dir) => {
-      table(s, dir, "embeddings").select(
-        col("vec_id"),
-        size(col("embedding")).as("dim"),
-        try_element_at(col("embedding"), lit(1)).cast("double").as("first_val"),
-        try_element_at(col("embedding"), lit(-1)).cast("double").as("last_val"),
-        round(VectorOps.norm(col("embedding")), 6).as("l2_norm"),
-        col("label"))
-        .orderBy(col("vec_id"))
-    }),
-
-    // Data-quality gate: row rules in ONE aggregate pass, a
-    // duplicate-key audit (the harness lineitem key is knowingly
-    // non-unique — nonzero violations are real signal), and a
-    // referential check against the distinct parent key set. The
-    // price_cap rule is deliberately violated by high-price orders so
-    // a nonzero row-rule count is exercised too.
-    "q_quality" -> ((s, dir) => {
-      val orders = table(s, dir, "orders")
-      Quality.report(
-        Quality.checkRows(orders, Seq(
-          Quality.Rule("order_date_not_null", col("o_orderdate").isNotNull),
-          Quality.Rule("order_status_domain",
-            col("o_orderstatus").isin("F", "O", "P")),
-          Quality.Rule("order_price_positive", col("o_totalprice") > 0.0),
-          Quality.Rule("order_price_cap", col("o_totalprice") <= 480000.0))),
-        Quality.checkUnique(table(s, dir, "lineitem"),
-          Seq("l_orderkey", "l_linenumber"), "lineitem_pk_unique"),
-        Quality.checkRef(orders, "o_custkey",
-          table(s, dir, "customer"), "c_custkey", "orders_custkey_fk"))
-    }),
-
-    // A1c second-moment statistics (variance / stddev / correlation).
-    // Built-in stddev/corr merge partial double moments in shuffle order,
-    // so their low bits are not reproducible cross-engine (or even
-    // run-to-run). Portable shape: the five raw moments as EXACT decimal
-    // sums (the inputs carry <=2 decimals, products <=4 — the dsum
-    // argument), then one identical double expression over them in both
-    // engines. Same single aggregation pass and map-side partials as the
-    // built-ins — the portability costs nothing at scale.
-    "q_agg_stats" -> ((s, dir) => {
-      val m = table(s, dir, "lineitem")
-        .groupBy(col("l_returnflag"))
-        .agg(
-          count(lit(1)).cast("double").as("n"),
-          sum(col("l_quantity").cast(DecimalType(28, 2))).cast("double").as("sx"),
-          sum((col("l_quantity") * col("l_quantity")).cast(DecimalType(28, 4)))
-            .cast("double").as("sxx"),
-          sum(col("l_extendedprice").cast(DecimalType(28, 2))).cast("double").as("sy"),
-          sum((col("l_extendedprice") * col("l_extendedprice")).cast(DecimalType(28, 4)))
-            .cast("double").as("syy"),
-          sum((col("l_quantity") * col("l_extendedprice")).cast(DecimalType(28, 4)))
-            .cast("double").as("sxy"))
-      // Degenerate groups are guarded IDENTICALLY in both engines
-      // (single-row group: Spark double/0 reads Infinity where DuckDB
-      // reads NULL; cancellation noise: sqrt(negative) is NaN in Spark
-      // but ABORTS the DuckDB oracle) — n>1 gates the sample variance,
-      // greatest(·,0) floors the cancellation, and the corr denominator
-      // must be strictly positive. On non-degenerate groups every
-      // branch returns the exact pre-guard value.
-      val vQty = (col("sxx") - col("sx") * col("sx") / col("n")) / (col("n") - 1)
-      val dx = col("sxx") - col("sx") * col("sx") / col("n")
-      val dy = col("syy") - col("sy") * col("sy") / col("n")
-      m.select(
-        col("l_returnflag"),
-        col("n").cast("long").as("n_rows"),
-        when(col("n") > 1.0, vQty).as("var_qty"),
-        when(col("n") > 1.0, sqrt(greatest(vQty, lit(0.0)))).as("std_qty"),
-        when(col("n") > 1.0 && dx * dy > 0.0,
-          (col("sxy") - col("sx") * col("sy") / col("n")) / sqrt(dx * dy))
-          .as("corr_qty_price"))
-        .orderBy(col("l_returnflag"))
-    }),
-
-    // A1d conditional aggregation: FILTER-style counts and guarded
-    // sums/maxes in one pass — no self-joins, no second scan.
-    "q_agg_conditional" -> ((s, dir) => {
-      table(s, dir, "orders")
-        .groupBy(col("o_orderpriority"))
-        .agg(
-          count_if(col("o_totalprice") > 200.0).as("n_big"),
-          dsum(when(col("o_orderstatus") === "F", col("o_totalprice"))
-            .otherwise(lit(0.0))).as("sum_f"),
-          max(when(col("o_orderstatus") === "O", col("o_totalprice")))
-            .as("max_open"))
-        .orderBy(col("o_orderpriority"))
-    }),
-
-    // A7 array aggregation: per-group collected lists/sets made
-    // deterministic with sort_array (collection order is shuffle order —
-    // never emit an unsorted collect_*). The filtered list keeps per-group
-    // arrays bounded; unbounded per-group collect is flagged in Scaladoc
-    // as the anti-pattern (single giant row, no partial aggregation win).
-    // The sorted lists are serialized with array_join for the driver's
-    // pandas comparator (raw array columns are unsortable there); the
-    // collect_set / collect_list / sort_array operators run unchanged.
-    "q_agg_collect" -> ((s, dir) => {
-      table(s, dir, "customer")
-        .groupBy(col("c_mktsegment"))
-        .agg(
-          array_join(sort_array(collect_set(col("c_nationkey"))), ",")
-            .as("nations"),
-          array_join(
-            sort_array(collect_list(when(col("c_custkey") % 50 === 0, col("c_custkey")))), ",")
-            .as("sample_keys"))
-        .orderBy(col("c_mktsegment"))
-    }),
-
-    // U2 multiset variants: INTERSECT ALL / EXCEPT ALL keep duplicate
-    // cardinalities (min / left-minus counts). Planned as an aggregate
-    // over (row, count) pairs — one shuffle, no join explosion.
-    "q_intersect_all" -> ((s, dir) => {
-      table(s, dir, "customer").select(col("c_nationkey").as("nationkey"))
-        .intersectAll(table(s, dir, "supplier").select(col("s_nationkey").as("nationkey")))
-        .orderBy(col("nationkey"))
-    }),
-
-    "q_except_all" -> ((s, dir) => {
-      table(s, dir, "customer").select(col("c_nationkey").as("nationkey"))
-        .exceptAll(table(s, dir, "supplier").select(col("s_nationkey").as("nationkey")))
-        .orderBy(col("nationkey"))
-    }),
-
-    // W4 navigation windows: first/last/nth over a running ROWS frame
-    // with IGNORE NULLS (the gap-fill / last-observation-carried-forward
-    // family), plus lead with an explicit default. Nulls are planted
-    // deterministically ('error' events) so the ignore-nulls semantics
-    // are actually exercised.
-    "q_window_nav" -> ((s, dir) => {
-      val v = when(col("event_type") === "error", lit(null).cast("double"))
-        .otherwise(col("value"))
-      val frame = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("event_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val order = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("event_id"))
-      table(s, dir, "events")
-        .withColumn("v", v)
-        .select(
-          col("event_id"), col("user_id"),
-          first(col("v"), ignoreNulls = true).over(frame).as("first_ok"),
-          last(col("v"), ignoreNulls = true).over(frame).as("last_ok"),
-          nth_value(col("v"), 2).over(frame).as("second_any"),
-          lead(col("value"), 1, -1.0).over(order).as("next_val"))
-        .orderBy(col("event_id"))
-    }),
-
-    // Behavioral analytics: 4-step funnel over the event log. Each step
-    // is an equi-join on user_id against events pre-filtered to ONE
-    // type (filter reaches the scan), re-aggregated per user — never a
-    // per-user sort of the full log. The oracle chains the same
-    // strictly-after LEFT JOIN + MIN per step.
-    "q_funnel" -> ((s, dir) => {
-      Analytics.funnelTimes(table(s, dir, "events"), "user_id", "ts",
-          "event_type", Seq("signup", "view", "click", "purchase"))
-        .orderBy(col("user_id"))
-    }),
-
-    // Last-touch attribution: each purchase credits the latest click
-    // at-or-before it (per user) within a 7-day window — the as-of
-    // join composed into the marketing-analytics shape, then one
-    // revenue rollup per derived channel. Same single-shuffle as-of
-    // plan as q_join_asof; DuckDB's native ASOF JOIN is the oracle.
-    "q_attr_lasttouch" -> ((s, dir) => {
-      val ev = table(s, dir, "events")
-      val conv = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts"), col("value"))
-      val touch = ev.filter(col("event_type") === "click")
-        .select(col("user_id"), col("ts").as("tts"),
-          concat(lit("ch_"), col("event_id") % 3).as("channel"))
-      AsOfJoin.asof(conv, touch, "user_id", "ts", "tts",
-          Map("channel" -> "channel"), inner = true,
-          tolerance = Some(expr("INTERVAL 7 DAYS")))
-        .groupBy(col("channel"))
-        .agg(count(lit(1)).as("n_conv"), dsum(col("value")).as("revenue"))
-        .orderBy(col("channel"))
-    }),
-
-    // Linear multi-touch attribution: each purchase splits its revenue
-    // EQUALLY across every click in its trailing 7-day window (the
-    // fairness-variant companion to q_attr_lasttouch). The touch join
-    // is equi-keyed on user_id with the range as a residual predicate
-    // — per-user fan-out is bounded by a user's own click cadence, so
-    // the shape survives scale where an unkeyed interval join would
-    // not. Each credit is value/n_touch cast to DECIMAL(28,12) before
-    // summing, so the per-channel rollup is shuffle-order independent
-    // and oracle-replayable.
-    "q_attr_linear" -> ((s, dir) => {
-      val ev = table(s, dir, "events")
-      val conv = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts"),
-          col("event_id").as("conv_id"), col("value"))
-      val touch = ev.filter(col("event_type") === "click")
-        .select(col("user_id"), col("ts").as("tts"),
-          concat(lit("ch_"), col("event_id") % 3).as("channel"))
-      val joined = conv.join(touch, Seq("user_id"))
-        .filter(col("tts") <= col("ts") &&
-          col("tts") >= col("ts") - expr("INTERVAL 7 DAYS"))
-      joined
-        .withColumn("n_touch",
-          count(lit(1)).over(Window.partitionBy(col("conv_id"))))
-        .groupBy(col("channel"))
-        .agg(
-          count(lit(1)).as("n_touches"),
-          // portableRound6, not round: the 12dp-quantized sum is off
-          // the 6dp grid (0.01 split over 32 touches = 0.0003125 — an
-          // exact .5e-6 tie), the cross-engine ROUND-tie hot shape
-          graft.functions.Num.portableRound6(
-            sum((col("value") / col("n_touch"))
-              .cast(org.apache.spark.sql.types.DecimalType(28, 12)))
-            .cast("double")).as("revenue_credit"))
-        .orderBy(col("channel"))
-    }),
-
-    // Weekly cohort retention: first-touch min + (user, week) distinct
-    // both shuffle on user_id; the per-week cohort sizes are a bounded
-    // frame broadcast back onto the cells (plan: one broadcast join, no
-    // second wide exchange).
-    "q_cohort" -> ((s, dir) => {
-      Analytics.cohortRetention(table(s, dir, "events"), "user_id", "ts")
-        .orderBy(col("cohort_week"), col("week_offset"))
-    }),
-
-    // First-order event-type transition matrix: ONE window shuffle on
-    // user_id for the lag, then a partial-combining count into a
-    // states^2 frame; row normalization runs over the tiny aggregated
-    // cells only.
-    "q_event_transitions" -> ((s, dir) => {
-      Analytics.eventTransitions(table(s, dir, "events"), "user_id", "ts",
-          "event_type", "event_id")
-        .orderBy(col("prev_type"), col("next_type"))
-    }),
-
-    // Golden-record survivorship: per user, each attribute resolves to
-    // its own freshest non-null feed (purchase amounts from purchase
-    // events, k from clicks, signup time from signups) — blind
-    // latest-row-wins would null attributes the newest feed lacks.
-    // One aggregation pass; null ordering keys make each field follow
-    // its own channel.
-    "q_golden_record" -> ((s, dir) => {
-      val ordKey = concat(
-        lpad(unix_micros(col("ts")).cast("string"), 20, "0"),
-        lpad(col("event_id").cast("string"), 12, "0"))
-      val src = table(s, dir, "events").select(
-        col("user_id"), ordKey.as("__ord"),
-        when(col("event_type") === "purchase", col("value"))
-          .as("last_purchase_value"),
-        when(col("event_type") === "click",
-          get_json_object(col("props"), "$.k").cast("int"))
-          .as("last_click_k"),
-        when(col("event_type") === "signup",
-          date_format(col("ts"), "yyyy-MM-dd HH:mm:ss"))
-          .as("last_signup_at"))
-      Upsert.goldenRecord(src, "user_id", "__ord",
-          Seq("last_purchase_value", "last_click_k", "last_signup_at"))
-        .orderBy(col("user_id"))
-    }),
-
-    // Temporal per-user holdout: each user's last 2 events become the
-    // evaluation slice (leave-last-out) — the time-respecting split
-    // that prevents FUTURE leakage, beside the cluster-aware
-    // q_split_leakfree that prevents content leakage.
-    "q_split_temporal" -> ((s, dir) => {
-      graft.operators.Sampling.temporalHoldout(table(s, dir, "events"),
-          "user_id", "ts", "event_id", holdoutLast = 2)
-        .select(col("event_id"), col("user_id"), col("recency_rank"),
-          col("split"))
-        .orderBy(col("user_id"), col("recency_rank"), col("event_id"))
-    }),
-
-    // Feature hashing (the vocabulary-free categorical featurizer):
-    // md5("col=value") mod 32 indexes a sparse count vector per
-    // customer — identical feature ids on every engine/run/slice,
-    // nothing grows with cardinality.
-    "q_feat_hash" -> ((s, dir) => {
-      graft.operators.Features.hashedFeatures(table(s, dir, "customer"),
-          "c_custkey", Seq("c_mktsegment", "c_nationkey"), dim = 32)
-        .orderBy(col("c_custkey"))
-    }),
-
-    // Exact 7-day rolling unique users — the reach metric COUNT
-    // (DISTINCT) OVER cannot express: each distinct (user, day) votes
-    // for the 7 report days it covers (bounded explode over the
-    // aggregate), one distinct-count per day.
-    "q_ts_rollunique" -> ((s, dir) => {
-      Analytics.rollingUniques(table(s, dir, "events"), "user_id", "ts",
-        windowDays = 7)
-    }),
-
-    // The sketch path rollingUniques' Scaladoc names, made concrete:
-    // one HLL per observed day, merged across the 7-day frame — wire
-    // cost independent of user cardinality where the exact path
-    // shuffles uniques x window (user, day) pairs. PARTIAL ORACLE
-    // (the q_agg_hll_merge pattern): the sketch estimate is
-    // engine-specific, so the driver-checked columns are the exact
-    // rolling count plus approx_ok (estimate within 5% of exact —
-    // 3x the lgK-12 rsd) pinned TRUE, so a drifting sketch
-    // hash-mismatches.
-    "q_ts_rollunique_hll" -> ((s, dir) => {
-      val ev = table(s, dir, "events")
-      Analytics.rollingUniques(ev, "user_id", "ts", windowDays = 7)
-        .join(Analytics.rollingUniquesHll(ev, "user_id", "ts",
-          windowDays = 7), Seq("day"))
-        .select(col("day"), col("n_unique"),
-          (abs(col("n_unique_est") - col("n_unique")).cast("double")
-            / col("n_unique") <= 0.05).as("approx_ok"))
-        .orderBy(col("day"))
-    }),
-
-    // Day-over-day percent change of daily volumes per event type —
-    // the period-over-period BI staple: one lag window over the daily
-    // aggregate spine; first day reads NULL, a zero prior day reads
-    // NULL (try_divide), never a crash.
-    "q_ts_daychange" -> ((s, dir) => {
-      val daily = table(s, dir, "events")
-        .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
-        .agg(count(lit(1)).as("cnt"))
-      val w = Window.partitionBy(col("event_type")).orderBy(col("day"))
-      daily
-        .withColumn("prev_cnt", lag(col("cnt"), 1).over(w))
-        // portableRound6 (r11 triage): (cnt-prev)/prev is an integer
-        // ratio over an unbounded daily volume — daily counts reach
-        // 739 at sf0.1, so the divergent 640-family denominator is
-        // reachable. Oracle in lockstep.
-        .withColumn("pct_change",
-          graft.functions.Num.portableRound6(
-            try_divide((col("cnt") - col("prev_cnt")).cast("double"),
-              col("prev_cnt").cast("double"))))
-        .orderBy(col("event_type"), col("day"))
-    }),
-
-    // Pairwise association rules over per-user event-type sets:
-    // support / confidence / lift — the co-behavior miner. Pair
-    // fanout per user is bounded by the event-type vocabulary; lift
-    // divides exact integer products once.
-    "q_assoc_rules" -> ((s, dir) => {
-      Analytics.associationRules(table(s, dir, "events"),
-          "user_id", "event_type")
-        .orderBy(col("item_a"), col("item_b"))
-    }),
-
-    // Stationary distribution of the behavior Markov chain (2 power
-    // iterations from uniform, PageRank-recipe rounding) — where
-    // attention concentrates in the limit; everything after the one
-    // lag pass touches only the bounded |states|² matrix.
-    "q_graph_markov" -> ((s, dir) => {
-      Analytics.markovStationary(table(s, dir, "events"), "user_id", "ts",
-          "event_type", "event_id", iters = 2)
-        .orderBy(col("state"))
-    }))
-
-  val oracleSql: Map[String, String] = Map(
-    "q_agg_pricing" ->
-      """SELECT l_returnflag, l_linestatus,
-        | CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-        | CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
-        | CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS sum_disc_price,
-        | COUNT(*) AS count_order,
-        | CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE)
-        |   / COUNT(l_quantity) AS avg_qty
-        |FROM lineitem GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "q_agg_distinct" ->
-      """SELECT l_returnflag, COUNT(DISTINCT l_partkey) AS n_parts,
-        | COUNT(DISTINCT l_suppkey) AS n_supps, COUNT(*) AS n_rows
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q_agg_rollup" ->
-      """SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n_orders,
-        | CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_total
-        |FROM orders GROUP BY ROLLUP(o_orderstatus, o_orderpriority)
-        |ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST""".stripMargin,
-    "q_agg_cube" ->
-      """SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n_orders
-        |FROM orders GROUP BY CUBE(o_orderstatus, o_orderpriority)
-        |ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST""".stripMargin,
-    "q_agg_groupingsets" ->
-      """SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n_orders
-        |FROM orders
-        |GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
-        |ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST""".stripMargin,
-    "q_agg_pivot" ->
-      """SELECT o_orderpriority,
-        | COUNT(*) FILTER (o_orderstatus = 'F') AS n_F,
-        | COUNT(*) FILTER (o_orderstatus = 'O') AS n_O,
-        | COUNT(*) FILTER (o_orderstatus = 'P') AS n_P
-        |FROM orders GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin,
-    "q_agg_unpivot" ->
-      """SELECT l_orderkey, l_linenumber, metric, metric_value
-        |FROM (
-        |  UNPIVOT (SELECT l_orderkey, l_linenumber, l_quantity, l_discount, l_tax
-        |           FROM lineitem)
-        |  ON l_quantity, l_discount, l_tax
-        |  INTO NAME metric VALUE metric_value
-        |)
-        |ORDER BY l_orderkey, l_linenumber, metric, metric_value""".stripMargin,
-    "q_agg_percentile" ->
-      """SELECT l_returnflag,
-        | ROUND(quantile_cont(l_extendedprice, 0.5), 4) AS p50_price,
-        | ROUND(quantile_cont(l_extendedprice, 0.95), 4) AS p95_price,
-        | COUNT(*) AS n_rows
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    // Partial oracles for the sketch queries: the exact companion
-    // columns are recomputed and hash-checked; the bound/consistency
-    // booleans are pinned TRUE — Spark computes them from the real
-    // estimates, so a violated bound hash-mismatches.
-    "q_agg_approx" ->
-      """SELECT l_returnflag,
-        | COUNT(DISTINCT l_partkey) AS exact_parts,
-        | TRUE AS approx_ok
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q_agg_hll_merge" ->
-      """SELECT l_returnflag,
-        | COUNT(DISTINCT l_partkey) AS exact_parts,
-        | TRUE AS merge_consistent,
-        | TRUE AS approx_ok
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q_agg_approxpct" ->
-      """SELECT l_returnflag,
-        | ROUND(quantile_cont(l_extendedprice, 0.5), 4) AS p50_exact,
-        | ROUND(quantile_cont(l_extendedprice, 0.95), 4) AS p95_exact,
-        | TRUE AS p50_ok,
-        | TRUE AS p95_ok
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q_agg_session" ->
-      """WITH g AS (
-        |  SELECT user_id, ts, value,
-    |    -- session intervals are end-exclusive: a gap of exactly 30 min
-        |    -- does NOT merge (Spark merges only when next.ts < prev end)
-        |    CASE WHEN ts - LAG(ts) OVER (PARTITION BY user_id ORDER BY ts)
-        |           >= INTERVAL 30 MINUTE OR
-        |         LAG(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
-        |    THEN 1 ELSE 0 END AS new_session
-        |  FROM events WHERE ts IS NOT NULL
-        |), i AS (
-        |  SELECT user_id, ts, value,
-        |    SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-        |  FROM g
-        |)
-        |SELECT user_id, MIN(ts) AS session_start,
-        |  MAX(ts) + INTERVAL 30 MINUTE AS session_end,
-        |  COUNT(*) AS n_events,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-        |FROM i GROUP BY user_id, sid
-        |ORDER BY user_id, session_start""".stripMargin,
-    // ts IS NOT NULL replays Catalyst's TimeWindowing rule, which
-    // injects an isnotnull(ts) filter under window()/session_window()
-    // — the oracle would otherwise keep a NULL-bucket group Spark
-    // silently drops (same filter on q_agg_sliding/q_agg_session)
-    "q_agg_timebucket" ->
-      """SELECT date_trunc('hour', ts) AS hour_start, event_type,
-        | COUNT(*) AS n_events,
-        | CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-        |FROM events WHERE ts IS NOT NULL
-        |GROUP BY 1, 2 ORDER BY hour_start, event_type""".stripMargin,
-    "q_agg_sliding" ->
-      """WITH b AS (
-        |  SELECT unnest([date_trunc('hour', ts),
-        |    date_trunc('hour', ts) - INTERVAL 1 HOUR]) AS win_start, value
-        |  FROM events WHERE ts IS NOT NULL
-        |)
-        |SELECT win_start, win_start + INTERVAL 2 HOUR AS win_end,
-        | COUNT(*) AS n_events,
-        | CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-        |FROM b GROUP BY win_start ORDER BY win_start""".stripMargin,
-    "q_join_nullsafe" ->
-      """WITH c AS (
-        |  SELECT CASE WHEN c_custkey % 50 = 0 THEN NULL
-        |    ELSE c_nationkey END AS k, c_custkey FROM customer
-        |), s AS (
-        |  SELECT CASE WHEN s_suppkey % 7 = 0 THEN NULL
-        |    ELSE s_nationkey END AS k, s_suppkey FROM supplier
-        |)
-        |SELECT c.k AS k, COUNT(*) AS n_pairs,
-        | COUNT(DISTINCT c_custkey) AS n_cust,
-        | COUNT(DISTINCT s_suppkey) AS n_supp
-        |FROM c JOIN s ON c.k IS NOT DISTINCT FROM s.k
-        |GROUP BY c.k ORDER BY c.k NULLS FIRST""".stripMargin,
-    "q_join_temporal" ->
-      """WITH hist AS (
-        |  SELECT c_custkey, 'seg_old' AS segment,
-        |    DATE '1990-01-01' AS valid_from,
-        |    DATE '1995-01-01' + (c_custkey % 365)::INT AS valid_to
-        |  FROM customer
-        |  UNION ALL
-        |  SELECT c_custkey, 'seg_new_' || (c_custkey % 3),
-        |    DATE '1995-01-01' + (c_custkey % 365)::INT, NULL
-        |  FROM customer
-        |)
-        |SELECT segment, COUNT(*) AS n_orders,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
-        |FROM orders o JOIN hist h ON o.o_custkey = h.c_custkey
-        |  AND h.valid_from <= o.o_orderdate::DATE
-        |  AND (h.valid_to IS NULL OR o.o_orderdate::DATE < h.valid_to)
-        |GROUP BY segment ORDER BY segment""".stripMargin,
-    "q_incremental_join" ->
-      """SELECT o_orderpriority, l_returnflag, COUNT(*) AS n,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
-        |    AS revenue
-        |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-        |GROUP BY o_orderpriority, l_returnflag
-        |ORDER BY o_orderpriority, l_returnflag""".stripMargin,
-    "q_agg_retract" ->
-      """SELECT l_returnflag, l_linestatus,
-        | CAST(SUM(CAST(l_extendedprice AS DECIMAL(28,2))) AS DOUBLE) AS sum_v,
-        | COUNT(l_extendedprice) AS n_v,
-        | MIN(l_extendedprice) AS min_v,
-        | MAX(l_extendedprice) AS max_v,
-        | CAST(SUM(CAST(l_extendedprice AS DECIMAL(28,2))) AS DOUBLE)
-        |   / CAST(COUNT(l_extendedprice) AS DOUBLE) AS avg_v
-        |FROM lineitem WHERE l_orderkey % 5 <> 0
-        |  -- replay buildState's entry guard: NULL stays (its group
-        |  -- keeps a state row), non-finite/over-magnitude rows cost
-        |  -- themselves (NaN fails <= under DuckDB's total order too)
-        |  AND (l_extendedprice IS NULL
-        |       OR (l_extendedprice >= -9e25 AND l_extendedprice <= 9e25))
-        |GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "q_agg_incremental" ->
-      """SELECT l_returnflag, l_linestatus,
-        | CAST(SUM(CAST(l_extendedprice AS DECIMAL(28,2))) AS DOUBLE) AS sum_v,
-        | COUNT(l_extendedprice) AS n_v,
-        | MIN(l_extendedprice) AS min_v,
-        | MAX(l_extendedprice) AS max_v,
-        | CAST(SUM(CAST(l_extendedprice AS DECIMAL(28,2))) AS DOUBLE)
-        |   / CAST(COUNT(l_extendedprice) AS DOUBLE) AS avg_v
-        |FROM lineitem
-        |WHERE l_extendedprice IS NULL
-        |   OR (l_extendedprice >= -9e25 AND l_extendedprice <= 9e25)
-        |GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "q_join_inner" ->
-      """SELECT o_orderkey, c_name, o_totalprice
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        |ORDER BY o_orderkey""".stripMargin,
-    "q_join_left" ->
-      """SELECT c_custkey, c_name, COUNT(o_orderkey) AS n_orders,
-        | COALESCE(CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE), 0.0) AS sum_spent
-        |FROM customer LEFT JOIN orders ON c_custkey = o_custkey
-        |GROUP BY c_custkey, c_name ORDER BY c_custkey""".stripMargin,
-    "q_join_broadcast" ->
-      """SELECT r_name, n_name, COUNT(*) AS n_orders,
-        | CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
-        |FROM orders
-        | JOIN customer ON o_custkey = c_custkey
-        | JOIN nation ON c_nationkey = n_nationkey
-        | JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY r_name, n_name ORDER BY r_name, n_name""".stripMargin,
-    "q_join_full" ->
-      """WITH cust AS (
-        |  SELECT c_custkey, c_mktsegment FROM customer WHERE c_nationkey < 13
-        |), ords AS (
-        |  SELECT o_custkey, COUNT(*) AS n_orders,
-        |    CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
-        |  FROM orders GROUP BY o_custkey
-        |)
-        |SELECT COALESCE(c_custkey, o_custkey) AS custkey, c_mktsegment,
-        |  n_orders, sum_price
-        |FROM cust FULL OUTER JOIN ords ON c_custkey = o_custkey
-        |ORDER BY custkey""".stripMargin,
-    "q_join_salted" ->
-      """SELECT s_nationkey, COUNT(*) AS n_items,
-        | CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
-        |FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-        |GROUP BY s_nationkey ORDER BY s_nationkey""".stripMargin,
-    "q_join_bloom" ->
-      """SELECT l_returnflag, COUNT(*) AS n_items,
-        | CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
-        |FROM lineitem
-        |WHERE l_partkey IN (SELECT p_partkey FROM part WHERE p_size >= 48)
-        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q_skew_keys" ->
-      s"""WITH c AS (
-        |  SELECT o_custkey, COUNT(*) AS cnt FROM orders GROUP BY o_custkey
-        |), t AS (
-        |  SELECT COUNT(*) AS total FROM orders
-        |)
-        |SELECT o_custkey, cnt, ${graft.functions.Num.portableRound6Sql(
-            "cnt::DOUBLE / total")} AS share
-        |FROM c CROSS JOIN t
-        |ORDER BY cnt DESC, o_custkey LIMIT 25""".stripMargin,
-    "q_sketch_cms" ->
-      """WITH i AS (SELECT unnest(range(4)) AS cms_row),
-        |cells AS (
-        |  SELECT cms_row,
-        |    CAST((('0x' || substr(md5(CAST(o_custkey AS VARCHAR) || ':' || cms_row), 1, 16))::UBIGINT
-        |      & 9223372036854775807::UBIGINT) % 256 AS BIGINT) AS cms_col,
-        |    COUNT(*) AS cnt
-        |  FROM orders CROSS JOIN i GROUP BY 1, 2
-        |),
-        |probe AS (SELECT DISTINCT o_custkey FROM orders WHERE o_custkey <= 30),
-        |pcell AS (
-        |  SELECT o_custkey, cms_row,
-        |    CAST((('0x' || substr(md5(CAST(o_custkey AS VARCHAR) || ':' || cms_row), 1, 16))::UBIGINT
-        |      & 9223372036854775807::UBIGINT) % 256 AS BIGINT) AS cms_col
-        |  FROM probe CROSS JOIN i
-        |),
-        |est AS (
-        |  SELECT o_custkey, MIN(COALESCE(c.cnt, 0)) AS est_cnt
-        |  FROM pcell p LEFT JOIN cells c USING (cms_row, cms_col)
-        |  GROUP BY 1
-        |),
-        |exact AS (SELECT o_custkey, COUNT(*) AS exact_cnt FROM orders GROUP BY 1)
-        |SELECT est.o_custkey AS custkey, est.est_cnt, exact.exact_cnt
-        |FROM est JOIN exact USING (o_custkey)
-        |ORDER BY custkey""".stripMargin,
-    "q_sketch_joinsize" ->
-      """WITH i AS (SELECT unnest(range(4)) AS cms_row),
-        |co AS (
-        |  SELECT cms_row,
-        |    CAST((('0x' || substr(md5(CAST(o_orderkey AS VARCHAR) || ':' || cms_row), 1, 16))::UBIGINT
-        |      & 9223372036854775807::UBIGINT) % 512 AS BIGINT) AS cms_col,
-        |    COUNT(*) AS cnt
-        |  FROM orders CROSS JOIN i GROUP BY 1, 2
-        |),
-        |cl AS (
-        |  SELECT cms_row,
-        |    CAST((('0x' || substr(md5(CAST(l_orderkey AS VARCHAR) || ':' || cms_row), 1, 16))::UBIGINT
-        |      & 9223372036854775807::UBIGINT) % 512 AS BIGINT) AS cms_col,
-        |    COUNT(*) AS cnt
-        |  FROM lineitem CROSS JOIN i GROUP BY 1, 2
-        |),
-        |cc AS (
-        |  SELECT cms_row,
-        |    CAST((('0x' || substr(md5(CAST(o_custkey AS VARCHAR) || ':' || cms_row), 1, 16))::UBIGINT
-        |      & 9223372036854775807::UBIGINT) % 512 AS BIGINT) AS cms_col,
-        |    COUNT(*) AS cnt
-        |  FROM orders CROSS JOIN i GROUP BY 1, 2
-        |),
-        |ip1 AS (
-        |  -- HUGEINT products + DOUBLE estimate mirror the engine's
-        |  -- DECIMAL(38,0)-then-double form (raw 64-bit products
-        |  -- overflow at the 1e12-row regime)
-        |  SELECT a.cms_row, CAST(SUM(CAST(a.cnt AS HUGEINT) * b.cnt) AS HUGEINT) AS ip
-        |  FROM co a JOIN cl b USING (cms_row, cms_col) GROUP BY 1
-        |),
-        |est1 AS (
-        |  SELECT CAST(MIN(COALESCE(ip, 0)) AS DOUBLE) AS est_size
-        |  FROM i LEFT JOIN ip1 USING (cms_row)
-        |),
-        |ex1 AS (
-        |  SELECT COUNT(*) AS exact_size FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-        |),
-        |ip2 AS (
-        |  SELECT a.cms_row, CAST(SUM(CAST(a.cnt AS HUGEINT) * b.cnt) AS HUGEINT) AS ip
-        |  FROM cc a JOIN cc b USING (cms_row, cms_col) GROUP BY 1
-        |),
-        |est2 AS (
-        |  SELECT CAST(MIN(COALESCE(ip, 0)) AS DOUBLE) AS est_size
-        |  FROM i LEFT JOIN ip2 USING (cms_row)
-        |),
-        |ex2 AS (
-        |  SELECT CAST(SUM(c * c) AS BIGINT) AS exact_size
-        |  FROM (SELECT COUNT(*) AS c FROM orders GROUP BY o_custkey)
-        |)
-        |SELECT * FROM (
-        |  SELECT 'orders_lineitem_orderkey' AS rel, est1.est_size, ex1.exact_size
-        |  FROM est1 CROSS JOIN ex1
-        |  UNION ALL
-        |  SELECT 'orders_self_custkey', est2.est_size, ex2.exact_size
-        |  FROM est2 CROSS JOIN ex2
-        |) ORDER BY rel""".stripMargin,
-    "q_sketch_heavy_group" ->
-      s"""WITH keyed AS (
-        |  SELECT o_orderpriority,
-        |    CASE WHEN o_orderkey % 4 = 0 THEN 'hot_' || (o_orderkey % 3)
-        |         ELSE 'cold_' || o_custkey END AS key
-        |  FROM orders
-        |), t AS (
-        |  SELECT o_orderpriority, COUNT(*) AS total FROM keyed GROUP BY 1
-        |), c AS (
-        |  SELECT o_orderpriority, key, COUNT(*) AS cnt
-        |  FROM keyed GROUP BY 1, 2
-        |)
-        |SELECT c.o_orderpriority, c.key, c.cnt,
-        |  ${graft.functions.Num.portableRound6Sql("c.cnt::DOUBLE / t.total")} AS share
-        |FROM c JOIN t USING (o_orderpriority)
-        |-- CAST AS DOUBLE: a bare 0.03 parses as DECIMAL and computes
-        |-- total*0.03 EXACTLY, while the Spark side multiplies by the
-        |-- double 0.03 (= 0.029999...96) — a count sitting exactly on
-        |-- the share boundary would pass one engine and fail the other
-        |WHERE c.cnt > t.total * CAST(0.03 AS DOUBLE)
-        |ORDER BY o_orderpriority, key""".stripMargin,
-    "q_fn_csv" ->
-      """SELECT o_orderkey, o_orderkey AS k, o_orderstatus AS status,
-        |  o_totalprice AS total, o_orderdate::DATE AS odate
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-    "q_sketch_heavy" ->
-      s"""WITH keyed AS (
-        |  SELECT CASE WHEN o_orderkey % 4 = 0 THEN 'hot_' || (o_orderkey % 3)
-        |              ELSE 'cold_' || o_custkey END AS key
-        |  FROM orders
-        |), t AS (SELECT COUNT(*) AS total FROM keyed),
-        |c AS (SELECT key, COUNT(*) AS cnt FROM keyed GROUP BY 1)
-        |SELECT key, cnt, ${graft.functions.Num.portableRound6Sql(
-            "cnt::DOUBLE / total")} AS share
-        |FROM c CROSS JOIN t
-        |-- CAST AS DOUBLE: lockstep with the Spark side's double
-        |-- threshold (see q_sketch_heavy_group's note)
-        |WHERE cnt > total * CAST(0.02 AS DOUBLE)
-        |ORDER BY key""".stripMargin,
-    // avg_val rounds through the portableRound6 fragment (lockstep
-    // with Profile's Spark side): a 6dp-decimal sum over the row count
-    // is the .5e-6 boundary class where built-in ROUNDs tie-diverge
-    "q_profile_stats" ->
-      s"""SELECT col_name, n_rows, n_null, min_val, max_val,
-        |  ${graft.functions.Num.portableRound6Sql("av")} AS avg_val
-        |FROM (
-        |  SELECT 'l_discount' AS col_name, COUNT(*) AS n_rows,
-        |    COUNT(*) - COUNT(l_discount) AS n_null,
-        |    ROUND(MIN(l_discount), 6) AS min_val,
-        |    ROUND(MAX(l_discount), 6) AS max_val,
-        |    CAST(SUM(CAST(l_discount AS DECIMAL(28,6))) AS DOUBLE)
-        |      / COUNT(l_discount) AS av
-        |  FROM lineitem
-        |  UNION ALL
-        |  SELECT 'l_extendedprice', COUNT(*), COUNT(*) - COUNT(l_extendedprice),
-        |    ROUND(MIN(l_extendedprice), 6), ROUND(MAX(l_extendedprice), 6),
-        |    CAST(SUM(CAST(l_extendedprice AS DECIMAL(28,6))) AS DOUBLE)
-        |      / COUNT(l_extendedprice)
-        |  FROM lineitem
-        |  UNION ALL
-        |  SELECT 'l_quantity', COUNT(*), COUNT(*) - COUNT(l_quantity),
-        |    ROUND(MIN(l_quantity), 6), ROUND(MAX(l_quantity), 6),
-        |    CAST(SUM(CAST(l_quantity AS DECIMAL(28,6))) AS DOUBLE)
-        |      / COUNT(l_quantity)
-        |  FROM lineitem
-        |) ORDER BY col_name""".stripMargin,
-    "q_diag_bloomfpr" ->
-      """WITH dimk AS (
-        |  SELECT DISTINCT c_custkey AS key FROM customer
-        |  WHERE c_mktsegment = 'BUILDING'
-        |), setbits AS (
-        |  SELECT DISTINCT
-        |    CAST(((('0x' || substr(md5(CAST(key AS VARCHAR) || ':' || i), 1, 16))
-        |      ::UBIGINT & 9223372036854775807::UBIGINT) % 2048) AS BIGINT) AS pos
-        |  FROM dimk CROSS JOIN range(4) r(i)
-        |), probes AS (
-        |  SELECT DISTINCT o_custkey AS key FROM orders
-        |), ppos AS (
-        |  SELECT key,
-        |    CAST(((('0x' || substr(md5(CAST(key AS VARCHAR) || ':' || i), 1, 16))
-        |      ::UBIGINT & 9223372036854775807::UBIGINT) % 2048) AS BIGINT) AS pos
-        |  FROM probes CROSS JOIN range(4) r(i)
-        |), passes AS (
-        |  SELECT p.key,
-        |    MIN(CASE WHEN sb.pos IS NULL THEN 0 ELSE 1 END) AS pass
-        |  FROM ppos p LEFT JOIN setbits sb USING (pos)
-        |  GROUP BY p.key
-        |), scored AS (
-        |  SELECT ps.pass,
-        |    CASE WHEN d.key IS NULL THEN 0 ELSE 1 END AS truth
-        |  FROM passes ps LEFT JOIN dimk d USING (key)
-        |)
-        |SELECT CAST(COUNT(*) AS BIGINT) AS n_probes,
-        |  CAST(SUM(truth) AS BIGINT) AS n_true,
-        |  CAST(SUM(pass) AS BIGINT) AS n_pass,
-        |  CAST(SUM(CASE WHEN pass = 1 AND truth = 0 THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_fp,
-        |  ROUND(SUM(CASE WHEN pass = 1 AND truth = 0 THEN 1 ELSE 0 END)::DOUBLE
-        |    / SUM(CASE WHEN truth = 0 THEN 1 ELSE 0 END), 6) AS fpr
-        |FROM scored""".stripMargin,
-    "q_profile_psi" ->
-      """WITH refv AS (
-        |  SELECT CAST(o_totalprice AS DOUBLE) AS x FROM orders
-        |  WHERE o_orderdate < DATE '1998-01-01' AND o_totalprice IS NOT NULL
-        |), curv AS (
-        |  SELECT CAST(o_totalprice AS DOUBLE) AS x FROM orders
-        |  WHERE o_orderdate >= DATE '1998-01-01' AND o_totalprice IS NOT NULL
-        |), q AS (
-        |  SELECT quantile_cont(x,
-        |    [0.1, 0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9]) AS cuts
-        |  FROM refv
-        |), ca AS (
-        |  SELECT bin, COUNT(*) AS c FROM (
-        |    SELECT CAST(len(list_filter(q.cuts, c -> r.x > c)) AS INT) AS bin
-        |    FROM refv r CROSS JOIN q) GROUP BY bin
-        |), cb AS (
-        |  SELECT bin, COUNT(*) AS c FROM (
-        |    SELECT CAST(len(list_filter(q.cuts, c -> r.x > c)) AS INT) AS bin
-        |    FROM curv r CROSS JOIN q) GROUP BY bin
-        |), spine AS (
-        |  SELECT CAST(unnest(range(10)) AS INT) AS bin
-        |), cells AS (
-        |  SELECT s.bin, COALESCE(ca.c, 0) AS cnt_a, COALESCE(cb.c, 0) AS cnt_b
-        |  FROM spine s LEFT JOIN ca ON ca.bin = s.bin
-        |  LEFT JOIN cb ON cb.bin = s.bin
-        |), t AS (
-        |  SELECT bin, na, nb,
-        |    greatest(cnt_a::DOUBLE / na, 0.5 / na) AS pa,
-        |    greatest(cnt_b::DOUBLE / nb, 0.5 / nb) AS pb
-        |  FROM (SELECT bin, cnt_a, cnt_b,
-        |    SUM(cnt_a) OVER () AS na, SUM(cnt_b) OVER () AS nb FROM cells)
-        |), tt AS (
-        |  SELECT bin, na, nb, (pb - pa) * ln(pb / pa) AS term FROM t
-        |)
-        |SELECT ROUND(list_sum(list(term ORDER BY bin)), 6) AS psi,
-        |  CAST(MAX(na) AS BIGINT) AS n_ref,
-        |  CAST(MAX(nb) AS BIGINT) AS n_cur,
-        |  CAST(COUNT(*) AS BIGINT) AS n_bins
-        |FROM tt""".stripMargin,
-    "q_profile_ks" ->
-      s"""WITH t AS (
-        |  SELECT CAST(l_extendedprice AS DOUBLE) AS x,
-        |    CASE WHEN l_returnflag = 'A' THEN 1 ELSE 0 END AS a,
-        |    CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END AS b
-        |  FROM lineitem
-        |  WHERE l_returnflag IN ('A', 'R') AND l_extendedprice IS NOT NULL
-        |), pv AS (
-        |  SELECT x, SUM(a) AS ca, SUM(b) AS cb FROM t GROUP BY x
-        |), st AS (
-        |  SELECT x,
-        |    SUM(ca) OVER (ORDER BY x
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS fa,
-        |    SUM(cb) OVER (ORDER BY x
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS fb,
-        |    SUM(ca) OVER () AS na,
-        |    SUM(cb) OVER () AS nb
-        |  FROM pv
-        |), g AS (
-        |  SELECT x, abs(fa::DOUBLE / na - fb::DOUBLE / nb) AS gap, na, nb
-        |  FROM st
-        |)
-        |SELECT ${graft.functions.Num.portableRound6Sql(
-            "(SELECT MAX(gap) FROM g)")} AS ks_stat,
-        |  (SELECT x FROM g WHERE gap = (SELECT MAX(gap) FROM g)
-        |   ORDER BY x LIMIT 1) AS at_value,
-        |  CAST((SELECT MAX(na) FROM g) AS BIGINT) AS n_a,
-        |  CAST((SELECT MAX(nb) FROM g) AS BIGINT) AS n_b""".stripMargin,
-    "q_profile_mi" ->
-      """WITH c AS (
-        |  SELECT CAST(c_mktsegment AS VARCHAR) AS x,
-        |    CAST(c_nationkey AS VARCHAR) AS y, COUNT(*) AS cnt
-        |  FROM customer
-        |  WHERE c_mktsegment IS NOT NULL AND c_nationkey IS NOT NULL
-        |  GROUP BY 1, 2
-        |), m AS (
-        |  SELECT x, y, cnt,
-        |    SUM(cnt) OVER (PARTITION BY x) AS cx,
-        |    SUM(cnt) OVER (PARTITION BY y) AS cy,
-        |    SUM(cnt) OVER () AS n
-        |  FROM c
-        |), t AS (
-        |  SELECT x, y, n,
-        |    (cnt::DOUBLE / n) * ln((cnt::DOUBLE * n) / (cx::DOUBLE * cy::DOUBLE))
-        |      AS term
-        |  FROM m
-        |)
-        |SELECT ROUND(list_sum(list(term ORDER BY x, y)), 6) AS mi,
-        |  CAST(MAX(n) AS BIGINT) AS n_rows,
-        |  CAST(COUNT(*) AS BIGINT) AS n_cells
-        |FROM t""".stripMargin,
-    "q_profile_jsd" ->
-      """WITH t AS (
-        |  SELECT event_type AS c,
-        |    CASE WHEN ts < TIMESTAMP '2024-01-16 00:00:00'
-        |      THEN 1 ELSE 0 END AS a,
-        |    CASE WHEN ts >= TIMESTAMP '2024-01-16 00:00:00'
-        |      THEN 1 ELSE 0 END AS b
-        |  FROM events WHERE event_type IS NOT NULL
-        |), pc AS (
-        |  SELECT c, SUM(a) AS ca, SUM(b) AS cb FROM t GROUP BY c
-        |), m AS (
-        |  SELECT c, ca, cb,
-        |    SUM(ca) OVER () AS na, SUM(cb) OVER () AS nb
-        |  FROM pc
-        |), tm AS (
-        |  SELECT c, na, nb,
-        |    (CASE WHEN ca > 0 THEN (ca::DOUBLE / na::DOUBLE)
-        |        * ln((ca::DOUBLE / na::DOUBLE)
-        |          / (((ca::DOUBLE / na::DOUBLE)
-        |            + (cb::DOUBLE / nb::DOUBLE)) / 2.0))
-        |      ELSE 0.0 END) / 2.0
-        |    + (CASE WHEN cb > 0 THEN (cb::DOUBLE / nb::DOUBLE)
-        |        * ln((cb::DOUBLE / nb::DOUBLE)
-        |          / (((ca::DOUBLE / na::DOUBLE)
-        |            + (cb::DOUBLE / nb::DOUBLE)) / 2.0))
-        |      ELSE 0.0 END) / 2.0 AS term
-        |  FROM m
-        |)
-        |SELECT ROUND(list_sum(list(term ORDER BY c)), 6) AS jsd_nats,
-        |  ROUND(list_sum(list(term ORDER BY c)) / 0.6931471805599453, 6)
-        |    AS jsd_bits,
-        |  CAST(MAX(na) AS BIGINT) AS n_a,
-        |  CAST(MAX(nb) AS BIGINT) AS n_b,
-        |  CAST(COUNT(*) AS BIGINT) AS n_cats
-        |FROM tm""".stripMargin,
-    "q_profile_ols" ->
-      """WITH d AS (
-        |  SELECT day(ts) AS x, COUNT(*) AS y FROM events GROUP BY 1
-        |), sc AS (
-        |  SELECT CAST(ROUND(CAST(x AS DOUBLE) * 100) AS HUGEINT) AS xs,
-        |    CAST(ROUND(CAST(y AS DOUBLE) * 100) AS HUGEINT) AS ys
-        |  FROM d WHERE x IS NOT NULL AND y IS NOT NULL
-        |), s AS (
-        |  SELECT CAST(COUNT(*) AS HUGEINT) AS n,
-        |    SUM(xs) AS sx, SUM(ys) AS sy,
-        |    SUM(xs * xs) AS sxx, SUM(xs * ys) AS sxy, SUM(ys * ys) AS syy
-        |  FROM sc
-        |), f AS (
-        |  SELECT n,
-        |    CAST(n * sxy - sx * sy AS DOUBLE) AS num,
-        |    CAST(n * sxx - sx * sx AS DOUBLE) AS vx,
-        |    CAST(n * syy - sy * sy AS DOUBLE) AS vy,
-        |    CAST(sx AS DOUBLE) AS sxd, CAST(sy AS DOUBLE) AS syd
-        |  FROM s
-        |)
-        |SELECT CAST(n AS BIGINT) AS n,
-        |  ROUND(num / vx, 6) AS slope,
-        |  ROUND((syd - (num / vx) * sxd) / CAST(n AS DOUBLE) / 100.0, 6)
-        |    AS intercept,
-        |  ROUND((num / (sqrt(vx) * sqrt(vy)))
-        |    * (num / (sqrt(vx) * sqrt(vy))), 6) AS r2
-        |FROM f""".stripMargin,
-    "q_funnel_latency" ->
-      """WITH s1 AS (
-        |  SELECT user_id, MIN(ts) AS t_1 FROM events
-        |  WHERE event_type = 'signup' GROUP BY user_id
-        |), s2 AS (
-        |  SELECT s1.user_id, s1.t_1, MIN(e.ts) AS t_2
-        |  FROM s1 LEFT JOIN events e
-        |    ON e.user_id = s1.user_id AND e.event_type = 'view' AND e.ts > s1.t_1
-        |  GROUP BY s1.user_id, s1.t_1
-        |), s3 AS (
-        |  SELECT s2.user_id, s2.t_1, s2.t_2, MIN(e.ts) AS t_3
-        |  FROM s2 LEFT JOIN events e
-        |    ON e.user_id = s2.user_id AND e.event_type = 'click' AND e.ts > s2.t_2
-        |  GROUP BY s2.user_id, s2.t_1, s2.t_2
-        |), s4 AS (
-        |  SELECT s3.user_id, s3.t_1, s3.t_2, s3.t_3, MIN(e.ts) AS t_4
-        |  FROM s3 LEFT JOIN events e
-        |    ON e.user_id = s3.user_id AND e.event_type = 'purchase' AND e.ts > s3.t_3
-        |  GROUP BY s3.user_id, s3.t_1, s3.t_2, s3.t_3
-        |)
-        |SELECT CAST(COUNT(*) AS BIGINT) AS n_entered,
-        |  CAST(COUNT(t_2) AS BIGINT) AS n_step2,
-        |  CAST(COUNT(t_4) AS BIGINT) AS n_converted,
-        |  ROUND(quantile_cont(CAST(epoch_us(t_2) - epoch_us(t_1) AS DOUBLE),
-        |    0.5), 4) AS p50_step2_us,
-        |  ROUND(quantile_cont(CAST(epoch_us(t_4) - epoch_us(t_1) AS DOUBLE),
-        |    0.5), 4) AS p50_convert_us,
-        |  ROUND(quantile_cont(CAST(epoch_us(t_4) - epoch_us(t_1) AS DOUBLE),
-        |    0.9), 4) AS p90_convert_us
-        |FROM s4""".stripMargin,
-    "q_profile_hist2d" ->
-      """WITH w AS (
-        |  SELECT (CAST(51.0 AS DOUBLE) - 1.0) / 10 AS wx,
-        |    (CAST(0.11 AS DOUBLE) - 0.0) / 11 AS wy
-        |), c AS (
-        |  SELECT
-        |    CAST(least(greatest(floor((CAST(l_quantity AS DOUBLE) - 1.0)
-        |      / w.wx), 0), 9) AS BIGINT) AS bucket_x,
-        |    CAST(least(greatest(floor((CAST(l_discount AS DOUBLE) - 0.0)
-        |      / w.wy), 0), 10) AS BIGINT) AS bucket_y
-        |  FROM lineitem CROSS JOIN w
-        |  WHERE l_quantity IS NOT NULL AND l_discount IS NOT NULL
-        |), g AS (
-        |  SELECT bucket_x, bucket_y, COUNT(*) AS cnt
-        |  FROM c GROUP BY 1, 2
-        |), spine AS (
-        |  SELECT CAST(x.i AS BIGINT) AS bucket_x, CAST(y.i AS BIGINT)
-        |    AS bucket_y
-        |  FROM (SELECT unnest(range(10)) AS i) x
-        |  CROSS JOIN (SELECT unnest(range(11)) AS i) y
-        |)
-        |SELECT s.bucket_x, s.bucket_y,
-        |  ROUND(1.0 + s.bucket_x * w.wx, 6) AS x_lo,
-        |  ROUND(0.0 + s.bucket_y * w.wy, 6) AS y_lo,
-        |  COALESCE(g.cnt, 0) AS cnt
-        |FROM spine s CROSS JOIN w
-        |LEFT JOIN g USING (bucket_x, bucket_y)
-        |ORDER BY bucket_x, bucket_y""".stripMargin,
-    "q_profile_gini" ->
-      s"""WITH t AS (
-        |  SELECT CAST(source AS VARCHAR) AS g,
-        |    SUM(CAST(n_chars AS HUGEINT)) AS x
-        |  FROM documents WHERE source IS NOT NULL GROUP BY 1
-        |), r AS (
-        |  SELECT x, ROW_NUMBER() OVER (ORDER BY x, g) AS i FROM t
-        |), s AS (
-        |  SELECT CAST(COUNT(*) AS HUGEINT) AS n, SUM(x) AS sx,
-        |    SUM(i * x) AS six, SUM(x * x) AS sxx, MAX(x) AS mx
-        |  FROM r
-        |)
-        |SELECT CAST(n AS BIGINT) AS n_groups, CAST(sx AS BIGINT) AS total,
-        |  ${graft.functions.Num.portableRound6Sql(
-            "CAST(2 * six - (n + 1) * sx AS DOUBLE) / CAST(n * sx AS DOUBLE)")} AS gini,
-        |  ${graft.functions.Num.portableRound6Sql(
-            "CAST(sxx AS DOUBLE) / CAST(sx * sx AS DOUBLE)")} AS hhi,
-        |  ${graft.functions.Num.portableRound6Sql(
-            "CAST(mx AS DOUBLE) / CAST(sx AS DOUBLE)")} AS top_share
-        |FROM s""".stripMargin,
-    "q_profile_kanon" ->
-      s"""WITH g AS (
-        |  SELECT c_nationkey, c_mktsegment, COUNT(*) AS sz
-        |  FROM customer GROUP BY 1, 2
-        |)
-        |SELECT CAST(SUM(sz) AS BIGINT) AS n_rows,
-        |  CAST(COUNT(*) AS BIGINT) AS n_groups,
-        |  CAST(MIN(sz) AS BIGINT) AS min_group,
-        |  CAST(SUM(CASE WHEN sz < 5 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_small_groups,
-        |  CAST(SUM(CASE WHEN sz < 5 THEN sz ELSE 0 END) AS BIGINT)
-        |    AS rows_at_risk,
-        |  ${graft.functions.Num.portableRound6Sql(
-            "CAST(SUM(CASE WHEN sz < 5 THEN sz ELSE 0 END) AS DOUBLE)" +
-              " / CAST(SUM(sz) AS DOUBLE)")} AS risk_share
-        |FROM g""".stripMargin,
-    "q_profile_chi2" ->
-      """WITH c AS (
-        |  SELECT CAST(o_orderpriority AS VARCHAR) AS x,
-        |    CAST(o_orderstatus AS VARCHAR) AS y,
-        |    CAST(COUNT(*) AS HUGEINT) AS cnt
-        |  FROM orders
-        |  WHERE o_orderpriority IS NOT NULL AND o_orderstatus IS NOT NULL
-        |  GROUP BY 1, 2
-        |), m AS (
-        |  SELECT x, y, cnt,
-        |    SUM(cnt) OVER (PARTITION BY x) AS cx,
-        |    SUM(cnt) OVER (PARTITION BY y) AS cy,
-        |    SUM(cnt) OVER () AS n
-        |  FROM c
-        |), t AS (
-        |  SELECT x, y, n,
-        |    CAST(n * cnt - cx * cy AS DOUBLE)
-        |      * CAST(n * cnt - cx * cy AS DOUBLE)
-        |      / CAST(n * cx * cy AS DOUBLE) AS term
-        |  FROM m
-        |), agg AS (
-        |  SELECT list_sum(list(term ORDER BY x, y)) AS chi2r,
-        |    CAST(MAX(n) AS BIGINT) AS n_rows,
-        |    CAST(COUNT(*) AS BIGINT) AS n_cells,
-        |    COUNT(DISTINCT x) AS nx, COUNT(DISTINCT y) AS ny
-        |  FROM t
-        |)
-        |SELECT ROUND(chi2r, 6) AS chi2,
-        |  CAST((nx - 1) * (ny - 1) AS BIGINT) AS dof,
-        |  ROUND(sqrt(chi2r
-        |    / (CAST(n_rows AS DOUBLE) * CAST(least(nx - 1, ny - 1) AS DOUBLE))),
-        |    6) AS cramers_v,
-        |  n_rows, n_cells
-        |FROM agg""".stripMargin,
-    "q_profile_corr" ->
-      """WITH c AS (
-        |  SELECT CAST(ROUND(l_quantity * 100) AS HUGEINT) AS q,
-        |    CAST(ROUND(l_extendedprice * 100) AS HUGEINT) AS p,
-        |    CAST(ROUND(l_discount * 100) AS HUGEINT) AS d
-        |  FROM lineitem
-        |  WHERE l_quantity IS NOT NULL AND l_extendedprice IS NOT NULL
-        |    AND l_discount IS NOT NULL
-        |), s AS (
-        |  SELECT CAST(COUNT(*) AS HUGEINT) AS n,
-        |    SUM(q) AS sq, SUM(q*q) AS ssq,
-        |    SUM(p) AS sp, SUM(p*p) AS ssp,
-        |    SUM(d) AS sd, SUM(d*d) AS ssd,
-        |    SUM(q*p) AS sqp, SUM(q*d) AS sqd, SUM(p*d) AS spd
-        |  FROM c
-        |)
-        |SELECT CAST(n AS BIGINT) AS n,
-        |  ROUND(CAST(n*sqp - sq*sp AS DOUBLE)
-        |    / (sqrt(CAST(n*ssq - sq*sq AS DOUBLE))
-        |       * sqrt(CAST(n*ssp - sp*sp AS DOUBLE))), 6)
-        |    AS corr_l_quantity_l_extendedprice,
-        |  ROUND(CAST(n*sqd - sq*sd AS DOUBLE)
-        |    / (sqrt(CAST(n*ssq - sq*sq AS DOUBLE))
-        |       * sqrt(CAST(n*ssd - sd*sd AS DOUBLE))), 6)
-        |    AS corr_l_quantity_l_discount,
-        |  ROUND(CAST(n*spd - sp*sd AS DOUBLE)
-        |    / (sqrt(CAST(n*ssp - sp*sp AS DOUBLE))
-        |       * sqrt(CAST(n*ssd - sd*sd AS DOUBLE))), 6)
-        |    AS corr_l_extendedprice_l_discount
-        |FROM s""".stripMargin,
-    "q_profile_hist" ->
-      """WITH b AS (
-        |  SELECT CAST(LEAST(GREATEST(FLOOR((l_extendedprice - 900.0)
-        |      / ((105000.0 - 900.0) / 20)), 0.0), 19.0) AS BIGINT) AS bucket
-        |  FROM lineitem WHERE l_extendedprice IS NOT NULL
-        |), c AS (
-        |  SELECT bucket, COUNT(*) AS cnt FROM b GROUP BY bucket
-        |)
-        |SELECT r.range AS bucket,
-        | ROUND(900.0 + r.range * ((105000.0 - 900.0) / 20), 6) AS bucket_lo,
-        | ROUND(900.0 + (r.range + 1) * ((105000.0 - 900.0) / 20), 6) AS bucket_hi,
-        | COALESCE(c.cnt, 0) AS cnt
-        |FROM range(20) r LEFT JOIN c ON r.range = c.bucket
-        |ORDER BY bucket""".stripMargin,
-    "q_window_movavg" ->
-      s"""SELECT o_custkey, o_orderdate,
-        | ${graft.functions.Num.portableRoundSql("raw", 4)} AS avg_7d
-        |FROM (
-        |  SELECT o_custkey, o_orderdate,
-        |    CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) OVER w AS DOUBLE)
-        |      / COUNT(*) OVER w AS raw
-        |  FROM orders
-        |  WINDOW w AS (PARTITION BY o_custkey ORDER BY epoch(o_orderdate)
-        |    RANGE BETWEEN 604800 PRECEDING AND CURRENT ROW)
-        |)
-        |ORDER BY o_custkey, o_orderdate, avg_7d""".stripMargin,
-    "q_fn_bitwise" ->
-      """SELECT l_orderkey, l_linenumber,
-        | l_orderkey & 255 AS k_and,
-        | l_orderkey | CAST(l_linenumber AS BIGINT) AS k_or,
-        | xor(l_orderkey, CAST(l_linenumber AS BIGINT)) AS k_xor,
-        | l_linenumber << 3 AS k_shl,
-        | l_orderkey >> 2 AS k_shr
-        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "q_profile_clip" ->
-      """WITH q AS (
-        |  SELECT quantile_cont(l_extendedprice, 0.05) AS lo,
-        |    quantile_cont(l_extendedprice, 0.95) AS hi
-        |  FROM lineitem
-        |)
-        |SELECT l_orderkey, l_linenumber,
-        | ROUND(LEAST(GREATEST(l_extendedprice, q.lo), q.hi), 2) AS clipped_price
-        |FROM lineitem CROSS JOIN q
-        |ORDER BY l_orderkey, l_linenumber, clipped_price""".stripMargin,
-    "q_join_semi" ->
-      """SELECT c_custkey, c_name FROM customer
-        |WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-        |ORDER BY c_custkey""".stripMargin,
-    "q_join_anti" ->
-      """SELECT c_custkey, c_name FROM customer
-        |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey AND o_totalprice > 400.0)
-        |ORDER BY c_custkey""".stripMargin,
-    "q_join_notin" ->
-      """SELECT o_orderkey, ck
-        |FROM (SELECT o_orderkey,
-        |        CASE WHEN o_orderkey % 13 = 0 THEN CAST(NULL AS BIGINT)
-        |             ELSE o_custkey END AS ck
-        |      FROM orders)
-        |WHERE ck NOT IN (SELECT c_custkey FROM customer
-        |                 WHERE c_mktsegment = 'BUILDING')
-        |ORDER BY o_orderkey""".stripMargin,
-    "q_join_theta" ->
-      """SELECT s_suppkey, s_name, COUNT(*) AS n_poorer
-        |FROM supplier JOIN customer
-        | ON s_nationkey = c_nationkey AND s_acctbal > c_acctbal
-        |GROUP BY s_suppkey, s_name ORDER BY s_suppkey""".stripMargin,
-    "q_join_range" ->
-      """SELECT o_orderstatus, COUNT(*) AS n,
-        | CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-        |FROM lineitem JOIN orders
-        | ON l_orderkey = o_orderkey
-        | AND l_shipdate >= o_orderdate
-        | AND l_shipdate < o_orderdate + INTERVAL 90 DAY
-        |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-    // The click side is pre-collapsed per (user_id, ts) to max(value)
-    // in all three as-of oracles: DuckDB's native ASOF JOIN picks an
-    // UNSPECIFIED row among right rows tied on (key, ts) (and the
-    // tolerance oracle's equality re-join would fan out to ALL of
-    // them), while AsOfJoin deterministically carries the greatest
-    // (click_ts, click_value) tuple — equal ts, so max(value).
-    "q_join_asof" ->
-      """SELECT p.event_id, p.user_id, p.ts, p.value,
-        | c.ts AS click_ts, c.value AS click_value
-        |FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-        |ASOF JOIN (SELECT user_id, ts, max(value) AS value FROM events
-        |  WHERE event_type = 'click' GROUP BY user_id, ts) c
-        | ON p.user_id = c.user_id AND p.ts >= c.ts
-        |ORDER BY p.event_id""".stripMargin,
-    "q_join_asof_fwd" ->
-      """SELECT p.event_id, p.user_id, p.ts, p.value,
-        | c.ts AS click_ts, c.value AS click_value
-        |FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-        |ASOF JOIN (SELECT user_id, ts, max(value) AS value FROM events
-        |  WHERE event_type = 'click' GROUP BY user_id, ts) c
-        | ON p.user_id = c.user_id AND p.ts <= c.ts
-        |ORDER BY p.event_id""".stripMargin,
-    "q_join_asof_tol" ->
-      """WITH p AS (SELECT * FROM events WHERE event_type = 'purchase'),
-        |c AS (SELECT user_id, ts, max(value) AS value FROM events
-        |  WHERE event_type = 'click' GROUP BY user_id, ts),
-        |m AS (
-        |  SELECT p.event_id, p.user_id, p.ts, p.value,
-        |    (SELECT max(c.ts) FROM c WHERE c.user_id = p.user_id
-        |      AND c.ts <= p.ts AND p.ts - c.ts <= INTERVAL 2 HOUR) AS click_ts
-        |  FROM p
-        |)
-        |SELECT m.event_id, m.user_id, m.ts, m.value, m.click_ts,
-        | c.value AS click_value
-        |FROM m JOIN c ON c.user_id = m.user_id AND c.ts = m.click_ts
-        |ORDER BY m.event_id""".stripMargin,
-    "q_window_latest" ->
-      """SELECT user_id, event_id, event_type, value, ts FROM (
-        | SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-        | FROM events) t
-        |WHERE rn = 1 ORDER BY user_id""".stripMargin,
-    "q_window_lag" ->
-      """SELECT event_id, user_id, value,
-        | value - LAG(value, 1) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS delta
-        |FROM events ORDER BY event_id""".stripMargin,
-    "q_window_runsum" ->
-      """SELECT event_id, user_id,
-        | CAST(SUM(CAST(value AS DECIMAL(18,2))) OVER (
-        |   PARTITION BY user_id ORDER BY ts, event_id
-        |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS run_sum
-        |FROM events ORDER BY event_id""".stripMargin,
-    "q_window_dist" ->
-      """SELECT c_custkey, c_mktsegment,
-        | CAST(NTILE(4) OVER w AS INT) AS bal_quartile,
-        | PERCENT_RANK() OVER w AS bal_prank,
-        | CUME_DIST() OVER w AS bal_cume
-        |FROM customer
-        |WINDOW w AS (PARTITION BY c_mktsegment ORDER BY c_acctbal, c_custkey)
-        |ORDER BY c_custkey""".stripMargin,
-    "q_topk" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 25""".stripMargin,
-    "q_sort" ->
-      """SELECT c_custkey, c_acctbal, c_mktsegment FROM customer
-        |ORDER BY c_acctbal DESC, c_custkey""".stripMargin,
-    "q_union_missing" ->
-      """SELECT * FROM (
-        |  SELECT c_custkey AS entity_id, c_mktsegment AS segment
-        |  FROM customer
-        |  UNION ALL BY NAME
-        |  SELECT s_suppkey AS entity_id, s_acctbal AS balance
-        |  FROM supplier
-        |)
-        |ORDER BY entity_id, segment NULLS FIRST,
-        |  balance NULLS FIRST""".stripMargin,
-    "q_fn_lateral" ->
-      """WITH w AS (
-        |  SELECT doc_id, string_split(text, ' ') AS w FROM documents
-        |)
-        |SELECT doc_id, CAST(x.i AS INT) AS pos, w[CAST(x.i AS INT) + 1]
-        |  AS tok
-        |FROM w CROSS JOIN (SELECT unnest(range(3)) AS i) x
-        |WHERE x.i < len(w)
-        |ORDER BY doc_id, pos""".stripMargin,
-    "q_union" ->
-      """SELECT c_custkey AS entity_id, c_name AS entity_name, 'customer' AS kind FROM customer
-        |UNION ALL
-        |SELECT s_suppkey AS entity_id, s_name AS entity_name, 'supplier' AS kind FROM supplier
-        |ORDER BY kind, entity_id""".stripMargin,
-    "q_sink_orc" ->
-      """SELECT c_custkey, c_name, CAST(c_acctbal AS DOUBLE) AS c_acctbal,
-        | c_mktsegment
-        |FROM customer ORDER BY c_custkey""".stripMargin,
-    "q_sink_sorted" ->
-      """SELECT o_orderkey, o_custkey, CAST(o_totalprice AS DOUBLE) AS o_totalprice
-        |FROM orders WHERE o_orderkey BETWEEN 1000 AND 5000
-        |ORDER BY o_orderkey""".stripMargin,
-    "q_sink_bucketed" ->
-      """SELECT c_mktsegment,
-        | COUNT(*) AS n_orders,
-        | CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
-        |FROM customer JOIN orders ON c_custkey = o_custkey
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-    "q_sink_partlayout" ->
-      """SELECT o_orderkey, o_orderstatus, CAST(o_totalprice AS DOUBLE) AS o_totalprice
-        |FROM orders WHERE o_orderstatus = 'F'
-        |ORDER BY o_orderkey""".stripMargin,
-    "q_sink_csvtrip" ->
-      """SELECT c_custkey, c_name, CAST(c_acctbal AS DOUBLE) AS c_acctbal,
-        | c_mktsegment
-        |FROM customer WHERE c_mktsegment = 'BUILDING'
-        |ORDER BY c_custkey""".stripMargin,
-    "q_sink_rawjson" ->
-      """SELECT o_orderkey, o_orderstatus,
-        | CAST(o_totalprice AS DOUBLE) AS o_totalprice,
-        | TRUE AS reland_failed
-        |FROM orders WHERE o_orderstatus = 'P'
-        |ORDER BY o_orderkey""".stripMargin,
-    "q_sink_ddl" ->
-      """SELECT n_regionkey, COUNT(*) AS n_nations,
-        | CAST(SUM(n_nationkey) AS BIGINT) AS sum_key,
-        | MIN(n_name) AS first_name
-        |FROM nation GROUP BY n_regionkey ORDER BY n_regionkey""".stripMargin,
-    // Suppliers of nations < 5 were appended TWICE; the CASE weight
-    // replays the double-land against the source table directly.
-    "q_sink_jdbc" ->
-      """SELECT s_nationkey,
-        | CAST(SUM(CASE WHEN s_nationkey < 5 THEN 2 ELSE 1 END) AS BIGINT) AS n_sup,
-        | CAST(SUM(s_suppkey * CASE WHEN s_nationkey < 5 THEN 2 ELSE 1 END) AS BIGINT) AS sum_key,
-        | CAST(CAST(SUM(CAST(s_acctbal AS DECIMAL(12,2)) *
-        |          CASE WHEN s_nationkey < 5 THEN 2 ELSE 1 END) AS DECIMAL(18,2))
-        |      AS DOUBLE) AS sum_bal
-        |FROM supplier GROUP BY s_nationkey ORDER BY s_nationkey""".stripMargin,
-    "q_load_metrics" ->
-      """SELECT COUNT(*) AS n_rows,
-        | COUNT(CASE WHEN o_orderstatus = 'F' THEN 1 END) AS n_f,
-        | CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS DECIMAL(18,2))
-        |      AS DOUBLE) AS sum_price
-        |FROM orders""".stripMargin,
-    "q_meta_stats" ->
-      """SELECT COUNT(*) AS n_rows,
-        | MIN(l_orderkey) AS min_okey, MAX(l_orderkey) AS max_okey,
-        | MIN(l_linenumber) AS min_line, MAX(l_linenumber) AS max_line
-        |FROM lineitem""".stripMargin,
-    "q_pivot" ->
-      """SELECT o_orderpriority,
-        | CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2)))
-        |   FILTER (WHERE o_orderstatus = 'F') AS DOUBLE) AS sum_f,
-        | CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2)))
-        |   FILTER (WHERE o_orderstatus = 'O') AS DOUBLE) AS sum_o,
-        | CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2)))
-        |   FILTER (WHERE o_orderstatus = 'P') AS DOUBLE) AS sum_p
-        |FROM orders GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin,
-    "q_unpivot" ->
-      """WITH w AS (
-        |  SELECT l_returnflag,
-        |    CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-        |    CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
-        |  FROM lineitem GROUP BY l_returnflag
-        |)
-        |SELECT l_returnflag, 'sum_qty' AS metric, sum_qty AS value FROM w
-        |UNION ALL
-        |SELECT l_returnflag, 'sum_price' AS metric, sum_price AS value FROM w
-        |ORDER BY l_returnflag, metric""".stripMargin,
-    "q_window_ntile" ->
-      """WITH t AS (
-        |  SELECT o_orderstatus, CAST(o_totalprice AS DOUBLE) AS p,
-        |    ntile(4) OVER (PARTITION BY o_orderstatus
-        |      ORDER BY CAST(o_totalprice AS DOUBLE) DESC, o_orderkey ASC) AS tile
-        |  FROM orders
-        |)
-        |SELECT o_orderstatus, tile, COUNT(*) AS n,
-        | MIN(p) AS min_price, MAX(p) AS max_price
-        |FROM t GROUP BY o_orderstatus, tile
-        |ORDER BY o_orderstatus, tile""".stripMargin,
-    "q_join_overlap" ->
-      """WITH w AS (
-        |  SELECT o_orderkey AS k,
-        |    datediff('day', DATE '1970-01-01', o_orderdate) AS sd
-        |  FROM orders WHERE o_totalprice > 495000.0
-        |)
-        |SELECT a.k AS key_a, b.k AS key_b,
-        |  least(a.sd + 13, b.sd + 13) - greatest(a.sd, b.sd) + 1 AS overlap_days
-        |FROM w a JOIN w b
-        |  ON a.k < b.k AND a.sd <= b.sd + 13 AND b.sd <= a.sd + 13
-        |ORDER BY key_a, key_b""".stripMargin,
-    "q_ts_gapfill" ->
-      """WITH src AS (
-        |  SELECT user_id, ts, value FROM events
-        |  WHERE event_type = 'purchase' AND user_id IS NOT NULL
-        |), obs AS (
-        |  SELECT user_id,
-        |    -- make_timestamp(micros) builds a NAIVE timestamp: the old
-        |    -- to_timestamp + CAST went through TIMESTAMPTZ and shifted
-        |    -- by the DuckDB connection's TimeZone on any non-UTC host
-        |    make_timestamp(CAST(floor(epoch(ts) / 21600) AS BIGINT)
-        |      * 21600 * 1000000) AS bucket,
-        |    value,
-        |    row_number() OVER (PARTITION BY user_id, floor(epoch(ts) / 21600)
-        |      ORDER BY ts DESC, value DESC) AS rn
-        |  FROM src
-        |), o AS (
-        |  SELECT user_id, bucket, value FROM obs WHERE rn = 1
-        |), span AS (
-        |  SELECT user_id, min(bucket) AS lo, max(bucket) AS hi FROM o GROUP BY user_id
-        |), spine AS (
-        |  SELECT user_id,
-        |    CAST(unnest(generate_series(lo, hi, INTERVAL 21600 SECONDS)) AS TIMESTAMP) AS bucket
-        |  FROM span
-        |)
-        |SELECT s.user_id, s.bucket,
-        |  last_value(o.value IGNORE NULLS) OVER (PARTITION BY s.user_id
-        |    ORDER BY s.bucket
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS value_filled,
-        |  o.value IS NOT NULL AS observed
-        |FROM spine s LEFT JOIN o ON s.user_id = o.user_id AND s.bucket = o.bucket
-        |ORDER BY s.user_id, s.bucket""".stripMargin,
-    "q_graph_reach" ->
-      """WITH RECURSIVE e AS (
-        |  SELECT s_suppkey AS src, (s_suppkey * 7) % 100 AS dst FROM supplier
-        |  UNION
-        |  SELECT s_suppkey, (s_suppkey * 13 + 1) % 100 FROM supplier
-        |), r AS (
-        |  SELECT src, dst, 1 AS hops FROM e
-        |  UNION ALL
-        |  SELECT r.src, e.dst, r.hops + 1
-        |  FROM r JOIN e ON r.dst = e.src WHERE r.hops < 3
-        |)
-        |SELECT src, dst, CAST(MIN(hops) AS BIGINT) AS hops
-        |FROM r GROUP BY src, dst
-        |ORDER BY src, dst""".stripMargin,
-    "q_ts_ohlc" ->
-      """SELECT event_type,
-        | CAST(date_trunc('day', ts) AS TIMESTAMP) AS bar_start,
-        | arg_min(value, lpad(CAST(epoch_us(ts) AS VARCHAR), 20, '0')
-        |   || lpad(CAST(event_id AS VARCHAR), 12, '0')) AS open,
-        | MAX(value) AS high,
-        | MIN(value) AS low,
-        | arg_max(value, lpad(CAST(epoch_us(ts) AS VARCHAR), 20, '0')
-        |   || lpad(CAST(event_id AS VARCHAR), 12, '0')) AS close,
-        | COUNT(*) AS n_events
-        |FROM events
-        |GROUP BY event_type, date_trunc('day', ts)
-        |ORDER BY event_type, bar_start""".stripMargin,
-    "q_ts_interarrival" ->
-      """WITH e AS (
-        |  SELECT user_id,
-        |    epoch_us(ts) AS us,
-        |    LAG(epoch_us(ts)) OVER (PARTITION BY user_id
-        |      ORDER BY ts, event_id) AS prev
-        |  FROM events
-        |), g AS (
-        |  SELECT user_id, us - prev AS gap FROM e WHERE prev IS NOT NULL
-        |)
-        |SELECT user_id, COUNT(*) AS n_gaps,
-        |  MIN(gap) AS min_gap_us, MAX(gap) AS max_gap_us,
-        |  SUM(gap)::DOUBLE / COUNT(*)::DOUBLE AS mean_gap_us
-        |FROM g GROUP BY user_id ORDER BY user_id""".stripMargin,
-    // user_id IS NOT NULL replays GapFill.ewma's keyless-series rule —
-    // the oracle's NULL-user partition would otherwise emit a phantom
-    // smoothed series Spark never produces (q_ts_gapfill already has it)
-    "q_ts_ewma" ->
-      """WITH RECURSIVE ranked AS (
-        |  SELECT user_id, ts, value,
-        |    ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts, value) AS rn
-        |  FROM events
-        |  WHERE event_type = 'purchase' AND user_id IS NOT NULL
-        |    AND ts IS NOT NULL AND value IS NOT NULL
-        |), r AS (
-        |  SELECT user_id, ts, rn, value::DOUBLE AS ewma FROM ranked WHERE rn = 1
-        |  UNION ALL
-        |  SELECT k.user_id, k.ts, k.rn,
-        |    0.25::DOUBLE * k.value + 0.75::DOUBLE * r.ewma
-        |  FROM ranked k JOIN r ON k.user_id = r.user_id AND k.rn = r.rn + 1
-        |)
-        |SELECT user_id, ts, ewma FROM r
-        |ORDER BY user_id, ts, ewma""".stripMargin,
-    "q_ts_islands" ->
-      """WITH src AS (
-        |  SELECT l_suppkey, l_shipdate::DATE AS s,
-        |    l_shipdate::DATE + (l_quantity * 3)::INT AS e
-        |  FROM lineitem WHERE l_quantity <= 4
-        |), w AS (
-        |  SELECT l_suppkey, s, e,
-        |    MAX(e) OVER (PARTITION BY l_suppkey ORDER BY s, e
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pm
-        |  FROM src
-        |), isl AS (
-        |  SELECT l_suppkey, s, e,
-        |    SUM(CASE WHEN pm IS NULL OR s > pm THEN 1 ELSE 0 END)
-        |      OVER (PARTITION BY l_suppkey ORDER BY s, e
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island
-        |  FROM w
-        |)
-        |SELECT l_suppkey AS suppkey, MIN(s) AS island_start,
-        |  MAX(e) AS island_end, COUNT(*) AS n_merged
-        |FROM isl GROUP BY l_suppkey, island
-        |ORDER BY suppkey, island_start""".stripMargin,
-    "q_sink_zorder" ->
-      """SELECT o_orderkey, o_custkey, CAST(o_totalprice AS DOUBLE) AS o_totalprice
-        |FROM orders
-        |WHERE o_custkey BETWEEN 100 AND 400
-        |  AND CAST(o_totalprice AS DOUBLE) BETWEEN 50000.0 AND 250000.0
-        |ORDER BY o_orderkey""".stripMargin,
-    "q_topk_groups" ->
-      """SELECT o_orderpriority, o_orderkey, o_totalprice FROM (
-        |  SELECT o_orderpriority, o_orderkey,
-        |    CAST(o_totalprice AS DOUBLE) AS o_totalprice,
-        |    row_number() OVER (PARTITION BY o_orderpriority
-        |      ORDER BY CAST(o_totalprice AS DOUBLE) DESC, o_orderkey ASC) AS rn
-        |  FROM orders
-        |) WHERE rn <= 3
-        |ORDER BY o_orderpriority, o_totalprice DESC, o_orderkey""".stripMargin,
-    "q_sink_dynpart" ->
-      """SELECT o_orderkey, o_orderstatus,
-        | ROUND(CASE WHEN o_orderstatus = 'O'
-        |   THEN CAST(o_totalprice AS DOUBLE) + 1.0
-        |   ELSE CAST(o_totalprice AS DOUBLE) END, 2) AS price
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-    "q_sink_evolve" ->
-      """SELECT o_orderkey, CAST(o_totalprice AS DOUBLE) AS o_totalprice,
-        | CASE WHEN o_orderkey % 2 = 0 THEN NULL ELSE o_orderstatus END
-        |   AS o_orderstatus
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-    "q_sink_nested" ->
-      """SELECT o_orderkey, o_orderstatus AS status,
-        | CAST(o_totalprice AS DOUBLE) AS price,
-        | o_custkey AS k1, o_orderkey % 100 AS k2, 2 AS n_keys
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-    "q_sink_compact" ->
-      """SELECT l_orderkey, l_linenumber, CAST(l_quantity AS DOUBLE) AS l_quantity
-        |FROM lineitem
-        |ORDER BY l_orderkey, l_linenumber, l_quantity""".stripMargin,
-    "q_upsert" ->
+    QuerySpec("q_upsert",
       """WITH upd AS (
         |  SELECT c_custkey, c_name, CAST(c_acctbal AS DOUBLE) + 100.0 AS c_acctbal
         |  FROM customer WHERE c_custkey % 7 = 0
@@ -3767,8 +3322,32 @@ object RelationalQueries {
         |    WHERE u.c_custkey IS NOT DISTINCT FROM c.c_custkey)
         |  UNION ALL
         |  SELECT * FROM upd
-        |) ORDER BY c_custkey""".stripMargin,
-    "q_geo_nearest" ->
+        |) ORDER BY c_custkey""".stripMargin) { (s, dir) =>
+      val cust = table(s, dir, "customer").select(
+        col("c_custkey"), col("c_name"), col("c_acctbal").cast("double").as("c_acctbal"))
+      val changed = cust.filter(col("c_custkey") % 7 === 0)
+        .withColumn("c_acctbal", col("c_acctbal") + 100.0)
+      val fresh = cust.filter(col("c_custkey") % 97 === 0)
+        .select((col("c_custkey") + 1000000L).as("c_custkey"),
+          lit("NEW").as("c_name"), lit(0.0).as("c_acctbal"))
+      Upsert.upsert(cust, changed.unionByName(fresh), Seq("c_custkey"))
+        .select(col("c_custkey"), col("c_name"),
+          round(col("c_acctbal"), 2).as("c_acctbal"))
+        .orderBy(col("c_custkey"))
+    },
+
+    // Full CDC apply: a multi-version change feed (update-then-update,
+    // deletes, inserts) resolves to latest-per-key and lands on the
+    // base in one anti join + union — deletes remove, the second
+    // update wins, unchanged rows pass through.
+    // Spatial nearest-neighbor as a grid-cell equi-join: probes
+    // explode to their 3x3 cell neighborhood (x9 on the SMALL side),
+    // candidates keep one home cell, exact squared-Euclidean verify +
+    // per-probe argmin — the cross-join-free spatial join. Coordinates
+    // are key-derived dyadic doubles (TPC-H has no geometry), so every
+    // distance is IEEE-exact and the naive cross-join oracle matches
+    // bit-for-bit.
+    QuerySpec("q_geo_nearest",
       """WITH cust AS (
         |  SELECT c_custkey,
         |    (c_custkey % 100)::DOUBLE + 0.25 AS px,
@@ -3790,8 +3369,26 @@ object RelationalQueries {
         |  FROM pairs WHERE dist_sq <= 64.0
         |)
         |SELECT c_custkey, px, py, s_suppkey, dist_sq FROM r WHERE rn = 1
-        |ORDER BY c_custkey""".stripMargin,
-    "q_diff_snapshots" ->
+        |ORDER BY c_custkey""".stripMargin) { (s, dir) =>
+      val cust = table(s, dir, "customer").select(col("c_custkey"),
+        ((col("c_custkey") % 100).cast("double") + lit(0.25)).as("px"),
+        (((col("c_custkey") * 7) % 100).cast("double") + lit(0.75)).as("py"))
+      val sup = table(s, dir, "supplier").select(col("s_suppkey"),
+        ((col("s_suppkey") % 10).cast("double") * lit(10.0) + lit(0.5)).as("sx"),
+        (floor(col("s_suppkey").cast("double") / lit(10.0)) * lit(10.0)
+          + lit(0.5)).as("sy"))
+      Geo.nearestWithinRadius(cust, "c_custkey", "px", "py",
+          sup, "s_suppkey", "sx", "sy", radius = 8.0)
+        .orderBy(col("c_custkey"))
+    },
+
+    // Snapshot diff — CDC extraction when no change feed exists: two
+    // states of the orders table (deterministic planted deletes /
+    // updates / inserts) diff to one row per CHANGED key; the
+    // unchanged majority dies in a pipelined null-safe struct compare
+    // right after the single full-outer key join, so cost tracks the
+    // change volume, not the table (Upsert.diffSnapshots).
+    QuerySpec("q_diff_snapshots",
       """WITH bt AS (
         |  SELECT o_orderkey, o_custkey, o_totalprice, o_orderstatus FROM orders
         |), at AS (
@@ -3822,8 +3419,24 @@ object RelationalQueries {
         |  AND bc IS NOT DISTINCT FROM ac
         |  AND bp IS NOT DISTINCT FROM ap
         |  AND bst IS NOT DISTINCT FROM ast)
-        |ORDER BY o_orderkey, change_type""".stripMargin,
-    "q_cdc_apply" ->
+        |ORDER BY o_orderkey, change_type""".stripMargin) { (s, dir) =>
+      val before = table(s, dir, "orders")
+        .select(col("o_orderkey"), col("o_custkey"),
+          col("o_totalprice"), col("o_orderstatus"))
+      val mutated = before.filter(col("o_orderkey") % 97 =!= 0)
+        .withColumn("o_totalprice",
+          when(col("o_orderkey") % 5 === 0, col("o_totalprice") + lit(1.0))
+            .otherwise(col("o_totalprice")))
+      val inserts = before.filter(col("o_orderkey") % 101 === 0)
+        .select((col("o_orderkey") + lit(10000000L)).as("o_orderkey"),
+          col("o_custkey"), col("o_totalprice"),
+          lit("N").as("o_orderstatus"))
+      Upsert.diffSnapshots(before, mutated.unionByName(inserts),
+          Seq("o_orderkey"))
+        .orderBy(col("o_orderkey"), col("change_type"))
+    },
+
+    QuerySpec("q_cdc_apply",
       """WITH ch AS (
         |  SELECT c_custkey, c_name, CAST(c_acctbal AS DOUBLE) AS c_acctbal,
         |    1 AS ts, 'D' AS op FROM customer WHERE c_custkey % 10 = 0
@@ -3859,8 +3472,33 @@ object RelationalQueries {
         |    WHERE l.c_custkey IS NOT DISTINCT FROM c.c_custkey)
         |  UNION ALL
         |  SELECT c_custkey, c_name, c_acctbal FROM latest WHERE op != 'D'
-        |) ORDER BY c_custkey""".stripMargin,
-    "q_profile_mad" ->
+        |) ORDER BY c_custkey""".stripMargin) { (s, dir) =>
+      val cust = table(s, dir, "customer").select(
+        col("c_custkey"), col("c_name"),
+        col("c_acctbal").cast("double").as("c_acctbal"))
+      def ch(m: Int, bal: org.apache.spark.sql.Column, ts: Long, op: String) =
+        cust.filter(col("c_custkey") % 10 === m)
+          .select(col("c_custkey"), col("c_name"), bal.as("c_acctbal"),
+            lit(ts).as("ts"), lit(op).as("op"))
+      val ins = cust.filter(col("c_custkey") % 10 === 3)
+        .select((col("c_custkey") + 1000000L).as("c_custkey"),
+          concat(lit("new customer "), col("c_custkey").cast("string")).as("c_name"),
+          col("c_acctbal"), lit(1L).as("ts"), lit("I").as("op"))
+      val changes = ch(0, col("c_acctbal"), 1L, "D")
+        .unionByName(ch(1, col("c_acctbal") + 100.0, 1L, "U"))
+        .unionByName(ch(2, col("c_acctbal") + 1.0, 1L, "U"))
+        .unionByName(ch(2, col("c_acctbal") + 2.0, 2L, "U"))
+        .unionByName(ins)
+      Upsert.applyCdc(cust, changes, Seq("c_custkey"), "ts", "op")
+        .select(col("c_custkey"), col("c_name"),
+          round(col("c_acctbal"), 2).as("acctbal"))
+        .orderBy(col("c_custkey"))
+    },
+
+    // Robust outliers: |x - median| > 3·MAD — the scale-free rule the
+    // outliers themselves cannot drag (unlike mean/stddev z-scores).
+    // Two tiny percentile broadcasts; the rows never shuffle.
+    QuerySpec("q_profile_mad",
       """WITH m AS (
         |  SELECT quantile_cont(l_extendedprice, 0.5) AS med FROM lineitem
         |), d AS (
@@ -3872,8 +3510,21 @@ object RelationalQueries {
         |SELECT d.dev > 3.0 * s.mad AS is_outlier, COUNT(*) AS n,
         | ROUND(MIN(d.v), 2) AS min_price, ROUND(MAX(d.v), 2) AS max_price
         |FROM d CROSS JOIN s
-        |GROUP BY 1 ORDER BY is_outlier""".stripMargin,
-    "q_profile_bucket" ->
+        |GROUP BY 1 ORDER BY is_outlier""".stripMargin) { (s, dir) =>
+      Profile.madOutliers(table(s, dir, "lineitem"), "l_extendedprice",
+        nMads = 3.0)
+        .groupBy(col("l_extendedprice_outlier").as("is_outlier"))
+        .agg(count(lit(1)).as("n"),
+          round(min(col("l_extendedprice")), 2).as("min_price"),
+          round(max(col("l_extendedprice")), 2).as("max_price"))
+        .orderBy(col("is_outlier"))
+    },
+
+    // Equi-frequency quantile binning: 8 buckets from one shared
+    // exact-percentile buffer, broadcast back, map-side membership
+    // count — bucket populations stay balanced under the skewed price
+    // distribution where equi-width buckets collapse.
+    QuerySpec("q_profile_bucket",
       """WITH q AS (
         |  SELECT quantile_cont(l_extendedprice,
         |    [0.125, 0.25, 0.375, 0.5, 0.625, 0.75, 0.875]) AS cuts
@@ -3886,21 +3537,51 @@ object RelationalQueries {
         |)
         |SELECT CAST(qbucket AS BIGINT) AS qbucket, COUNT(*) AS cnt,
         | ROUND(MIN(v), 2) AS lo, ROUND(MAX(v), 2) AS hi
-        |FROM b GROUP BY qbucket ORDER BY qbucket""".stripMargin,
-    "q_intersect" ->
+        |FROM b GROUP BY qbucket ORDER BY qbucket""".stripMargin) { (s, dir) =>
+      Profile.quantileBucket(table(s, dir, "lineitem"), "l_extendedprice", k = 8)
+        .filter(col("l_extendedprice").isNotNull)
+        .groupBy(col("l_extendedprice_qbucket"))
+        .agg(count(lit(1)).as("cnt"),
+          round(min(col("l_extendedprice")), 2).as("lo"),
+          round(max(col("l_extendedprice")), 2).as("hi"))
+        .select(col("l_extendedprice_qbucket").cast("long").as("qbucket"),
+          col("cnt"), col("lo"), col("hi"))
+        .orderBy(col("qbucket"))
+    },
+
+    // U2 intersect (set semantics both engines).
+    QuerySpec("q_intersect",
       """SELECT c_nationkey AS nationkey FROM customer
         |INTERSECT
         |SELECT s_nationkey AS nationkey FROM supplier
-        |ORDER BY nationkey""".stripMargin,
-    "q_except" ->
+        |ORDER BY nationkey""".stripMargin) { (s, dir) =>
+      table(s, dir, "customer").select(col("c_nationkey").as("nationkey"))
+        .intersect(table(s, dir, "supplier").select(col("s_nationkey").as("nationkey")))
+        .orderBy(col("nationkey"))
+    },
+
+    QuerySpec("q_except",
       """SELECT c_nationkey AS nationkey FROM customer
         |EXCEPT
         |SELECT s_nationkey AS nationkey FROM supplier
-        |ORDER BY nationkey""".stripMargin,
-    "q_distinct" ->
+        |ORDER BY nationkey""".stripMargin) { (s, dir) =>
+      table(s, dir, "customer").select(col("c_nationkey").as("nationkey"))
+        .except(table(s, dir, "supplier").select(col("s_nationkey").as("nationkey")))
+        .orderBy(col("nationkey"))
+    },
+
+    // U3: dropDuplicates — hash aggregation on the pair.
+    QuerySpec("q_distinct",
       """SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "q_fn_datetime" ->
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin) { (s, dir) =>
+      table(s, dir, "lineitem")
+        .select(col("l_returnflag"), col("l_linestatus"))
+        .dropDuplicates()
+        .orderBy(col("l_returnflag"), col("l_linestatus"))
+    },
+
+    // F1 date/time family.
+    QuerySpec("q_fn_datetime",
       """SELECT event_id,
         | strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts_str,
         | CAST(year(ts) AS INT) AS yr,
@@ -3909,8 +3590,21 @@ object RelationalQueries {
         | CAST(hour(ts) AS INT) AS hr,
         | date_trunc('hour', ts) AS hour_ts,
         | CAST(FLOOR(epoch(ts)) AS BIGINT) AS epoch_s
-        |FROM events ORDER BY event_id""".stripMargin,
-    "q_fn_string" ->
+        |FROM events ORDER BY event_id""".stripMargin) { (s, dir) =>
+      table(s, dir, "events").select(
+        col("event_id"),
+        date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("ts_str"),
+        year(col("ts")).as("yr"),
+        month(col("ts")).as("mo"),
+        dayofmonth(col("ts")).as("dom"),
+        hour(col("ts")).as("hr"),
+        date_trunc("hour", col("ts")).as("hour_ts"),
+        unix_timestamp(col("ts")).as("epoch_s"))
+        .orderBy(col("event_id"))
+    },
+
+    // F2 string family.
+    QuerySpec("q_fn_string",
       """SELECT c_custkey,
         | UPPER(c_name) AS name_upper,
         | CAST(LENGTH(c_name) AS INT) AS name_len,
@@ -3918,14 +3612,39 @@ object RelationalQueries {
         | SPLIT_PART(c_name, '#', 1) AS name_stem,
         | SUBSTRING(c_name, 10, 9) AS name_num,
         | LPAD(CAST(c_custkey AS VARCHAR), 9, '0') AS padded
-        |FROM customer ORDER BY c_custkey""".stripMargin,
-    "q_fn_regex" ->
+        |FROM customer ORDER BY c_custkey""".stripMargin) { (s, dir) =>
+      table(s, dir, "customer").select(
+        col("c_custkey"),
+        upper(col("c_name")).as("name_upper"),
+        length(col("c_name")).as("name_len"),
+        concat_ws("_", col("c_mktsegment"), col("c_custkey").cast("string")).as("seg_key"),
+        substring_index(col("c_name"), "#", 1).as("name_stem"),
+        substring(col("c_name"), 10, 9).as("name_num"),
+        lpad(col("c_custkey").cast("string"), 9, "0").as("padded"))
+        .orderBy(col("c_custkey"))
+    },
+
+    // F2 regex family: extract / global replace / match. Both engines
+    // return '' on a non-matching extract; DuckDB's replace needs the
+    // 'g' flag to match Spark's replace-all semantics (in the oracle).
+    QuerySpec("q_fn_regex",
       """SELECT c_custkey,
         | regexp_extract(c_name, '#([0-9]+)', 1) AS name_id,
         | regexp_replace(c_name, '[0-9]', '#', 'g') AS name_masked,
         | CAST(regexp_matches(c_name, '[13579]$') AS INT) AS id_is_odd
-        |FROM customer ORDER BY c_custkey""".stripMargin,
-    "q_fn_cast" ->
+        |FROM customer ORDER BY c_custkey""".stripMargin) { (s, dir) =>
+      table(s, dir, "customer").select(
+        col("c_custkey"),
+        regexp_extract(col("c_name"), "#([0-9]+)", 1).as("name_id"),
+        regexp_replace(col("c_name"), "[0-9]", "#").as("name_masked"),
+        col("c_name").rlike("[13579]$").cast("int").as("id_is_odd"))
+        .orderBy(col("c_custkey"))
+    },
+
+    // F3 casts + F6 math: FLOOR/CEIL/SQRT/ABS/% are IEEE-deterministic
+    // cross-engine (unlike double→int casts, which truncate in Spark and
+    // round in DuckDB — deliberately avoided).
+    QuerySpec("q_fn_cast",
       """SELECT l_orderkey, l_linenumber,
         | CAST(FLOOR(l_extendedprice) AS BIGINT) AS price_floor,
         | CAST(CEIL(l_discount * 100) AS BIGINT) AS disc_pct_ceil,
@@ -3935,355 +3654,136 @@ object RelationalQueries {
         | CAST(l_linenumber AS VARCHAR) AS line_str
         |FROM lineitem
         |ORDER BY l_orderkey, l_linenumber, price_floor, disc_pct_ceil,
-        |  qty_sqrt, abs_diff""".stripMargin,
+        |  qty_sqrt, abs_diff""".stripMargin) { (s, dir) =>
+      table(s, dir, "lineitem").select(
+        col("l_orderkey"), col("l_linenumber"),
+        floor(col("l_extendedprice")).as("price_floor"),
+        ceil(col("l_discount") * 100).as("disc_pct_ceil"),
+        // greatest(·, 0) on BOTH sides (the q_agg_stats convention): a
+        // negative quantity reads sqrt NaN in Spark but ABORTS DuckDB
+        sqrt(greatest(col("l_quantity"), lit(0.0))).as("qty_sqrt"),
+        abs(col("l_extendedprice") - 500.0).as("abs_diff"),
+        (col("l_orderkey") % 7).as("key_mod"),
+        col("l_linenumber").cast("string").as("line_str"))
+        // (l_orderkey, l_linenumber) is NOT unique in the testdata; sort
+        // by the derived columns too so any remaining ties are fully
+        // identical rows and the row-order-sensitive hash is stable
+        .orderBy(col("l_orderkey"), col("l_linenumber"),
+          col("price_floor"), col("disc_pct_ceil"), col("qty_sqrt"),
+          col("abs_diff"))
+    },
+
+    // F4 json-in-string access.
+    QuerySpec("q_fn_json",
+      """SELECT event_id,
+        | CAST(json_extract_string(props, '$.k') AS INT) AS prop_k
+        |FROM events ORDER BY event_id""".stripMargin) { (s, dir) =>
+      table(s, dir, "events").select(
+        col("event_id"),
+        get_json_object(col("props"), "$.k").cast("int").as("prop_k"))
+        .orderBy(col("event_id"))
+    },
+
+    // F4c XML-in-string parsing: schema'd from_xml (elements, typed
+    // fields, absent element -> NULL) + xpath attribute extraction.
+    // The payload is CONSTRUCTED from order columns, so parsing inverts
+    // construction and the oracle recomputes the fields from the
+    // source columns directly — the q_fn_json pattern; only
+    // XML-safe columns are embedded (status/priority/price have no
+    // markup characters). Double fields survive because Java's
+    // double->string->double round-trip is exact.
+    QuerySpec("q_fn_xml",
+      """SELECT o_orderkey, o_orderstatus AS xml_status,
+        | o_totalprice AS xml_price, o_orderpriority AS xml_priority,
+        | CAST(NULL AS DOUBLE) AS xml_discount, o_orderkey AS xml_id
+        |FROM orders WHERE o_orderkey <= 2000 ORDER BY o_orderkey""".stripMargin) { (s, dir) =>
+      import org.apache.spark.sql.types._
+      val xmlSchema = StructType(Seq(
+        StructField("status", StringType), StructField("price", DoubleType),
+        StructField("priority", StringType), StructField("discount", DoubleType)))
+      val payload = concat(
+        lit("<order id=\""), col("o_orderkey"), lit("\"><status>"),
+        col("o_orderstatus"), lit("</status><price>"), col("o_totalprice"),
+        lit("</price><priority>"), col("o_orderpriority"),
+        lit("</priority></order>"))
+      table(s, dir, "orders").filter(col("o_orderkey") <= 2000)
+        .select(col("o_orderkey"), payload.as("payload"))
+        .select(col("o_orderkey"), from_xml(col("payload"), xmlSchema).as("x"),
+          call_function("xpath_string", col("payload"), lit("/order/@id"))
+            .cast("long").as("xml_id"))
+        .select(col("o_orderkey"),
+          col("x.status").as("xml_status"), col("x.price").as("xml_price"),
+          col("x.priority").as("xml_priority"),
+          col("x.discount").as("xml_discount"), col("xml_id"))
+        .orderBy(col("o_orderkey"))
+    },
+
+    // F4b schemaless JSON via Spark 4's VARIANT type: parse once,
+    // path-extract with types later — the semi-structured path when no
+    // schema is declared (from_json/get_json_object are the schema'd
+    // and string tiers; variant is the binary-encoded engine tier).
     // v_isnull is a DATA property, not an engine constant: Spark's
     // is_variant_null is TRUE for the JSON null literal and NULL for a
     // SQL-NULL props — a pinned FALSE only held while the fixture had
     // neither; the CASE replays both
-    "q_fn_variant" ->
+    QuerySpec("q_fn_variant",
       """SELECT event_id,
         | TRY_CAST(props->>'$.k' AS INT) AS vk,
         | TRY_CAST(props->>'$.missing' AS INT) AS v_missing,
         | CASE WHEN props IS NULL THEN NULL
         |      ELSE (trim(props) = 'null') END AS v_isnull
-        |FROM events ORDER BY event_id""".stripMargin,
-    "q_fn_map" ->
+        |FROM events ORDER BY event_id""".stripMargin) { (s, dir) =>
+      table(s, dir, "events").select(
+        col("event_id"),
+        try_variant_get(parse_json(col("props")), "$.k", "int").as("vk"),
+        try_variant_get(parse_json(col("props")), "$.missing", "int")
+          .as("v_missing"),
+        is_variant_null(parse_json(col("props"))).as("v_isnull"))
+        .orderBy(col("event_id"))
+    },
+
+    // F5c map-typed column family: build per-user event-type count
+    // maps, transform values, filter entries, explode back — the
+    // map_* HOF surface with a relationally-expressible oracle.
+    QuerySpec("q_fn_map",
       """WITH c AS (
         |  SELECT user_id, event_type, COUNT(*) AS n FROM events GROUP BY 1, 2
         |)
         |SELECT user_id, event_type, n * 2 AS n2 FROM c WHERE n * 2 >= 4
-        |ORDER BY user_id, event_type""".stripMargin,
-    "q_fn_xml" ->
-      """SELECT o_orderkey, o_orderstatus AS xml_status,
-        | o_totalprice AS xml_price, o_orderpriority AS xml_priority,
-        | CAST(NULL AS DOUBLE) AS xml_discount, o_orderkey AS xml_id
-        |FROM orders WHERE o_orderkey <= 2000 ORDER BY o_orderkey""".stripMargin,
-    "q_fn_json" ->
-      """SELECT event_id,
-        | CAST(json_extract_string(props, '$.k') AS INT) AS prop_k
-        |FROM events ORDER BY event_id""".stripMargin,
-    "q_fn_null" ->
+        |ORDER BY user_id, event_type""".stripMargin) { (s, dir) =>
+      table(s, dir, "events")
+        .groupBy(col("user_id"), col("event_type"))
+        .agg(count(lit(1)).as("n"))
+        .groupBy(col("user_id"))
+        .agg(map_from_entries(sort_array(
+          collect_list(struct(col("event_type"), col("n"))))).as("m"))
+        .select(col("user_id"),
+          explode(
+            map_filter(
+              transform_values(col("m"), (_, v) => v * 2),
+              (_, v) => v >= 4))
+            .as(Seq("event_type", "n2")))
+        .orderBy(col("user_id"), col("event_type"))
+    },
+
+    // F7 null handling.
+    QuerySpec("q_fn_null",
       """SELECT event_id,
         | COALESCE(NULLIF(event_type, 'error'), 'unknown') AS type_clean,
         | CASE WHEN value > 150 THEN 'high' WHEN value > 75 THEN 'mid' ELSE 'low' END AS value_band
-        |FROM events ORDER BY event_id""".stripMargin,
-    "q_profile_cat" ->
-      s"""WITH pairs AS (
-        |  SELECT 'o_orderstatus' AS col_name,
-        |    CAST(o_orderstatus AS VARCHAR) AS val FROM orders
-        |  UNION ALL
-        |  SELECT 'o_orderpriority', CAST(o_orderpriority AS VARCHAR) FROM orders
-        |), counts AS (
-        |  SELECT col_name, val, COUNT(*) AS cnt FROM pairs
-        |  GROUP BY col_name, val
-        |), agg AS (
-        |  SELECT *,
-        |    CAST(SUM(CASE WHEN val IS NULL THEN cnt ELSE 0 END)
-        |      OVER (PARTITION BY col_name) AS BIGINT) AS n_null,
-        |    CAST(SUM(CASE WHEN val IS NULL THEN 0 ELSE cnt END)
-        |      OVER (PARTITION BY col_name) AS BIGINT) AS n_nonnull,
-        |    CAST(SUM(CASE WHEN val IS NULL THEN 0 ELSE 1 END)
-        |      OVER (PARTITION BY col_name) AS BIGINT) AS n_distinct
-        |  FROM counts
-        |), ranked AS (
-        |  SELECT *, CAST(row_number() OVER (PARTITION BY col_name
-        |    ORDER BY cnt DESC, val ASC) AS INT) AS val_rank
-        |  FROM agg WHERE val IS NOT NULL
-        |)
-        |SELECT col_name, val, cnt,
-        |  ${graft.functions.Num.portableRound6Sql("cnt / n_nonnull")} AS share,
-        |  val_rank, n_null, n_distinct
-        |FROM ranked WHERE val_rank <= 3
-        |ORDER BY col_name, val_rank""".stripMargin,
-    "q_agg_groupingid" ->
-      """SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n_orders,
-        | CAST(GROUPING(o_orderstatus) AS INT) AS g_status,
-        | CAST(GROUPING(o_orderpriority) AS INT) AS g_prio
-        |FROM orders GROUP BY ROLLUP(o_orderstatus, o_orderpriority)
-        |ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST,
-        |  g_status, g_prio""".stripMargin,
-    "q_fn_try" ->
-      """SELECT c_custkey,
-        | CASE WHEN c_custkey % 5 = 0 THEN NULL
-        |   ELSE CAST(c_acctbal AS DOUBLE) / CAST(c_custkey % 5 AS DOUBLE)
-        | END AS per_bucket,
-        | TRY_CAST(substring(c_name, 10, 9) AS BIGINT) AS name_num,
-        | TRY_CAST(c_mktsegment AS BIGINT) AS seg_num
-        |FROM customer ORDER BY c_custkey""".stripMargin,
-    "q_agg_mode" ->
-      """WITH c AS (
-        |  SELECT l_returnflag, l_quantity, COUNT(*) AS cnt
-        |  FROM lineitem GROUP BY 1, 2
-        |)
-        |SELECT l_returnflag,
-        |  arg_max(l_quantity,
-        |    lpad(CAST(cnt AS VARCHAR), 12, '0')
-        |    || lpad(CAST(10000000 - CAST(ROUND(l_quantity * 100) AS BIGINT)
-        |         AS VARCHAR), 9, '0')) AS mode_qty,
-        |  MAX(cnt) AS mode_n
-        |FROM c GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q_profile_qmap" ->
-      """WITH refv AS (
-        |  SELECT CAST(n_chars AS DOUBLE) AS a FROM documents
-        |  WHERE source = 'src0' AND n_chars IS NOT NULL
-        |), refr AS (
-        |  SELECT a, ROW_NUMBER() OVER (ORDER BY a) - 1 AS idx,
-        |    COUNT(*) OVER () AS na
-        |  FROM refv
-        |), curv AS (
-        |  SELECT CAST(n_chars AS DOUBLE) AS v, COUNT(*) AS n_rows
-        |  FROM documents WHERE source = 'src1' AND n_chars IS NOT NULL
-        |  GROUP BY 1
-        |), cum AS (
-        |  SELECT v, n_rows,
-        |    SUM(n_rows) OVER (ORDER BY v
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cumle,
-        |    SUM(n_rows) OVER () AS nb
-        |  FROM curv
-        |), pq AS (
-        |  SELECT v, n_rows,
-        |    CAST(cumle - 1 AS DOUBLE) / CAST(nb - 1 AS DOUBLE) AS q
-        |  FROM cum
-        |), pp AS (
-        |  SELECT v, n_rows, q,
-        |    q * CAST((SELECT MAX(na) FROM refr) - 1 AS DOUBLE) AS p
-        |  FROM pq
-        |), lo AS (
-        |  SELECT v, n_rows, q, p, CAST(floor(p) AS BIGINT) AS lo FROM pp
-        |)
-        |SELECT lo.v AS value, CAST(lo.n_rows AS BIGINT) AS n_rows,
-        |  ROUND(lo.q, 6) AS q,
-        |  ROUND(rl.a + (lo.p - CAST(lo.lo AS DOUBLE))
-        |    * (COALESCE(rh.a, rl.a) - rl.a), 6) AS mapped
-        |FROM lo
-        |LEFT JOIN refr rl ON rl.idx = lo.lo
-        |LEFT JOIN refr rh ON rh.idx = lo.lo + 1
-        |ORDER BY value""".stripMargin,
-    "q_ts_rollcorr" ->
-      """WITH d AS (
-        |  SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
-        |    COUNT(*) FILTER (event_type = 'purchase') AS cp,
-        |    COUNT(*) FILTER (event_type = 'view') AS cv
-        |  FROM events GROUP BY 1
-        |), s AS (
-        |  SELECT day, cp, cv,
-        |    CAST(COUNT(*) OVER w AS HUGEINT) AS n,
-        |    SUM(CAST(ROUND(CAST(cp AS DOUBLE) * 100) AS HUGEINT)) OVER w AS sx,
-        |    SUM(CAST(ROUND(CAST(cv AS DOUBLE) * 100) AS HUGEINT)) OVER w AS sy,
-        |    SUM(CAST(ROUND(CAST(cp AS DOUBLE) * 100) AS HUGEINT)
-        |      * CAST(ROUND(CAST(cp AS DOUBLE) * 100) AS HUGEINT)) OVER w AS sxx,
-        |    SUM(CAST(ROUND(CAST(cv AS DOUBLE) * 100) AS HUGEINT)
-        |      * CAST(ROUND(CAST(cv AS DOUBLE) * 100) AS HUGEINT)) OVER w AS syy,
-        |    SUM(CAST(ROUND(CAST(cp AS DOUBLE) * 100) AS HUGEINT)
-        |      * CAST(ROUND(CAST(cv AS DOUBLE) * 100) AS HUGEINT)) OVER w AS sxy
-        |  FROM d
-        |  WINDOW w AS (ORDER BY day ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)
-        |)
-        |SELECT day, CAST(cp AS BIGINT) AS cnt_purchase,
-        |  CAST(cv AS BIGINT) AS cnt_view,
-        |  CAST(n AS BIGINT) AS n_window,
-        |  CASE WHEN n >= 4 THEN
-        |    CASE WHEN (n * sxx - sx * sx) > 0 AND (n * syy - sy * sy) > 0
-        |      THEN ROUND(CAST(n * sxy - sx * sy AS DOUBLE)
-        |        / (sqrt(CAST(n * sxx - sx * sx AS DOUBLE))
-        |          * sqrt(CAST(n * syy - sy * sy AS DOUBLE))), 6)
-        |    END
-        |  END AS roll_corr
-        |FROM s ORDER BY day""".stripMargin,
-    "q_profile_benford" ->
-      s"""WITH d AS (
-         |  SELECT CAST(substr(CAST(CAST(ROUND(o_totalprice * 100) AS HUGEINT)
-         |    AS VARCHAR), 1, 1) AS INT) AS digit
-         |  FROM orders WHERE o_totalprice IS NOT NULL AND o_totalprice > 0
-         |), c AS (
-         |  SELECT digit, COUNT(*) AS n FROM d GROUP BY digit
-         |), sp AS (
-         |  SELECT CAST(unnest(range(1, 10)) AS INT) AS digit
-         |), j AS (
-         |  SELECT sp.digit, COALESCE(c.n, 0) AS n
-         |  FROM sp LEFT JOIN c USING (digit)
-         |), t AS (
-         |  SELECT digit, n, SUM(n) OVER () AS total FROM j
-         |)
-         |SELECT digit, CAST(n AS BIGINT) AS n,
-         |  ${graft.functions.Num.portableRound6Sql(
-             "CAST(n AS DOUBLE) / CAST(total AS DOUBLE)")} AS obs_share,
-         |  ROUND(CAST(([${Profile.BenfordShares.mkString(", ")}])[digit]
-         |    AS DOUBLE), 6) AS benford_share,
-         |  ${graft.functions.Num.portableRound6Sql(
-             "CAST(n AS DOUBLE) / CAST(total AS DOUBLE)" +
-               s" - CAST(([${Profile.BenfordShares.mkString(", ")}])[digit] AS DOUBLE)")} AS deviation
-         |FROM t ORDER BY digit""".stripMargin,
-    "q_ts_trending" ->
-      """WITH d AS (
-        |  SELECT event_type, CAST(date_trunc('day', ts) AS TIMESTAMP)
-        |    AS day, COUNT(*) AS cnt
-        |  FROM events GROUP BY 1, 2
-        |), w AS (
-        |  SELECT event_type, day,
-        |    CAST(SUM(cnt) OVER (PARTITION BY event_type ORDER BY day
-        |      ROWS BETWEEN 6 PRECEDING AND CURRENT ROW) AS BIGINT) AS cnt7
-        |  FROM d
-        |), r AS (
-        |  SELECT day, event_type, cnt7,
-        |    CAST(ROW_NUMBER() OVER (PARTITION BY day
-        |      ORDER BY cnt7 DESC, event_type) AS INT) AS rank
-        |  FROM w
-        |)
-        |SELECT day, rank, event_type, cnt7 FROM r
-        |WHERE rank <= 3 ORDER BY day, rank""".stripMargin,
-    "q_feat_impute" ->
-      s"""WITH s AS (
-        |  SELECT event_id, event_type,
-        |    CASE WHEN event_id % 13 = 0 THEN NULL ELSE value END AS value
-        |  FROM events
-        |), m0 AS (
-        |  -- NaN is MISSING like NULL (the engine's contract): excluded
-        |  -- from the mean, imputed in the output. Input quantization is
-        |  -- the portable floor-chain (lockstep with Num.portableRound6:
-        |  -- a 6dp-quantized sum over a small count is the ROUND-tie hot
-        |  -- shape, so the built-in ROUNDs may disagree on .5e-6 ties)
-        |  SELECT event_type AS g,
-        |    CAST(SUM(CAST(${graft.functions.Num.portableRound6Sql(
-             "CAST(value AS DOUBLE)")}
-        |      AS DECIMAL(38,12))) AS DOUBLE) / COUNT(*) AS raw
-        |  FROM s WHERE value IS NOT NULL AND NOT isnan(value) GROUP BY 1
-        |), m AS (
-        |  SELECT g, ${graft.functions.Num.portableRound6Sql("raw")} AS gmean
-        |  FROM m0
-        |)
-        |SELECT s.event_id, s.event_type, s.value,
-        |  CASE WHEN s.value IS NULL OR isnan(s.value) THEN m.gmean
-        |    ELSE s.value END AS value_filled,
-        |  ((s.value IS NULL OR isnan(s.value)) AND m.gmean IS NOT NULL)
-        |    AS was_imputed
-        |FROM s LEFT JOIN m ON s.event_type IS NOT DISTINCT FROM m.g
-        |ORDER BY s.event_id""".stripMargin,
-    "q_ts_cusum" ->
-      """WITH d AS (
-        |  SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
-        |    COUNT(*) AS cnt
-        |  FROM events WHERE event_type = 'purchase' GROUP BY 1
-        |), s AS (
-        |  SELECT day, cnt,
-        |    CAST(ROW_NUMBER() OVER (ORDER BY day) AS INT) AS t,
-        |    SUM(CAST(cnt AS HUGEINT)) OVER (ORDER BY day
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-        |    CAST(COUNT(cnt) OVER () AS HUGEINT) AS n,
-        |    SUM(CAST(cnt AS HUGEINT)) OVER () AS sx
-        |  FROM d
-        |), c AS (
-        |  SELECT day, cnt, t,
-        |    CAST(n * cum - CAST(t AS HUGEINT) * sx AS BIGINT) AS cusum
-        |  FROM s
-        |), b AS (
-        |  SELECT *, MAX(abs(cusum)) OVER () AS ma FROM c
-        |), b2 AS (
-        |  SELECT *, MIN(CASE WHEN abs(cusum) = ma THEN t END) OVER () AS mt
-        |  FROM b
-        |)
-        |SELECT day, CAST(cnt AS BIGINT) AS cnt, t, cusum,
-        |  (abs(cusum) = ma AND t = mt) AS is_peak
-        |FROM b2 ORDER BY day""".stripMargin,
-    "q_ts_anomaly" ->
-      """WITH h AS (
-        |  SELECT event_type, CAST(date_trunc('hour', ts) AS TIMESTAMP)
-        |    AS bucket, COUNT(*) AS cnt
-        |  FROM events GROUP BY 1, 2
-        |), s AS (
-        |  SELECT event_type, bucket, cnt,
-        |    COUNT(cnt) OVER w AS n,
-        |    SUM(CAST(cnt AS HUGEINT)) OVER w AS sx,
-        |    SUM(CAST(cnt AS HUGEINT) * CAST(cnt AS HUGEINT)) OVER w AS sxx
-        |  FROM h
-        |  WINDOW w AS (PARTITION BY event_type ORDER BY bucket
-        |    ROWS BETWEEN 24 PRECEDING AND 1 PRECEDING)
-        |), t AS (
-        |  SELECT event_type, bucket, cnt, n,
-        |    CAST(sx AS DOUBLE) / CAST(n AS DOUBLE) AS mu,
-        |    CAST(cnt AS DOUBLE)
-        |      - (CAST(sx AS DOUBLE) / CAST(n AS DOUBLE)) AS num,
-        |    sqrt(CAST(n * sxx - sx * sx AS DOUBLE)
-        |      / CAST(n * n AS DOUBLE)) AS sd
-        |  FROM s
-        |), z0 AS (
-        |  SELECT event_type, bucket, cnt, n, mu,
-        |    CASE WHEN sd <> 0 THEN num / sd END AS zraw
-        |  FROM t
-        |), z AS (
-        |  SELECT event_type, bucket, cnt,
-        |    CASE WHEN n >= 12 THEN
-        |      (CASE WHEN (mu) BETWEEN -9e9 AND 9e9
-        |        THEN FLOOR((mu) * 1e6 + 0.5) / 1e6 ELSE (mu) END)
-        |    END AS mean_prior,
-        |    CASE WHEN n >= 12 THEN
-        |      (CASE WHEN (zraw) BETWEEN -9e9 AND 9e9
-        |        THEN FLOOR((zraw) * 1e6 + 0.5) / 1e6 ELSE (zraw) END)
-        |    END AS zz
-        |  FROM z0
-        |)
-        |SELECT event_type, bucket, cnt, mean_prior, zz AS z,
-        |  COALESCE(abs(zz) > 3.0, FALSE) AS is_anomaly
-        |FROM z ORDER BY event_type, bucket""".stripMargin,
-    "q_agg_argmax" ->
-      """WITH r AS (
-        |  SELECT l_returnflag, l_orderkey, l_extendedprice, l_shipdate,
-        |    ROW_NUMBER() OVER (PARTITION BY l_returnflag
-        |      ORDER BY l_extendedprice DESC, l_orderkey DESC, l_linenumber DESC)
-        |      AS rx,
-        |    ROW_NUMBER() OVER (PARTITION BY l_returnflag
-        |      ORDER BY l_shipdate ASC, l_orderkey ASC, l_linenumber ASC) AS rn
-        |  FROM lineitem
-        |)
-        |SELECT l_returnflag,
-        |  MAX(CASE WHEN rx = 1 THEN l_orderkey END) AS top_orderkey,
-        |  MAX(CASE WHEN rx = 1 THEN l_extendedprice END) AS top_price,
-        |  MAX(CASE WHEN rn = 1 THEN l_shipdate END) AS first_ship
-        |FROM r GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q_norm_group" ->
-      """WITH m AS (
-        |  SELECT l_returnflag, CAST(COUNT(*) AS DOUBLE) AS n,
-        |    CAST(SUM(CAST(l_quantity AS DECIMAL(28,2))) AS DOUBLE) AS sx,
-        |    CAST(SUM(CAST(l_quantity * l_quantity AS DECIMAL(28,4))) AS DOUBLE)
-        |      AS sxx
-        |  FROM lineitem GROUP BY l_returnflag
-        |), s AS (
-        |  SELECT l_returnflag, sx / n AS mu,
-        |    sqrt((sxx - sx * sx / n) / n) AS sigma
-        |  FROM m
-        |)
-        |SELECT l.l_orderkey, l.l_linenumber, l.l_returnflag, l.l_quantity,
-        |  ROUND((l.l_quantity - s.mu) / NULLIF(s.sigma, 0), 6) AS z
-        |FROM lineitem l JOIN s USING (l_returnflag)
-        |ORDER BY l_orderkey, l_linenumber, l_quantity""".stripMargin,
-    "q_scd2" ->
-      """WITH hist AS (
-        |  SELECT c_custkey AS cust_id, c_mktsegment AS segment,
-        |    TIMESTAMP '1990-01-01 00:00:00' AS valid_from,
-        |    CAST(NULL AS TIMESTAMP) AS valid_to
-        |  FROM customer
-        |), chg AS (
-        |  SELECT cust_id, ts, MAX(segment) AS segment FROM (
-        |    SELECT o_custkey AS cust_id, o_orderpriority AS segment,
-        |      o_orderdate AS ts
-        |    FROM orders WHERE o_custkey % 3 = 0
-        |  ) GROUP BY cust_id, ts
-        |), versioned AS (
-        |  SELECT cust_id, segment, ts AS valid_from,
-        |    LEAD(ts) OVER (PARTITION BY cust_id ORDER BY ts) AS valid_to
-        |  FROM chg
-        |), f AS (
-        |  SELECT cust_id, MIN(ts) AS fts FROM chg GROUP BY cust_id
-        |)
-        |SELECT h.cust_id, h.segment, h.valid_from, f.fts AS valid_to
-        |FROM hist h JOIN f ON h.cust_id = f.cust_id
-        |UNION ALL
-        |SELECT h.cust_id, h.segment, h.valid_from, h.valid_to
-        |FROM hist h ANTI JOIN f ON h.cust_id = f.cust_id
-        |UNION ALL
-        |SELECT cust_id, segment, valid_from, valid_to FROM versioned
-        |ORDER BY cust_id, valid_from""".stripMargin,
-    "q_fn_posexplode" ->
+        |FROM events ORDER BY event_id""".stripMargin) { (s, dir) =>
+      table(s, dir, "events").select(
+        col("event_id"),
+        coalesce(nullif(col("event_type"), lit("error")), lit("unknown")).as("type_clean"),
+        when(col("value") > 150, "high").when(col("value") > 75, "mid")
+          .otherwise("low").as("value_band"))
+        .orderBy(col("event_id"))
+    },
+
+    // F5b positional explode: ordinals matter whenever array order is
+    // data (embedding dimensions, token positions) — posexplode keeps
+    // them explicit instead of relying on row order.
+    QuerySpec("q_fn_posexplode",
       """SELECT vec_id, CAST(j AS INT) AS pos,
         | CAST(embedding[CAST(j AS INT) + 1] AS DOUBLE) AS v
         |FROM embeddings CROSS JOIN range(64) r(j)
@@ -4291,16 +3791,39 @@ object RelationalQueries {
         |-- to the ACTUAL vector length: unguarded, a non-64-dim fixture
         |-- regeneration would NULL-pad short vectors where posexplode
         |-- adapts
-        |WHERE vec_id < 3 AND j < len(embedding) ORDER BY vec_id, pos""".stripMargin,
-    "q_fn_regex_all" ->
+        |WHERE vec_id < 3 AND j < len(embedding) ORDER BY vec_id, pos""".stripMargin) { (s, dir) =>
+      table(s, dir, "embeddings").filter(col("vec_id") < 3)
+        .select(col("vec_id"), posexplode(col("embedding")).as(Seq("pos", "v")))
+        .select(col("vec_id"), col("pos"), col("v").cast("double").as("v"))
+        .orderBy(col("vec_id"), col("pos"))
+    },
+
+    // F2b regex extraction family: all-matches extraction and counts.
+    // The match list is serialized with array_join — the driver's pandas
+    // comparator cannot lexsort raw array columns, and a delimited string
+    // hashes identically in both engines (operator exercised unchanged).
+    QuerySpec("q_fn_regex_all",
       """SELECT o_orderkey,
         | COALESCE(array_to_string(
         |   regexp_extract_all(o_orderpriority, '[A-Z]+'), ','), '')
         |   AS words,
         | CAST(len(regexp_extract_all(o_orderpriority, '[A-Z]+')) AS INT)
         |   AS n_words
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-    "q_fn_binary" ->
+        |FROM orders ORDER BY o_orderkey""".stripMargin) { (s, dir) =>
+      table(s, dir, "orders").select(
+        col("o_orderkey"),
+        array_join(
+          regexp_extract_all(col("o_orderpriority"), lit("[A-Z]+"), lit(0)), ",")
+          .as("words"),
+        size(regexp_extract_all(col("o_orderpriority"), lit("[A-Z]+"), lit(0)))
+          .as("n_words"))
+        .orderBy(col("o_orderkey"))
+    },
+
+    // F8 binary/digest family: md5 / sha-256 / hex / base64 round-trip
+    // — the content-addressing primitives (raw-zone dedup keys, cache
+    // keys, fingerprints). All engine-portable byte-for-byte.
+    QuerySpec("q_fn_binary",
       """SELECT c_custkey,
         | md5(c_name) AS name_md5,
         | sha256(c_name) AS name_sha256,
@@ -4309,19 +3832,51 @@ object RelationalQueries {
         | CAST(from_base64(to_base64(CAST(c_name AS BLOB))) AS VARCHAR)
         |   AS name_roundtrip,
         | CAST(octet_length(CAST(c_name AS BLOB)) AS INT) AS name_bytes
-        |FROM customer ORDER BY c_custkey""".stripMargin,
-    "q_fn_array" ->
+        |FROM customer ORDER BY c_custkey""".stripMargin) { (s, dir) =>
+      table(s, dir, "customer").select(
+        col("c_custkey"),
+        md5(col("c_name").cast("binary")).as("name_md5"),
+        sha2(col("c_name").cast("binary"), 256).as("name_sha256"),
+        hex(col("c_name")).as("name_hex"),
+        base64(col("c_name").cast("binary")).as("name_b64"),
+        unbase64(base64(col("c_name").cast("binary"))).cast("string")
+          .as("name_roundtrip"),
+        length(col("c_name").cast("binary")).as("name_bytes"))
+        .orderBy(col("c_custkey"))
+    },
+
+    // F5 array access + higher-order-function norm. try_element_at:
+    // under ANSI a short/empty array would ABORT the whole query where
+    // the oracle's DuckDB indexing reads NULL — the NULL is the
+    // documented semantics for both engines.
+    QuerySpec("q_fn_array",
       """SELECT vec_id,
         | CAST(len(embedding) AS INT) AS dim,
         | CAST(embedding[1] AS DOUBLE) AS first_val,
         | CAST(embedding[-1] AS DOUBLE) AS last_val,
         | ROUND(SQRT(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))), 6) AS l2_norm,
         | label
-        |FROM embeddings ORDER BY vec_id""".stripMargin,
+        |FROM embeddings ORDER BY vec_id""".stripMargin) { (s, dir) =>
+      table(s, dir, "embeddings").select(
+        col("vec_id"),
+        size(col("embedding")).as("dim"),
+        try_element_at(col("embedding"), lit(1)).cast("double").as("first_val"),
+        try_element_at(col("embedding"), lit(-1)).cast("double").as("last_val"),
+        round(VectorOps.norm(col("embedding")), 6).as("l2_norm"),
+        col("label"))
+        .orderBy(col("vec_id"))
+    },
+
+    // Data-quality gate: row rules in ONE aggregate pass, a
+    // duplicate-key audit (the harness lineitem key is knowingly
+    // non-unique — nonzero violations are real signal), and a
+    // referential check against the distinct parent key set. The
+    // price_cap rule is deliberately violated by high-price orders so
+    // a nonzero row-rule count is exercised too.
     // unique branch: NULL-keyed groups never violate UNIQUE (ANSI
     // semantics, lockstep with Quality.checkUnique) but still count in
     // total_rows; lineitem's keys are non-null, so values are unchanged
-    "q_quality" ->
+    QuerySpec("q_quality",
       """SELECT * FROM (
         |  SELECT 'order_date_not_null' AS rule,
         |    COUNT(*) FILTER (NOT COALESCE(o_orderdate IS NOT NULL, FALSE)) AS violations,
@@ -4353,8 +3908,30 @@ object RelationalQueries {
         |  FROM orders LEFT JOIN
         |    (SELECT DISTINCT c_custkey AS pk FROM customer) p
         |    ON o_custkey = p.pk
-        |) ORDER BY rule""".stripMargin,
-    "q_agg_stats" ->
+        |) ORDER BY rule""".stripMargin) { (s, dir) =>
+      val orders = table(s, dir, "orders")
+      Quality.report(
+        Quality.checkRows(orders, Seq(
+          Quality.Rule("order_date_not_null", col("o_orderdate").isNotNull),
+          Quality.Rule("order_status_domain",
+            col("o_orderstatus").isin("F", "O", "P")),
+          Quality.Rule("order_price_positive", col("o_totalprice") > 0.0),
+          Quality.Rule("order_price_cap", col("o_totalprice") <= 480000.0))),
+        Quality.checkUnique(table(s, dir, "lineitem"),
+          Seq("l_orderkey", "l_linenumber"), "lineitem_pk_unique"),
+        Quality.checkRef(orders, "o_custkey",
+          table(s, dir, "customer"), "c_custkey", "orders_custkey_fk"))
+    },
+
+    // A1c second-moment statistics (variance / stddev / correlation).
+    // Built-in stddev/corr merge partial double moments in shuffle order,
+    // so their low bits are not reproducible cross-engine (or even
+    // run-to-run). Portable shape: the five raw moments as EXACT decimal
+    // sums (the inputs carry <=2 decimals, products <=4 — the dsum
+    // argument), then one identical double expression over them in both
+    // engines. Same single aggregation pass and map-side partials as the
+    // built-ins — the portability costs nothing at scale.
+    QuerySpec("q_agg_stats",
       """WITH m AS (
         |  SELECT l_returnflag,
         |    CAST(COUNT(*) AS DOUBLE) AS n,
@@ -4375,16 +3952,70 @@ object RelationalQueries {
         |    (sxy - sx * sy / n) /
         |      SQRT((sxx - sx * sx / n) * (syy - sy * sy / n)) END
         |    AS corr_qty_price
-        |FROM m ORDER BY l_returnflag""".stripMargin,
-    "q_agg_conditional" ->
+        |FROM m ORDER BY l_returnflag""".stripMargin) { (s, dir) =>
+      val m = table(s, dir, "lineitem")
+        .groupBy(col("l_returnflag"))
+        .agg(
+          count(lit(1)).cast("double").as("n"),
+          sum(col("l_quantity").cast(DecimalType(28, 2))).cast("double").as("sx"),
+          sum((col("l_quantity") * col("l_quantity")).cast(DecimalType(28, 4)))
+            .cast("double").as("sxx"),
+          sum(col("l_extendedprice").cast(DecimalType(28, 2))).cast("double").as("sy"),
+          sum((col("l_extendedprice") * col("l_extendedprice")).cast(DecimalType(28, 4)))
+            .cast("double").as("syy"),
+          sum((col("l_quantity") * col("l_extendedprice")).cast(DecimalType(28, 4)))
+            .cast("double").as("sxy"))
+      // Degenerate groups are guarded IDENTICALLY in both engines
+      // (single-row group: Spark double/0 reads Infinity where DuckDB
+      // reads NULL; cancellation noise: sqrt(negative) is NaN in Spark
+      // but ABORTS the DuckDB oracle) — n>1 gates the sample variance,
+      // greatest(·,0) floors the cancellation, and the corr denominator
+      // must be strictly positive. On non-degenerate groups every
+      // branch returns the exact pre-guard value.
+      val vQty = (col("sxx") - col("sx") * col("sx") / col("n")) / (col("n") - 1)
+      val dx = col("sxx") - col("sx") * col("sx") / col("n")
+      val dy = col("syy") - col("sy") * col("sy") / col("n")
+      m.select(
+        col("l_returnflag"),
+        col("n").cast("long").as("n_rows"),
+        when(col("n") > 1.0, vQty).as("var_qty"),
+        when(col("n") > 1.0, sqrt(greatest(vQty, lit(0.0)))).as("std_qty"),
+        when(col("n") > 1.0 && dx * dy > 0.0,
+          (col("sxy") - col("sx") * col("sy") / col("n")) / sqrt(dx * dy))
+          .as("corr_qty_price"))
+        .orderBy(col("l_returnflag"))
+    },
+
+    // A1d conditional aggregation: FILTER-style counts and guarded
+    // sums/maxes in one pass — no self-joins, no second scan.
+    QuerySpec("q_agg_conditional",
       """SELECT o_orderpriority,
         | COUNT(*) FILTER (o_totalprice > 200.0) AS n_big,
         | CAST(SUM(CAST(CASE WHEN o_orderstatus = 'F' THEN o_totalprice ELSE 0.0 END
         |   AS DECIMAL(18,2))) AS DOUBLE) AS sum_f,
         | MAX(o_totalprice) FILTER (o_orderstatus = 'O') AS max_open
         |FROM orders GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin,
-    "q_agg_collect" ->
+        |ORDER BY o_orderpriority""".stripMargin) { (s, dir) =>
+      table(s, dir, "orders")
+        .groupBy(col("o_orderpriority"))
+        .agg(
+          count_if(col("o_totalprice") > 200.0).as("n_big"),
+          dsum(when(col("o_orderstatus") === "F", col("o_totalprice"))
+            .otherwise(lit(0.0))).as("sum_f"),
+          max(when(col("o_orderstatus") === "O", col("o_totalprice")))
+            .as("max_open"))
+        .orderBy(col("o_orderpriority"))
+    },
+
+    // A7 array aggregation: per-group collected lists/sets made
+    // deterministic with sort_array (collection order is shuffle order —
+    // never emit an unsorted collect_*). The filtered list keeps per-group
+    // arrays bounded; unbounded per-group collect is flagged in Scaladoc
+    // as the anti-pattern (single giant row, no partial aggregation win).
+    // The sorted lists are serialized with array_join for the driver's
+    // pandas comparator (raw array columns are unsortable there); the
+    // collect_set / collect_list / sort_array operators run unchanged.
+    QuerySpec("q_agg_collect",
       """SELECT c_mktsegment,
         | array_to_string(list_sort(list(DISTINCT c_nationkey)), ',') AS nations,
         | -- DuckDB's array_to_string returns NULL on an EMPTY list where
@@ -4393,26 +4024,47 @@ object RelationalQueries {
         |   list_sort(list(c_custkey) FILTER (c_custkey % 50 = 0)),
         |   CAST([] AS BIGINT[])), ','), '') AS sample_keys
         |FROM customer GROUP BY c_mktsegment
-        |ORDER BY c_mktsegment""".stripMargin,
-    "q_intersect_all" ->
+        |ORDER BY c_mktsegment""".stripMargin) { (s, dir) =>
+      table(s, dir, "customer")
+        .groupBy(col("c_mktsegment"))
+        .agg(
+          array_join(sort_array(collect_set(col("c_nationkey"))), ",")
+            .as("nations"),
+          array_join(
+            sort_array(collect_list(when(col("c_custkey") % 50 === 0, col("c_custkey")))), ",")
+            .as("sample_keys"))
+        .orderBy(col("c_mktsegment"))
+    },
+
+    // U2 multiset variants: INTERSECT ALL / EXCEPT ALL keep duplicate
+    // cardinalities (min / left-minus counts). Planned as an aggregate
+    // over (row, count) pairs — one shuffle, no join explosion.
+    QuerySpec("q_intersect_all",
       """SELECT c_nationkey AS nationkey FROM customer
         |INTERSECT ALL
         |SELECT s_nationkey AS nationkey FROM supplier
-        |ORDER BY nationkey""".stripMargin,
-    "q_except_all" ->
+        |ORDER BY nationkey""".stripMargin) { (s, dir) =>
+      table(s, dir, "customer").select(col("c_nationkey").as("nationkey"))
+        .intersectAll(table(s, dir, "supplier").select(col("s_nationkey").as("nationkey")))
+        .orderBy(col("nationkey"))
+    },
+
+    QuerySpec("q_except_all",
       """SELECT c_nationkey AS nationkey FROM customer
         |EXCEPT ALL
         |SELECT s_nationkey AS nationkey FROM supplier
-        |ORDER BY nationkey""".stripMargin,
-    "q_join_range_binned" ->
-      """SELECT o_orderkey, COUNT(*) AS n_ship,
-        | CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-        |FROM orders o JOIN lineitem l
-        |  ON l.l_shipdate >= o.o_orderdate
-        | AND l.l_shipdate < o.o_orderdate + INTERVAL 14 DAY
-        |WHERE o.o_totalprice > 495000.0
-        |GROUP BY o_orderkey ORDER BY o_orderkey""".stripMargin,
-    "q_window_nav" ->
+        |ORDER BY nationkey""".stripMargin) { (s, dir) =>
+      table(s, dir, "customer").select(col("c_nationkey").as("nationkey"))
+        .exceptAll(table(s, dir, "supplier").select(col("s_nationkey").as("nationkey")))
+        .orderBy(col("nationkey"))
+    },
+
+    // W4 navigation windows: first/last/nth over a running ROWS frame
+    // with IGNORE NULLS (the gap-fill / last-observation-carried-forward
+    // family), plus lead with an explicit default. Nulls are planted
+    // deterministically ('error' events) so the ignore-nulls semantics
+    // are actually exercised.
+    QuerySpec("q_window_nav",
       """SELECT event_id, user_id,
         | first_value(v IGNORE NULLS) OVER w AS first_ok,
         | last_value(v IGNORE NULLS) OVER w AS last_ok,
@@ -4422,8 +4074,31 @@ object RelationalQueries {
         |      FROM events)
         |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
         |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |ORDER BY event_id""".stripMargin,
-    "q_funnel" ->
+        |ORDER BY event_id""".stripMargin) { (s, dir) =>
+      val v = when(col("event_type") === "error", lit(null).cast("double"))
+        .otherwise(col("value"))
+      val frame = Window.partitionBy(col("user_id"))
+        .orderBy(col("ts"), col("event_id"))
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      val order = Window.partitionBy(col("user_id"))
+        .orderBy(col("ts"), col("event_id"))
+      table(s, dir, "events")
+        .withColumn("v", v)
+        .select(
+          col("event_id"), col("user_id"),
+          first(col("v"), ignoreNulls = true).over(frame).as("first_ok"),
+          last(col("v"), ignoreNulls = true).over(frame).as("last_ok"),
+          nth_value(col("v"), 2).over(frame).as("second_any"),
+          lead(col("value"), 1, -1.0).over(order).as("next_val"))
+        .orderBy(col("event_id"))
+    },
+
+    // Behavioral analytics: 4-step funnel over the event log. Each step
+    // is an equi-join on user_id against events pre-filtered to ONE
+    // type (filter reaches the scan), re-aggregated per user — never a
+    // per-user sort of the full log. The oracle chains the same
+    // strictly-after LEFT JOIN + MIN per step.
+    QuerySpec("q_funnel",
       """WITH s1 AS (
         |  SELECT user_id, MIN(ts) AS t_1 FROM events
         |  WHERE event_type = 'signup' GROUP BY user_id
@@ -4443,15 +4118,60 @@ object RelationalQueries {
         |    ON e.user_id = s3.user_id AND e.event_type = 'purchase' AND e.ts > s3.t_3
         |  GROUP BY s3.user_id, s3.t_1, s3.t_2, s3.t_3
         |)
-        |SELECT user_id, t_1, t_2, t_3, t_4 FROM s4 ORDER BY user_id""".stripMargin,
-    "q_window_median" ->
-      """SELECT user_id, ts, value,
-        |  ROUND(median(value::DOUBLE) OVER (PARTITION BY user_id
-        |    ORDER BY ts, value ROWS BETWEEN 3 PRECEDING AND CURRENT ROW), 6)
-        |    AS med_4
-        |FROM events WHERE event_type = 'purchase'
-        |ORDER BY user_id, ts, value""".stripMargin,
-    "q_attr_linear" ->
+        |SELECT user_id, t_1, t_2, t_3, t_4 FROM s4 ORDER BY user_id""".stripMargin) { (s, dir) =>
+      Analytics.funnelTimes(table(s, dir, "events"), "user_id", "ts",
+          "event_type", Seq("signup", "view", "click", "purchase"))
+        .orderBy(col("user_id"))
+    },
+
+    // Last-touch attribution: each purchase credits the latest click
+    // at-or-before it (per user) within a 7-day window — the as-of
+    // join composed into the marketing-analytics shape, then one
+    // revenue rollup per derived channel. Same single-shuffle as-of
+    // plan as q_join_asof; DuckDB's native ASOF JOIN is the oracle.
+    QuerySpec("q_attr_lasttouch",
+      """WITH conv AS (
+        |  SELECT user_id, ts, value FROM events WHERE event_type = 'purchase'
+        |), t AS (
+        |  -- collapse ties on (user_id, tts) to max(channel): DuckDB's
+        |  -- ASOF JOIN picks an unspecified tied row, AsOfJoin carries
+        |  -- the greatest (channel) tuple deterministically
+        |  SELECT user_id, tts, max(channel) AS channel FROM (
+        |    SELECT user_id, ts AS tts, 'ch_' || (event_id % 3) AS channel
+        |    FROM events WHERE event_type = 'click')
+        |  GROUP BY user_id, tts
+        |), att AS (
+        |  SELECT c.value, t.channel, c.ts, t.tts
+        |  FROM conv c ASOF JOIN t ON c.user_id = t.user_id AND c.ts >= t.tts
+        |)
+        |SELECT channel, COUNT(*) AS n_conv,
+        |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS revenue
+        |FROM att WHERE ts - tts <= INTERVAL 7 DAY
+        |GROUP BY channel ORDER BY channel""".stripMargin) { (s, dir) =>
+      val ev = table(s, dir, "events")
+      val conv = ev.filter(col("event_type") === "purchase")
+        .select(col("user_id"), col("ts"), col("value"))
+      val touch = ev.filter(col("event_type") === "click")
+        .select(col("user_id"), col("ts").as("tts"),
+          concat(lit("ch_"), col("event_id") % 3).as("channel"))
+      AsOfJoin.asof(conv, touch, "user_id", "ts", "tts",
+          Map("channel" -> "channel"), inner = true,
+          tolerance = Some(expr("INTERVAL 7 DAYS")))
+        .groupBy(col("channel"))
+        .agg(count(lit(1)).as("n_conv"), dsum(col("value")).as("revenue"))
+        .orderBy(col("channel"))
+    },
+
+    // Linear multi-touch attribution: each purchase splits its revenue
+    // EQUALLY across every click in its trailing 7-day window (the
+    // fairness-variant companion to q_attr_lasttouch). The touch join
+    // is equi-keyed on user_id with the range as a residual predicate
+    // — per-user fan-out is bounded by a user's own click cadence, so
+    // the shape survives scale where an unkeyed interval join would
+    // not. Each credit is value/n_touch cast to DECIMAL(28,12) before
+    // summing, so the per-channel rollup is shuffle-order independent
+    // and oracle-replayable.
+    QuerySpec("q_attr_linear",
       s"""WITH c AS (
         |  SELECT user_id, ts, event_id AS conv_id, value
         |  FROM events WHERE event_type = 'purchase'
@@ -4475,27 +4195,38 @@ object RelationalQueries {
         |      AS raw_credit
         |  FROM j JOIN n USING (conv_id)
         |  GROUP BY channel)
-        |ORDER BY channel""".stripMargin,
-    "q_attr_lasttouch" ->
-      """WITH conv AS (
-        |  SELECT user_id, ts, value FROM events WHERE event_type = 'purchase'
-        |), t AS (
-        |  -- collapse ties on (user_id, tts) to max(channel): DuckDB's
-        |  -- ASOF JOIN picks an unspecified tied row, AsOfJoin carries
-        |  -- the greatest (channel) tuple deterministically
-        |  SELECT user_id, tts, max(channel) AS channel FROM (
-        |    SELECT user_id, ts AS tts, 'ch_' || (event_id % 3) AS channel
-        |    FROM events WHERE event_type = 'click')
-        |  GROUP BY user_id, tts
-        |), att AS (
-        |  SELECT c.value, t.channel, c.ts, t.tts
-        |  FROM conv c ASOF JOIN t ON c.user_id = t.user_id AND c.ts >= t.tts
-        |)
-        |SELECT channel, COUNT(*) AS n_conv,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS revenue
-        |FROM att WHERE ts - tts <= INTERVAL 7 DAY
-        |GROUP BY channel ORDER BY channel""".stripMargin,
-    "q_cohort" ->
+        |ORDER BY channel""".stripMargin) { (s, dir) =>
+      val ev = table(s, dir, "events")
+      val conv = ev.filter(col("event_type") === "purchase")
+        .select(col("user_id"), col("ts"),
+          col("event_id").as("conv_id"), col("value"))
+      val touch = ev.filter(col("event_type") === "click")
+        .select(col("user_id"), col("ts").as("tts"),
+          concat(lit("ch_"), col("event_id") % 3).as("channel"))
+      val joined = conv.join(touch, Seq("user_id"))
+        .filter(col("tts") <= col("ts") &&
+          col("tts") >= col("ts") - expr("INTERVAL 7 DAYS"))
+      joined
+        .withColumn("n_touch",
+          count(lit(1)).over(Window.partitionBy(col("conv_id"))))
+        .groupBy(col("channel"))
+        .agg(
+          count(lit(1)).as("n_touches"),
+          // portableRound6, not round: the 12dp-quantized sum is off
+          // the 6dp grid (0.01 split over 32 touches = 0.0003125 — an
+          // exact .5e-6 tie), the cross-engine ROUND-tie hot shape
+          graft.functions.Num.portableRound6(
+            sum((col("value") / col("n_touch"))
+              .cast(org.apache.spark.sql.types.DecimalType(28, 12)))
+            .cast("double")).as("revenue_credit"))
+        .orderBy(col("channel"))
+    },
+
+    // Weekly cohort retention: first-touch min + (user, week) distinct
+    // both shuffle on user_id; the per-week cohort sizes are a bounded
+    // frame broadcast back onto the cells (plan: one broadcast join, no
+    // second wide exchange).
+    QuerySpec("q_cohort",
       s"""WITH firsts AS (
         |  SELECT user_id, date_trunc('week', MIN(ts)) AS cohort_week
         |  FROM events GROUP BY user_id
@@ -4513,8 +4244,16 @@ object RelationalQueries {
         |  ${graft.functions.Num.portableRound6Sql(
             "CAST(n_active AS DOUBLE) / cohort_size")} AS retention
         |FROM cells JOIN sizes USING (cohort_week)
-        |ORDER BY cohort_week, week_offset""".stripMargin,
-    "q_event_transitions" ->
+        |ORDER BY cohort_week, week_offset""".stripMargin) { (s, dir) =>
+      Analytics.cohortRetention(table(s, dir, "events"), "user_id", "ts")
+        .orderBy(col("cohort_week"), col("week_offset"))
+    },
+
+    // First-order event-type transition matrix: ONE window shuffle on
+    // user_id for the lag, then a partial-combining count into a
+    // states^2 frame; row normalization runs over the tiny aggregated
+    // cells only.
+    QuerySpec("q_event_transitions",
       s"""WITH p AS (
         |  SELECT user_id, event_type,
         |    LAG(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id)
@@ -4527,8 +4266,19 @@ object RelationalQueries {
         |SELECT prev_type, next_type, n_trans,
         |  ${graft.functions.Num.portableRound6Sql(
             "CAST(n_trans AS DOUBLE) / SUM(n_trans) OVER (PARTITION BY prev_type)")} AS p_trans
-        |FROM c ORDER BY prev_type, next_type""".stripMargin,
-    "q_golden_record" ->
+        |FROM c ORDER BY prev_type, next_type""".stripMargin) { (s, dir) =>
+      Analytics.eventTransitions(table(s, dir, "events"), "user_id", "ts",
+          "event_type", "event_id")
+        .orderBy(col("prev_type"), col("next_type"))
+    },
+
+    // Golden-record survivorship: per user, each attribute resolves to
+    // its own freshest non-null feed (purchase amounts from purchase
+    // events, k from clicks, signup time from signups) — blind
+    // latest-row-wins would null attributes the newest feed lacks.
+    // One aggregation pass; null ordering keys make each field follow
+    // its own channel.
+    QuerySpec("q_golden_record",
       """WITH src AS (
         |  SELECT user_id,
         |    lpad(CAST(epoch_us(ts) AS VARCHAR), 20, '0')
@@ -4547,8 +4297,30 @@ object RelationalQueries {
         |    AS last_click_k,
         |  arg_max(sg, CASE WHEN sg IS NOT NULL THEN ord END)
         |    AS last_signup_at
-        |FROM src GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "q_split_temporal" ->
+        |FROM src GROUP BY user_id ORDER BY user_id""".stripMargin) { (s, dir) =>
+      val ordKey = concat(
+        lpad(unix_micros(col("ts")).cast("string"), 20, "0"),
+        lpad(col("event_id").cast("string"), 12, "0"))
+      val src = table(s, dir, "events").select(
+        col("user_id"), ordKey.as("__ord"),
+        when(col("event_type") === "purchase", col("value"))
+          .as("last_purchase_value"),
+        when(col("event_type") === "click",
+          get_json_object(col("props"), "$.k").cast("int"))
+          .as("last_click_k"),
+        when(col("event_type") === "signup",
+          date_format(col("ts"), "yyyy-MM-dd HH:mm:ss"))
+          .as("last_signup_at"))
+      Upsert.goldenRecord(src, "user_id", "__ord",
+          Seq("last_purchase_value", "last_click_k", "last_signup_at"))
+        .orderBy(col("user_id"))
+    },
+
+    // Temporal per-user holdout: each user's last 2 events become the
+    // evaluation slice (leave-last-out) — the time-respecting split
+    // that prevents FUTURE leakage, beside the cluster-aware
+    // q_split_leakfree that prevents content leakage.
+    QuerySpec("q_split_temporal",
       """WITH r AS (
         |  SELECT event_id, user_id,
         |    CAST(ROW_NUMBER() OVER (PARTITION BY user_id
@@ -4558,8 +4330,19 @@ object RelationalQueries {
         |SELECT event_id, user_id, recency_rank,
         |  CASE WHEN recency_rank <= 2 THEN 'holdout' ELSE 'train' END
         |    AS split
-        |FROM r ORDER BY user_id, recency_rank, event_id""".stripMargin,
-    "q_feat_hash" ->
+        |FROM r ORDER BY user_id, recency_rank, event_id""".stripMargin) { (s, dir) =>
+      graft.operators.Sampling.temporalHoldout(table(s, dir, "events"),
+          "user_id", "ts", "event_id", holdoutLast = 2)
+        .select(col("event_id"), col("user_id"), col("recency_rank"),
+          col("split"))
+        .orderBy(col("user_id"), col("recency_rank"), col("event_id"))
+    },
+
+    // Feature hashing (the vocabulary-free categorical featurizer):
+    // md5("col=value") mod 32 indexes a sparse count vector per
+    // customer — identical feature ids on every engine/run/slice,
+    // nothing grows with cardinality.
+    QuerySpec("q_feat_hash",
       """WITH f AS (
         |  SELECT c_custkey AS id,
         |    CASE WHEN c_mktsegment IS NULL THEN 'c_mktsegment'
@@ -4582,8 +4365,17 @@ object RelationalQueries {
         |SELECT id AS c_custkey, CAST(COUNT(*) AS BIGINT) AS n_features,
         |  string_agg(CAST(idx AS VARCHAR) || ':' || CAST(c AS VARCHAR),
         |    ',' ORDER BY idx) AS features
-        |FROM c GROUP BY id ORDER BY c_custkey""".stripMargin,
-    "q_ts_rollunique" ->
+        |FROM c GROUP BY id ORDER BY c_custkey""".stripMargin) { (s, dir) =>
+      graft.operators.Features.hashedFeatures(table(s, dir, "customer"),
+          "c_custkey", Seq("c_mktsegment", "c_nationkey"), dim = 32)
+        .orderBy(col("c_custkey"))
+    },
+
+    // Exact 7-day rolling unique users — the reach metric COUNT
+    // (DISTINCT) OVER cannot express: each distinct (user, day) votes
+    // for the 7 report days it covers (bounded explode over the
+    // aggregate), one distinct-count per day.
+    QuerySpec("q_ts_rollunique",
       """WITH ud AS (
         |  SELECT DISTINCT user_id AS u, CAST(date_trunc('day', ts) AS DATE)
         |    AS d
@@ -4596,8 +4388,21 @@ object RelationalQueries {
         |)
         |SELECT v.day, COUNT(DISTINCT v.u) AS n_unique
         |FROM votes v WHERE v.day IN (SELECT day FROM days)
-        |GROUP BY v.day ORDER BY v.day""".stripMargin,
-    "q_ts_rollunique_hll" ->
+        |GROUP BY v.day ORDER BY v.day""".stripMargin) { (s, dir) =>
+      Analytics.rollingUniques(table(s, dir, "events"), "user_id", "ts",
+        windowDays = 7)
+    },
+
+    // The sketch path rollingUniques' Scaladoc names, made concrete:
+    // one HLL per observed day, merged across the 7-day frame — wire
+    // cost independent of user cardinality where the exact path
+    // shuffles uniques x window (user, day) pairs. PARTIAL ORACLE
+    // (the q_agg_hll_merge pattern): the sketch estimate is
+    // engine-specific, so the driver-checked columns are the exact
+    // rolling count plus approx_ok (estimate within 5% of exact —
+    // 3x the lgK-12 rsd) pinned TRUE, so a drifting sketch
+    // hash-mismatches.
+    QuerySpec("q_ts_rollunique_hll",
       """WITH ud AS (
         |  SELECT DISTINCT user_id AS u, CAST(date_trunc('day', ts) AS DATE)
         |    AS d
@@ -4610,8 +4415,22 @@ object RelationalQueries {
         |)
         |SELECT v.day, COUNT(DISTINCT v.u) AS n_unique, TRUE AS approx_ok
         |FROM votes v WHERE v.day IN (SELECT day FROM days)
-        |GROUP BY v.day ORDER BY v.day""".stripMargin,
-    "q_ts_daychange" ->
+        |GROUP BY v.day ORDER BY v.day""".stripMargin) { (s, dir) =>
+      val ev = table(s, dir, "events")
+      Analytics.rollingUniques(ev, "user_id", "ts", windowDays = 7)
+        .join(Analytics.rollingUniquesHll(ev, "user_id", "ts",
+          windowDays = 7), Seq("day"))
+        .select(col("day"), col("n_unique"),
+          (abs(col("n_unique_est") - col("n_unique")).cast("double")
+            / col("n_unique") <= 0.05).as("approx_ok"))
+        .orderBy(col("day"))
+    },
+
+    // Day-over-day percent change of daily volumes per event type —
+    // the period-over-period BI staple: one lag window over the daily
+    // aggregate spine; first day reads NULL, a zero prior day reads
+    // NULL (try_divide), never a crash.
+    QuerySpec("q_ts_daychange",
       s"""WITH d AS (
         |  SELECT event_type, CAST(date_trunc('day', ts) AS TIMESTAMP)
         |    AS day, COUNT(*) AS cnt
@@ -4624,8 +4443,29 @@ object RelationalQueries {
         |SELECT event_type, day, cnt, CAST(prev_cnt AS BIGINT) AS prev_cnt,
         |  ${graft.functions.Num.portableRound6Sql(
              "CAST(cnt - prev_cnt AS DOUBLE) / CAST(prev_cnt AS DOUBLE)")} AS pct_change
-        |FROM l ORDER BY event_type, day""".stripMargin,
-    "q_assoc_rules" ->
+        |FROM l ORDER BY event_type, day""".stripMargin) { (s, dir) =>
+      val daily = table(s, dir, "events")
+        .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
+        .agg(count(lit(1)).as("cnt"))
+      val w = Window.partitionBy(col("event_type")).orderBy(col("day"))
+      daily
+        .withColumn("prev_cnt", lag(col("cnt"), 1).over(w))
+        // portableRound6 (r11 triage): (cnt-prev)/prev is an integer
+        // ratio over an unbounded daily volume — daily counts reach
+        // 739 at sf0.1, so the divergent 640-family denominator is
+        // reachable. Oracle in lockstep.
+        .withColumn("pct_change",
+          graft.functions.Num.portableRound6(
+            try_divide((col("cnt") - col("prev_cnt")).cast("double"),
+              col("prev_cnt").cast("double"))))
+        .orderBy(col("event_type"), col("day"))
+    },
+
+    // Pairwise association rules over per-user event-type sets:
+    // support / confidence / lift — the co-behavior miner. Pair
+    // fanout per user is bounded by the event-type vocabulary; lift
+    // divides exact integer products once.
+    QuerySpec("q_assoc_rules",
       s"""WITH ut AS (
         |  SELECT DISTINCT user_id AS u, CAST(event_type AS VARCHAR) AS i
         |  FROM events WHERE user_id IS NOT NULL AND event_type IS NOT NULL
@@ -4655,8 +4495,17 @@ object RelationalQueries {
               " / CAST(CAST(a.ni AS HUGEINT) * CAST(b.ni AS HUGEINT) AS DOUBLE)")} AS lift
         |FROM p JOIN ic a ON a.i = p.item_a JOIN ic b ON b.i = p.item_b
         |CROSS JOIN nn
-        |ORDER BY item_a, item_b""".stripMargin,
-    "q_graph_markov" ->
+        |ORDER BY item_a, item_b""".stripMargin) { (s, dir) =>
+      Analytics.associationRules(table(s, dir, "events"),
+          "user_id", "event_type")
+        .orderBy(col("item_a"), col("item_b"))
+    },
+
+    // Stationary distribution of the behavior Markov chain (2 power
+    // iterations from uniform, PageRank-recipe rounding) — where
+    // attention concentrates in the limit; everything after the one
+    // lag pass touches only the bounded |states|² matrix.
+    QuerySpec("q_graph_markov",
       s"""WITH p AS (
         |  SELECT user_id, event_type,
         |    LAG(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id)
@@ -4700,5 +4549,9 @@ object RelationalQueries {
         |)
         |SELECT s AS state, x AS stationary,
         |  ${graft.functions.Num.portableRound6Sql("x / mass")} AS share
-        |FROM f ORDER BY state""".stripMargin)
+        |FROM f ORDER BY state""".stripMargin) { (s, dir) =>
+      Analytics.markovStationary(table(s, dir, "events"), "user_id", "ts",
+          "event_type", "event_id", iters = 2)
+        .orderBy(col("state"))
+    })
 }

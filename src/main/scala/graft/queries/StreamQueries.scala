@@ -26,8 +26,6 @@ import graft.streaming.Streams
   */
 object StreamQueries {
 
-  type Q = (SparkSession, String) => DataFrame
-
   private val StationsDir = s"${QueryUtil.fixtureRoot}/stream/stations"
   private val WeatherDir = s"${QueryUtil.fixtureRoot}/stream/weather"
 
@@ -202,7 +200,12 @@ object StreamQueries {
     }
   }
 
-  val queries: Map[String, Q] = Map(
+  /** Mixed good/malformed JSON-line drops for the streaming
+    * dead-letter query.
+    */
+  private val MixedDir = s"${QueryUtil.fixtureRoot}/stream/mixed"
+
+  val specs: Seq[QuerySpec] = Seq(
     // ST2 (watermarked stateful dedup) -> ST4 (flatMapGroupsWithState
     // empty<->stocked transitions) chained — two stateful operators in
     // one streaming query, end-to-end over the fixture drop-dir. The
@@ -210,49 +213,77 @@ object StreamQueries {
     // stocks out 213688169 (4 -> 0); 19179944124 never crosses, and the
     // duplicated 99950133 report must be dropped by the dedup, not
     // re-processed.
-    "q_stream_stockouts" -> ((s, _) => {
+    QuerySpec("q_stream_stockouts",
+      """SELECT * FROM (VALUES
+        | (CAST(99950133 AS BIGINT), 'restock', CAST('2024-02-01 01:10:00' AS TIMESTAMP), 3),
+        | (CAST(213688169 AS BIGINT), 'stockout', CAST('2024-02-01 01:15:00' AS TIMESTAMP), 0)
+        |) AS t(station_id, event, at, bikes)
+        |ORDER BY station_id, at""".stripMargin) { (s, _) =>
       runToBatch(s,
         Streams.stockoutTransitions(
           Streams.dedupedStationUpdates(Streams.velibStream(s, StationsDir)))
           .toDF())
         .orderBy(col("station_id"), col("at"))
-    }),
+    },
 
     // ST4b: streaming EWMA over the same deduped station feed —
     // alpha=0.5 keeps every smoothed value an exact half-integer, so
     // the VALUES oracle is the hand-folded recursion per station.
-    "q_stream_ewma" -> ((s, _) => {
+    QuerySpec("q_stream_ewma",
+      """SELECT * FROM (VALUES
+        | (CAST(99950133 AS BIGINT), CAST('2024-01-31 23:45:00' AS TIMESTAMP), 0, CAST(0.0 AS DOUBLE)),
+        | (CAST(99950133 AS BIGINT), CAST('2024-02-01 01:10:00' AS TIMESTAMP), 3, CAST(1.5 AS DOUBLE)),
+        | (CAST(213688169 AS BIGINT), CAST('2024-01-31 23:50:00' AS TIMESTAMP), 5, CAST(5.0 AS DOUBLE)),
+        | (CAST(213688169 AS BIGINT), CAST('2024-02-01 00:50:00' AS TIMESTAMP), 4, CAST(4.5 AS DOUBLE)),
+        | (CAST(213688169 AS BIGINT), CAST('2024-02-01 01:15:00' AS TIMESTAMP), 0, CAST(2.25 AS DOUBLE)),
+        | (CAST(19179944124 AS BIGINT), CAST('2024-01-31 22:45:00' AS TIMESTAMP), 12, CAST(12.0 AS DOUBLE)),
+        | (CAST(19179944124 AS BIGINT), CAST('2024-02-01 00:55:00' AS TIMESTAMP), 11, CAST(11.5 AS DOUBLE))
+        |) AS t(station_id, at, bikes, ewma)
+        |ORDER BY station_id, at""".stripMargin) { (s, _) =>
       runToBatch(s,
         Streams.availabilityEwma(
           Streams.dedupedStationUpdates(Streams.velibStream(s, StationsDir)),
           alpha = 0.5)
           .toDF())
         .orderBy(col("station_id"), col("at"))
-    }),
+    },
 
     // J7 stream-stream join: station reports x their hour's weather
     // observation, both sides file-drop streams, hour-bucket equi key +
     // range residual, weather deduped to one observation per hour.
-    "q_stream_join" -> ((s, _) => {
+    QuerySpec("q_stream_join",
+      """SELECT * FROM (VALUES
+        | (CAST(99950133 AS BIGINT), 3, CAST('2024-02-01 01:10:00' AS TIMESTAMP), CAST('2024-02-01 01:00:00' AS TIMESTAMP), CAST(278.5 AS DOUBLE), 'clear sky'),
+        | (CAST(213688169 AS BIGINT), 4, CAST('2024-02-01 00:50:00' AS TIMESTAMP), CAST('2024-02-01 00:00:00' AS TIMESTAMP), CAST(277.99 AS DOUBLE), 'light rain'),
+        | (CAST(213688169 AS BIGINT), 0, CAST('2024-02-01 01:15:00' AS TIMESTAMP), CAST('2024-02-01 01:00:00' AS TIMESTAMP), CAST(278.5 AS DOUBLE), 'clear sky'),
+        | (CAST(19179944124 AS BIGINT), 11, CAST('2024-02-01 00:55:00' AS TIMESTAMP), CAST('2024-02-01 00:00:00' AS TIMESTAMP), CAST(277.99 AS DOUBLE), 'light rain')
+        |) AS t(station_id, num_bikes_available, last_reported, obs_ts, temp, weather_description)
+        |ORDER BY station_id, last_reported""".stripMargin) { (s, _) =>
       runToBatch(s,
         Streams.stationWeatherJoin(
           Streams.velibStream(s, StationsDir),
           Streams.weatherStream(s, WeatherDir)))
         .orderBy(col("station_id"), col("last_reported"))
-    }),
+    },
 
     // J7b LEFT OUTER stream-stream join: the 02:10 report's hour has
     // no observation — it must emit with null weather once the
     // sentinel-pushed watermark proves no match can arrive; the
     // matched rows emit as in the inner join; the sentinel report
     // itself stays buffered above the final watermark.
-    "q_stream_join_outer" -> ((s, _) => {
+    QuerySpec("q_stream_join_outer",
+      """SELECT * FROM (VALUES
+        | (CAST(101 AS BIGINT), 7, CAST('2024-02-01 00:10:00' AS TIMESTAMP), CAST('2024-02-01 00:00:00' AS TIMESTAMP), CAST(277.99 AS DOUBLE), 'light rain'),
+        | (CAST(202 AS BIGINT), 2, CAST('2024-02-01 00:40:00' AS TIMESTAMP), CAST('2024-02-01 00:00:00' AS TIMESTAMP), CAST(277.99 AS DOUBLE), 'light rain'),
+        | (CAST(303 AS BIGINT), 9, CAST('2024-02-01 02:10:00' AS TIMESTAMP), CAST(NULL AS TIMESTAMP), CAST(NULL AS DOUBLE), CAST(NULL AS VARCHAR))
+        |) AS t(station_id, num_bikes_available, last_reported, obs_ts, temp, weather_description)
+        |ORDER BY station_id, last_reported""".stripMargin) { (s, _) =>
       runToBatch(s,
         Streams.stationWeatherLeftJoin(
           Streams.velibStream(s, StationsOuterDir),
           Streams.weatherStream(s, WeatherOuterDir)))
         .orderBy(col("station_id"), col("last_reported"))
-    }),
+    },
 
     // ST11 streaming corpus admission: per-micro-batch near-dup gate
     // against the accumulating accepted store (within-batch dedup +
@@ -265,7 +296,11 @@ object StreamQueries {
     // (`mtimePinnedDropDir`): same per-batch admission as landing the
     // drops live, minus six redundant stream restarts the previous
     // per-drop harness paid.
-    "q_stream_dedup" -> ((s, _) => {
+    QuerySpec("q_stream_dedup",
+      """SELECT * FROM (VALUES
+        | (CAST(1 AS BIGINT)), (CAST(2 AS BIGINT)),
+        | (CAST(4 AS BIGINT)), (CAST(6 AS BIGINT))
+        |) AS t(doc_id) ORDER BY doc_id""".stripMargin) { (s, _) =>
       import org.apache.spark.sql.types._
       val base = java.nio.file.Paths.get(QueryUtil.scratchDir("graft_admit_"))
       val acceptedDir = base.resolve("accepted").toString
@@ -280,7 +315,7 @@ object StreamQueries {
       }
       s.read.parquet(acceptedDir).select(col("doc_id"))
         .orderBy(col("doc_id"))
-    }),
+    },
 
     // §2.10 built-in `dropDuplicatesWithinWatermark`, pinned on its
     // OWN semantics (the other streaming rows use it as plumbing):
@@ -295,7 +330,18 @@ object StreamQueries {
     // checkpoint carries both the dedup state and the watermark
     // across passes); the parquet sink accumulates across passes
     // where a memory sink would reset.
-    "q_stream_dropdupwm" -> ((s, _) => {
+    // key 1 admitted at 00:00, its 00:30 re-report deduped, and its
+    // 03:45 report RE-ADMITTED after the sentinel-driven watermark
+    // (03:30) evicts the key's state — both halves of the built-in's
+    // contract in one hash.
+    QuerySpec("q_stream_dropdupwm",
+      """SELECT * FROM (VALUES
+        | (CAST(1 AS BIGINT), CAST('2024-02-01 00:00:00' AS TIMESTAMP)),
+        | (CAST(1 AS BIGINT), CAST('2024-02-01 03:45:00' AS TIMESTAMP)),
+        | (CAST(2 AS BIGINT), CAST('2024-02-01 00:10:00' AS TIMESTAMP)),
+        | (CAST(9 AS BIGINT), CAST('2024-02-01 05:30:00' AS TIMESTAMP))
+        |) AS t(station_id, last_reported)
+        |ORDER BY station_id, last_reported""".stripMargin) { (s, _) =>
       import org.apache.spark.sql.types._
       val base = java.nio.file.Paths.get(QueryUtil.scratchDir("graft_ddwm_"))
       val outDir = base.resolve("out").toString
@@ -320,38 +366,70 @@ object StreamQueries {
       }
       s.read.parquet(outDir)
         .orderBy(col("station_id"), col("last_reported"))
-    }),
+    },
 
     // ST3 streaming windowed aggregation, complete mode so every
     // hourly window is emitted at termination (append would hold
     // windows still above the final watermark). The duplicated
     // 99950133 report is NOT deduped on this path — n_reports = 2 for
     // its hour proves the aggregation counts raw arrivals.
-    "q_stream_hourly" -> ((s, _) => {
+    // min_bikes present since the stream adopted the batch twin's
+    // shared measure list (Velib.hourlyMeasures); the duplicated
+    // 99950133 report keeps n_reports=2 with max=min=0
+    QuerySpec("q_stream_hourly",
+      """SELECT * FROM (VALUES
+        | (CAST('2024-01-31 22:00:00' AS TIMESTAMP), CAST(19179944124 AS BIGINT), 12, 12, CAST(1 AS BIGINT)),
+        | (CAST('2024-01-31 23:00:00' AS TIMESTAMP), CAST(99950133 AS BIGINT), 0, 0, CAST(2 AS BIGINT)),
+        | (CAST('2024-01-31 23:00:00' AS TIMESTAMP), CAST(213688169 AS BIGINT), 5, 5, CAST(1 AS BIGINT)),
+        | (CAST('2024-02-01 00:00:00' AS TIMESTAMP), CAST(213688169 AS BIGINT), 4, 4, CAST(1 AS BIGINT)),
+        | (CAST('2024-02-01 00:00:00' AS TIMESTAMP), CAST(19179944124 AS BIGINT), 11, 11, CAST(1 AS BIGINT)),
+        | (CAST('2024-02-01 01:00:00' AS TIMESTAMP), CAST(99950133 AS BIGINT), 3, 3, CAST(1 AS BIGINT)),
+        | (CAST('2024-02-01 01:00:00' AS TIMESTAMP), CAST(213688169 AS BIGINT), 0, 0, CAST(1 AS BIGINT))
+        |) AS t(hour_start, station_id, max_bikes, min_bikes, n_reports)
+        |ORDER BY hour_start, station_id""".stripMargin) { (s, _) =>
       runToBatch(s,
         Streams.hourlyAvailabilityStream(Streams.velibStream(s, StationsDir)),
         mode = "complete")
         .orderBy(col("hour_start"), col("station_id"))
-    }),
+    },
 
     // Event-time session windows (append mode) over the deduped update
     // stream: 30-minute-gap bursts collapse to one immutable session
     // row each. The 00:50 + 01:15 reports of 213688169 must merge into
     // ONE session ending 01:45; the sentinel closes all real sessions
     // (see StationsSessionsDir) and stays unemitted itself.
-    "q_stream_sessions" -> ((s, _) => {
+    QuerySpec("q_stream_sessions",
+      """SELECT * FROM (VALUES
+        | (CAST(99950133 AS BIGINT), CAST('2024-01-31 23:45:00' AS TIMESTAMP), CAST('2024-02-01 00:15:00' AS TIMESTAMP), CAST(1 AS BIGINT), 0),
+        | (CAST(99950133 AS BIGINT), CAST('2024-02-01 01:10:00' AS TIMESTAMP), CAST('2024-02-01 01:40:00' AS TIMESTAMP), CAST(1 AS BIGINT), 3),
+        | (CAST(213688169 AS BIGINT), CAST('2024-01-31 23:50:00' AS TIMESTAMP), CAST('2024-02-01 00:20:00' AS TIMESTAMP), CAST(1 AS BIGINT), 5),
+        | (CAST(213688169 AS BIGINT), CAST('2024-02-01 00:50:00' AS TIMESTAMP), CAST('2024-02-01 01:45:00' AS TIMESTAMP), CAST(2 AS BIGINT), 4),
+        | (CAST(19179944124 AS BIGINT), CAST('2024-01-31 22:45:00' AS TIMESTAMP), CAST('2024-01-31 23:15:00' AS TIMESTAMP), CAST(1 AS BIGINT), 12),
+        | (CAST(19179944124 AS BIGINT), CAST('2024-02-01 00:55:00' AS TIMESTAMP), CAST('2024-02-01 01:25:00' AS TIMESTAMP), CAST(1 AS BIGINT), 11)
+        |) AS t(station_id, session_start, session_end, n_reports, max_bikes)
+        |ORDER BY station_id, session_start""".stripMargin) { (s, _) =>
       runToBatch(s,
         Streams.sessionizedActivity(
           Streams.dedupedStationUpdates(
             Streams.velibStream(s, StationsSessionsDir))))
         .orderBy(col("station_id"), col("session_start"))
-    }),
+    },
 
     // Stream-static join: the deduped update stream enriched with a
     // small batch dimension (broadcast per micro-batch, no state
     // store). Station 19179944124 is deliberately absent from the dim —
     // the LEFT join must carry it with a NULL district, not drop it.
-    "q_stream_enrich" -> ((s, _) => {
+    QuerySpec("q_stream_enrich",
+      """SELECT * FROM (VALUES
+        | (CAST(99950133 AS BIGINT), 'paris-11', 0, CAST('2024-01-31 23:45:00' AS TIMESTAMP)),
+        | (CAST(99950133 AS BIGINT), 'paris-11', 3, CAST('2024-02-01 01:10:00' AS TIMESTAMP)),
+        | (CAST(213688169 AS BIGINT), 'paris-16', 5, CAST('2024-01-31 23:50:00' AS TIMESTAMP)),
+        | (CAST(213688169 AS BIGINT), 'paris-16', 4, CAST('2024-02-01 00:50:00' AS TIMESTAMP)),
+        | (CAST(213688169 AS BIGINT), 'paris-16', 0, CAST('2024-02-01 01:15:00' AS TIMESTAMP)),
+        | (CAST(19179944124 AS BIGINT), CAST(NULL AS VARCHAR), 12, CAST('2024-01-31 22:45:00' AS TIMESTAMP)),
+        | (CAST(19179944124 AS BIGINT), CAST(NULL AS VARCHAR), 11, CAST('2024-02-01 00:55:00' AS TIMESTAMP))
+        |) AS t(station_id, district, num_bikes_available, last_reported)
+        |ORDER BY station_id, last_reported""".stripMargin) { (s, _) =>
       import s.implicits._
       val dim = Seq(
         (99950133L, "paris-11"), (213688169L, "paris-16")
@@ -363,13 +441,19 @@ object StreamQueries {
         .select(col("station_id"), col("district"),
           col("num_bikes_available"), col("last_reported"))
         .orderBy(col("station_id"), col("last_reported"))
-    }),
+    },
 
     // Streaming CDC merge: one file per micro-batch, each
     // foreachBatch-merged into a latest-row-per-station parquet target;
     // the final target IS the result. Timestamp-keyed merge semantics —
     // see Streams.streamingLatestMerge.
-    "q_stream_upsert" -> ((s, _) => {
+    QuerySpec("q_stream_upsert",
+      """SELECT * FROM (VALUES
+        | (CAST(99950133 AS BIGINT), 3, 22, CAST('2024-02-01 01:10:00' AS TIMESTAMP)),
+        | (CAST(213688169 AS BIGINT), 0, 35, CAST('2024-02-01 01:15:00' AS TIMESTAMP)),
+        | (CAST(19179944124 AS BIGINT), 11, 9, CAST('2024-02-01 00:55:00' AS TIMESTAMP))
+        |) AS t(station_id, num_bikes_available, num_docks_available, last_reported)
+        |ORDER BY station_id""".stripMargin) { (s, _) =>
       val outDir = QueryUtil.scratchDir("graft_stream_merge_") + "/target"
       withScopedStreamRun(s) { ckpt =>
         val raw = s.readStream.schema(Schemas.velibRaw)
@@ -384,7 +468,7 @@ object StreamQueries {
         .select(col("station_id"), col("num_bikes_available"),
           col("num_docks_available"), col("last_reported"))
         .orderBy(col("station_id"))
-    }),
+    },
 
     // ST9 snapshot time travel: the same streamingLatestMerge run as
     // q_stream_upsert (one fixture file per micro-batch -> committed
@@ -397,7 +481,16 @@ object StreamQueries {
     // arbitrarily, so batch order is pinned the q_stream_dedup way:
     // land each fixture into the drop dir and run an AvailableNow pass
     // PER DROP (shared checkpoint skips processed files).
-    "q_stream_timetravel" -> ((s, _) => {
+    QuerySpec("q_stream_timetravel",
+      """SELECT * FROM (VALUES
+        | (0, CAST(99950133 AS BIGINT), 0, CAST('2024-01-31 23:45:00' AS TIMESTAMP)),
+        | (0, CAST(213688169 AS BIGINT), 4, CAST('2024-02-01 00:50:00' AS TIMESTAMP)),
+        | (0, CAST(19179944124 AS BIGINT), 11, CAST('2024-02-01 00:55:00' AS TIMESTAMP)),
+        | (1, CAST(99950133 AS BIGINT), 3, CAST('2024-02-01 01:10:00' AS TIMESTAMP)),
+        | (1, CAST(213688169 AS BIGINT), 0, CAST('2024-02-01 01:15:00' AS TIMESTAMP)),
+        | (1, CAST(19179944124 AS BIGINT), 11, CAST('2024-02-01 00:55:00' AS TIMESTAMP))
+        |) AS t(snap_rank, station_id, num_bikes_available, last_reported)
+        |ORDER BY snap_rank, station_id""".stripMargin) { (s, _) =>
       val base = java.nio.file.Paths.get(QueryUtil.scratchDir("graft_stream_tt_"))
       val outDir = base.resolve("target").toString
       withScopedStreamRun(s) { ckpt =>
@@ -428,14 +521,24 @@ object StreamQueries {
             col("num_bikes_available"), col("last_reported"))
       }.reduce(_.unionByName(_))
         .orderBy(col("snap_rank"), col("station_id"))
-    }),
+    },
 
     // ST5 foreachBatch checkpointed load: the stream lands in an
     // arbitrary BATCH sink (parquet append here, standing in for the
     // reference's warehouse load), then the landed table is read back
     // as the result — end-to-end proof the loader delivered exactly
     // the deduped updates.
-    "q_stream_load" -> ((s, _) => {
+    QuerySpec("q_stream_load",
+      """SELECT * FROM (VALUES
+        | (CAST(99950133 AS BIGINT), 0, 25, 1, 1, 0, CAST('2024-01-31 23:45:00' AS TIMESTAMP)),
+        | (CAST(99950133 AS BIGINT), 3, 22, 1, 1, 1, CAST('2024-02-01 01:10:00' AS TIMESTAMP)),
+        | (CAST(213688169 AS BIGINT), 5, 30, 1, 1, 1, CAST('2024-01-31 23:50:00' AS TIMESTAMP)),
+        | (CAST(213688169 AS BIGINT), 4, 31, 1, 1, 1, CAST('2024-02-01 00:50:00' AS TIMESTAMP)),
+        | (CAST(213688169 AS BIGINT), 0, 35, 1, 1, 1, CAST('2024-02-01 01:15:00' AS TIMESTAMP)),
+        | (CAST(19179944124 AS BIGINT), 12, 8, 1, 0, 1, CAST('2024-01-31 22:45:00' AS TIMESTAMP)),
+        | (CAST(19179944124 AS BIGINT), 11, 9, 1, 0, 1, CAST('2024-02-01 00:55:00' AS TIMESTAMP))
+        |) AS t(station_id, num_bikes_available, num_docks_available, is_installed, is_returning, is_renting, last_reported)
+        |ORDER BY station_id, last_reported""".stripMargin) { (s, _) =>
       val outDir = QueryUtil.scratchDir("graft_stream_load_") + "/landed"
       withScopedStreamRun(s) { ckpt =>
         val q = Streams.foreachBatchLoad(
@@ -447,7 +550,7 @@ object StreamQueries {
       }
       s.read.parquet(outDir)
         .orderBy(col("station_id"), col("last_reported"))
-    }),
+    },
 
     // S3b under STREAMING: the permissive dead-letter tier over a
     // file-drop stream of mixed-quality producer lines. Two fixture
@@ -457,7 +560,14 @@ object StreamQueries {
     // now proven not to kill or wedge a continuous load. (FAILFAST
     // would poison-pill the stream on every restart — the exact
     // failure mode this tier exists to avoid.)
-    "q_stream_permissive" -> ((s, _) => {
+    QuerySpec("q_stream_permissive",
+      """SELECT * FROM (VALUES
+        | (CAST(3600 AS BIGINT), 1, FALSE, CAST(NULL AS VARCHAR)),
+        | (CAST(7200 AS BIGINT), 0, FALSE, CAST(NULL AS VARCHAR)),
+        | (CAST(NULL AS BIGINT), CAST(NULL AS INT), TRUE, '{"lastUpda'),
+        | (CAST(NULL AS BIGINT), CAST(NULL AS INT), TRUE, 'not json a')
+        |) AS t(ttl, n_stations, is_corrupt, corrupt_head)
+        |ORDER BY is_corrupt, ttl ASC NULLS FIRST, corrupt_head ASC NULLS FIRST""".stripMargin) { (s, _) =>
       val parsed = graft.sources.Sources.readJsonPermissiveStream(
         s, MixedDir, Schemas.velibRaw)
         .select(col("ttl"),
@@ -467,132 +577,5 @@ object StreamQueries {
       runToBatch(s, parsed)
         .orderBy(col("is_corrupt"), col("ttl").asc_nulls_first,
           col("corrupt_head").asc_nulls_first)
-    }))
-
-  /** Mixed good/malformed JSON-line drops for the streaming
-    * dead-letter query.
-    */
-  private val MixedDir = s"${QueryUtil.fixtureRoot}/stream/mixed"
-
-  val oracleSql: Map[String, String] = Map(
-    "q_stream_permissive" ->
-      """SELECT * FROM (VALUES
-        | (CAST(3600 AS BIGINT), 1, FALSE, CAST(NULL AS VARCHAR)),
-        | (CAST(7200 AS BIGINT), 0, FALSE, CAST(NULL AS VARCHAR)),
-        | (CAST(NULL AS BIGINT), CAST(NULL AS INT), TRUE, '{"lastUpda'),
-        | (CAST(NULL AS BIGINT), CAST(NULL AS INT), TRUE, 'not json a')
-        |) AS t(ttl, n_stations, is_corrupt, corrupt_head)
-        |ORDER BY is_corrupt, ttl ASC NULLS FIRST, corrupt_head ASC NULLS FIRST""".stripMargin,
-    // min_bikes present since the stream adopted the batch twin's
-    // shared measure list (Velib.hourlyMeasures); the duplicated
-    // 99950133 report keeps n_reports=2 with max=min=0
-    "q_stream_hourly" ->
-      """SELECT * FROM (VALUES
-        | (CAST('2024-01-31 22:00:00' AS TIMESTAMP), CAST(19179944124 AS BIGINT), 12, 12, CAST(1 AS BIGINT)),
-        | (CAST('2024-01-31 23:00:00' AS TIMESTAMP), CAST(99950133 AS BIGINT), 0, 0, CAST(2 AS BIGINT)),
-        | (CAST('2024-01-31 23:00:00' AS TIMESTAMP), CAST(213688169 AS BIGINT), 5, 5, CAST(1 AS BIGINT)),
-        | (CAST('2024-02-01 00:00:00' AS TIMESTAMP), CAST(213688169 AS BIGINT), 4, 4, CAST(1 AS BIGINT)),
-        | (CAST('2024-02-01 00:00:00' AS TIMESTAMP), CAST(19179944124 AS BIGINT), 11, 11, CAST(1 AS BIGINT)),
-        | (CAST('2024-02-01 01:00:00' AS TIMESTAMP), CAST(99950133 AS BIGINT), 3, 3, CAST(1 AS BIGINT)),
-        | (CAST('2024-02-01 01:00:00' AS TIMESTAMP), CAST(213688169 AS BIGINT), 0, 0, CAST(1 AS BIGINT))
-        |) AS t(hour_start, station_id, max_bikes, min_bikes, n_reports)
-        |ORDER BY hour_start, station_id""".stripMargin,
-    "q_stream_load" ->
-      """SELECT * FROM (VALUES
-        | (CAST(99950133 AS BIGINT), 0, 25, 1, 1, 0, CAST('2024-01-31 23:45:00' AS TIMESTAMP)),
-        | (CAST(99950133 AS BIGINT), 3, 22, 1, 1, 1, CAST('2024-02-01 01:10:00' AS TIMESTAMP)),
-        | (CAST(213688169 AS BIGINT), 5, 30, 1, 1, 1, CAST('2024-01-31 23:50:00' AS TIMESTAMP)),
-        | (CAST(213688169 AS BIGINT), 4, 31, 1, 1, 1, CAST('2024-02-01 00:50:00' AS TIMESTAMP)),
-        | (CAST(213688169 AS BIGINT), 0, 35, 1, 1, 1, CAST('2024-02-01 01:15:00' AS TIMESTAMP)),
-        | (CAST(19179944124 AS BIGINT), 12, 8, 1, 0, 1, CAST('2024-01-31 22:45:00' AS TIMESTAMP)),
-        | (CAST(19179944124 AS BIGINT), 11, 9, 1, 0, 1, CAST('2024-02-01 00:55:00' AS TIMESTAMP))
-        |) AS t(station_id, num_bikes_available, num_docks_available, is_installed, is_returning, is_renting, last_reported)
-        |ORDER BY station_id, last_reported""".stripMargin,
-    "q_stream_enrich" ->
-      """SELECT * FROM (VALUES
-        | (CAST(99950133 AS BIGINT), 'paris-11', 0, CAST('2024-01-31 23:45:00' AS TIMESTAMP)),
-        | (CAST(99950133 AS BIGINT), 'paris-11', 3, CAST('2024-02-01 01:10:00' AS TIMESTAMP)),
-        | (CAST(213688169 AS BIGINT), 'paris-16', 5, CAST('2024-01-31 23:50:00' AS TIMESTAMP)),
-        | (CAST(213688169 AS BIGINT), 'paris-16', 4, CAST('2024-02-01 00:50:00' AS TIMESTAMP)),
-        | (CAST(213688169 AS BIGINT), 'paris-16', 0, CAST('2024-02-01 01:15:00' AS TIMESTAMP)),
-        | (CAST(19179944124 AS BIGINT), CAST(NULL AS VARCHAR), 12, CAST('2024-01-31 22:45:00' AS TIMESTAMP)),
-        | (CAST(19179944124 AS BIGINT), CAST(NULL AS VARCHAR), 11, CAST('2024-02-01 00:55:00' AS TIMESTAMP))
-        |) AS t(station_id, district, num_bikes_available, last_reported)
-        |ORDER BY station_id, last_reported""".stripMargin,
-    "q_stream_upsert" ->
-      """SELECT * FROM (VALUES
-        | (CAST(99950133 AS BIGINT), 3, 22, CAST('2024-02-01 01:10:00' AS TIMESTAMP)),
-        | (CAST(213688169 AS BIGINT), 0, 35, CAST('2024-02-01 01:15:00' AS TIMESTAMP)),
-        | (CAST(19179944124 AS BIGINT), 11, 9, CAST('2024-02-01 00:55:00' AS TIMESTAMP))
-        |) AS t(station_id, num_bikes_available, num_docks_available, last_reported)
-        |ORDER BY station_id""".stripMargin,
-    "q_stream_timetravel" ->
-      """SELECT * FROM (VALUES
-        | (0, CAST(99950133 AS BIGINT), 0, CAST('2024-01-31 23:45:00' AS TIMESTAMP)),
-        | (0, CAST(213688169 AS BIGINT), 4, CAST('2024-02-01 00:50:00' AS TIMESTAMP)),
-        | (0, CAST(19179944124 AS BIGINT), 11, CAST('2024-02-01 00:55:00' AS TIMESTAMP)),
-        | (1, CAST(99950133 AS BIGINT), 3, CAST('2024-02-01 01:10:00' AS TIMESTAMP)),
-        | (1, CAST(213688169 AS BIGINT), 0, CAST('2024-02-01 01:15:00' AS TIMESTAMP)),
-        | (1, CAST(19179944124 AS BIGINT), 11, CAST('2024-02-01 00:55:00' AS TIMESTAMP))
-        |) AS t(snap_rank, station_id, num_bikes_available, last_reported)
-        |ORDER BY snap_rank, station_id""".stripMargin,
-    "q_stream_stockouts" ->
-      """SELECT * FROM (VALUES
-        | (CAST(99950133 AS BIGINT), 'restock', CAST('2024-02-01 01:10:00' AS TIMESTAMP), 3),
-        | (CAST(213688169 AS BIGINT), 'stockout', CAST('2024-02-01 01:15:00' AS TIMESTAMP), 0)
-        |) AS t(station_id, event, at, bikes)
-        |ORDER BY station_id, at""".stripMargin,
-    "q_stream_ewma" ->
-      """SELECT * FROM (VALUES
-        | (CAST(99950133 AS BIGINT), CAST('2024-01-31 23:45:00' AS TIMESTAMP), 0, CAST(0.0 AS DOUBLE)),
-        | (CAST(99950133 AS BIGINT), CAST('2024-02-01 01:10:00' AS TIMESTAMP), 3, CAST(1.5 AS DOUBLE)),
-        | (CAST(213688169 AS BIGINT), CAST('2024-01-31 23:50:00' AS TIMESTAMP), 5, CAST(5.0 AS DOUBLE)),
-        | (CAST(213688169 AS BIGINT), CAST('2024-02-01 00:50:00' AS TIMESTAMP), 4, CAST(4.5 AS DOUBLE)),
-        | (CAST(213688169 AS BIGINT), CAST('2024-02-01 01:15:00' AS TIMESTAMP), 0, CAST(2.25 AS DOUBLE)),
-        | (CAST(19179944124 AS BIGINT), CAST('2024-01-31 22:45:00' AS TIMESTAMP), 12, CAST(12.0 AS DOUBLE)),
-        | (CAST(19179944124 AS BIGINT), CAST('2024-02-01 00:55:00' AS TIMESTAMP), 11, CAST(11.5 AS DOUBLE))
-        |) AS t(station_id, at, bikes, ewma)
-        |ORDER BY station_id, at""".stripMargin,
-    "q_stream_sessions" ->
-      """SELECT * FROM (VALUES
-        | (CAST(99950133 AS BIGINT), CAST('2024-01-31 23:45:00' AS TIMESTAMP), CAST('2024-02-01 00:15:00' AS TIMESTAMP), CAST(1 AS BIGINT), 0),
-        | (CAST(99950133 AS BIGINT), CAST('2024-02-01 01:10:00' AS TIMESTAMP), CAST('2024-02-01 01:40:00' AS TIMESTAMP), CAST(1 AS BIGINT), 3),
-        | (CAST(213688169 AS BIGINT), CAST('2024-01-31 23:50:00' AS TIMESTAMP), CAST('2024-02-01 00:20:00' AS TIMESTAMP), CAST(1 AS BIGINT), 5),
-        | (CAST(213688169 AS BIGINT), CAST('2024-02-01 00:50:00' AS TIMESTAMP), CAST('2024-02-01 01:45:00' AS TIMESTAMP), CAST(2 AS BIGINT), 4),
-        | (CAST(19179944124 AS BIGINT), CAST('2024-01-31 22:45:00' AS TIMESTAMP), CAST('2024-01-31 23:15:00' AS TIMESTAMP), CAST(1 AS BIGINT), 12),
-        | (CAST(19179944124 AS BIGINT), CAST('2024-02-01 00:55:00' AS TIMESTAMP), CAST('2024-02-01 01:25:00' AS TIMESTAMP), CAST(1 AS BIGINT), 11)
-        |) AS t(station_id, session_start, session_end, n_reports, max_bikes)
-        |ORDER BY station_id, session_start""".stripMargin,
-    "q_stream_dedup" ->
-      """SELECT * FROM (VALUES
-        | (CAST(1 AS BIGINT)), (CAST(2 AS BIGINT)),
-        | (CAST(4 AS BIGINT)), (CAST(6 AS BIGINT))
-        |) AS t(doc_id) ORDER BY doc_id""".stripMargin,
-    // key 1 admitted at 00:00, its 00:30 re-report deduped, and its
-    // 03:45 report RE-ADMITTED after the sentinel-driven watermark
-    // (03:30) evicts the key's state — both halves of the built-in's
-    // contract in one hash.
-    "q_stream_dropdupwm" ->
-      """SELECT * FROM (VALUES
-        | (CAST(1 AS BIGINT), CAST('2024-02-01 00:00:00' AS TIMESTAMP)),
-        | (CAST(1 AS BIGINT), CAST('2024-02-01 03:45:00' AS TIMESTAMP)),
-        | (CAST(2 AS BIGINT), CAST('2024-02-01 00:10:00' AS TIMESTAMP)),
-        | (CAST(9 AS BIGINT), CAST('2024-02-01 05:30:00' AS TIMESTAMP))
-        |) AS t(station_id, last_reported)
-        |ORDER BY station_id, last_reported""".stripMargin,
-    "q_stream_join_outer" ->
-      """SELECT * FROM (VALUES
-        | (CAST(101 AS BIGINT), 7, CAST('2024-02-01 00:10:00' AS TIMESTAMP), CAST('2024-02-01 00:00:00' AS TIMESTAMP), CAST(277.99 AS DOUBLE), 'light rain'),
-        | (CAST(202 AS BIGINT), 2, CAST('2024-02-01 00:40:00' AS TIMESTAMP), CAST('2024-02-01 00:00:00' AS TIMESTAMP), CAST(277.99 AS DOUBLE), 'light rain'),
-        | (CAST(303 AS BIGINT), 9, CAST('2024-02-01 02:10:00' AS TIMESTAMP), CAST(NULL AS TIMESTAMP), CAST(NULL AS DOUBLE), CAST(NULL AS VARCHAR))
-        |) AS t(station_id, num_bikes_available, last_reported, obs_ts, temp, weather_description)
-        |ORDER BY station_id, last_reported""".stripMargin,
-    "q_stream_join" ->
-      """SELECT * FROM (VALUES
-        | (CAST(99950133 AS BIGINT), 3, CAST('2024-02-01 01:10:00' AS TIMESTAMP), CAST('2024-02-01 01:00:00' AS TIMESTAMP), CAST(278.5 AS DOUBLE), 'clear sky'),
-        | (CAST(213688169 AS BIGINT), 4, CAST('2024-02-01 00:50:00' AS TIMESTAMP), CAST('2024-02-01 00:00:00' AS TIMESTAMP), CAST(277.99 AS DOUBLE), 'light rain'),
-        | (CAST(213688169 AS BIGINT), 0, CAST('2024-02-01 01:15:00' AS TIMESTAMP), CAST('2024-02-01 01:00:00' AS TIMESTAMP), CAST(278.5 AS DOUBLE), 'clear sky'),
-        | (CAST(19179944124 AS BIGINT), 11, CAST('2024-02-01 00:55:00' AS TIMESTAMP), CAST('2024-02-01 00:00:00' AS TIMESTAMP), CAST(277.99 AS DOUBLE), 'light rain')
-        |) AS t(station_id, num_bikes_available, last_reported, obs_ts, temp, weather_description)
-        |ORDER BY station_id, last_reported""".stripMargin)
+    })
 }

@@ -43,17 +43,12 @@ object VerifyTwice {
       // pipelines from exactly the cross-run stability check this
       // tool exists to perform.
       graft.queries.Scratch.reset()
-      names.grouped(Harness.RecycleEvery).flatMap { chunk =>
-        val spark = Harness.newSession(cpus)
-        val rs = chunk.map { name =>
-          System.err.println(s"[verify2] p$pass $name")
-          name -> (try Right(fingerprint(SparkEntry.queries(name)(spark, sfDir)))
-          catch { case e: Throwable =>
-            Left(Option(e.getMessage).getOrElse(e.getClass.getName).take(200))
-          })
+      Harness.sweep(names, cpus) { (spark, name) =>
+        System.err.println(s"[verify2] p$pass $name")
+        try Right(fingerprint(SparkEntry.queries(name)(spark, sfDir)))
+        catch { case e: Throwable =>
+          Left(Option(e.getMessage).getOrElse(e.getClass.getName).take(200))
         }
-        Harness.recycle(spark)
-        rs
       }.toMap
     }
 

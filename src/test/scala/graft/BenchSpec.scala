@@ -76,18 +76,18 @@ class BenchSpec extends SparkTestBase {
   private val now = Seq("q_a" -> 1.5, "q_b" -> 2.75, "q_c" -> 2.5, "q_d" -> 9.75, "q_new" -> 5.0)
 
   test("trend guard: a prior artifact at another sf yields no trend") {
-    val prior = Bench.priorTimes(priorArtifact(""""cpus":"4","sf":"/data/sf0.1""""), "/data/sf0.01", "4")
+    val prior = Bench.priorTimes(priorArtifact(""""cpus":"4","sf":"/data/sf0.1""""), "/data/sf0.01", "4", subset = false)
     assert(prior === Map.empty)
     assert(Bench.trend(now, prior) === Seq.empty)
   }
 
   test("trend guard: a prior artifact at another cpus, or with no cpus, yields no trend") {
-    assert(Bench.priorTimes(priorArtifact(""""cpus":"32","sf":"/d""""), "/d", "4") === Map.empty)
-    assert(Bench.priorTimes(priorArtifact(""""sf":"/d""""), "/d", "4") === Map.empty)
+    assert(Bench.priorTimes(priorArtifact(""""cpus":"32","sf":"/d""""), "/d", "4", subset = false) === Map.empty)
+    assert(Bench.priorTimes(priorArtifact(""""sf":"/d""""), "/d", "4", subset = false) === Map.empty)
   }
 
   test("trend guard: a matching prior yields the raw delta and flags exactly the entries past the bar") {
-    val prior = Bench.priorTimes(priorArtifact(""""cpus":"4","sf":"/d""""), "/d", "4")
+    val prior = Bench.priorTimes(priorArtifact(""""cpus":"4","sf":"/d""""), "/d", "4", subset = false)
     // times come from "queries" only, never from the later "spread" map
     assert(prior === Map("q_a" -> 1.0, "q_b" -> 2.0, "q_c" -> 4.0, "q_d" -> 8.0))
     val trend = Bench.trend(now, prior)
@@ -95,6 +95,15 @@ class BenchSpec extends SparkTestBase {
     // bar = max(0.5 s, 25% of prior): q_a sits on it, q_d is under its
     // 2.0 s bar, q_c is flagged as an improvement
     assert(Bench.regressions(trend, prior) === Seq("q_b" -> 0.75, "q_c" -> -1.5))
+  }
+
+  test("trend guard: a subset run against a matching prior yields no trend") {
+    // a SPARK_GRAFT_ONLY run times its queries JIT-cold, the artifact's
+    // times are a full run's warm min-of-passes
+    val prior = Bench.priorTimes(priorArtifact(""""cpus":"4","sf":"/d""""), "/d", "4", subset = true)
+    assert(prior === Map.empty)
+    assert(Bench.trend(now, prior) === Seq.empty)
+    assert(Bench.regressions(Bench.trend(now, prior), prior) === Seq.empty)
   }
 
   test("JSON escaper handles quotes, backslashes, and control chars") {

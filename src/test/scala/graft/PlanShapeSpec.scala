@@ -444,36 +444,6 @@ class PlanShapeSpec extends SparkTestBase {
     assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"), p)
   }
 
-  test("assignToCentroidsBcast at k=256: codegen'd broadcast join, bit-identical to the literal path") {
-    import graft.operators.Similarity
-    val embs = spark.read.parquet(s"$Sf/embeddings.parquet")
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    // 256 centroids — the literal path's ceiling, where the unrolled
-    // array_max(array(...)) is at its codegen-size worst
-    val centroids = embs.filter(col("id") < 256)
-      .select(col("id").as("centroid_id"), col("vec"))
-    val bcast = Similarity.assignToCentroidsBcast(embs, centroids)
-    def canon(df: org.apache.spark.sql.DataFrame) =
-      rows(df.select(col("id"), col("centroid_id")).orderBy(col("id")))
-        .map(r => (r.getLong(0), r.getLong(1)))
-    bcast.collect() // run THIS frame's execution: finalizes its AQE plan
-    val bcastRows = canon(bcast)
-    // after execution the adaptive plan is final and shows codegen
-    // stage markers ("*(n) ") — the scoring join must be broadcast
-    // (model ships with the plan), inside a codegen stage, with the
-    // argmax as ObjectHashAggregate (no n*k per-partition sort) and
-    // no shuffle join anywhere
-    val p = bcast.queryExecution.executedPlan.toString
-    assert(p.contains("BroadcastNestedLoopJoin"), p)
-    assert("""\*\(\d+\) BroadcastNestedLoopJoin""".r.findFirstIn(p).isDefined,
-      s"broadcast scoring join fell out of codegen:\n$p")
-    assert(p.contains("ObjectHashAggregate"),
-      s"argmax should be hash-based, not a sort aggregate:\n$p")
-    assert(!p.contains("SortMergeJoin") && !p.contains("ShuffledHashJoin")
-      && !p.contains("CartesianProduct"), p)
-    assert(bcastRows === canon(Similarity.assignToCentroids(embs, centroids)),
-      "broadcast-join assignment diverged from the literal-codebook path")
-  }
   test("kFolds is a pure map-side projection: zero exchanges") {
     val docs = spark.read.parquet(s"$Sf/documents.parquet")
     val p = planString(graft.operators.Sampling.kFolds(docs, "doc_id", 5))

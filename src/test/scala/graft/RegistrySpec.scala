@@ -2,31 +2,31 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.queries.{LlmQueries, PipelineQueries, RelationalQueries, StreamQueries}
+import graft.queries.QuerySpec
 
-/** The registry's key parity: every query has an oracle and every oracle
-  * a query, and no two family objects register the same name — a `++`
-  * collision in [[SparkEntry.queries]] would silently drop one query.
+/** What the [[QuerySpec]] type cannot enforce about the registry: the
+  * names are distinct (a repeated name would drop a query from the
+  * name-keyed maps) and every oracle holds SQL.
   */
 class RegistrySpec extends AnyFunSuite {
 
-  test("every registered query has exactly one oracle and vice versa") {
-    val q = SparkEntry.queries.keySet
-    val o = SparkEntry.oracleSql.keySet
-    assert(q.diff(o).isEmpty, s"queries without an oracle: ${q.diff(o)}")
-    assert(o.diff(q).isEmpty, s"oracles without a query: ${o.diff(q)}")
+  test("the registry has 278 distinct names, each with a non-blank oracle") {
+    val names = SparkEntry.specs.map(_.name)
+    assert(names.size === 278)
+    assert(names.distinct.size === names.size)
+    assert(SparkEntry.specs.forall(_.oracleSql.trim.nonEmpty))
   }
 
-  test("the four family registries' names are pairwise disjoint") {
-    val families = Seq(
-      "RelationalQueries" -> RelationalQueries.queries.keySet,
-      "PipelineQueries" -> PipelineQueries.queries.keySet,
-      "LlmQueries" -> LlmQueries.queries.keySet,
-      "StreamQueries" -> StreamQueries.queries.keySet)
-    for {
-      ((a, ka), i) <- families.zipWithIndex
-      (b, kb) <- families.drop(i + 1)
-    } assert(ka.intersect(kb).isEmpty, s"$a and $b both register ${ka.intersect(kb)}")
-    assert(families.map(_._2.size).sum === SparkEntry.queries.size)
+  test("the registry's construction check rejects a repeated name and a blank oracle") {
+    val build: QuerySpec.Q = (s, _) => s.emptyDataFrame
+    val a = QuerySpec("q_a", "SELECT 1")(build)
+    val b = QuerySpec("q_b", "SELECT 2")(build)
+    assert(SparkEntry.checked(Seq(a, b)) === Seq(a, b))
+    val repeated = intercept[IllegalArgumentException](
+      SparkEntry.checked(Seq(a, b, QuerySpec("q_a", "SELECT 3")(build))))
+    assert(repeated.getMessage.contains("q_a"))
+    val blank = intercept[IllegalArgumentException](
+      SparkEntry.checked(Seq(a, QuerySpec("q_c", "  ")(build))))
+    assert(blank.getMessage.contains("q_c"))
   }
 }

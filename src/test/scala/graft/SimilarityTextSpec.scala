@@ -328,8 +328,6 @@ class SimilarityTextSpec extends SparkTestBase {
     // portable variant is non-negative by construction (63-bit mask),
     // so signed and unsigned engines order fingerprints identically
     assert(fp.forall(_ >= 0L))
-    val fast = rows(df.select(Text.rollingMinFingerprintFast(col("text")))).map(_.getLong(0))
-    assert(fast(0) === fast(1))
   }
 
   test("l2Normalize yields unit vectors; zero vector stays zero, never throws") {
