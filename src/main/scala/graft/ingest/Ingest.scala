@@ -1,7 +1,10 @@
 package graft.ingest
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, from_json}
+import java.nio.charset.StandardCharsets
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, from_json, struct, to_json}
 import org.apache.spark.sql.types.StructType
 
 import graft.model.Schemas
@@ -15,8 +18,10 @@ import graft.model.Schemas
   * the driver, against the explicit raw schema with `from_json` in
   * FAILFAST mode, so a malformed payload fails the run exactly like the
   * reference's crash-and-retry (`etl_dag.py:331-332`). The parsed
-  * snapshot comes back as a one-row local relation: the raw-zone landing
-  * and the curated write both read it without parsing the body again.
+  * snapshot comes back as a one-row local relation. The raw-zone landing
+  * serializes that row on the driver and writes it through the Hadoop
+  * `FileSystem`, so it starts no Spark job; the curated write is the
+  * branch's one job, and neither parses the body again.
   *
   * A body that is not one JSON object fails loudly instead of landing
   * an empty payload, as the reference's `.json()` would: an empty or
@@ -26,9 +31,9 @@ import graft.model.Schemas
   *
   * The transport is injectable, which keeps ingestion unit-testable in
   * this offline harness (tests feed canned bodies) and cleanly swaps for
-  * a real client in deployment. Driver-side fetch and parse of a ~344 KB
-  * snapshot (`research.ipynb` cell 3) is the right shape at any scale:
-  * the payload is one API response, not a distributed dataset —
+  * a real client in deployment. Driver-side fetch, parse and raw land of
+  * a ~344 KB snapshot (`research.ipynb` cell 3) is the right shape at any
+  * scale: the payload is one API response, not a distributed dataset —
   * parallelism begins after explode.
   */
 object Ingest {
@@ -144,9 +149,46 @@ object Ingest {
       spark: SparkSession, transport: Transport, url: String): DataFrame =
     parse(spark, transport(url), Schemas.weatherRaw, "current")
 
+  /** Most rows [[landRaw]] collects to the driver. A snapshot is one
+    * row (one API response), so a frame past the cap is not a snapshot:
+    * landing it on the driver would pull a distributed dataset into one
+    * JVM, which the cap refuses instead.
+    */
+  val MaxLandRows = 64
+
   /** K1 raw-zone landing: non-replacing timestamped JSON write, the
     * replayable raw zone (`etl_dag.py:46-55` — upload without `replace`).
+    * Returns the number of lines landed.
+    *
+    * The rows are serialized on the driver with `to_json(struct(*))`,
+    * which writes the same bytes as the JSON data source; over a fetched
+    * snapshot's one-row local relation the optimizer folds it
+    * (`ConvertToLocalRelation`), so the land starts no Spark job. The one
+    * part file is written in Spark's commit shape: staged under
+    * `_temporary`, renamed into place, `_temporary` deleted, `_SUCCESS`
+    * written last. An existing key fails with `PATH_ALREADY_EXISTS`, as
+    * `mode("errorifexists")` does, and a frame over [[MaxLandRows]] fails;
+    * both fail before anything is written.
     */
-  def landRaw(raw: DataFrame, rawZoneDir: String, runTs: String): Unit =
-    raw.write.mode("errorifexists").json(s"$rawZoneDir/ingest_ts=$runTs")
+  def landRaw(raw: DataFrame, rawZoneDir: String, runTs: String): Long = {
+    val dir = new Path(s"$rawZoneDir/ingest_ts=$runTs")
+    val fs = dir.getFileSystem(raw.sparkSession.sessionState.newHadoopConf())
+    val out = fs.makeQualified(dir)
+    if (fs.exists(out))
+      throw new AnalysisException("PATH_ALREADY_EXISTS", Map("outputPath" -> out.toString))
+    val lines = raw.select(to_json(struct(col("*")))).take(MaxLandRows + 1).map(_.getString(0))
+    require(lines.length <= MaxLandRows,
+      s"landRaw collects at most $MaxLandRows rows to the driver; the frame has more. " +
+        "A raw snapshot is one row per API response")
+    val name = s"part-00000-${java.util.UUID.randomUUID()}-c000.json"
+    val staged = new Path(out, s"_temporary/$name")
+    val stream = fs.create(staged, false)
+    try lines.foreach(l => stream.write(s"$l\n".getBytes(StandardCharsets.UTF_8)))
+    finally stream.close()
+    if (!fs.rename(staged, new Path(out, name)))
+      throw new java.io.IOException(s"could not move $staged into $out")
+    fs.delete(new Path(out, "_temporary"), true)
+    fs.create(new Path(out, "_SUCCESS"), false).close()
+    lines.length
+  }
 }

@@ -27,20 +27,14 @@ object Pipeline {
 
   final case class BranchResult(rawRows: Long, curatedRows: Long)
 
-  /** Attach an `observe` metric so the row count is collected DURING the
-    * write job (the reference's XCom metric, `s3_to_postgres.py:84-86`) —
-    * a `df.count()` after the write would re-run the whole plan, which at
-    * 100 TB doubles every branch.
+  /** Vélib branch (`etl_dag.py:366-405`). The snapshot is one row in
+    * one partition; `coalesce(1)` declares that to the planner, so the
+    * station rows exploded from it stay in a single partition and
+    * [[Velib.dedupSnapshots]]' grouping needs no shuffle. The coalesce
+    * sits here, not in the fetch: over the bare local relation the raw
+    * land's serialization folds on the driver, and a repartition above it
+    * would stop the fold.
     */
-  private def observed(df: DataFrame): (DataFrame, Observation) = {
-    val obs = Observation()
-    (df.observe(obs, count(lit(1)).as("rows")), obs)
-  }
-
-  private def rowsOf(obs: Observation): Long =
-    obs.get("rows").asInstanceOf[Long]
-
-  /** Vélib branch (`etl_dag.py:366-405`). */
   def runStationBranch(
       spark: SparkSession,
       transport: Ingest.Transport,
@@ -49,12 +43,14 @@ object Pipeline {
       curatedPath: String,
       url: String = Ingest.VelibStatusUrl): BranchResult =
     runBranch(Ingest.fetchVelibSnapshot(spark, transport, url),
-      raw => Velib.dedupSnapshots(Velib.curateStations(Velib.flattenStations(raw))),
+      raw => Velib.dedupSnapshots(Velib.curateStations(Velib.flattenStations(raw.coalesce(1)))),
       ctx, rawZone, curatedPath)
 
-  /** One branch over its fetched snapshot: land it raw, then curate it,
-    * stamp the run metadata and write it to the curated zone. The raw
-    * land finishes before the curated write starts.
+  /** One branch over its fetched snapshot: land it raw from the driver
+    * (no Spark job), then curate it, stamp the run metadata and write it
+    * to the curated zone, the branch's one job. The raw land finishes
+    * before the curated write starts. `rawRows` is the number of lines
+    * the raw land wrote; `curatedRows` is observed during the write.
     */
   private def runBranch(
       raw: DataFrame,
@@ -62,13 +58,18 @@ object Pipeline {
       ctx: RunContext,
       rawZone: String,
       curatedPath: String): BranchResult = {
-    val (rawObs, rawMetric) = observed(raw)
-    Ingest.landRaw(rawObs, rawZone, ctx.executionDate.replaceAll("[^0-9]", ""))
-    val curated = Velib.withRunMetadata(curate(raw), ctx)
-    val (curObs, curMetric) = observed(
-      curated.withColumn("ingest_date", col("execution_date").cast("date")))
-    Sinks.writeCuratedParquet(curObs, curatedPath, Seq("ingest_date"))
-    BranchResult(rowsOf(rawMetric), rowsOf(curMetric))
+    val rawRows = Ingest.landRaw(raw, rawZone, ctx.executionDate.replaceAll("[^0-9]", ""))
+    // the curated count is an `observe` metric collected DURING the write
+    // job (the reference's XCom metric, `s3_to_postgres.py:84-86`): a
+    // `df.count()` after the write would re-run the whole plan, which at
+    // 100 TB doubles every branch
+    val obs = Observation()
+    Sinks.writeCuratedParquet(
+      Velib.withRunMetadata(curate(raw), ctx)
+        .withColumn("ingest_date", col("execution_date").cast("date"))
+        .observe(obs, count(lit(1)).as("rows")),
+      curatedPath, Seq("ingest_date"))
+    BranchResult(rawRows, obs.get("rows").asInstanceOf[Long])
   }
 
   /** Both branches, like start >> [weather, stations] >> end
@@ -78,12 +79,15 @@ object Pipeline {
     * caller's thread; both submit their jobs to the one SparkContext. At
     * the reference's volume a branch is mostly driver-side fixed cost, so
     * the overlap hides most of the shorter (weather) branch instead of
-    * adding it. The thread is fresh, not pooled, because a new thread
-    * inherits the caller's SparkContext local properties (job group,
-    * scheduler pool, tags), so every job either branch starts carries
-    * them. Within a branch the order is kept: the raw-zone landing
-    * finishes before the curated write starts, so a re-run fails on the
-    * non-replacing raw zone before it appends curated rows twice.
+    * adding it. An hour starts two Spark jobs, one curated write per
+    * branch: the parse and the raw land run on the driver, and the
+    * station curate needs no shuffle. The thread is fresh, not pooled,
+    * because a new thread inherits the caller's SparkContext local
+    * properties (job group, scheduler pool, tags), so every job either
+    * branch starts carries them. Within a branch the order is kept: the
+    * raw-zone landing finishes before the curated write starts, so a
+    * re-run fails on the non-replacing raw zone before it appends curated
+    * rows twice.
     *
     * The branches fail independently, like two Airflow tasks: a failing
     * station branch does not stop the weather branch from landing its

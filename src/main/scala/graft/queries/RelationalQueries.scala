@@ -3155,9 +3155,9 @@ object RelationalQueries {
         |      AS DOUBLE) AS sum_price
         |FROM orders""".stripMargin,
       auditSkip = Some("driver-local metric rows (LocalTableScan " +
-        "wrapper over the JDBC load's outcome); auditing would print the " +
-        "wrapper's plan, not the real write, while executing the load as " +
-        "a side effect — physical behavior asserted in SinksSpec/JdbcSpec")) { (s, dir) =>
+        "wrapper over the observed parquet write's outcome); auditing would " +
+        "print the wrapper's plan, not the real write, while executing the " +
+        "write as a side effect — physical behavior asserted in SinksSpec")) { (s, dir) =>
       import s.implicits._
       val out = QueryUtil.scratchDir("graft_obs_") + "/orders"
       val src = table(s, dir, "orders").select(

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -109,14 +109,30 @@ class IngestSpec extends SparkTestBase {
 
   test("raw-zone landing is non-replacing (K1 semantics)") {
     val dir = java.nio.file.Files.createTempDirectory("rawzone").toString
-    val transport: Ingest.Transport = _ => velibBody.linesIterator.next()
-    val raw = Ingest.fetchVelibSnapshot(spark, transport)
-    Ingest.landRaw(raw, dir, "20240201-010000")
+    val Seq(first, second) = velibBody.linesIterator.toSeq.take(2)
+    Ingest.landRaw(Ingest.fetchVelibSnapshot(spark, _ => first), dir, "20240201-010000")
+    val before = layout(s"$dir/ingest_ts=20240201-010000")
     // re-landing the same run key must fail, like the reference's
-    // replace-less upload (etl_dag.py:51-55)
-    intercept[Exception] { Ingest.landRaw(raw, dir, "20240201-010000") }
+    // replace-less upload (etl_dag.py:51-55), and leave the landed files
+    // byte-identical, even when the refused snapshot differs
+    val e = intercept[AnalysisException] {
+      Ingest.landRaw(Ingest.fetchVelibSnapshot(spark, _ => second), dir, "20240201-010000")
+    }
+    assert(e.getCondition === "PATH_ALREADY_EXISTS")
+    assert(layout(s"$dir/ingest_ts=20240201-010000") === before)
     assert(spark.read.schema(graft.model.Schemas.velibRaw)
       .json(s"$dir/ingest_ts=20240201-010000").count() === 1)
+  }
+
+  test("a frame over landRaw's row cap fails and creates no directory") {
+    val zone = java.nio.file.Files.createTempDirectory("landcap").toString + "/raw"
+    val e = intercept[IllegalArgumentException] {
+      Ingest.landRaw(spark.range(Ingest.MaxLandRows + 1).toDF(), zone, "over")
+    }
+    assert(e.getMessage.contains(s"at most ${Ingest.MaxLandRows} rows"))
+    assert(!new java.io.File(zone).exists())
+    assert(Ingest.landRaw(spark.range(Ingest.MaxLandRows).toDF(), zone, "at") === Ingest.MaxLandRows)
+    assert(spark.read.json(s"$zone/ingest_ts=at").count() === Ingest.MaxLandRows)
   }
 
   private def fixtureLines(name: String): Seq[String] =
@@ -131,13 +147,27 @@ class IngestSpec extends SparkTestBase {
     spark.read.schema(schema).option("mode", "FAILFAST").json(Seq(body).toDS())
   }
 
-  /** The bytes `landRaw` writes for `raw`, part files in name order. */
-  private def landedBytes(raw: DataFrame): Seq[Byte] = {
+  /** Every file under `dir` (hidden checksums included) with its bytes,
+    * the part file's run-specific uuid masked.
+    */
+  private def layout(dir: String): Map[String, Seq[Byte]] =
+    new java.io.File(dir).listFiles().map { f =>
+      f.getName.replaceAll("part-00000-[0-9a-f-]{36}-c000", "part-00000-UUID-c000") ->
+        java.nio.file.Files.readAllBytes(f.toPath).toSeq
+    }.toMap
+
+  /** The files `landRaw` writes for `raw`. */
+  private def landed(raw: DataFrame): Map[String, Seq[Byte]] = {
     val dir = java.nio.file.Files.createTempDirectory("parity").toString
-    Ingest.landRaw(raw, dir, "20240201-010000")
-    new java.io.File(s"$dir/ingest_ts=20240201-010000").listFiles()
-      .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-      .flatMap(f => java.nio.file.Files.readAllBytes(f.toPath)).toSeq
+    assert(Ingest.landRaw(raw, dir, "20240201-010000") === 1L)
+    layout(s"$dir/ingest_ts=20240201-010000")
+  }
+
+  /** The files Spark's JSON writer writes for `raw`. */
+  private def written(raw: DataFrame): Map[String, Seq[Byte]] = {
+    val dir = java.nio.file.Files.createTempDirectory("parity").toString + "/out"
+    raw.write.json(dir)
+    layout(dir)
   }
 
   private def assertSameRows(a: DataFrame, b: DataFrame): Unit = {
@@ -153,7 +183,7 @@ class IngestSpec extends SparkTestBase {
     for (body <- velib) {
       val fetched = Ingest.fetchVelibSnapshot(spark, _ => body)
       val reference = readerParse(body, Schemas.velibRaw)
-      assert(landedBytes(fetched) === landedBytes(reference), body.take(80))
+      assert(landed(fetched) === written(reference), body.take(80))
       def curated(raw: DataFrame) = Velib.withRunMetadata(
         Velib.dedupSnapshots(Velib.curateStations(Velib.flattenStations(raw))), parityCtx)
       assertSameRows(curated(fetched), curated(reference))
@@ -161,7 +191,7 @@ class IngestSpec extends SparkTestBase {
     for (body <- fixtureLines("weather.json")) {
       val fetched = Ingest.fetchWeatherSnapshot(spark, _ => body, "weather://x")
       val reference = readerParse(body, Schemas.weatherRaw)
-      assert(landedBytes(fetched) === landedBytes(reference), body.take(80))
+      assert(landed(fetched) === written(reference), body.take(80))
       assertSameRows(Weather.projectWeather(fetched), Weather.projectWeather(reference))
     }
   }

@@ -6,6 +6,14 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.AnalysisException
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.functions.{col, date_format}
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.ingest.{Ingest, Pipeline}
 import graft.model.Schemas.RunContext
@@ -112,13 +120,74 @@ class PipelineSpec extends SparkTestBase {
       .takeWhile(_.getProperty(marker) != "close")
   }
 
-  test("runAll starts 5 Spark jobs per hour: one parse per snapshot, no eager count") {
+  test("runAll starts 2 Spark jobs per hour: the two curated writes") {
     val base = java.nio.file.Files.createTempDirectory("pipejobs").toString
     fixtureRun(base, "2024-02-03 01:00:00") // warm
     val jobs = jobsOf(fixtureRun(base, "2024-02-03 02:00:00"))
-    // station: raw land + dedup shuffle map + curated write; weather:
-    // raw land + curated write
-    assert(jobs.size === 5, s"jobs: ${jobs.map(_.getProperty("callSite.short"))}")
+    // the station write (flatten, curate and dedup in one partition) and
+    // the weather write; the parse and both raw lands run on the driver
+    assert(jobs.size === 2, s"jobs: ${jobs.map(_.getProperty("spark.job.description"))}")
+  }
+
+  test("landRaw on a fetched snapshot starts no Spark job") {
+    val zone = java.nio.file.Files.createTempDirectory("pipeland").toString
+    val velib = Ingest.fetchVelibSnapshot(spark, _ => firstLine(s"$FixtureDir/station_status.json"))
+    val weather = Ingest.fetchWeatherSnapshot(spark,
+      _ => firstLine(s"$FixtureDir/weather.json"), "weather://x")
+    var landed = Seq.empty[Long]
+    val jobs = jobsOf {
+      landed = Seq(Ingest.landRaw(velib, s"$zone/velib", "20240203010000"),
+        Ingest.landRaw(weather, s"$zone/weather", "20240203010000"))
+    }
+    assert(jobs.isEmpty, s"jobs: ${jobs.map(_.getProperty("spark.job.description"))}")
+    assert(landed === Seq(1L, 1L))
+  }
+
+  test("the station branch's curated write plans no shuffle") {
+    val base = java.nio.file.Files.createTempDirectory("pipeshuffle").toString
+    object Helper extends AdaptiveSparkPlanHelper
+    val writes = new ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (Helper.find(qe.executedPlan)(_.isInstanceOf[DataWritingCommandExec]).isDefined)
+          writes.add(qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val res = Pipeline.runStationBranch(spark,
+        _ => firstLine(s"$FixtureDir/station_status.json"),
+        RunContext("2024-02-03 03:00:00", "velib_spark", "load"),
+        s"$base/raw/velib", s"$base/curated/station_status")
+      assert(res === Pipeline.BranchResult(1, 3))
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (writes.isEmpty) {
+        assert(System.nanoTime() < deadline, "listener bus did not deliver the curated write")
+        Thread.sleep(10)
+      }
+    } finally spark.listenerManager.unregister(listener)
+    val plan = writes.asScala.toSeq match { case Seq(p) => p; case ps => fail(s"writes: $ps") }
+    assert(Helper.collect(plan) { case a: BaseAggregateExec => a }.nonEmpty,
+      s"the dedup runs inside the write:\n$plan")
+    assert(Helper.collect(plan) { case e: ShuffleExchangeExec => e }.isEmpty, plan.toString)
+  }
+
+  test("a curated write failing after the raw land: the re-run fails on the raw zone and appends nothing") {
+    val base = java.nio.file.Files.createTempDirectory("pipewritefail").toString
+    fixtureRun(base, "2024-02-07 01:00:00")
+    // a plain file where the curated write stages its task output
+    val blocker = new java.io.File(s"$base/curated/station_status/_temporary")
+    assert(blocker.createNewFile())
+    intercept[Exception](fixtureRun(base, "2024-02-07 02:00:00"))
+    assert(new java.io.File(s"$base/raw/velib/ingest_ts=20240207020000/_SUCCESS").exists(),
+      "the raw land finished before the curated write failed")
+    blocker.delete()
+    val rerun = intercept[AnalysisException](fixtureRun(base, "2024-02-07 02:00:00"))
+    assert(rerun.getCondition === "PATH_ALREADY_EXISTS")
+    val perHour = rows(spark.read.parquet(s"$base/curated/station_status")
+      .groupBy(date_format(col("execution_date"), "HH").as("h")).count())
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(perHour === Map("01" -> 3L), "the failed hour holds no curated rows after the re-run")
   }
 
   test("runAll's jobs on both branches carry the caller's local properties") {
