@@ -24,9 +24,28 @@ object Harness {
   def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
     Runtime.getRuntime.availableProcessors.toString)
 
+  /** The `file:` filesystem of every session: [[graft.fs.NioLocalFileSystem]]
+    * for `FileSystem` callers and [[graft.fs.NioLocalFs]] for `FileContext`
+    * callers (Spark's streaming checkpoint manager: offset, commit,
+    * source and sink logs, state-store files). Without libhadoop, Hadoop's
+    * own local filesystem starts a `chmod` process for every file and
+    * directory it creates and a `readlink` process for every rename and
+    * `exists`; a one-hour stream run spawned over a hundred. These do the
+    * same with NIO calls and keep everything else: the `.crc` sidecars
+    * (both are checksummed), the permission bits (the same `rwx` mode
+    * after the umask) and symlink handling (a real symlink still takes
+    * Hadoop's path). They fall back to Hadoop's shell path for a sticky
+    * bit and on a non-POSIX filesystem. Test sessions take the same
+    * pair, so specs run on the filesystem the mains write through.
+    */
+  val LocalFsConfs: Map[String, String] = Map(
+    "spark.hadoop.fs.file.impl" -> classOf[graft.fs.NioLocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[graft.fs.NioLocalFs].getName)
+
   def newSession(cpus: String): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
+      .config(LocalFsConfs)
       .config("spark.sql.shuffle.partitions", cpus)
       // AQE coalescing floor (guide §2): with parallelismFirst (the
       // default) AQE targets shuffleBytes/defaultParallelism per

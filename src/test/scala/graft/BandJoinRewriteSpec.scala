@@ -16,6 +16,7 @@ class BandJoinRewriteSpec extends SparkTestBase {
     try {
       val s = SparkSession.builder()
         .master("local[4]")
+        .config(Harness.LocalFsConfs)
         .config("spark.sql.shuffle.partitions", "4")
         .withExtensions(new graft.plans.GraftExtensions)
         .getOrCreate()

@@ -22,6 +22,7 @@ object ClusteringPropertiesSpec extends Properties("DuplicateClusters") {
   private lazy val spark: SparkSession = {
     val s = SparkSession.builder()
       .master("local[2]")
+      .config(Harness.LocalFsConfs)
       .config("spark.sql.shuffle.partitions", "2")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")

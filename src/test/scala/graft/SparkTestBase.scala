@@ -8,6 +8,7 @@ object SparkTestSession {
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")
+      .config(Harness.LocalFsConfs)
       .appName("graft-tests")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")

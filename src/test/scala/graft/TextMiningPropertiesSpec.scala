@@ -21,6 +21,7 @@ object TextMiningPropertiesSpec extends Properties("TextMiners") {
   private lazy val spark: SparkSession = {
     val s = SparkSession.builder()
       .master("local[2]")
+      .config(Harness.LocalFsConfs)
       .config("spark.sql.shuffle.partitions", "2")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
